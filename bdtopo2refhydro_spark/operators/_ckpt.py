@@ -53,6 +53,13 @@ class CheckpointSlots:
         self._live[slot] = backing_rdd(out)
         return out
 
+    def hold(self, df: DataFrame, slot: str = "state") -> DataFrame:
+        """Track an already checkpointed ``df`` (a gate's pinned input) as
+        the slot's state, so the slot's next checkpoint frees it."""
+        self.release(slot)
+        self._live[slot] = backing_rdd(df)
+        return df
+
     def release(self, slot: str = "state") -> None:
         """Free a slot's blocks NOW — only when its DataFrame is no longer
         reachable by any consumer (a freed LogicalRDD cannot recompute)."""

@@ -1,15 +1,32 @@
-"""Small-graph fast paths for the iterative traversal operators.
+"""Small-graph arm of the traversal operators: the kernel runs on the driver.
 
 Iterative self-join traversals pay ~0.5-1s of scheduling latency PER ROUND
 regardless of data size; a 12-level BFS over 5k edges costs seconds doing
-milliseconds of work. Below SMALL_GRAPH_ROWS adjacency rows, the traversal
-runs inside ONE task (groupBy(lit(1)).applyInPandas) with an ordinary
-in-memory algorithm; above it, the checkpointed self-join path takes over.
-This mirrors Catalyst's broadcast-vs-shuffle join selection: pick the
-physical strategy from the data size, keep the semantics identical — the
-equality of both paths is asserted in tests/test_graph_ops.py and by the
-driver's DuckDB oracles (which run at sizes that take the local path AND
-are replayed at larger fixtures).
+milliseconds of work. Every traversal gate therefore makes ONE bounded
+action over its narrow input, ``limit(SMALL_GRAPH_ROWS + 1).toPandas()``
+(collect_small). That action both picks the arm and moves the input: at
+most SMALL_GRAPH_ROWS rows → an ordinary in-memory algorithm below runs
+in the driver and its result comes back as a local relation
+(``createDataFrame(result, schema)``); more rows → the caller falls
+through to its checkpointed self-join arm. This mirrors Catalyst's
+broadcast-vs-shuffle join selection: pick the physical strategy from the
+data size, keep the semantics identical — the equality of both arms is
+asserted in tests/test_graph_ops.py and by the driver's DuckDB oracles
+(which run at sizes that take the small arm AND are replayed with the
+threshold forced down by ``scripts/oracle_check.py --distributed``).
+
+Why the driver and not one executor task: a one-task pandas job costs a
+Python worker task, whose fixed cost is dominated by PySpark's per-task
+``importlib.invalidate_caches()`` rescanning pyspark.zip, plus the eager
+checkpoint and the ``count()`` that sized it. The bounded collect is one
+Arrow action with no Python worker, and the result is a literal: its
+consumers read it instead of replaying the kernel.
+
+The gate input is pinned with a lazy localCheckpoint before the collect,
+so above the threshold the distributed arm reads the blocks that action
+materialized instead of recomputing the input. Driver memory is bounded
+by SMALL_GRAPH_ROWS narrow rows (a few id/length columns), far below
+``spark.driver.maxResultSize``.
 
 The local algorithms reproduce the distributed results EXACTLY:
 - BFS: same visited set (set semantics — no float issues);
@@ -20,14 +37,14 @@ The local algorithms reproduce the distributed results EXACTLY:
 
 CONTRACT CAVEAT — cycles: the local↔distributed path-equality guarantee
 holds for ACYCLIC inputs (all river networks the reference targets, and
-everything the tests cover). On a directed cycle, local_chain_roots
-resolves members to the first revisited member while the distributed
-pointer jumping leaves cycle members oscillating until max_rounds, and
-local_upstream freezes a cycle's UL at its initial value while the
-distributed fixpoint keeps accumulating until the fingerprint stabilizes
-or max_iter. Cycles are out of contract for path equality; the distance
-contraction (orders._distance_contract) is cycle-safe only in the sense
-that pass-through rings never acquire a distance on either path.
+everything the tests cover). On a directed cycle, chain_roots resolves
+members to the first revisited member while the distributed pointer
+jumping leaves cycle members oscillating until max_rounds, and upstream
+freezes a cycle's UL at its initial value while the distributed fixpoint
+keeps accumulating until the fingerprint stabilizes or max_iter. Cycles
+are out of contract for path equality; the distance contraction
+(orders._distance_contract) is cycle-safe only in the sense that
+pass-through rings never acquire a distance on either path.
 """
 
 from __future__ import annotations
@@ -36,118 +53,132 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._ckpt import backing_rdd
+
 SMALL_GRAPH_ROWS = 2_000_000
 
 
-def _one_group(df: DataFrame, fn, schema: str) -> DataFrame:
-    return df.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: fn(pdf), schema
-    )
+def collect_small(df: DataFrame, eligible: bool = True
+                  ) -> tuple[pd.DataFrame | None, DataFrame | None]:
+    """The small-graph gate: pin ``df`` lazily, then one bounded action.
+
+    Returns ``(rows, None)`` when ``df`` has at most SMALL_GRAPH_ROWS rows:
+    ``rows`` is ``df`` on the driver, and the pinned blocks are released
+    (the caller's kernel result is a literal and never reads them).
+    Returns ``(None, pinned)`` otherwise, where ``pinned`` is ``df`` under
+    a lazy localCheckpoint that the bounded action already materialized —
+    the distributed arm counts and traverses it without recomputing
+    ``df``. ``eligible=False`` (a bounded, forced or non-local algorithm
+    call) skips the action and returns the not yet materialized pin."""
+    pinned = df.localCheckpoint(eager=False)
+    if not eligible:
+        return None, pinned
+    rows = pinned.limit(SMALL_GRAPH_ROWS + 1).toPandas()
+    if len(rows) > SMALL_GRAPH_ROWS:
+        return None, pinned
+    backing_rdd(pinned).unpersist(False)
+    return rows, None
 
 
-def local_bfs(adj: DataFrame, seeds: DataFrame) -> DataFrame:
-    """Visited node set of a BFS over (node, nbr) adjacency from seed
-    nodes, computed in one task. Returns DataFrame('node' long)."""
+def bfs_input(adj: DataFrame, seeds: DataFrame) -> DataFrame:
+    """The BFS gate input: (node, nbr) adjacency rows plus one row per seed
+    node, told apart by ``is_seed``."""
     # seed rows carry a flag + a concrete dummy nbr: a NULL in the union
     # would coerce the int64 column to float64 in pandas, and xxhash64
     # node ids exceed float64's 2^53 integer precision
-    tagged = adj.select("node", "nbr", F.lit(False).alias("is_seed")) \
+    return adj.select("node", "nbr", F.lit(False).alias("is_seed")) \
         .unionByName(seeds.select("node", F.col("node").alias("nbr"),
                                   F.lit(True).alias("is_seed")))
 
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        is_seed = pdf["is_seed"]
-        frontier = set(pdf.loc[is_seed, "node"].astype("int64"))
-        nbrs: dict[int, list[int]] = {}
-        for n, m in zip(pdf.loc[~is_seed, "node"].astype("int64"),
-                        pdf.loc[~is_seed, "nbr"].astype("int64")):
-            nbrs.setdefault(int(n), []).append(int(m))
-        visited = set(frontier)
-        while frontier:
-            nxt = set()
-            for n in frontier:
-                for m in nbrs.get(n, ()):
-                    if m not in visited:
-                        visited.add(m)
-                        nxt.add(m)
-            frontier = nxt
-        return pd.DataFrame({"node": sorted(visited)})
 
-    return _one_group(tagged, _run, "node long")
+def bfs(rows: pd.DataFrame) -> pd.DataFrame:
+    """Visited node set of a BFS over the bfs_input rows: (node, nbr)
+    adjacency walked from the seed rows. Returns pandas (node)."""
+    is_seed = rows["is_seed"].astype("bool")
+    frontier = {int(n) for n in rows.loc[is_seed, "node"].astype("int64")}
+    nbrs: dict[int, list[int]] = {}
+    for n, m in zip(rows.loc[~is_seed, "node"].astype("int64"),
+                    rows.loc[~is_seed, "nbr"].astype("int64")):
+        nbrs.setdefault(int(n), []).append(int(m))
+    visited = set(frontier)
+    while frontier:
+        nxt = set()
+        for n in frontier:
+            for m in nbrs.get(n, ()):
+                if m not in visited:
+                    visited.add(m)
+                    nxt.add(m)
+        frontier = nxt
+    return pd.DataFrame({"node": sorted(visited)})
 
 
-def local_sssp(edges: DataFrame, seeds: DataFrame) -> DataFrame:
-    """Multi-source shortest path over (src, dst, _len) edges walking
-    dst→src (upstream), seeds at dist 0. Dijkstra with the same
-    dist(parent) + len accumulation order as the distributed relaxation.
-    Returns DataFrame(node long, dist double)."""
-    # concrete dummies, not NULLs — see local_bfs (float64 coercion would
+def sssp_input(edges: DataFrame, seeds: DataFrame) -> DataFrame:
+    """The shortest-path gate input: (src, dst, _len) edges plus one
+    (node, node, 0.0) row per seed node, told apart by ``is_seed``."""
+    # concrete dummies, not NULLs — see bfs_input (float64 coercion would
     # corrupt 64-bit hash node ids)
-    tagged = edges.select("src", "dst", "_len",
-                          F.lit(False).alias("is_seed")).unionByName(
+    return edges.select("src", "dst", "_len",
+                        F.lit(False).alias("is_seed")).unionByName(
         seeds.select(F.col("node").alias("src"),
                      F.col("node").alias("dst"),
                      F.lit(0.0).alias("_len"),
                      F.lit(True).alias("is_seed"))
     )
 
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        import heapq
 
-        is_seed = pdf["is_seed"]
-        # upstream adjacency: from a settled node d, relax edges src→d
-        ins: dict[int, list[tuple[int, float]]] = {}
-        for s, d, ln in zip(pdf.loc[~is_seed, "src"].astype("int64"),
-                            pdf.loc[~is_seed, "dst"].astype("int64"),
-                            pdf.loc[~is_seed, "_len"].astype("float64")):
-            ins.setdefault(int(d), []).append((int(s), float(ln)))
-        dist: dict[int, float] = {
-            int(n): 0.0 for n in pdf.loc[is_seed, "src"].astype("int64")
-        }
-        heap = [(0.0, n) for n in dist]
-        heapq.heapify(heap)
-        while heap:
-            d0, n = heapq.heappop(heap)
-            if d0 > dist.get(n, float("inf")):
-                continue
-            for s, ln in ins.get(n, ()):
-                nd = d0 + ln
-                if nd < dist.get(s, float("inf")):
-                    dist[s] = nd
-                    heapq.heappush(heap, (nd, s))
-        items = sorted(dist.items())
-        return pd.DataFrame({"node": [k for k, _ in items],
-                             "dist": [v for _, v in items]})
+def sssp(rows: pd.DataFrame) -> pd.DataFrame:
+    """Multi-source shortest path over the sssp_input rows, walking
+    dst→src (upstream), seeds at dist 0. Dijkstra with the same
+    dist(parent) + len accumulation order as the distributed relaxation.
+    Returns pandas (node, dist)."""
+    import heapq
 
-    return _one_group(tagged, _run, "node long, dist double")
+    is_seed = rows["is_seed"].astype("bool")
+    # upstream adjacency: from a settled node d, relax edges src→d
+    ins: dict[int, list[tuple[int, float]]] = {}
+    for s, d, ln in zip(rows.loc[~is_seed, "src"].astype("int64"),
+                        rows.loc[~is_seed, "dst"].astype("int64"),
+                        rows.loc[~is_seed, "_len"].astype("float64")):
+        ins.setdefault(int(d), []).append((int(s), float(ln)))
+    dist: dict[int, float] = {
+        int(n): 0.0 for n in rows.loc[is_seed, "src"].astype("int64")
+    }
+    heap = [(0.0, n) for n in dist]
+    heapq.heapify(heap)
+    while heap:
+        d0, n = heapq.heappop(heap)
+        if d0 > dist.get(n, float("inf")):
+            continue
+        for s, ln in ins.get(n, ()):
+            nd = d0 + ln
+            if nd < dist.get(s, float("inf")):
+                dist[s] = nd
+                heapq.heappush(heap, (nd, s))
+    items = sorted(dist.items())
+    return pd.DataFrame({"node": [k for k, _ in items],
+                         "dist": [v for _, v in items]})
 
 
-def local_chain_roots(ptr_init: DataFrame) -> DataFrame:
-    """Pointer-jumping fixpoint (k → final successor root) in one task.
-    Input: DataFrame(k, p) with p = successor-or-self. Cycles (ring
-    chains — degenerate for river networks) terminate at the first
-    revisited member."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in ptr_init.schema.fields)
-
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = dict(zip(pdf["k"], pdf["p"]))
-        root: dict = {}
-        for k in p:
-            seen, on_path = [], set()
-            cur = k
-            while p[cur] != cur and cur not in root and cur not in on_path:
-                seen.append(cur)
-                on_path.add(cur)
-                cur = p[cur]
-            r = root.get(cur, cur)
-            for s in seen:
-                root[s] = r
-            root[k] = r
-        return pd.DataFrame({"k": list(pdf["k"]),
-                             "p": [root[k] for k in pdf["k"]]})
-
-    return _one_group(ptr_init, _run, schema)
+def chain_roots(rows: pd.DataFrame) -> pd.DataFrame:
+    """Pointer-jumping fixpoint (k → final successor root) over (k, p)
+    rows with p = successor-or-self. Cycles (ring chains — degenerate for
+    river networks) terminate at the first revisited member. Returns
+    pandas (k, p)."""
+    p = dict(zip(rows["k"], rows["p"]))
+    root: dict = {}
+    for k in p:
+        seen, on_path = [], set()
+        cur = k
+        while p[cur] != cur and cur not in root and cur not in on_path:
+            seen.append(cur)
+            on_path.add(cur)
+            cur = p[cur]
+        r = root.get(cur, cur)
+        for s in seen:
+            root[s] = r
+        root[k] = r
+    return pd.DataFrame({"k": list(rows["k"]),
+                         "p": [root[k] for k in rows["k"]]})
 
 
 def _topo(keys, na, nb):
@@ -176,116 +207,97 @@ def _topo(keys, na, nb):
     return order, upstream
 
 
-def local_upstream(e: DataFrame, key: str) -> DataFrame:
-    """UL(e) = _len + max(UL of upstream edges, default 0) in one task —
-    same two-operand float ops as the distributed recursion, so values are
-    bit-identical. Input cols: key, NODEA, NODEB, _len."""
-
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = list(pdf[key])
-        na = list(pdf["NODEA"].astype("int64"))
-        nb = list(pdf["NODEB"].astype("int64"))
-        ln = list(pdf["_len"].astype("float64"))
-        order, upstream = _topo(keys, na, nb)
-        ul: dict[int, float] = {}
-        for i in order:
-            ups = [ul[j] for j in upstream[i]]
-            ul[i] = ln[i] + (max(ups) if ups else 0.0)
-        # cycle members keep their init value (len), like round 0 of the
-        # distributed fixpoint before it gives up at max_iter
-        rows = [(keys[i], ul.get(i, ln[i])) for i in range(len(keys))]
-        return pd.DataFrame(rows, columns=[key, "UL"])
-
-    return _one_group(e, _run, f"{key} string, UL double")
+def upstream(rows: pd.DataFrame, key: str) -> pd.DataFrame:
+    """UL(e) = _len + max(UL of upstream edges, default 0) — same
+    two-operand float ops as the distributed recursion, so values are
+    bit-identical. Input cols: key, NODEA, NODEB, _len. Returns pandas
+    (key, UL)."""
+    keys = list(rows[key])
+    na = list(rows["NODEA"].astype("int64"))
+    nb = list(rows["NODEB"].astype("int64"))
+    ln = list(rows["_len"].astype("float64"))
+    order, upstream_of = _topo(keys, na, nb)
+    ul: dict[int, float] = {}
+    for i in order:
+        ups = [ul[j] for j in upstream_of[i]]
+        ul[i] = ln[i] + (max(ups) if ups else 0.0)
+    # cycle members keep their init value (len), like round 0 of the
+    # distributed fixpoint before it gives up at max_iter
+    out = [(keys[i], ul.get(i, ln[i])) for i in range(len(keys))]
+    return pd.DataFrame(out, columns=[key, "UL"])
 
 
-def local_strahler(e: DataFrame, key: str) -> DataFrame:
-    """Strahler orders in one task: leaves 1; max(arms) + 1 when the max
-    occurs ≥ 2 times. Returns only ordered edges (cycle members omitted,
-    matching the distributed left join's nulls)."""
-
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = list(pdf[key])
-        na = list(pdf["NODEA"].astype("int64"))
-        nb = list(pdf["NODEB"].astype("int64"))
-        order, upstream = _topo(keys, na, nb)
-        sv: dict[int, int] = {}
-        for i in order:
-            arms = [sv[j] for j in upstream[i]]
-            if not arms:
-                sv[i] = 1
-            else:
-                mx = max(arms)
-                sv[i] = mx + (1 if arms.count(mx) >= 2 else 0)
-        rows = [(keys[i], v) for i, v in sv.items()]
-        return pd.DataFrame(rows, columns=[key, "STRAHLER"])
-
-    return _one_group(e, _run, f"{key} string, STRAHLER int")
+def strahler(rows: pd.DataFrame, key: str) -> pd.DataFrame:
+    """Strahler orders: leaves 1; max(arms) + 1 when the max occurs ≥ 2
+    times. Input cols: key, NODEA, NODEB. Returns only ordered edges
+    (cycle members omitted, matching the distributed left join's nulls)
+    as pandas (key, STRAHLER)."""
+    keys = list(rows[key])
+    na = list(rows["NODEA"].astype("int64"))
+    nb = list(rows["NODEB"].astype("int64"))
+    order, upstream_of = _topo(keys, na, nb)
+    sv: dict[int, int] = {}
+    for i in order:
+        arms = [sv[j] for j in upstream_of[i]]
+        if not arms:
+            sv[i] = 1
+        else:
+            mx = max(arms)
+            sv[i] = mx + (1 if arms.count(mx) >= 2 else 0)
+    out = [(keys[i], v) for i, v in sv.items()]
+    return pd.DataFrame(out, columns=[key, "STRAHLER"])
 
 
-def local_hack(e: DataFrame, key: str) -> DataFrame:
-    """Hack orders in one task. Input cols: key, NODEA, NODEB, UL,
-    is_main (precomputed main-arm flag), is_outlet (edge drains to an
-    outlet node). Min-fixpoint over parent paths = 0/1-weight Dijkstra
-    from the outlet edges; integers, so equality with the distributed
-    min-union loop is exact. Unreachable edges omitted (→ nulls after the
-    caller's left join)."""
+def hack(rows: pd.DataFrame, key: str) -> pd.DataFrame:
+    """Hack orders. Input cols: key, NODEA, NODEB, _is_main (precomputed
+    main-arm flag), _is_outlet (edge drains to an outlet node).
+    Min-fixpoint over parent paths = 0/1-weight Dijkstra from the outlet
+    edges; integers, so equality with the distributed min-union loop is
+    exact. Unreachable edges omitted (→ nulls after the caller's left
+    join). Returns pandas (key, HACK)."""
+    import heapq
+    from collections import defaultdict
 
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        import heapq
-
-        keys = list(pdf[key])
-        na = list(pdf["NODEA"].astype("int64"))
-        nb = list(pdf["NODEB"].astype("int64"))
-        main = list(pdf["is_main"].astype("bool"))
-        outlet = list(pdf["is_outlet"].astype("bool"))
-        from collections import defaultdict
-
-        by_na = defaultdict(list)  # parent edges keyed by their NODEA
-        for i, a in enumerate(na):
-            by_na[a].append(i)
-        # children of parent p: edges c with nb[c] == na[p] → walk from p
-        # via by_nb lookup of na[p]
-        by_nb = defaultdict(list)
-        for i, b in enumerate(nb):
-            by_nb[b].append(i)
-        h: dict[int, int] = {}
-        heap = []
-        for i, o in enumerate(outlet):
-            if o:
-                h[i] = 1
-                heapq.heappush(heap, (1, i))
-        while heap:
-            v, p = heapq.heappop(heap)
-            if v > h.get(p, 1 << 30):
-                continue
-            for c in by_nb.get(na[p], ()):  # children drain into p
-                nv = v if main[c] else v + 1
-                if nv < h.get(c, 1 << 30):
-                    h[c] = nv
-                    heapq.heappush(heap, (nv, c))
-        rows = [(keys[i], v) for i, v in h.items()]
-        return pd.DataFrame(rows, columns=[key, "HACK"])
-
-    return _one_group(e, _run, f"{key} string, HACK int")
+    keys = list(rows[key])
+    na = list(rows["NODEA"].astype("int64"))
+    nb = list(rows["NODEB"].astype("int64"))
+    main = list(rows["_is_main"].astype("bool"))
+    outlet = list(rows["_is_outlet"].astype("bool"))
+    # children of parent p: edges c with nb[c] == na[p]
+    by_nb = defaultdict(list)
+    for i, b in enumerate(nb):
+        by_nb[b].append(i)
+    h: dict[int, int] = {}
+    heap = []
+    for i, o in enumerate(outlet):
+        if o:
+            h[i] = 1
+            heapq.heappush(heap, (1, i))
+    while heap:
+        v, p = heapq.heappop(heap)
+        if v > h.get(p, 1 << 30):
+            continue
+        for c in by_nb.get(na[p], ()):  # children drain into p
+            nv = v if main[c] else v + 1
+            if nv < h.get(c, 1 << 30):
+                h[c] = nv
+                heapq.heappush(heap, (nv, c))
+    out = [(keys[i], v) for i, v in h.items()]
+    return pd.DataFrame(out, columns=[key, "HACK"])
 
 
-def local_subtree(e: DataFrame, key: str) -> DataFrame:
-    """Subtree edge count in one task: s(e) = 1 + sum(s of upstream
-    edges at NODEA) — all-integer, so there is nothing float to match.
-    Input cols: key, NODEA, NODEB."""
-
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = list(pdf[key])
-        na = list(pdf["NODEA"].astype("int64"))
-        nb = list(pdf["NODEB"].astype("int64"))
-        order, upstream = _topo(keys, na, nb)
-        s: dict[int, int] = {}
-        for i in order:
-            s[i] = 1 + sum(s[j] for j in upstream[i])
-        # cycle members keep the round-0 init (1), like the distributed
-        # fixpoint at max_iter
-        rows = [(keys[i], s.get(i, 1)) for i in range(len(keys))]
-        return pd.DataFrame(rows, columns=[key, "SUB"])
-
-    return _one_group(e, _run, f"{key} string, SUB long")
+def subtree(rows: pd.DataFrame, key: str) -> pd.DataFrame:
+    """Subtree edge count: s(e) = 1 + sum(s of upstream edges at NODEA) —
+    all-integer, so there is nothing float to match. Input cols: key,
+    NODEA, NODEB. Returns pandas (key, SUB)."""
+    keys = list(rows[key])
+    na = list(rows["NODEA"].astype("int64"))
+    nb = list(rows["NODEB"].astype("int64"))
+    order, upstream_of = _topo(keys, na, nb)
+    s: dict[int, int] = {}
+    for i in order:
+        s[i] = 1 + sum(s[j] for j in upstream_of[i])
+    # cycle members keep the round-0 init (1), like the distributed
+    # fixpoint at max_iter
+    out = [(keys[i], s.get(i, 1)) for i in range(len(keys))]
+    return pd.DataFrame(out, columns=[key, "SUB"])

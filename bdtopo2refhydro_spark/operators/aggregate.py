@@ -19,12 +19,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import udfs as U
-from ._local import SMALL_GRAPH_ROWS as _SMALL_GRAPH_ROWS
-from .graph import loop_profile
+from . import _local
+from .graph import TraversalMetrics, loop_profile
 
 
 def _chain_roots(e: DataFrame, key: str, max_rounds: int = 64,
-                 exclude_nodes: DataFrame | None = None) -> DataFrame:
+                 exclude_nodes: DataFrame | None = None,
+                 metrics: TraversalMetrics | None = None) -> DataFrame:
     """Label each edge with the key of the last edge of its chain.
 
     successor(e) = unique edge f with f.NODEA == e.NODEB, valid only when
@@ -49,24 +50,30 @@ def _chain_roots(e: DataFrame, key: str, max_rounds: int = 64,
               "node")
         .select("k", "nk")
     )
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    ptr = slots.checkpoint(
+    ptr = (
         e.select(F.col(key).alias("k"))
         .join(nxt, "k", "left")
         .withColumn("p", F.coalesce("nk", "k"))
-        .select("k", "p"),
-        "ptr",
+        .select("k", "p")
     )
-    n_ptr = ptr.count()
-    if n_ptr <= _SMALL_GRAPH_ROWS:
-        # small-graph fast path: single-task pointer chase (equality with
-        # the jumping loop asserted in tests)
-        from ._local import local_chain_roots
-
-        out = local_chain_roots(ptr)
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                       for f in ptr.schema.fields)
+    rows, ptr = _local.collect_small(ptr)
+    if rows is not None:
+        # small-graph arm: pointer chase on the driver (equality with the
+        # jumping loop asserted in tests)
+        if metrics is not None:
+            metrics.add(op="chain_roots", mode="local", edges=len(rows))
+        out = e.sparkSession.createDataFrame(_local.chain_roots(rows), schema)
         return out.select(F.col("k").alias(key), F.col("p").alias("chain_id"))
+    from ._ckpt import CheckpointSlots
+
+    # the pinned gate input is the first jump state: the first jump frees it
+    slots = CheckpointSlots()
+    ptr = slots.hold(ptr, "ptr")
+    n_ptr = ptr.count()
+    if metrics is not None:
+        metrics.add(op="chain_roots", mode="jump", edges=n_ptr)
 
     def _sig(df: DataFrame):
         # order-independent state fingerprint — one aggregate beats a

@@ -211,7 +211,8 @@ def _adjacency(edges_nodes: DataFrame, direction: str) -> DataFrame:
     'both' undirected (the reference's DIRECTION:2 at
     create_connected_reference_hydro.py:191-197). One materialized
     adjacency turns each BFS round into a single broadcast join instead of
-    two joins + a union over the edge table."""
+    two joins + a union over the edge table. Returned unpinned: the
+    caller's gate (select_connected) pins it."""
     out = []
     if direction in ("down", "both"):
         out.append(edges_nodes.select(F.col("NODEA").alias("node"),
@@ -222,7 +223,7 @@ def _adjacency(edges_nodes: DataFrame, direction: str) -> DataFrame:
     adj = out[0]
     for o in out[1:]:
         adj = adj.union(o)
-    return adj.localCheckpoint()
+    return adj
 
 
 def connected_components(adj: DataFrame, max_rounds: int = 64,
@@ -308,9 +309,10 @@ def select_connected(edges_nodes: DataFrame, seed_nodes: DataFrame,
     path so the bound is honored on every physical strategy.
 
     Physical strategy for run-to-convergence calls (`algorithm`):
-      'auto'   → below SMALL_GRAPH_ROWS adjacency rows: one-task BFS
-                 (operators/_local.py — self-join rounds pay ~1s of
-                 scheduling each regardless of size); above it: 'cc'.
+      'auto'   → at most SMALL_GRAPH_ROWS gate rows (adjacency + seed
+                 rows): BFS on the driver (operators/_local.py —
+                 self-join rounds pay ~1s of scheduling each regardless
+                 of size); above it: 'cc'.
       'cc'     → min-label connected components with pointer jumping,
                  O(log n) rounds (connected_components) — visited =
                  components containing a seed. Identical set to BFS.
@@ -319,19 +321,25 @@ def select_connected(edges_nodes: DataFrame, seed_nodes: DataFrame,
                  equality testing and bounded-depth semantics).
     All paths return identical sets (asserted in tests/test_graph_ops.py).
     """
-    from ._local import SMALL_GRAPH_ROWS, local_bfs
+    from . import _local
 
     if algorithm == "cc" and direction != "both":
         raise ValueError("algorithm='cc' requires direction='both' — "
                          "directed reachability is not a component query")
-    adj = _adjacency(edges_nodes, direction)
-    n_adj = adj.count()
     bounded = max_iter is not None
-    if (n_adj <= SMALL_GRAPH_ROWS and not force_distributed and not bounded
-            and algorithm in ("auto", "cc")):
+    rows, tagged = _local.collect_small(
+        _local.bfs_input(_adjacency(edges_nodes, direction), seed_nodes),
+        not force_distributed and not bounded and algorithm in ("auto", "cc"))
+    if rows is not None:
         if metrics is not None:
-            metrics.add(op="select_connected", mode="local", adj_rows=n_adj)
-        return local_bfs(adj, seed_nodes)
+            metrics.add(op="select_connected", mode="local",
+                        adj_rows=int((~rows["is_seed"]).sum()))
+        return edges_nodes.sparkSession.createDataFrame(_local.bfs(rows),
+                                                        "node long")
+    # the distributed arm reads the pinned gate input (no recompute)
+    adj = tagged.filter(~F.col("is_seed")).select("node", "nbr")
+    seed_nodes = tagged.filter(F.col("is_seed")).select("node")
+    n_adj = adj.count()
     # components == BFS-reachability only for the undirected walk; directed
     # walks ('up'/'down') are genuine reachability queries and stay on the
     # round-based path (directed log-depth would need transitive-closure
@@ -412,7 +420,11 @@ def fix_network_connectivity(full_edges: DataFrame, subset_keys: DataFrame,
 
     slots = CheckpointSlots()
     full_edges = full_edges.select(key, "NODEA", "NODEB").localCheckpoint()
-    kept_keys = slots.checkpoint(subset_keys.select(key), "kept")
+    # pinned once: every round re-reads the subset, which may be an
+    # expensive plan (the width network's zonal filter); the first kept
+    # checkpoint materializes the pin in the same job
+    subset_keys = subset_keys.select(key).localCheckpoint(eager=False)
+    kept_keys = slots.checkpoint(subset_keys, "kept")
     for outer in range(max_outer):
         kept_edges = full_edges.join(kept_keys, key, "left_semi")
         reached = select_connected(kept_edges, outlet_nodes, "both",

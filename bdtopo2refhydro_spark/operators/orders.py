@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import udfs as U
-from ._local import SMALL_GRAPH_ROWS as _SMALL_GRAPH_ROWS
+from . import _local
 from .graph import TraversalMetrics, loop_profile
 
 _N_CHAIN_BUCKETS = 64
@@ -54,7 +54,7 @@ def _distance_contract(e: DataFrame, outlet_nodes: DataFrame,
     a river network's depth) into super-edges via pointer jumping
     (aggregate._chain_roots, O(log chain) rounds), relax on the junction
     graph (rounds = junction depth — and the junction graph usually fits
-    the single-task local path), then recover interior chain-node
+    the small-graph arm on the driver), then recover interior chain-node
     distances with ONE pandas pass per chain in exact left-fold order
     (dist(src) = len + dist(dst), tail → head), so interior values are
     bit-identical to the round-based relaxation.
@@ -107,7 +107,7 @@ def _distance_contract(e: DataFrame, outlet_nodes: DataFrame,
     if metrics is not None:
         metrics.add(op="distance_from_outlet", mode="contract",
                     edges=de.count(), super_edges=super_edges.count())
-    # junction relaxation: local single-task Dijkstra when the junction
+    # junction relaxation: Dijkstra on the driver when the junction
     # graph is small (the common case — contraction removes the chain
     # bulk), round-based relaxation otherwise; never re-contract (the
     # contracted graph has no pass-through nodes left)
@@ -168,8 +168,9 @@ def distance_from_outlet(edges_nodes: DataFrame, outlet_nodes: DataFrame,
     relaxation rounds (and pins the round-based path so the bound holds).
 
     algorithm (convergence calls):
-      'auto'     → single-task Dijkstra below SMALL_GRAPH_ROWS
-                   (operators/_local.py, bit-identical accumulation);
+      'auto'     → Dijkstra on the driver at most SMALL_GRAPH_ROWS gate
+                   rows (edges + outlet rows; operators/_local.py,
+                   bit-identical accumulation);
                    'contract' above it.
       'contract' → degree-2 chain contraction + junction relaxation +
                    exact per-chain interior recovery — rounds scale with
@@ -184,19 +185,26 @@ def distance_from_outlet(edges_nodes: DataFrame, outlet_nodes: DataFrame,
     """
     e = edges_nodes.select(F.col("NODEA").alias("src"),
                            F.col("NODEB").alias("dst"),
-                           F.col(len_col).alias("_len")).localCheckpoint()
-    n_e = e.count()
+                           F.col(len_col).alias("_len"))
     bounded = max_iter is not None
-    if (n_e <= _SMALL_GRAPH_ROWS and not force_distributed and not bounded
-            and algorithm in ("auto", "contract", "_local_or_rounds")):
-        # small-graph fast path: single-task Dijkstra with the same
+    rows, tagged = _local.collect_small(
+        _local.sssp_input(e, outlet_nodes),
+        not force_distributed and not bounded
+        and algorithm in ("auto", "contract", "_local_or_rounds"))
+    if rows is not None:
+        # small-graph arm: Dijkstra on the driver with the same
         # dist(parent)+len accumulation → bit-identical distances
         # (see operators/_local.py; equality asserted in tests)
-        from ._local import local_sssp
-
         if metrics is not None:
-            metrics.add(op="distance_from_outlet", mode="local", edges=n_e)
-        return local_sssp(e, outlet_nodes)
+            metrics.add(op="distance_from_outlet", mode="local",
+                        edges=int((~rows["is_seed"]).sum()))
+        return edges_nodes.sparkSession.createDataFrame(
+            _local.sssp(rows), "node long, dist double")
+    # the distributed arm reads the pinned gate input (no recompute)
+    e = tagged.filter(~F.col("is_seed")).select("src", "dst", "_len")
+    outlet_nodes = tagged.filter(F.col("is_seed")) \
+                         .select(F.col("src").alias("node"))
+    n_e = e.count()
     if not bounded and algorithm in ("auto", "contract"):
         if (algorithm == "contract"
                 or _passthrough_fraction(e, "src", "dst", n_e, outlet_nodes)
@@ -354,7 +362,7 @@ def _upstream_contract(e: DataFrame, key: str,
                        metrics: TraversalMetrics | None) -> DataFrame:
     """O(junction depth) upstream length: contract degree-2 chains, run
     the fixpoint on the junction graph (usually small enough for the
-    single-task path), then recover every member's UL with one exact
+    small-graph arm), then recover every member's UL with one exact
     in-order pandas pass per chain (UL(e_i) = len_i + UL(e_{i-1}), head →
     tail, seeded by the max over the head junction's upstream arms).
     Same float contract as _distance_contract: super-edge weights are
@@ -441,22 +449,22 @@ def upstream_length(edges_nodes: DataFrame, key: str = "url",
     len(e) + max(ul(u) for u with u.NODEB == e.NODEA, default 0). Feeds
     Hack ordering.
 
-    algorithm: 'auto' → single-task topological pass below
-    SMALL_GRAPH_ROWS, chain contraction above (_upstream_contract,
+    algorithm: 'auto' → topological pass on the driver at most
+    SMALL_GRAPH_ROWS edges, chain contraction above (_upstream_contract,
     rounds ~ junction depth); 'rounds' → the literal bottom-up fixpoint
     (rounds ~ network depth)."""
-    e = edges_nodes.select(key, "NODEA", "NODEB", F.col(len_col).alias("_len")) \
-                   .localCheckpoint()
-    n_e = e.count()
-    if (n_e <= _SMALL_GRAPH_ROWS
-            and algorithm in ("auto", "contract", "_local_or_rounds")):
-        # small-graph fast path: single-task topological pass with the
-        # same len + max(upstream) float ops (operators/_local.py)
-        from ._local import local_upstream
-
+    rows, e = _local.collect_small(
+        edges_nodes.select(key, "NODEA", "NODEB",
+                           F.col(len_col).alias("_len")),
+        algorithm in ("auto", "contract", "_local_or_rounds"))
+    if rows is not None:
+        # small-graph arm: topological pass on the driver with the same
+        # len + max(upstream) float ops (operators/_local.py)
         if metrics is not None:
-            metrics.add(op="upstream_length", mode="local", edges=n_e)
-        return local_upstream(e, key)
+            metrics.add(op="upstream_length", mode="local", edges=len(rows))
+        return edges_nodes.sparkSession.createDataFrame(
+            _local.upstream(rows, key), f"{key} string, UL double")
+    n_e = e.count()
     if algorithm in ("auto", "contract"):
         if (algorithm == "contract"
                 or _passthrough_fraction(e, "NODEA", "NODEB", n_e)
@@ -522,9 +530,9 @@ def hack_order(edges_nodes: DataFrame, outlet_nodes: DataFrame,
     parent's order, the others get parent+1. Top-down propagation until all
     edges ordered.
 
-    algorithm 'auto': single-task below SMALL_GRAPH_ROWS; above it the
-    propagation runs on the degree-2-contracted junction graph — HACK is
-    CONSTANT along a chain (each interior node has exactly one upstream
+    algorithm 'auto': on the driver at most SMALL_GRAPH_ROWS edges; above
+    it the propagation runs on the degree-2-contracted junction graph —
+    HACK is CONSTANT along a chain (each interior node has exactly one upstream
     arm, so is_main is vacuously true), so the chain's tail-edge order is
     every member's order; rounds scale with junction depth.
     'rounds' forces the literal per-level loop.
@@ -540,7 +548,7 @@ def hack_order(edges_nodes: DataFrame, outlet_nodes: DataFrame,
     otherwise. The flag is computed ONCE here (not per algorithm branch),
     so within a single call every branch sees the same _is_main."""
     ul = upstream_length(edges_nodes, key, len_col, max_iter, metrics)
-    e = edges_nodes.select(key, "NODEA", "NODEB").join(ul, key).localCheckpoint()
+    e = edges_nodes.select(key, "NODEA", "NODEB").join(ul, key)
     # main-stem flag: among edges sharing NODEB (a junction's upstream arms),
     # the one with max UL continues the parent's order
     best_up = (
@@ -548,29 +556,30 @@ def hack_order(edges_nodes: DataFrame, outlet_nodes: DataFrame,
         .agg(F.max(F.struct(F.col("UL"), F.col(key))).alias("_b"))
         .select("NODEB", F.col(f"_b.{key}").alias("_main_key"))
     )
-    e = e.join(best_up, "NODEB", "left") \
-         .withColumn("_is_main", F.col(key) == F.col("_main_key")) \
-         .drop("_main_key").localCheckpoint()
-    n_e = e.count()
-    if (n_e <= _SMALL_GRAPH_ROWS
-            and algorithm in ("auto", "contract", "_local_or_rounds")):
-        # small-graph fast path: 0/1-weight Dijkstra over parent paths —
-        # the same integer min-fixpoint as the propagation loop
-        from ._local import local_hack
-
-        tagged = e.join(
-            outlet_nodes.select("node").dropDuplicates(["node"])
-            .withColumnRenamed("node", "NODEB")
-            .withColumn("_is_outlet", F.lit(True)),
-            "NODEB", "left",
-        ).select(
-            key, "NODEA", "NODEB",
-            F.col("_is_main").alias("is_main"),
-            F.coalesce("_is_outlet", F.lit(False)).alias("is_outlet"),
-        )
+    # gate input: the flagged edges plus an outlet flag (the small arm
+    # needs it; the distributed arms drop it)
+    flagged = e.join(best_up, "NODEB", "left").join(
+        outlet_nodes.select("node").dropDuplicates(["node"])
+        .withColumnRenamed("node", "NODEB")
+        .withColumn("_at_outlet", F.lit(True)),
+        "NODEB", "left",
+    ).select(
+        key, "NODEA", "NODEB",
+        (F.col(key) == F.col("_main_key")).alias("_is_main"),
+        F.coalesce("_at_outlet", F.lit(False)).alias("_is_outlet"),
+    )
+    rows, flagged = _local.collect_small(
+        flagged, algorithm in ("auto", "contract", "_local_or_rounds"))
+    if rows is not None:
+        # small-graph arm: 0/1-weight Dijkstra over parent paths on the
+        # driver — the same integer min-fixpoint as the propagation loop
         if metrics is not None:
-            metrics.add(op="hack_order", mode="local", edges=n_e)
-        return edges_nodes.join(local_hack(tagged, key), key, "left")
+            metrics.add(op="hack_order", mode="local", edges=len(rows))
+        hack = edges_nodes.sparkSession.createDataFrame(
+            _local.hack(rows, key), f"{key} string, HACK int")
+        return edges_nodes.join(hack, key, "left")
+    e = flagged.drop("_is_outlet")
+    n_e = e.count()
     if (algorithm in ("auto", "contract")
             and (algorithm == "contract"
                  or _passthrough_fraction(e, "NODEA", "NODEB", n_e,
@@ -617,22 +626,23 @@ def strahler_order(edges_nodes: DataFrame, key: str = "url",
     leaves = 1; an edge whose upstream arms are all ordered gets
     max(up) + (1 if the max occurs ≥2 times else 0). Bottom-up fixpoint.
 
-    algorithm 'auto': single-task below SMALL_GRAPH_ROWS; above it the
-    fixpoint runs on the degree-2-contracted junction graph — Strahler is
-    CONSTANT along a chain (one upstream arm at every interior node, so
-    max+0 propagates unchanged), so rounds scale with junction depth.
+    algorithm 'auto': on the driver at most SMALL_GRAPH_ROWS edges; above
+    it the fixpoint runs on the degree-2-contracted junction graph —
+    Strahler is CONSTANT along a chain (one upstream arm at every interior
+    node, so max+0 propagates unchanged), so rounds scale with junction depth.
     Orders are integers — contraction equals the round loop exactly.
     'rounds' forces the literal per-level loop."""
-    e = edges_nodes.select(key, "NODEA", "NODEB").localCheckpoint()
-    n_edges = e.count()
-    if (n_edges <= _SMALL_GRAPH_ROWS
-            and algorithm in ("auto", "contract", "_local_or_rounds")):
-        # small-graph fast path: single-task topological Strahler pass
-        from ._local import local_strahler
-
+    rows, e = _local.collect_small(
+        edges_nodes.select(key, "NODEA", "NODEB"),
+        algorithm in ("auto", "contract", "_local_or_rounds"))
+    if rows is not None:
+        # small-graph arm: topological Strahler pass on the driver
         if metrics is not None:
-            metrics.add(op="strahler", mode="local", edges=n_edges)
-        return edges_nodes.join(local_strahler(e, key), key, "left")
+            metrics.add(op="strahler", mode="local", edges=len(rows))
+        st = edges_nodes.sparkSession.createDataFrame(
+            _local.strahler(rows, key), f"{key} string, STRAHLER int")
+        return edges_nodes.join(st, key, "left")
+    n_edges = e.count()
     if (algorithm in ("auto", "contract")
             and (algorithm == "contract"
                  or _passthrough_fraction(e, "NODEA", "NODEB", n_edges)
@@ -759,22 +769,21 @@ def subtree_counts(edges_nodes: DataFrame, key: str = "url",
     the drainage-accumulation primitive (catchment edge counts, tree
     betweenness, contributing-area proxies). All-integer → bit-exact.
 
-    algorithm: 'auto' → single-task topological pass below
-    SMALL_GRAPH_ROWS (_local.local_subtree), else bounded-round
+    algorithm: 'auto' → topological pass on the driver at most
+    SMALL_GRAPH_ROWS edges (_local.subtree), else bounded-round
     bottom-up fixpoint (rounds ~ network depth; the +1-per-step affine
     recurrence along degree-2 chains is contraction-friendly exactly
     like _upstream_contract, so the O(junction-depth) path applies at
     scale). Returns (key, SUB).
     """
-    e = (edges_nodes.select(key, "NODEA", "NODEB")
-         .localCheckpoint(eager=False))
-    n_e = e.count()
-    if n_e <= _SMALL_GRAPH_ROWS and algorithm == "auto":
-        from ._local import local_subtree
-
+    rows, e = _local.collect_small(
+        edges_nodes.select(key, "NODEA", "NODEB"), algorithm == "auto")
+    if rows is not None:
         if metrics is not None:
-            metrics.add(op="subtree_counts", mode="local", edges=n_e)
-        return local_subtree(e, key)
+            metrics.add(op="subtree_counts", mode="local", edges=len(rows))
+        return edges_nodes.sparkSession.createDataFrame(
+            _local.subtree(rows, key), f"{key} string, SUB long")
+    n_e = e.count()
     from ._ckpt import CheckpointSlots
 
     slots = CheckpointSlots()

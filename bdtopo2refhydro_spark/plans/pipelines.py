@@ -143,7 +143,11 @@ def run_reference_network(edges: DataFrame, outlet_polygons: DataFrame,
     # G4 principal stem (:202-209)
     if apply_principal_stem:
         outlet_nodes = seed_edges.select(F.col("NODEB").alias("node")).distinct()
-        troncon = principal_stem(troncon, outlet_nodes, key)
+        # three consumers (A3 segments, the returned troncon, and the
+        # width network downstream): pin so the stem's join sub-plan runs
+        # once, not once per consumer
+        troncon = principal_stem(troncon, outlet_nodes, key) \
+            .localCheckpoint(eager=False)
     if not with_segments:
         return troncon, None
     # A3 aggregate segments (:241-249) — node cols already present (second

@@ -1,7 +1,7 @@
 """Natural-scale distributed-path oracle run (VERDICT r2 'Next round' #5).
 
-Every sf* fixture sits below SMALL_GRAPH_ROWS = 2M adjacency rows, so the
-traversal operators take their single-task local path under the normal
+Every sf* fixture sits below SMALL_GRAPH_ROWS = 2M gate rows, so the
+traversal operators take their driver-side small-graph arm under the normal
 oracle run and the distributed paths are value-verified only when FORCED
 (oracle_check --distributed). This script closes that gap by size instead
 of by forcing:

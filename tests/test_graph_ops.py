@@ -261,43 +261,49 @@ def test_knn_snap_cell_mode_arithmetic_ids(spark):
     assert rows["a"] == rows["b"] == 10 * dim + 5
 
 
-def test_local_and_distributed_paths_agree(spark, tree, outlet):
-    """The small-graph fast paths (operators/_local.py) must produce
-    exactly the iterative self-join results: visited set, bit-identical
-    distances, identical chain roots."""
+def _modes(m) -> set[str]:
+    """The arms a TraversalMetrics recorded."""
+    return {r["mode"] for r in m.rounds if "mode" in r}
+
+
+def test_local_and_distributed_paths_agree(spark, tree, outlet, monkeypatch):
+    """The small-graph arm (operators/_local.py) must produce exactly the
+    iterative self-join results: visited set, bit-identical distances,
+    identical chain roots."""
+    import bdtopo2refhydro_spark.operators._local as L
     from bdtopo2refhydro_spark.operators.aggregate import _chain_roots
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
     from bdtopo2refhydro_spark.operators.orders import distance_from_outlet
 
     seeds = outlet
+    m_local, m_dist = TraversalMetrics(), TraversalMetrics()
     v_local = {r["node"] for r in
-               select_connected(tree, seeds, "both").collect()}
+               select_connected(tree, seeds, "both",
+                                metrics=m_local).collect()}
     v_dist = {r["node"] for r in
-              select_connected(tree, seeds, "both",
-                               force_distributed=True).collect()}
+              select_connected(tree, seeds, "both", force_distributed=True,
+                               metrics=m_dist).collect()}
+    assert _modes(m_local) == {"local"} and _modes(m_dist) == {"cc"}
     assert v_local == v_dist and len(v_local) == 8
 
+    m_local, m_dist = TraversalMetrics(), TraversalMetrics()
     d_local = {r["node"]: r["dist"] for r in
-               distance_from_outlet(tree, seeds).collect()}
+               distance_from_outlet(tree, seeds, metrics=m_local).collect()}
     d_dist = {r["node"]: r["dist"] for r in
-              distance_from_outlet(tree, seeds,
-                                   force_distributed=True).collect()}
+              distance_from_outlet(tree, seeds, force_distributed=True,
+                                   metrics=m_dist).collect()}
+    assert _modes(m_local) == {"local"} and "local" not in _modes(m_dist)
     assert d_local == d_dist  # bit-identical floats
 
-    import bdtopo2refhydro_spark.operators._local as L
+    m_local, m_dist = TraversalMetrics(), TraversalMetrics()
     roots_local = {r["url"]: r["chain_id"] for r in
                    _chain_roots(tree.select("url", "NODEA", "NODEB"),
-                                "url").collect()}
-    old = L.SMALL_GRAPH_ROWS
-    try:
-        L.SMALL_GRAPH_ROWS = -1  # force the jumping loop
-        import bdtopo2refhydro_spark.operators.aggregate as A
-        A._SMALL_GRAPH_ROWS = -1
-        roots_dist = {r["url"]: r["chain_id"] for r in
-                      _chain_roots(tree.select("url", "NODEA", "NODEB"),
-                                   "url").collect()}
-    finally:
-        L.SMALL_GRAPH_ROWS = old
-        A._SMALL_GRAPH_ROWS = old
+                                "url", metrics=m_local).collect()}
+    monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", -1)  # force the jumping loop
+    roots_dist = {r["url"]: r["chain_id"] for r in
+                  _chain_roots(tree.select("url", "NODEA", "NODEB"),
+                               "url", metrics=m_dist).collect()}
+    assert _modes(m_local) == {"local"} and _modes(m_dist) == {"jump"}
     assert roots_local == roots_dist
 
 
@@ -336,8 +342,11 @@ def test_log_depth_paths_match_rounds_on_deep_chain(spark):
     v_rounds = {r.node for r in select_connected(
         e, outlet, "both", force_distributed=True, algorithm="rounds",
         metrics=TraversalMetrics()).collect()}
-    v_local = {r.node for r in select_connected(e, outlet, "both").collect()}
+    m_local = TraversalMetrics()
+    v_local = {r.node for r in select_connected(
+        e, outlet, "both", metrics=m_local).collect()}
     assert v_cc == v_rounds == v_local
+    assert _modes(m_cc) == {"cc"} and _modes(m_local) == {"local"}
     cc_rounds = len([r for r in m_cc.rounds
                      if r.get("op") == "connected_components"])
     assert 0 < cc_rounds <= 16  # ~log2(n) + convergence check, not n
@@ -350,9 +359,11 @@ def test_log_depth_paths_match_rounds_on_deep_chain(spark):
     d_rounds = {r.node: r.dist for r in distance_from_outlet(
         e, outlet, force_distributed=True, algorithm="rounds",
         metrics=TraversalMetrics()).collect()}
+    m_local = TraversalMetrics()
     d_local = {r.node: r.dist for r in
-               distance_from_outlet(e, outlet).collect()}
+               distance_from_outlet(e, outlet, metrics=m_local).collect()}
     assert d_contract == d_rounds == d_local
+    assert "contract" in _modes(m_c) and _modes(m_local) == {"local"}
     # the contract path's own relaxation ran on the ~8-junction graph
     relax_rounds = len([r for r in m_c.rounds
                         if r.get("op") == "distance_from_outlet"
@@ -361,12 +372,13 @@ def test_log_depth_paths_match_rounds_on_deep_chain(spark):
     assert contract_modes and contract_modes[0]["super_edges"] < n // 10
 
 
-def test_order_contract_paths_match_rounds(spark):
+def test_order_contract_paths_match_rounds(spark, monkeypatch):
     """upstream_length / hack_order / strahler_order contraction must
     equal the literal round loops exactly (integer lens → UL float order
     immaterial; HACK/STRAHLER are integers always)."""
-    import bdtopo2refhydro_spark.operators.orders as O
+    import bdtopo2refhydro_spark.operators._local as L
     from bdtopo2refhydro_spark.operators import upstream_length
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
 
     # depth 40 with three junctions: deep enough that any contract/rounds
     # divergence in chain folding or junction handling shows; the rounds
@@ -375,28 +387,25 @@ def test_order_contract_paths_match_rounds(spark):
     outlet = spark.createDataFrame([(0,)], "node long")
 
     def run(algorithm):
+        m = TraversalMetrics()
         ul = {r.url: r.UL for r in
-              upstream_length(e, algorithm=algorithm).collect()}
+              upstream_length(e, algorithm=algorithm, metrics=m).collect()}
         hk = {r.url: r.HACK for r in
-              hack_order(e, outlet, algorithm=algorithm).collect()}
+              hack_order(e, outlet, algorithm=algorithm,
+                         metrics=m).collect()}
         st = {r.url: r.STRAHLER for r in
-              strahler_order(e, algorithm=algorithm).collect()}
-        return ul, hk, st
+              strahler_order(e, algorithm=algorithm, metrics=m).collect()}
+        return (ul, hk, st), _modes(m)
 
-    local = run("auto")                     # below threshold → local
-    old = O._SMALL_GRAPH_ROWS
-    try:
-        O._SMALL_GRAPH_ROWS = -1
-        import bdtopo2refhydro_spark.operators.aggregate as A
-        import bdtopo2refhydro_spark.operators._local as L
-        A._SMALL_GRAPH_ROWS = -1
-        L.SMALL_GRAPH_ROWS = -1
-        contract = run("contract")
-        rounds = run("rounds")
-    finally:
-        O._SMALL_GRAPH_ROWS = old
-        A._SMALL_GRAPH_ROWS = old
-        L.SMALL_GRAPH_ROWS = old
+    local, m_local = run("auto")            # below threshold → local
+    monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", -1)
+    contract, m_contract = run("contract")
+    rounds, m_rounds = run("rounds")
+    assert m_local == {"local"}
+    assert m_contract == {"contract"}
+    # hack_order's upstream_length runs with algorithm='auto' (contract
+    # on this chain graph); the literal loops themselves record no mode
+    assert m_rounds == {"contract"}
     assert contract == rounds == local
 
 
@@ -410,33 +419,37 @@ def test_bounded_max_iter_truncates_bfs(spark):
     assert v == {0, 1, 2, 3}
 
 
-def test_local_and_distributed_orders_agree(spark, tree, outlet):
-    """upstream / Hack / Strahler local fast paths must equal the
-    distributed fixpoints exactly (floats bit-identical, same nulls)."""
-    import bdtopo2refhydro_spark.operators.orders as O
+def test_local_and_distributed_orders_agree(spark, tree, outlet,
+                                            monkeypatch):
+    """upstream / Hack / Strahler small arms must equal the distributed
+    fixpoints exactly (floats bit-identical, same nulls)."""
+    import bdtopo2refhydro_spark.operators._local as L
     from bdtopo2refhydro_spark.operators import upstream_length
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
 
     def snap():
-        ul = {r.url: r.UL for r in upstream_length(tree).collect()}
-        hk = {r.url: r.HACK for r in hack_order(tree, outlet).collect()}
-        st = {r.url: r.STRAHLER for r in strahler_order(tree).collect()}
-        return ul, hk, st
+        m = TraversalMetrics()
+        ul = {r.url: r.UL for r in upstream_length(tree, metrics=m).collect()}
+        hk = {r.url: r.HACK for r in
+              hack_order(tree, outlet, metrics=m).collect()}
+        st = {r.url: r.STRAHLER for r in
+              strahler_order(tree, metrics=m).collect()}
+        return (ul, hk, st), _modes(m)
 
-    local = snap()
-    old = O._SMALL_GRAPH_ROWS
-    try:
-        O._SMALL_GRAPH_ROWS = -1
-        dist = snap()
-    finally:
-        O._SMALL_GRAPH_ROWS = old
+    local, m_local = snap()
+    monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", -1)
+    dist, m_dist = snap()
+    assert m_local == {"local"}
+    # the 7-edge tree is junction-dense: auto takes the round loops
+    assert m_dist == {"rounds_chainpoor"}
     assert local == dist
 
 
-def test_auto_strategy_follows_chain_fraction(spark):
+def test_auto_strategy_follows_chain_fraction(spark, monkeypatch):
     """algorithm='auto' above the size threshold must pick contraction on
     a chain-dominated graph and the round loop on a junction-dense one
     (the r3 pass-through-fraction probe; values must match either way)."""
-    import bdtopo2refhydro_spark.operators.orders as O
+    import bdtopo2refhydro_spark.operators._local as L
     from bdtopo2refhydro_spark.operators import upstream_length
     from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
 
@@ -445,26 +458,26 @@ def test_auto_strategy_follows_chain_fraction(spark):
     star = spark.createDataFrame(
         [(f"b{i}", i, 0, 1.0) for i in range(1, 60)],
         "url string, NODEA long, NODEB long, len double")
-    old = O._SMALL_GRAPH_ROWS
-    try:
-        O._SMALL_GRAPH_ROWS = -1
+    with monkeypatch.context() as mp:
+        mp.setattr(L, "SMALL_GRAPH_ROWS", -1)
         m = TraversalMetrics()
         ul_c = {r.url: r.UL for r in
                 upstream_length(chainy, metrics=m).collect()}
-        assert {r["mode"] for r in m.rounds if "mode" in r} >= {"contract"}
+        assert "contract" in _modes(m) and "local" not in _modes(m)
         m = TraversalMetrics()
         ul_s = {r.url: r.UL for r in
                 upstream_length(star, metrics=m).collect()}
-        assert "rounds_chainpoor" in {r["mode"] for r in m.rounds
-                                      if "mode" in r}
-    finally:
-        O._SMALL_GRAPH_ROWS = old
-    assert ul_c == {r.url: r.UL for r in upstream_length(chainy).collect()}
-    assert ul_s == {r.url: r.UL for r in upstream_length(star).collect()}
+        assert _modes(m) == {"rounds_chainpoor"}
+    m = TraversalMetrics()
+    assert ul_c == {r.url: r.UL for r in
+                    upstream_length(chainy, metrics=m).collect()}
+    assert ul_s == {r.url: r.UL for r in
+                    upstream_length(star, metrics=m).collect()}
+    assert _modes(m) == {"local"}
 
 
 def test_subtree_counts_and_tree_betweenness_golden(spark):
-    """Hand-computed tree:        0
+    r"""Hand-computed tree:        0
                                  / \
                                 1   2
                                / \    \
@@ -490,20 +503,158 @@ def test_subtree_counts_and_tree_betweenness_golden(spark):
 
 
 def test_subtree_counts_rounds_equals_local(spark):
-    """The distributed bounded-round fixpoint == the single-task
+    """The distributed bounded-round fixpoint == the driver-side
     topological pass, on a forest with two components and a chain."""
     edges = ([("c%d" % i, i, i - 1) for i in range(1, 9)]  # chain 0..8
              + [("t1", 101, 100), ("t2", 102, 100), ("t3", 103, 101)])
     df = spark.createDataFrame(edges, "url string, NODEA long, NODEB long")
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
     from bdtopo2refhydro_spark.operators.orders import subtree_counts
 
-    local = {r["url"]: r["SUB"]
-             for r in subtree_counts(df, algorithm="auto").collect()}
-    rounds = {r["url"]: r["SUB"]
-              for r in subtree_counts(df, algorithm="rounds").collect()}
+    m_local, m_rounds = TraversalMetrics(), TraversalMetrics()
+    local = {r["url"]: r["SUB"] for r in
+             subtree_counts(df, algorithm="auto", metrics=m_local).collect()}
+    rounds = {r["url"]: r["SUB"] for r in
+              subtree_counts(df, algorithm="rounds",
+                             metrics=m_rounds).collect()}
+    assert _modes(m_local) == {"local"}
+    assert _modes(m_rounds) == set() and m_rounds.rounds
     assert local == rounds
     assert local["c1"] == 8 and local["c8"] == 1
     assert local["t1"] == 2 and local["t2"] == 1 and local["t3"] == 1
+
+
+@pytest.mark.parametrize("op", ["select_connected", "upstream_length"])
+def test_gate_boundary_is_exact(spark, tree, outlet, monkeypatch, op):
+    """The gate compares its input rows with SMALL_GRAPH_ROWS exactly: with
+    the threshold patched to n, an input of n rows takes the small arm and
+    one of n + 1 rows (threshold n - 1) the distributed arm, with equal
+    outputs. BFS gate rows are the adjacency plus the seed rows; the order
+    gates see one row per edge."""
+    import bdtopo2refhydro_spark.operators._local as L
+    from bdtopo2refhydro_spark.operators import upstream_length
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
+
+    n_edges = tree.count()
+    if op == "select_connected":
+        n = 2 * n_edges + outlet.count()    # 'both' adjacency + seeds
+
+        def run(m):
+            return {r.node for r in select_connected(
+                tree, outlet, "both", metrics=m).collect()}
+    else:
+        n = n_edges
+
+        def run(m):
+            return {r.url: r.UL for r in
+                    upstream_length(tree, metrics=m).collect()}
+
+    m_at, m_over = TraversalMetrics(), TraversalMetrics()
+    monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", n)
+    at = run(m_at)
+    monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", n - 1)
+    over = run(m_over)
+    assert _modes(m_at) == {"local"}
+    assert "local" not in _modes(m_over) and m_over.rounds
+    assert at == over
+
+
+def test_distributed_arm_reads_the_pinned_gate_input(spark, monkeypatch):
+    """Above the threshold the gate's input is computed once: the bounded
+    collect materializes the pin, and the distributed arm's count, chain
+    probe and rounds read those blocks instead of recomputing the input."""
+    import bdtopo2refhydro_spark.operators._local as L
+    from bdtopo2refhydro_spark.operators import upstream_length
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
+
+    sc = spark.sparkContext
+    computed = sc.accumulator(0)
+
+    def edge(i):
+        computed.add(1)
+        return (f"p{i}", i + 1, i, float(1 + i % 7))
+
+    n = 30
+    edges = spark.createDataFrame(sc.parallelize(range(n), 3).map(edge),
+                                  "url string, NODEA long, NODEB long, "
+                                  "len double")
+    monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", n - 1)
+    m = TraversalMetrics()
+    ul = {r.url: r.UL for r in upstream_length(edges, metrics=m).collect()}
+    # the outer call contracted; its junction graph took the small arm
+    assert m.rounds[0]["mode"] == "contract"
+    assert ul["p0"] == sum(float(1 + i % 7) for i in range(n))
+    assert computed.value == n
+
+
+_EDGES = "url string, NODEA long, NODEB long, len double"
+# every kernel's declared output schema
+_DECLARED = {
+    "select_connected": "node long",
+    "distance_from_outlet": "node long, dist double",
+    "upstream_length": "url string, UL double",
+    "hack_order": _EDGES + ", HACK int",
+    "strahler_order": _EDGES + ", STRAHLER int",
+    "subtree_counts": "url string, SUB long",
+    "chain_roots": "url string, chain_id string",
+}
+
+
+def _every_kernel(edges, outlet, metrics) -> dict:
+    from bdtopo2refhydro_spark.operators import upstream_length
+    from bdtopo2refhydro_spark.operators.aggregate import _chain_roots
+    from bdtopo2refhydro_spark.operators.orders import (
+        distance_from_outlet, subtree_counts)
+
+    return {
+        "select_connected": select_connected(edges, outlet, "both",
+                                             metrics=metrics),
+        "distance_from_outlet": distance_from_outlet(edges, outlet,
+                                                     metrics=metrics),
+        "upstream_length": upstream_length(edges, metrics=metrics),
+        "hack_order": hack_order(edges, outlet, metrics=metrics),
+        "strahler_order": strahler_order(edges, metrics=metrics),
+        "subtree_counts": subtree_counts(edges, metrics=metrics),
+        "chain_roots": _chain_roots(edges.select("url", "NODEA", "NODEB"),
+                                    "url", metrics=metrics),
+    }
+
+
+def _fields(df) -> list:
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def test_small_arm_degenerate_inputs_keep_schema(spark):
+    """An empty edge table and a single edge through every kernel on the
+    small arm: empty results still carry the declared schema, and the
+    one-edge values are the hand-computed ones."""
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
+
+    m = TraversalMetrics()
+    empty = _every_kernel(spark.createDataFrame([], _EDGES),
+                          spark.createDataFrame([], "node long"), m)
+    declared = {name: _fields(spark.createDataFrame([], ddl))
+                for name, ddl in _DECLARED.items()}
+    for name, df in empty.items():
+        assert _fields(df) == declared[name], name
+        assert df.collect() == [], name
+
+    one = _every_kernel(spark.createDataFrame([("e1", 1, 0, 5.0)], _EDGES),
+                        spark.createDataFrame([(0,)], "node long"), m)
+    for name, df in one.items():
+        assert _fields(df) == declared[name], name
+    got = {name: sorted(tuple(r) for r in df.collect())
+           for name, df in one.items()}
+    assert got == {
+        "select_connected": [(0,), (1,)],
+        "distance_from_outlet": [(0, 0.0), (1, 5.0)],
+        "upstream_length": [("e1", 5.0)],
+        "hack_order": [("e1", 1, 0, 5.0, 1)],
+        "strahler_order": [("e1", 1, 0, 5.0, 1)],
+        "subtree_counts": [("e1", 1)],
+        "chain_roots": [("e1", "e1")],
+    }
+    assert _modes(m) == {"local"}
 
 
 def test_boruvka_equals_kruskal_on_pseudorandom_graph(spark):

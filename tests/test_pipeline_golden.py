@@ -188,6 +188,42 @@ def test_width_pipeline_segment_tail(spark, fixed_edges):
     assert seg.select(F.sum("n_reaches")).first()[0] == reaches.count()
 
 
+# Spark jobs of one reference + width network run on the golden fixture
+# (test_hydro_pipeline_job_budget): 100 measured with the driver-side
+# small-graph arm, 159-160 before it (eager checkpoint + count + a
+# one-task pandas job per traversal gate). Counts vary by about ±2
+# between runs, so the budget leaves a 10% margin.
+HYDRO_JOB_BUDGET = 110
+
+
+def test_hydro_pipeline_job_budget(spark, fixed_edges):
+    """CI guard on the flagship's Spark job count: the reference network,
+    then the width network on its troncon, each output forced once under
+    one job group, stay within HYDRO_JOB_BUDGET jobs. A change that brings
+    back per-gate sizing actions or per-consumer kernel replays fails
+    here, not only in the benchmark."""
+    from bdtopo2refhydro_spark.plans import run_width_network
+    from bdtopo2refhydro_spark.sources import surfaces_df
+
+    fixed_edges.count()  # the cached fixture is not part of the budget
+    sc = spark.sparkContext
+    group = "test_hydro_pipeline_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        troncon, segment = run_reference_network(
+            fixed_edges, outlet_polygons_df(spark), tolerance=0.5)
+        segment.collect()
+        troncon.collect()
+        run_width_network(troncon, surfaces_df(spark),
+                          outlet_polygons_df(spark),
+                          tolerance=0.5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    print(f"hydro pipeline jobs: {jobs}")
+    assert 0 < jobs <= HYDRO_JOB_BUDGET
+
+
 def test_text_byte_identity(spark):
     """North-rule invariant: extracted text per url is byte-identical after a
     pipeline pass over the pages table."""
