@@ -10,8 +10,10 @@ Parsed representation (the "geom tuple"):
     (GeomType.MULTILINESTRING,[line (n,2), ...])
     (GeomType.MULTIPOLYGON,   [[ring, ...], ...])
 
-All coordinates float64. Little-endian only: the engine writes its own WKB
-and the synthetic fixtures are engine-generated (FIXTURES.md §B).
+All coordinates float64. The engine writes little-endian WKB only (the
+synthetic fixtures are engine-generated, FIXTURES.md §B); the parser also
+reads big-endian input, so a foreign blob is re-encoded canonically by any
+operator that parses and re-writes it (A3's chain stitch).
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ import numpy as np
 
 _HDR = struct.Struct("<BI")
 _U32 = struct.Struct("<I")
+# parse-side formats per WKB byte-order flag (1 = little, 0 = big endian)
+_ORDER = {1: (struct.Struct("<I"), "<f8"), 0: (struct.Struct(">I"), ">f8")}
 
 
 class GeomType(IntEnum):
@@ -74,35 +78,39 @@ def multipolygon_wkb(polys) -> bytes:
 
 # ---------------------------------------------------------------- parsing
 
-def _read_coords(buf: memoryview, off: int):
-    (n,) = _U32.unpack_from(buf, off)
+def _read_coords(buf: memoryview, off: int, u32=_U32, f8="<f8"):
+    (n,) = u32.unpack_from(buf, off)
     off += 4
-    arr = np.frombuffer(buf, dtype="<f8", count=2 * n, offset=off).reshape(n, 2)
+    arr = np.frombuffer(buf, dtype=f8, count=2 * n, offset=off).reshape(n, 2)
+    if f8 != "<f8":
+        arr = arr.astype("<f8")
     return arr, off + 16 * n
 
 
 def _parse_at(buf: memoryview, off: int):
-    byte_order, gtype = _HDR.unpack_from(buf, off)
-    if byte_order != 1:
-        raise ValueError("big-endian WKB not supported")
+    byte_order = buf[off]
+    if byte_order not in _ORDER:
+        raise ValueError(f"invalid WKB byte order {byte_order}")
+    u32, f8 = _ORDER[byte_order]
+    (gtype,) = u32.unpack_from(buf, off + 1)
     off += 5
     gtype = GeomType(gtype & 0xFF)  # mask any SRID/Z flags (we never set them)
     if gtype == GeomType.POINT:
-        arr = np.frombuffer(buf, dtype="<f8", count=2, offset=off)
-        return (gtype, arr.copy()), off + 16
+        arr = np.frombuffer(buf, dtype=f8, count=2, offset=off)
+        return (gtype, arr.astype("<f8")), off + 16
     if gtype == GeomType.LINESTRING:
-        arr, off = _read_coords(buf, off)
+        arr, off = _read_coords(buf, off, u32, f8)
         return (gtype, arr), off
     if gtype == GeomType.POLYGON:
-        (nrings,) = _U32.unpack_from(buf, off)
+        (nrings,) = u32.unpack_from(buf, off)
         off += 4
         rings = []
         for _ in range(nrings):
-            ring, off = _read_coords(buf, off)
+            ring, off = _read_coords(buf, off, u32, f8)
             rings.append(ring)
         return (gtype, rings), off
     if gtype in (GeomType.MULTILINESTRING, GeomType.MULTIPOLYGON):
-        (ngeom,) = _U32.unpack_from(buf, off)
+        (ngeom,) = u32.unpack_from(buf, off)
         off += 4
         parts = []
         for _ in range(ngeom):

@@ -15,6 +15,21 @@ asserted in tests/test_graph_ops.py and by the driver's DuckDB oracles
 (which run at sizes that take the small arm AND are replayed with the
 threshold forced down by ``scripts/oracle_check.py --distributed``).
 
+Kernels and the gate input each one reads (one bounded collect per call):
+- ``bfs`` (select_connected): (node, nbr) adjacency + seed rows;
+- ``sssp`` (distance_from_outlet): (src, dst, _len) edges + seed rows;
+- ``chain_roots`` (aggregate._chain_roots and A3 aggregate_segments):
+  (key, NODEA, NODEB) edges — in/out degrees, the pass-through successor
+  and the pointer chase all run here, so no degree/successor join plan is
+  built on the small arm;
+- ``repair`` (G3 fix_network_connectivity): full edges + subset keys +
+  outlet nodes as tagged rows; the greedy frontier repair, one BFS per
+  outer round;
+- ``upstream`` / ``strahler`` / ``subtree``: (key, NODEA, NODEB[, _len]);
+- ``hack_orders`` (G6 hack_order): (key, NODEA, NODEB, _len) edges +
+  outlet rows; UL, the main-arm flag and the outlet flag are derived
+  here, then ``hack``.
+
 Why the driver and not one executor task: a one-task pandas job costs a
 Python worker task, whose fixed cost is dominated by PySpark's per-task
 ``importlib.invalidate_caches()`` rescanning pyspark.zip, plus the eager
@@ -26,14 +41,22 @@ The gate input is pinned with a lazy localCheckpoint before the collect,
 so above the threshold the distributed arm reads the blocks that action
 materialized instead of recomputing the input. Driver memory is bounded
 by SMALL_GRAPH_ROWS narrow rows (a few id/length columns), far below
-``spark.driver.maxResultSize``.
+``spark.driver.maxResultSize``. A3 also moves geometry to the driver, but
+only when the gate's summed WKB bytes fit ``payload_budget`` — a quarter
+of ``spark.driver.maxResultSize`` (of the driver heap when that cap is 0),
+derived from the session so the collect cap and the heap stay set
+together; over it, the chain labels go back as a literal and Spark
+stitches.
 
 The local algorithms reproduce the distributed results EXACTLY:
 - BFS: same visited set (set semantics — no float issues);
 - shortest path: distances accumulate outlet→node in the same order as
   the relaxation loop (dist(parent) + len), so float sums agree bit for
   bit on the argmin paths;
-- chain roots: the same successor-pointer fixpoint.
+- chain roots: the same successor pointers and fixpoint;
+- G3 repair: the same kept set and per-round unreachable counts (sets);
+- Hack: UL with the same float ops, the main arm as max (UL, key) per
+  NODEB like the distributed struct max, integer orders.
 
 CONTRACT CAVEAT — cycles: the local↔distributed path-equality guarantee
 holds for ACYCLIC inputs (all river networks the reference targets, and
@@ -56,6 +79,27 @@ from pyspark.sql import functions as F
 from ._ckpt import backing_rdd
 
 SMALL_GRAPH_ROWS = 2_000_000
+
+
+def payload_budget(spark) -> int:
+    """Bytes a driver-side payload collect (A3's geometry) may move: a
+    quarter of ``spark.driver.maxResultSize``, Spark's own cap on one
+    action's result, or of ``spark.driver.memory`` when that cap is 0
+    (unlimited) — the rest is headroom for the Arrow batches and the
+    pandas copy that live beside it in the driver heap."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    cap = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if cap <= 0:
+        cap = conf.getSizeAsBytes("spark.driver.memory", "1g")
+    return cap // 4
+
+
+def tag_dummy(df: DataFrame, col: str):
+    """A concrete dummy of ``df[col]``'s type for the tagged rows a gate
+    input unions in: a NULL would coerce an int64 column to float64 in
+    pandas, and xxhash64 node ids exceed float64's 2^53 integer
+    precision."""
+    return F.lit(0).cast(df.schema[col].dataType)
 
 
 def collect_small(df: DataFrame, eligible: bool = True
@@ -95,12 +139,18 @@ def bfs(rows: pd.DataFrame) -> pd.DataFrame:
     """Visited node set of a BFS over the bfs_input rows: (node, nbr)
     adjacency walked from the seed rows. Returns pandas (node)."""
     is_seed = rows["is_seed"].astype("bool")
-    frontier = {int(n) for n in rows.loc[is_seed, "node"].astype("int64")}
     nbrs: dict[int, list[int]] = {}
     for n, m in zip(rows.loc[~is_seed, "node"].astype("int64"),
                     rows.loc[~is_seed, "nbr"].astype("int64")):
         nbrs.setdefault(int(n), []).append(int(m))
-    visited = set(frontier)
+    seeds = {int(n) for n in rows.loc[is_seed, "node"].astype("int64")}
+    return pd.DataFrame({"node": sorted(_reach(seeds, nbrs))})
+
+
+def _reach(seeds: set, nbrs: dict) -> set:
+    """Frontier BFS: every node reachable from ``seeds`` over ``nbrs``
+    (node → neighbour list), seeds included."""
+    visited, frontier = set(seeds), set(seeds)
     while frontier:
         nxt = set()
         for n in frontier:
@@ -109,7 +159,68 @@ def bfs(rows: pd.DataFrame) -> pd.DataFrame:
                     visited.add(m)
                     nxt.add(m)
         frontier = nxt
-    return pd.DataFrame({"node": sorted(visited)})
+    return visited
+
+
+def repair_input(full_edges: DataFrame, subset_keys: DataFrame,
+                 outlet_nodes: DataFrame, key: str) -> DataFrame:
+    """The G3 gate input, one row kind per source: ``kind`` 0 = full edge
+    (key, NODEA, NODEB), 1 = subset key, 2 = outlet node (in NODEA and
+    NODEB). Unused columns carry concrete dummies (tag_dummy)."""
+    node0 = F.lit(0).cast("long")
+    return full_edges.select(
+        key, "NODEA", "NODEB", F.lit(0).alias("kind")
+    ).unionByName(subset_keys.select(
+        key, node0.alias("NODEA"), node0.alias("NODEB"),
+        F.lit(1).alias("kind"))
+    ).unionByName(outlet_nodes.select(
+        tag_dummy(full_edges, key).alias(key), F.col("node").alias("NODEA"),
+        F.col("node").alias("NODEB"), F.lit(2).alias("kind")))
+
+
+def repair(rows: pd.DataFrame, key: str, max_outer: int
+           ) -> tuple[list, list[dict]]:
+    """G3 greedy frontier repair over the repair_input rows — the same
+    rounds as the distributed loop in graph.fix_network_connectivity: BFS
+    over the kept edges from the outlets (undirected); count the subset
+    edges with neither end reached; stop at 0, else admit every non-kept
+    edge touching the reached set and repeat. Returns (kept keys — the
+    subset rows as given when no round admits anything, else the distinct
+    union — and the per-round metric records: one ``select_connected``
+    local record with the adjacency rows walked, one ``fix_connectivity``
+    record with the unreachable count)."""
+    kind = rows["kind"].astype("int64")
+    ed = rows.loc[kind == 0]
+    edges = list(zip(ed[key], ed["NODEA"].astype("int64").tolist(),
+                     ed["NODEB"].astype("int64").tolist()))
+    kept_rows = list(rows.loc[kind == 1, key])
+    subset, kept = set(kept_rows), set(kept_rows)
+    seeds = {int(n) for n in rows.loc[kind == 2, "NODEA"].astype("int64")}
+    log: list[dict] = []
+    for outer in range(max_outer):
+        nbrs: dict[int, list[int]] = {}
+        n_adj = 0
+        for k, a, b in edges:
+            if k in kept:
+                nbrs.setdefault(a, []).append(b)
+                nbrs.setdefault(b, []).append(a)
+                n_adj += 2
+        reached = _reach(seeds, nbrs)
+        log.append({"op": "select_connected", "mode": "local",
+                    "adj_rows": n_adj})
+        n_unreached = sum(1 for k, a, b in edges if k in subset
+                          and a not in reached and b not in reached)
+        log.append({"op": "fix_connectivity", "round": outer,
+                    "unreachable_edges": n_unreached})
+        if n_unreached == 0:
+            break
+        touching = {k for k, a, b in edges
+                    if k not in kept and (a in reached or b in reached)}
+        if not touching:
+            break  # disconnected beyond repair
+        kept |= touching
+        kept_rows = list(kept)
+    return kept_rows, log
 
 
 def sssp_input(edges: DataFrame, seeds: DataFrame) -> DataFrame:
@@ -159,12 +270,35 @@ def sssp(rows: pd.DataFrame) -> pd.DataFrame:
                          "dist": [v for _, v in items]})
 
 
-def chain_roots(rows: pd.DataFrame) -> pd.DataFrame:
-    """Pointer-jumping fixpoint (k → final successor root) over (k, p)
-    rows with p = successor-or-self. Cycles (ring chains — degenerate for
-    river networks) terminate at the first revisited member. Returns
-    pandas (k, p)."""
-    p = dict(zip(rows["k"], rows["p"]))
+def chain_input(e: DataFrame, key: str,
+                exclude_nodes: DataFrame | None = None) -> DataFrame:
+    """The chain-roots gate input: (key, NODEA, NODEB) edge rows plus one
+    row per excluded node (in NODEA and NODEB), told apart by
+    ``is_excl``."""
+    edges = e.select(key, "NODEA", "NODEB", F.lit(False).alias("is_excl"))
+    if exclude_nodes is None:
+        return edges
+    return edges.unionByName(exclude_nodes.select(
+        tag_dummy(e, key).alias(key), F.col("node").alias("NODEA"),
+        F.col("node").alias("NODEB"), F.lit(True).alias("is_excl")))
+
+
+def chain_roots(keys, na, nb, excluded=frozenset()) -> list:
+    """Chain root of every edge: the key of the last edge of its degree-2
+    chain. successor(e) = the one edge leaving e.NODEB when that node is a
+    pass-through (in-degree 1, out-degree 1, not ``excluded``), else e;
+    the root is the successor-pointer fixpoint. Cycles (ring chains —
+    degenerate for river networks) terminate at the first revisited
+    member. Returns the roots aligned with ``keys``."""
+    from collections import Counter
+
+    keys = list(keys)
+    na = [int(a) for a in na]
+    nb = [int(b) for b in nb]
+    indeg, outdeg = Counter(nb), Counter(na)
+    leaving = dict(zip(na, keys))     # the edge leaving a node of outdeg 1
+    p = {k: leaving[b] if indeg[b] == 1 and outdeg[b] == 1
+         and b not in excluded else k for k, b in zip(keys, nb)}
     root: dict = {}
     for k in p:
         seen, on_path = [], set()
@@ -177,8 +311,7 @@ def chain_roots(rows: pd.DataFrame) -> pd.DataFrame:
         for s in seen:
             root[s] = r
         root[k] = r
-    return pd.DataFrame({"k": list(rows["k"]),
-                         "p": [root[k] for k in rows["k"]]})
+    return [root[k] for k in keys]
 
 
 def _topo(keys, na, nb):
@@ -225,6 +358,41 @@ def upstream(rows: pd.DataFrame, key: str) -> pd.DataFrame:
     # distributed fixpoint before it gives up at max_iter
     out = [(keys[i], ul.get(i, ln[i])) for i in range(len(keys))]
     return pd.DataFrame(out, columns=[key, "UL"])
+
+
+def hack_input(edges_nodes: DataFrame, outlet_nodes: DataFrame, key: str,
+               len_col: str) -> DataFrame:
+    """The Hack gate input: (key, NODEA, NODEB, _len) edge rows plus one
+    row per outlet node (in NODEA and NODEB), told apart by
+    ``is_outlet``."""
+    return edges_nodes.select(
+        key, "NODEA", "NODEB", F.col(len_col).cast("double").alias("_len"),
+        F.lit(False).alias("is_outlet")
+    ).unionByName(outlet_nodes.select(
+        tag_dummy(edges_nodes, key).alias(key), F.col("node").alias("NODEA"),
+        F.col("node").alias("NODEB"), F.lit(0.0).alias("_len"),
+        F.lit(True).alias("is_outlet")))
+
+
+def hack_orders(rows: pd.DataFrame, key: str) -> pd.DataFrame:
+    """Hack orders from the hack_input rows: UL (``upstream``), the main
+    arm of each junction as the max (UL, key) among the edges sharing its
+    NODEB — the distributed ``max(struct(UL, key))`` — and the outlet flag
+    (NODEB is an outlet node), then ``hack``. Returns pandas (key, HACK)."""
+    is_out = rows["is_outlet"].astype("bool")
+    e = rows.loc[~is_out].reset_index(drop=True)
+    outlets = {int(n) for n in rows.loc[is_out, "NODEB"].astype("int64")}
+    ul = upstream(e, key)["UL"]
+    nb = [int(b) for b in e["NODEB"].astype("int64")]
+    best: dict[int, tuple] = {}
+    for k, b, u in zip(e[key], nb, ul):
+        if b not in best or (u, k) > best[b]:
+            best[b] = (u, k)
+    return hack(pd.DataFrame({
+        key: e[key], "NODEA": e["NODEA"], "NODEB": e["NODEB"],
+        "_is_main": [k == best[b][1] for k, b in zip(e[key], nb)],
+        "_is_outlet": [b in outlets for b in nb],
+    }), key)
 
 
 def strahler(rows: pd.DataFrame, key: str) -> pd.DataFrame:

@@ -18,8 +18,10 @@ from __future__ import annotations
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import udfs as U
 
@@ -415,15 +417,32 @@ def fix_network_connectivity(full_edges: DataFrame, subset_keys: DataFrame,
     least one endpoint in the reached set (one hop of 'candidate canals'),
     re-BFS. Each outer round admits only edges adjacent to the reached
     frontier, so admitted canals form connecting paths, not the whole canal
-    web. Returns the kept key set (subset + admitted)."""
+    web. Returns the kept key set (subset + admitted).
+
+    One gate (operators/_local.py) collects the full edges, the subset
+    keys and the outlet nodes as tagged rows — the subset's plan (the
+    width network's zonal filter) runs inside that one action. At most
+    SMALL_GRAPH_ROWS rows → the whole repair runs on the driver
+    (_local.repair, the same rounds and per-round records); above it the
+    self-join rounds below read the pinned gate input."""
+    from . import _local
     from ._ckpt import CheckpointSlots
 
+    rows, tagged = _local.collect_small(
+        _local.repair_input(full_edges, subset_keys, outlet_nodes, key))
+    if rows is not None:
+        kept, log = _local.repair(rows, key, max_outer)
+        if metrics is not None:
+            for r in log:
+                metrics.add(**r)
+        return full_edges.sparkSession.createDataFrame(
+            pd.DataFrame({key: pd.Series(kept, dtype=object)}),
+            T.StructType([full_edges.schema[key]]))
+    kind = F.col("kind")
+    full_edges = tagged.filter(kind == 0).select(key, "NODEA", "NODEB")
+    subset_keys = tagged.filter(kind == 1).select(key)
+    outlet_nodes = tagged.filter(kind == 2).select(F.col("NODEA").alias("node"))
     slots = CheckpointSlots()
-    full_edges = full_edges.select(key, "NODEA", "NODEB").localCheckpoint()
-    # pinned once: every round re-reads the subset, which may be an
-    # expensive plan (the width network's zonal filter); the first kept
-    # checkpoint materializes the pin in the same job
-    subset_keys = subset_keys.select(key).localCheckpoint(eager=False)
     kept_keys = slots.checkpoint(subset_keys, "kept")
     for outer in range(max_outer):
         kept_edges = full_edges.join(kept_keys, key, "left_semi")

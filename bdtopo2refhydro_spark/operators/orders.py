@@ -546,9 +546,30 @@ def hack_order(edges_nodes: DataFrame, outlet_nodes: DataFrame,
     EXACT for integer-valued len_col (all driver fixtures and reference
     data at mm precision) and inherits upstream_length's ulp caveat
     otherwise. The flag is computed ONCE here (not per algorithm branch),
-    so within a single call every branch sees the same _is_main."""
-    ul = upstream_length(edges_nodes, key, len_col, max_iter, metrics)
-    e = edges_nodes.select(key, "NODEA", "NODEB").join(ul, key)
+    so within a single call every branch sees the same _is_main.
+
+    Arms 'auto'/'contract' make ONE gate (operators/_local.py) over the
+    (key, NODEA, NODEB, len) edges plus the outlet nodes: at most
+    SMALL_GRAPH_ROWS rows → UL, the main-arm flag, the outlet flag and
+    the orders all run on the driver (_local.hack_orders, recorded as an
+    upstream_length and a hack_order local call); above it, and for
+    'rounds', the plan below reads the pinned gate input."""
+    rows, tagged = _local.collect_small(
+        _local.hack_input(edges_nodes, outlet_nodes, key, len_col),
+        algorithm in ("auto", "contract", "_local_or_rounds"))
+    if rows is not None:
+        if metrics is not None:
+            n_e = int((~rows["is_outlet"]).sum())
+            metrics.add(op="upstream_length", mode="local", edges=n_e)
+            metrics.add(op="hack_order", mode="local", edges=n_e)
+        hack = edges_nodes.sparkSession.createDataFrame(
+            _local.hack_orders(rows, key), f"{key} string, HACK int")
+        return edges_nodes.join(hack, key, "left")
+    edges = tagged.filter(~F.col("is_outlet")).drop("is_outlet")
+    outlet_nodes = tagged.filter(F.col("is_outlet")) \
+                         .select(F.col("NODEB").alias("node"))
+    ul = upstream_length(edges, key, "_len", max_iter, metrics)
+    e = edges.select(key, "NODEA", "NODEB").join(ul, key)
     # main-stem flag: among edges sharing NODEB (a junction's upstream arms),
     # the one with max UL continues the parent's order
     best_up = (
@@ -556,29 +577,10 @@ def hack_order(edges_nodes: DataFrame, outlet_nodes: DataFrame,
         .agg(F.max(F.struct(F.col("UL"), F.col(key))).alias("_b"))
         .select("NODEB", F.col(f"_b.{key}").alias("_main_key"))
     )
-    # gate input: the flagged edges plus an outlet flag (the small arm
-    # needs it; the distributed arms drop it)
-    flagged = e.join(best_up, "NODEB", "left").join(
-        outlet_nodes.select("node").dropDuplicates(["node"])
-        .withColumnRenamed("node", "NODEB")
-        .withColumn("_at_outlet", F.lit(True)),
-        "NODEB", "left",
-    ).select(
+    e = e.join(best_up, "NODEB", "left").select(
         key, "NODEA", "NODEB",
         (F.col(key) == F.col("_main_key")).alias("_is_main"),
-        F.coalesce("_at_outlet", F.lit(False)).alias("_is_outlet"),
-    )
-    rows, flagged = _local.collect_small(
-        flagged, algorithm in ("auto", "contract", "_local_or_rounds"))
-    if rows is not None:
-        # small-graph arm: 0/1-weight Dijkstra over parent paths on the
-        # driver — the same integer min-fixpoint as the propagation loop
-        if metrics is not None:
-            metrics.add(op="hack_order", mode="local", edges=len(rows))
-        hack = edges_nodes.sparkSession.createDataFrame(
-            _local.hack(rows, key), f"{key} string, HACK int")
-        return edges_nodes.join(hack, key, "left")
-    e = flagged.drop("_is_outlet")
+    ).localCheckpoint(eager=False)
     n_e = e.count()
     if (algorithm in ("auto", "contract")
             and (algorithm == "contract"

@@ -657,6 +657,169 @@ def test_small_arm_degenerate_inputs_keep_schema(spark):
     assert _modes(m) == {"local"}
 
 
+def _be_line(coords) -> bytes:
+    """Big-endian WKB LineString (byte-order flag 0): valid WKB the engine
+    never writes itself."""
+    import struct
+
+    flat = [v for xy in coords for v in xy]
+    return struct.pack(">BII", 0, 2, len(coords)) + \
+        struct.pack(f">{len(flat)}d", *flat)
+
+
+_AGG_EDGES = "url string, geom_wkb binary, NODEA long, NODEB long"
+
+
+def _agg_rows(df) -> list:
+    return sorted((r.GID, bytes(r.geom_wkb), r.NODEA, r.NODEB, r.LENGTH,
+                   r.n_reaches, r.first_url) for r in df.collect())
+
+
+def _agg_fixture(spark):
+    """Multi-edge chains (one with a big-endian member), single-edge
+    chains at a junction, and a big-endian single-edge chain. Node ids
+    are explicit; coordinates are non-integer so LENGTH has real ulps."""
+    return spark.createDataFrame([
+        # chain a→b→c through pass-through nodes 2 and 3, into junction 1
+        ("a", linestring_wkb([(0.1, 30.3), (0.2, 25.7), (0.3, 20.1)]), 4, 3),
+        ("b", linestring_wkb([(0.3, 20.1), (0.35, 10.9)]), 3, 2),
+        ("c", linestring_wkb([(0.35, 10.9), (0.0, 0.0)]), 2, 1),
+        # junction arms at node 4 (single-edge chains)
+        ("arm1", linestring_wkb([(-10.7, 40.3), (0.1, 30.3)]), 5, 4),
+        ("arm2", linestring_wkb([(10.9, 40.1), (3.3, 35.5), (0.1, 30.3)]),
+         6, 4),
+        # a big-endian single-edge chain (re-encoded by the stitch)
+        ("be1", _be_line([(50.5, 0.25), (60.75, 3.5)]), 7, 8),
+        # two-edge chain whose head is big-endian
+        ("d", _be_line([(80.1, 9.9), (80.2, 5.3), (81.7, 4.4)]), 9, 10),
+        ("e", linestring_wkb([(81.7, 4.4), (90.3, 0.7)]), 10, 11),
+    ], _AGG_EDGES)
+
+
+def test_aggregate_segments_arms_equal(spark, monkeypatch):
+    """A3's driver arm (stitch on the driver), its over-budget variant
+    (driver labels, Spark stitch) and the distributed arm (pointer
+    jumping) give identical rows: same geometry bytes, LENGTH bit for
+    bit."""
+    import bdtopo2refhydro_spark.operators._local as L
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
+
+    e = _agg_fixture(spark)
+    m_local = TraversalMetrics()
+    local = _agg_rows(aggregate_segments(e, metrics=m_local))
+    with monkeypatch.context() as mp:
+        mp.setattr(L, "payload_budget", lambda spark: 0)
+        m_budget = TraversalMetrics()
+        budget = _agg_rows(aggregate_segments(e, metrics=m_budget))
+    monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", -1)
+    m_dist = TraversalMetrics()
+    dist = _agg_rows(aggregate_segments(e, metrics=m_dist))
+
+    assert [r["stitch"] for r in m_local.rounds] == ["driver"]
+    assert [r["stitch"] for r in m_budget.rounds] == ["spark"]
+    assert _modes(m_local) == _modes(m_budget) == {"local"}
+    assert _modes(m_dist) == {"jump"}
+    assert local == budget == dist
+    by_gid = {r[0]: r for r in local}
+    assert set(by_gid) == {"c", "arm1", "arm2", "be1", "e"}
+    assert by_gid["c"][5] == 3 and by_gid["c"][6] == "a"
+    assert by_gid["e"][5] == 2 and by_gid["e"][6] == "d"
+    # the big-endian rows come out as canonical little-endian WKB
+    assert by_gid["be1"][1] == linestring_wkb([(50.5, 0.25), (60.75, 3.5)])
+    assert by_gid["e"][1][:5] == b"\x01\x02\x00\x00\x00"
+    assert by_gid["arm1"][4] == pytest.approx(np.hypot(10.8, 10.0))
+
+
+def test_aggregate_segments_degenerate_inputs_keep_schema(spark,
+                                                           monkeypatch):
+    """An empty edge table and a single edge through both A3 arms: the
+    declared schema, and the one-edge chain passes through unchanged."""
+    import bdtopo2refhydro_spark.operators._local as L
+    from bdtopo2refhydro_spark.operators.aggregate import _AGG_SCHEMA
+
+    declared = _fields(spark.createDataFrame([], _AGG_SCHEMA))
+    empty = spark.createDataFrame([], _AGG_EDGES)
+    geom = linestring_wkb([(0.0, 0.0), (3.0, 4.0)])
+    one = spark.createDataFrame([("e1", geom, 1, 0)], _AGG_EDGES)
+    for small in (L.SMALL_GRAPH_ROWS, -1):
+        monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", small)
+        out = aggregate_segments(empty)
+        assert _fields(out) == declared
+        assert out.collect() == []
+        out = aggregate_segments(one)
+        assert _fields(out) == declared
+        assert _agg_rows(out) == [("e1", geom, 1, 0, 5.0, 1, "e1")]
+
+
+def test_fix_connectivity_arms_equal(spark, monkeypatch):
+    """G3 on the series-canal fixture: the driver repair and the
+    self-join rounds keep the same set with the same per-round
+    unreachable counts and BFS adjacency rows."""
+    import bdtopo2refhydro_spark.operators._local as L
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
+
+    rows = [
+        ("s1", linestring_wkb([(0.0, 10.0), (0.0, 0.0)])),
+        ("c1", linestring_wkb([(0.0, 20.0), (0.0, 10.0)])),
+        ("c2", linestring_wkb([(0.0, 30.0), (0.0, 20.0)])),
+        ("s2", linestring_wkb([(0.0, 40.0), (0.0, 30.0)])),
+        ("x1", linestring_wkb([(500.0, 0.0), (500.0, 10.0)])),
+    ]
+    e = identify_network_nodes(
+        spark.createDataFrame(rows, "url string, geom_wkb binary"),
+        tolerance=0.5).cache()
+    subset = spark.createDataFrame([("s1",), ("s2",)], "url string")
+    outlet_nodes = e.filter("url='s1'").select(F.col("NODEB").alias("node"))
+
+    def run():
+        m = TraversalMetrics()
+        kept = sorted(r.url for r in fix_network_connectivity(
+            e, subset, outlet_nodes, metrics=m).collect())
+        g3 = [(r["round"], r["unreachable_edges"]) for r in m.rounds
+              if r.get("op") == "fix_connectivity"]
+        bfs = [r["adj_rows"] for r in m.rounds
+               if r.get("op") == "select_connected" and "mode" in r]
+        return kept, g3, bfs, _modes(m)
+
+    local = run()
+    monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", -1)
+    dist = run()
+    assert local[3] == {"local"} and dist[3] == {"cc"}
+    assert local[:3] == dist[:3]
+    # round 0 reaches s1 only; c1 then c2 are admitted one per round
+    assert local[0] == ["c1", "c2", "s1", "s2"]
+    assert local[1] == [(0, 1), (1, 1), (2, 0)]
+    assert local[2] == [4, 6, 8]
+
+
+def test_hack_tie_broken_by_key_on_both_arms(spark, monkeypatch):
+    """Two junction arms with equal UL: the main arm is the larger key
+    (max of the (UL, key) struct) on the driver arm and the distributed
+    arm alike."""
+    import bdtopo2refhydro_spark.operators._local as L
+    from bdtopo2refhydro_spark.operators.graph import TraversalMetrics
+
+    e = spark.createDataFrame([
+        ("out", 1, 0, 5.0),
+        ("a_arm", 2, 1, 3.0), ("b_arm", 3, 1, 3.0),   # UL 4.0 both
+        ("a_up", 4, 2, 1.0), ("b_up", 5, 3, 1.0),
+    ], _EDGES)
+    outlet = spark.createDataFrame([(0,)], "node long")
+
+    def run():
+        m = TraversalMetrics()
+        got = {r.url: r.HACK for r in
+               hack_order(e, outlet, metrics=m).collect()}
+        return got, _modes(m)
+
+    local, m_local = run()
+    monkeypatch.setattr(L, "SMALL_GRAPH_ROWS", -1)
+    dist, m_dist = run()
+    assert m_local == {"local"} and "local" not in m_dist
+    assert local == dist == {"out": 1, "b_arm": 1, "b_up": 1,
+                             "a_arm": 2, "a_up": 2}
+
+
 def test_boruvka_equals_kruskal_on_pseudorandom_graph(spark):
     """boruvka_mst == a sequential Kruskal union-find reference on a
     deterministic LCG multigraph (distinct weights -> unique MST)."""
