@@ -1348,8 +1348,8 @@ FROM t
 
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    queries = emb.filter("vec_id < 50")
-    return ANN.cosine_topk(emb, queries, k=3)
+    probes = emb.filter("vec_id < 50")
+    return ANN.cosine_topk(emb, probes, k=3)
 
 
 _COSINE_SQL = """
@@ -2354,7 +2354,7 @@ def _q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cross-micro-batch session-merge path is pytest-covered with
     maxFilesPerTrigger. Oracle = the batch gap-island rollup in integer
     µs (new session when gap ≥ 30 min — Spark's session_window is
-    end-exclusive, unlike the batch sessionize's strict >)."""
+    end-exclusive, unlike a batch gap-island rollup's strict >)."""
     from bdtopo2refhydro_spark.streaming import stream_session_windows
 
     return stream_session_windows(
@@ -3216,95 +3216,13 @@ WHERE c_mktsegment = 'BUILDING'
 GROUP BY o_orderkey, o_orderdate, o_orderpriority
 """
 
-SESSION_GAP_S = 1800
-
-
-def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization of the event stream (the batch analog of a
-    session window): a new session starts when a user's inter-event gap
-    exceeds SESSION_GAP_S. One window pass (lag → gap flag → running sum)
-    then a per-session rollup — all shuffles keyed by user_id. Times ride
-    as integer epoch MICROseconds (unix_timestamp would truncate
-    sub-second parts and shift gaps by up to a second vs the oracle)."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id",
-        # parquet lands ts as TIMESTAMP_NTZ; the session tz is pinned UTC,
-        # so the cast is value-preserving and unix_micros stays integer
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ep"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
-    gap = F.col("ep") - F.lag("ep").over(w)
-    new_sess = F.when(
-        gap.isNull() | (gap > SESSION_GAP_S * 1_000_000), 1
-    ).otherwise(0)
-    sess = ev.withColumn(
-        "session_seq",
-        F.sum(new_sess).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return sess.groupBy("user_id", "session_seq").agg(
-        F.count("*").alias("n_events"),
-        (F.max("ep") - F.min("ep")).alias("duration_us"),
-        F.min("event_id").alias("first_event_id"),
-    )
-
-
-_SESSIONIZE_SQL = f"""
-WITH ev AS (
-  SELECT event_id, user_id, epoch_us(ts) AS ep FROM events
-),
-flagged AS (
-  SELECT event_id, user_id, ep,
-         CASE WHEN ep - lag(ep) OVER w IS NULL
-                OR ep - lag(ep) OVER w > {SESSION_GAP_S * 1_000_000}
-              THEN 1 ELSE 0 END AS new_sess
-  FROM ev
-  WINDOW w AS (PARTITION BY user_id ORDER BY ep, event_id)
-),
-sess AS (
-  SELECT event_id, user_id, ep,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ep, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           AS session_seq
-  FROM flagged
-)
-SELECT user_id, session_seq,
-       CAST(count(*) AS BIGINT) AS n_events,
-       max(ep) - min(ep) AS duration_us,
-       min(event_id) AS first_event_id
-FROM sess GROUP BY user_id, session_seq
-"""
-
-
-def _q_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OLAP grouping sets: per-(source, lang) counts with ROLLUP subtotals
-    and a grand total — one aggregation pass, three grouping sets."""
-    return (
-        _docs(spark, sf_dir)
-        .rollup("source", "lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-    )
-
-
-_ROLLUP_SQL = """
-SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM documents GROUP BY ROLLUP (source, lang)
-"""
-
 
 # ---------------------------------------------------------------------------
 # temporal joins (operators/temporal.py) — as-of, bucketed range, rollup
 # ---------------------------------------------------------------------------
 
 def _events_ep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events with integer epoch-µs (same UTC-pinned cast as sessionize)."""
+    """events with integer epoch-µs (UTC-pinned cast)."""
     return spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ep"),
@@ -5569,37 +5487,6 @@ FROM events
 """
 
 
-def _q_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's pure-SQL surface: a quality gate written as Spark
-    SQL TEXT over a registered temp view — no DataFrame calls — proving
-    the whole catalog/SQL entry point works (a reference user could
-    port their queries as SQL strings verbatim)."""
-    _docs(spark, sf_dir).createOrReplaceTempView("docs_sql_api")
-    return spark.sql("""
-        SELECT doc_id, n_tokens,
-               (10 * n_chars) div n_tokens AS chars_per_10tok,
-               n_tokens >= 5 AS passes
-        FROM (SELECT doc_id, n_chars,
-                     cast(size(filter(split(trim(lower(text)), '\\\\s+'),
-                                      t -> t != '')) as bigint) AS n_tokens
-              FROM docs_sql_api)
-        WHERE n_tokens > 0
-    """)
-
-
-_SQL_API_SQL = """
-SELECT doc_id, n_tokens,
-       (10 * n_chars) // n_tokens AS chars_per_10tok,
-       n_tokens >= 5 AS passes
-FROM (SELECT doc_id, n_chars,
-             CAST(len(list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               t -> t != '')) AS BIGINT) AS n_tokens
-      FROM documents)
-WHERE n_tokens > 0
-"""
-
-
 def _q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom WARC source (sources/warc.py — Spark 4 Python DataSource
     API): a crawl-native container read as a first-class
@@ -5649,72 +5536,6 @@ WITH p AS (
 SELECT url, '2024-01-01T00:00:00Z' AS warc_date,
        CAST(length(payload_str) AS BIGINT) AS content_length, payload_str
 FROM p
-"""
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def _q_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OLAP PIVOT: per user-bucket event counts pivoted to one column
-    per event type — Spark's groupBy().pivot() with an EXPLICIT value
-    list (no distinct-collect job; at scale an implicit pivot scans the
-    data twice and caps at 10k values). Compiles to one hash aggregate
-    of CASE-filtered counts — same plan as the portable SQL spelling
-    the oracle uses."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = (
-        events.withColumn("bucket", F.expr("user_id % 10"))
-        .groupBy("bucket")
-        .pivot("event_type", _EVENT_TYPES)
-        .agg(F.count(F.lit(1)))  # Pivot rejects count(*)
-    )
-    # pivot leaves NULL for absent combos; a count semantics wants 0
-    return out.select(
-        "bucket",
-        *[F.coalesce(F.col(t), F.lit(0)).alias(f"n_{t}")
-          for t in _EVENT_TYPES])
-
-
-_PIVOT_COUNTS_SQL = """
-SELECT user_id % 10 AS bucket,
-       CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS n_click,
-       CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS n_error,
-       CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT)
-         AS n_purchase,
-       CAST(count(*) FILTER (event_type = 'signup') AS BIGINT) AS n_signup,
-       CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS n_view
-FROM events GROUP BY 1
-"""
-
-
-def _q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured JSON column: events.props parsed with from_json
-    under an EXPLICIT schema (the scale-right spelling — inference
-    would scan twice and drift across snapshots), then aggregated per
-    event_type. Malformed/missing keys become NULL and are excluded by
-    the count, exactly like the oracle's json_extract."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        events.select(
-            "event_type",
-            F.from_json("props", "k bigint").getField("k").alias("k"))
-        .groupBy("event_type")
-        .agg(F.count("k").alias("n_k"),
-             F.sum("k").alias("sum_k"),
-             F.max("k").alias("max_k"))
-    )
-
-
-_JSON_EXTRACT_SQL = """
-SELECT event_type,
-       CAST(count(k) AS BIGINT) AS n_k,
-       CAST(sum(k) AS BIGINT) AS sum_k,
-       CAST(max(k) AS BIGINT) AS max_k
-FROM (SELECT event_type,
-             CAST(json_extract(props, '$.k') AS BIGINT) AS k
-      FROM events)
-GROUP BY event_type
 """
 
 
@@ -6299,28 +6120,6 @@ FROM p
 """
 
 
-def _q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTINCT aggregates (TPC-H Q16 family): per brand, exact
-    count(DISTINCT p_size) + count(DISTINCT p_type) + plain count —
-    Catalyst plans multi-distinct via Expand (one input row per
-    distinct column), partial-aggregated map-side."""
-    pt = spark.read.parquet(f"{sf_dir}/part.parquet")
-    return pt.groupBy("p_brand").agg(
-        F.countDistinct("p_size").alias("n_sizes"),
-        F.countDistinct("p_type").alias("n_types"),
-        F.count("*").alias("n_parts"),
-    )
-
-
-_DISTINCT_COUNTS_SQL = """
-SELECT p_brand,
-       CAST(count(DISTINCT p_size) AS BIGINT) AS n_sizes,
-       CAST(count(DISTINCT p_type) AS BIGINT) AS n_types,
-       CAST(count(*) AS BIGINT) AS n_parts
-FROM part GROUP BY p_brand
-"""
-
-
 def _q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape (discounted revenue, disjunctive predicates):
     an OR-of-ANDs across both join sides — the predicate class that
@@ -6469,34 +6268,6 @@ FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 WHERE l_shipdate >= TIMESTAMP '1996-01-01'
   AND l_shipdate < TIMESTAMP '1997-01-01'
 GROUP BY l_returnflag
-"""
-
-
-def _q_cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OLAP CUBE: event counts over (event_type, weekday) with ALL four
-    grouping-set combinations in one pass (Expand-based, map-side
-    partial) — completing the grouping-sets family next to
-    rollup_counts' ROLLUP. NULL group markers are replaced with 'ALL'
-    so the DuckDB compare is null-free."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", F.date_format("ts", "E").alias("wd"))
-    return (
-        ev.cube("event_type", "wd")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.coalesce("event_type", F.lit("ALL")).alias("event_type"),
-            F.coalesce("wd", F.lit("ALL")).alias("wd"),
-            "n",
-        )
-    )
-
-
-_CUBE_COUNTS_SQL = """
-SELECT COALESCE(event_type, 'ALL') AS event_type,
-       COALESCE(wd, 'ALL') AS wd,
-       CAST(count(*) AS BIGINT) AS n
-FROM (SELECT event_type, strftime(ts, '%a') AS wd FROM events)
-GROUP BY CUBE (event_type, wd)
 """
 
 
@@ -6691,73 +6462,6 @@ FROM ea FULL OUTER JOIN oa ON ea.user_id = oa.user_id
 """
 
 
-def _q_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE-frame window aggregation: per-user sliding 300-second sum
-    and count over event time (value-based frame, not row-based — peers
-    at the same timestamp share one frame in both engines). Integer
-    epoch seconds and cents → exact."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    base = ev.select(
-        "user_id", "event_id",
-        F.expr("unix_micros(cast(ts as timestamp)) div 1000000")
-        .alias("ep"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-        .alias("c"))
-    w = (Window.partitionBy("user_id").orderBy("ep")
-         .rangeBetween(-300, 0))
-    return base.select(
-        "user_id", "event_id", "ep",
-        F.sum("c").over(w).cast("bigint").alias("win_cents"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("win_n"))
-
-
-_RANGE_FRAME_SQL = """
-WITH b AS (
-  SELECT user_id, event_id,
-         CAST(epoch_us(ts) // 1000000 AS BIGINT) AS ep,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-  FROM events
-)
-SELECT user_id, event_id, ep,
-       CAST(sum(c) OVER w AS BIGINT) AS win_cents,
-       CAST(count(*) OVER w AS BIGINT) AS win_n
-FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ep
-                    RANGE BETWEEN 300 PRECEDING AND CURRENT ROW)
-"""
-
-
-def _q_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relational melt: DataFrame.unpivot (ids → (attr, val) long form)
-    then a per-attribute integer rollup — the Spark-native equivalent
-    of pandas melt, vs DuckDB's UNPIVOT. Attribute names come from the
-    engine itself, so the oracle also pins the melt's naming contract."""
-    lf = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    m = lf.unpivot(["l_orderkey"], ["l_partkey", "l_suppkey"],
-                   "attr", "val")
-    return (
-        m.groupBy("attr")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-             F.sum("val").cast("bigint").alias("total"),
-             F.min("val").cast("bigint").alias("mn"),
-             F.max("val").cast("bigint").alias("mx"))
-    )
-
-
-_UNPIVOT_MELT_SQL = """
-WITH m AS (
-  UNPIVOT (SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem)
-  ON l_partkey, l_suppkey INTO NAME attr VALUE val
-)
-SELECT attr, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(val) AS BIGINT) AS total,
-       CAST(min(val) AS BIGINT) AS mn,
-       CAST(max(val) AS BIGINT) AS mx
-FROM m GROUP BY attr
-"""
-
-
 def _q_stream_pyseq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python DataSource STREAMING reader (sources/pyds_stream.py):
     a SimpleDataSourceStreamReader emitting a deterministic sequence in
@@ -6776,130 +6480,6 @@ _STREAM_PYSEQ_SQL = """
 SELECT CAST(i AS BIGINT) AS seq_id,
        CAST((i * 2654435761) % 1000003 AS BIGINT) AS val
 FROM (SELECT unnest(range(120)) AS i)
-"""
-
-
-def _q_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANSI-safe arithmetic surface: try_add / try_multiply / try_divide
-    return NULL exactly where strict ANSI mode (on, Spark 4) would
-    THROW — overflow and division by zero. The oracle replays the
-    NULL pattern with CASE arms; sum_div stays exact because every
-    quotient is a multiple of 0.5 far below 2^52 (float sums of exact
-    halves round nowhere, any order)."""
-    lf = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    b = lf.select(
-        F.col("l_orderkey").alias("k"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-        .alias("c"),
-        (F.col("l_orderkey") % 3).alias("m"))
-    t = b.select(
-        F.try_add(F.lit(9223372036854775807), F.col("k") % 2).alias("ta"),
-        F.try_multiply(F.lit(4611686018427387904),
-                       (F.col("k") % 2) + 1).alias("tm"),
-        F.try_divide(F.col("c"), F.col("m")).alias("td"))
-    return t.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.count("ta").cast("bigint").alias("n_add_ok"),
-        F.count("tm").cast("bigint").alias("n_mul_ok"),
-        F.count("td").cast("bigint").alias("n_div_ok"),
-        F.sum("td").alias("sum_div"))
-
-
-_TRY_ARITH_SQL = """
-WITH b AS (
-  SELECT l_orderkey AS k,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS c,
-         l_orderkey % 3 AS m
-  FROM lineitem
-),
-t AS (
-  SELECT CASE WHEN k % 2 = 0 THEN 9223372036854775807 END AS ta,
-         CASE WHEN k % 2 = 0 THEN 4611686018427387904 END AS tm,
-         c / NULLIF(m, 0) AS td
-  FROM b
-)
-SELECT CAST(count(*) AS BIGINT) AS n,
-       CAST(count(ta) AS BIGINT) AS n_add_ok,
-       CAST(count(tm) AS BIGINT) AS n_mul_ok,
-       CAST(count(td) AS BIGINT) AS n_div_ok,
-       sum(td) AS sum_div
-FROM t
-"""
-
-
-def _q_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 native XML: from_xml with an explicit struct schema over
-    a synthesized per-event XML envelope (the xml sibling of
-    json_extract/variant_extract). Aggregates are all-BIGINT; the
-    oracle reads the original columns the envelope was built from, so
-    the parse must invert the build exactly."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    xml = F.concat(
-        F.lit("<e><id>"), F.col("event_id").cast("string"),
-        F.lit("</id><u>"), F.col("user_id").cast("string"),
-        F.lit("</u><t>"), F.col("event_type"), F.lit("</t></e>"))
-    p = F.from_xml(xml, "id BIGINT, u BIGINT, t STRING")
-    return (
-        ev.select(p.alias("p"))
-        .groupBy(F.col("p.t").alias("t"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-             F.sum("p.id").cast("bigint").alias("sum_id"),
-             F.sum("p.u").cast("bigint").alias("sum_u"))
-    )
-
-
-_XML_EXTRACT_SQL = """
-SELECT event_type AS t, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(event_id) AS BIGINT) AS sum_id,
-       CAST(sum(user_id) AS BIGINT) AS sum_u
-FROM events GROUP BY 1
-"""
-
-
-def _q_hof_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher-order array functions as a first-class surface —
-    transform/filter/aggregate/zip_with/reverse composed in one
-    whole-stage-codegen projection (zero shuffles before the final
-    values, no UDFs): per-doc token count, aggregate() total length,
-    filtered long-token count, and a zip_with(reverse) palindromic-
-    position count. All integers; the oracle replays with DuckDB list
-    lambdas."""
-    docs = _docs(spark, sf_dir)
-    toks = F.expr(
-        "filter(split(trim(lower(text)), '\\\\s+'), t -> t != '')")
-    return (
-        docs.select("doc_id", toks.alias("toks"))
-        .select(
-            "doc_id",
-            F.size("toks").cast("bigint").alias("n_toks"),
-            F.expr("aggregate(toks, 0L, (acc, t) -> acc + length(t))")
-            .alias("sum_len"),
-            F.expr("size(filter(toks, t -> length(t) >= 5))")
-            .cast("bigint").alias("n_long"),
-            F.expr(
-                "aggregate(zip_with(toks, reverse(toks), (a, b) -> "
-                "CASE WHEN a = b THEN 1L ELSE 0L END), 0L, "
-                "(acc, x) -> acc + x)").alias("pal_pos"))
-    )
-
-
-_HOF_FUNCS_SQL = """
-WITH lists AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                     t -> t != '') AS l
-  FROM documents
-)
-SELECT doc_id, CAST(len(l) AS BIGINT) AS n_toks,
-       CAST(COALESCE(list_sum(list_transform(l, t -> length(t))), 0)
-            AS BIGINT) AS sum_len,
-       CAST(len(list_filter(l, t -> length(t) >= 5)) AS BIGINT)
-         AS n_long,
-       CAST(COALESCE(list_sum(list_transform(range(1, len(l) + 1),
-             i -> CASE WHEN l[CAST(i AS INT)] =
-                            l[CAST(len(l) - i + 1 AS INT)]
-                  THEN 1 ELSE 0 END)), 0) AS BIGINT) AS pal_pos
-FROM lists
 """
 
 
@@ -6951,286 +6531,6 @@ SELECT p.event_id, p.user_id, p.ep_us,
                                  AND c.ep_us <= p.ep_us), -1)
            <= 604800000000 AS attributed
 FROM ev p WHERE p.event_type = 'purchase'
-"""
-
-
-_BM25_TERMS = ["spark", "join", "window"]
-
-
-def _q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25-shaped relevance ranking, log-free: for each query term the
-    top-5 docs by score = idf_ratio · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))
-    with k1=1.2, b=0.75 and idf_ratio = (N−df+0.5)/(df+0.5) — the same
-    monotone-in-idf substitution collocations uses for PMI, so no
-    transcendental (ln) whose libm could differ between engines. Every
-    input (tf, df, dl, N, Σdl) is an exact integer; the score is a
-    fixed dag of exact-double ops → bit-identical. Ties break by
-    doc_id. Scale: tf table is one token explode + groupBy; df/avgdl
-    broadcast; top-k is one per-term window over candidate docs only."""
-    from pyspark.sql import Window
-
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.expr(
-            "filter(split(trim(lower(text)), '\\\\s+'), t -> t != '')"))
-        .alias("tok"))
-    lens = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("dl"))
-    stats = lens.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("sum_dl"))
-    terms = spark.createDataFrame([(t,) for t in _BM25_TERMS],
-                                  "term string")
-    tf = (toks.join(F.broadcast(terms), F.col("tok") == F.col("term"))
-          .groupBy("term", "doc_id")
-          .agg(F.count(F.lit(1)).cast("bigint").alias("tf")))
-    df_t = tf.groupBy("term").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df"))
-    n, sum_dl = F.col("n_docs"), F.col("sum_dl")
-    avgdl = sum_dl.cast("double") / n.cast("double")
-    idf = ((n.cast("double") - F.col("df").cast("double") + F.lit(0.5))
-           / (F.col("df").cast("double") + F.lit(0.5)))
-    tfd = F.col("tf").cast("double")
-    dld = F.col("dl").cast("double")
-    score = idf * (tfd * F.lit(2.2)
-                   / (tfd + F.lit(1.2)
-                      * (F.lit(0.25) + F.lit(0.75) * dld / avgdl)))
-    w = Window.partitionBy("term").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        tf.join(lens, "doc_id")
-        .join(F.broadcast(df_t), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("term", "doc_id", "tf", "dl", score.alias("score"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("term", "doc_id", "tf", "dl", "score",
-                F.col("rk").cast("bigint").alias("rk"))
-    )
-
-
-_BM25_SQL = """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(list_filter(regexp_split_to_array(trim(lower(text)),
-                                                  '\\s+'),
-                            t -> t != '')) AS tok
-  FROM documents
-),
-lens AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY 1
-),
-stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(dl) AS BIGINT) AS sum_dl
-  FROM lens
-),
-tf AS (
-  SELECT tok AS term, doc_id, CAST(count(*) AS BIGINT) AS tf
-  FROM toks WHERE tok IN ({terms}) GROUP BY 1, 2
-),
-dft AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-scored AS (
-  SELECT tf.term, tf.doc_id, tf.tf, lens.dl,
-         ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
-          / (CAST(df AS DOUBLE) + 0.5))
-         * (CAST(tf AS DOUBLE) * 2.2
-            / (CAST(tf AS DOUBLE) + 1.2
-               * (0.25 + 0.75 * CAST(dl AS DOUBLE)
-                  / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-           AS score
-  FROM tf JOIN lens USING (doc_id) JOIN dft USING (term), stats
-)
-SELECT term, doc_id, tf, dl, score, CAST(rk AS BIGINT) AS rk
-FROM (SELECT *, row_number() OVER (PARTITION BY term
-                                   ORDER BY score DESC, doc_id ASC) AS rk
-      FROM scored)
-WHERE rk <= 5
-""".format(terms=", ".join(f"'{t}'" for t in _BM25_TERMS))
-
-
-def _q_chi_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square contingency cells for lang × source independence:
-    per-cell observed count, expected = row·col/n, and contribution
-    (O−E)²/E — emitted PER CELL, never float-summed, so every value is
-    a fixed dag of exact-integer-fed double ops (a χ² total would
-    depend on float summation order). The grid is tiny (|lang|·|src|);
-    marginals broadcast back onto it."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cells = docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("o"))
-    rows = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("row_tot"))
-    colsm = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("col_tot"))
-    tot = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    e = ((F.col("row_tot") * F.col("col_tot")).cast("double")
-         / F.col("n").cast("double"))
-    od = F.col("o").cast("double")
-    return (
-        cells.join(F.broadcast(rows), "lang")
-        .join(F.broadcast(colsm), "source")
-        .crossJoin(F.broadcast(tot))
-        .select("lang", "source", "o", e.alias("e"),
-                ((od - e) * (od - e) / e).alias("contrib"))
-    )
-
-
-_CHI_CELLS_SQL = """
-WITH cells AS (
-  SELECT lang, source, CAST(count(*) AS BIGINT) AS o
-  FROM documents GROUP BY 1, 2
-),
-r AS (SELECT lang, CAST(count(*) AS BIGINT) AS row_tot
-      FROM documents GROUP BY 1),
-c AS (SELECT source, CAST(count(*) AS BIGINT) AS col_tot
-      FROM documents GROUP BY 1),
-t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents)
-SELECT lang, source, o,
-       CAST(row_tot * col_tot AS DOUBLE) / CAST(n AS DOUBLE) AS e,
-       (CAST(o AS DOUBLE)
-        - CAST(row_tot * col_tot AS DOUBLE) / CAST(n AS DOUBLE))
-       * (CAST(o AS DOUBLE)
-          - CAST(row_tot * col_tot AS DOUBLE) / CAST(n AS DOUBLE))
-       / (CAST(row_tot * col_tot AS DOUBLE) / CAST(n AS DOUBLE))
-         AS contrib
-FROM cells JOIN r USING (lang) JOIN c USING (source), t
-"""
-
-
-def _q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition counts over per-user event
-    sequences: lead() over (ts, event_id) within each user, then a
-    (from, to) rollup — the session-behavior model a funnel/anomaly
-    stage consumes. One window + one small aggregation, all integers."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy(
-        F.expr("unix_micros(cast(ts as timestamp))"), F.col("event_id"))
-    seq = ev.select(
-        "user_id", F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"))
-    return (
-        seq.filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-
-
-_EVENT_TRANSITIONS_SQL = """
-WITH seq AS (
-  SELECT user_id, event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY epoch_us(ts), event_id)
-           AS to_type
-  FROM events
-)
-SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
-"""
-
-
-def _q_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered per-user event paths: collect_list(struct(ts, id, type))
-    + array_sort + transform + slice + concat_ws — the collection-
-    aggregation surface (the struct sort key makes the path
-    deterministic; pandas/shuffle order never leaks in). Path is the
-    first 5 event types joined with '>'."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    item = F.struct(
-        F.expr("unix_micros(cast(ts as timestamp))").alias("ep"),
-        F.col("event_id").alias("eid"),
-        F.col("event_type").alias("ty"))
-    return (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"),
-             F.array_sort(F.collect_list(item)).alias("seq"))
-        .select(
-            "user_id", "n_events",
-            F.concat_ws(
-                ">",
-                F.expr("transform(slice(seq, 1, 5), s -> s.ty)"))
-            .alias("path"))
-    )
-
-
-_USER_PATHS_SQL = """
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-       array_to_string(
-         (list(event_type ORDER BY epoch_us(ts), event_id))[1:5], '>')
-         AS path
-FROM events GROUP BY user_id
-"""
-
-
-def _q_rank_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percent_rank and cume_dist over a UNIQUE ordering (cents,
-    orderkey): both are exact-integer ratios — (rank−1)/(n−1) and
-    rank/n — so the doubles match bit-for-bit. Completes the ranking-
-    window family (rank/dense_rank/ntile live in rank_funcs)."""
-    from pyspark.sql import Window
-
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    base = od.select(
-        "o_orderkey", "o_orderpriority",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        .alias("cents"))
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        "cents", "o_orderkey")
-    return base.select(
-        "o_orderkey", "o_orderpriority", "cents",
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cume"))
-
-
-_RANK_RATIOS_SQL = """
-SELECT o_orderkey, o_orderpriority,
-       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-       percent_rank() OVER w AS pct_rank,
-       cume_dist() OVER w AS cume
-FROM orders
-WINDOW w AS (PARTITION BY o_orderpriority
-             ORDER BY CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT),
-                      o_orderkey)
-"""
-
-
-def _q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MapType round-trip: per-user event-type counts built into a map
-    (map_from_entries ∘ collect_list), probed with element_at, sized
-    with map_keys — then flattened back to columns so the oracle
-    compares values, not engine-internal map order (maps are unordered
-    in BOTH engines; only order-free reads are comparable)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    per_type = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    m = (per_type.groupBy("user_id")
-         .agg(F.map_from_entries(
-             F.collect_list(F.struct("event_type", "cnt"))).alias("m")))
-    return m.select(
-        "user_id",
-        F.size(F.map_keys(F.col("m"))).cast("bigint").alias("n_types"),
-        F.coalesce(F.element_at(F.col("m"), F.lit("click")), F.lit(0))
-        .cast("bigint").alias("cnt_click"),
-        F.coalesce(F.element_at(F.col("m"), F.lit("purchase")),
-                   F.lit(0)).cast("bigint").alias("cnt_purchase"))
-
-
-_MAP_FUNCS_SQL = """
-WITH per_type AS (
-  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1, 2
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_types,
-       CAST(COALESCE(sum(CASE WHEN event_type = 'click'
-                              THEN cnt END), 0) AS BIGINT) AS cnt_click,
-       CAST(COALESCE(sum(CASE WHEN event_type = 'purchase'
-                              THEN cnt END), 0) AS BIGINT)
-         AS cnt_purchase
-FROM per_type GROUP BY user_id
 """
 
 
@@ -7320,108 +6620,6 @@ two AS (
 )
 SELECT x AS node, CAST(count(*) AS BIGINT) AS n_two_hop
 FROM two GROUP BY 1
-"""
-
-
-def _q_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL decomposition with parse_url (HOST / PATH / QUERY-param
-    extraction — the Hive-compatible web-scale URL surface under
-    url_dedup/url_rules' normalizers). URLs are synthesized from fixture
-    columns, so the oracle derives each part from the originals and the
-    parse must invert the build."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    url = F.concat(
-        F.lit("https://"), F.col("source"), F.lit(".example.com/p/"),
-        F.col("doc_id").cast("string"),
-        F.lit("?q="), F.col("lang"),
-        F.lit("&r="), (F.col("doc_id") % 7).cast("string"))
-    return docs.select(
-        "doc_id",
-        F.parse_url(url, F.lit("HOST")).alias("host"),
-        F.parse_url(url, F.lit("PATH")).alias("path"),
-        F.parse_url(url, F.lit("QUERY"), F.lit("q")).alias("q_param"),
-        F.parse_url(url, F.lit("QUERY"), F.lit("r")).cast("bigint")
-        .alias("r_param"))
-
-
-_URL_PARSE_SQL = """
-SELECT doc_id,
-       source || '.example.com' AS host,
-       '/p/' || CAST(doc_id AS VARCHAR) AS path,
-       lang AS q_param,
-       CAST(doc_id % 7 AS BIGINT) AS r_param
-FROM documents
-"""
-
-
-def _q_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands: longest consecutive-active-day streak per user
-    — the classic islands idiom (distinct day − row_number() is
-    constant within an island), all integer epoch-days. One distinct +
-    one window + two aggregations."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    days = ev.select(
-        "user_id",
-        F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-        .alias("day")).distinct()
-    w = Window.partitionBy("user_id").orderBy("day")
-    grp = (F.col("day")
-           - F.row_number().over(w).cast("bigint")).alias("grp")
-    islands = (days.select("user_id", "day", grp)
-               .groupBy("user_id", "grp")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("len")))
-    return islands.groupBy("user_id").agg(
-        F.sum("len").cast("bigint").alias("n_days"),
-        F.max("len").cast("bigint").alias("max_streak"))
-
-
-_STREAKS_SQL = """
-WITH days AS (
-  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
-  FROM events
-),
-islands AS (
-  SELECT user_id,
-         day - row_number() OVER (PARTITION BY user_id ORDER BY day)
-           AS grp
-  FROM days
-),
-lens AS (
-  SELECT user_id, grp, CAST(count(*) AS BIGINT) AS len
-  FROM islands GROUP BY 1, 2
-)
-SELECT user_id, CAST(sum(len) AS BIGINT) AS n_days,
-       CAST(max(len) AS BIGINT) AS max_streak
-FROM lens GROUP BY user_id
-"""
-
-
-def _q_pipe_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 SQL pipe syntax (|>): the same logical plan as a nested
-    SELECT, written as a linear pipeline — scan |> WHERE |> AGGREGATE
-    |> WHERE(having) — the pure-SQL sibling of sql_api. All integers."""
-    spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .createOrReplaceTempView("pipe_events")
-    return spark.sql("""
-        FROM pipe_events
-        |> WHERE event_type IN ('click', 'purchase')
-        |> AGGREGATE count(*) AS n,
-                     sum(event_id) AS sum_id
-           GROUP BY user_id, event_type
-        |> WHERE n > 1
-        |> SELECT user_id, event_type, n, sum_id
-    """)
-
-
-_PIPE_SQL_SQL = """
-SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(event_id) AS BIGINT) AS sum_id
-FROM events
-WHERE event_type IN ('click', 'purchase')
-GROUP BY user_id, event_type
-HAVING count(*) > 1
 """
 
 
@@ -7540,7 +6738,7 @@ def _q_simpson_div(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc lexical concentration (text.py:simpson_diversity): the
     Simpson/Hunter-Gaston index as integer num/den — the log-free
     entropy stand-in for repetitiveness gating (same substitution
-    family as bm25_topk's log-free idf and collocations' lift)."""
+    family as collocations' lift)."""
     from bdtopo2refhydro_spark.operators import text as T
 
     return T.simpson_diversity(_docs(spark, sf_dir))
@@ -7599,61 +6797,6 @@ JOIN marg mb ON mb.item = b
 """
 
 
-_TRANSPOSE_LANGS = ["de", "en", "es", "fr", "zh"]
-
-
-def _q_transpose_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame.transpose (Spark 4): per-lang integer aggregates
-    flipped so each metric becomes a row and each lang a column —
-    the wide-stats presentation surface. The index column's sorted
-    values become the new column names; the oracle rebuilds the same
-    grid with scalar subqueries (lang domain is fixed across SFs)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    agg = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(F.col("doc_id") % 1000).cast("bigint").alias("sum_id"))
-    return agg.transpose()
-
-
-def _transpose_sql() -> str:
-    rows = []
-    for metric in ["n_docs", "sum_id"]:
-        cells = ", ".join(
-            f"(SELECT {metric} FROM a WHERE lang = '{lg}') AS {lg}"
-            for lg in _TRANSPOSE_LANGS)
-        rows.append(f"SELECT '{metric}' AS key, {cells}")
-    return (
-        "WITH a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,"
-        " CAST(sum(doc_id % 1000) AS BIGINT) AS sum_id"
-        " FROM documents GROUP BY lang)\n"
-        + "\nUNION ALL\n".join(rows)
-    )
-
-
-def _q_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """listagg WITHIN GROUP (Spark 4): ordered string aggregation — the
-    per-group concatenation surface (DuckDB twin: string_agg with
-    ORDER BY). Distinct langs per source, ordered ASC, so both engines
-    produce the identical string."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.select("source", "lang").distinct() \
-        .createOrReplaceTempView("listagg_src")
-    return spark.sql("""
-        SELECT source,
-               listagg(lang, ',') WITHIN GROUP (ORDER BY lang) AS langs,
-               CAST(count(*) AS BIGINT) AS n_langs
-        FROM listagg_src GROUP BY source
-    """)
-
-
-_LISTAGG_SQL = """
-SELECT source, string_agg(lang, ',' ORDER BY lang) AS langs,
-       CAST(count(*) AS BIGINT) AS n_langs
-FROM (SELECT DISTINCT source, lang FROM documents)
-GROUP BY source
-"""
-
-
 def _q_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct counting via the Spark 3.5+ bitmap functions
     (bitmap_bit_position / bitmap_construct_agg / bitmap_count): the
@@ -7676,46 +6819,6 @@ def _q_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BITMAP_SQL = """
 SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
 FROM events GROUP BY event_type
-"""
-
-
-def _q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WITH RECURSIVE in Spark SQL (Spark 4): root-to-node depth + path
-    length over the doc-derived binary forest (parent(i) = i div 2 on
-    the 0..63 index, edge weight i) — the same downward-walk recursion
-    family as the hack/upstream oracles, now run natively in BOTH
-    engines' recursive CTE. Integer-exact."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .createOrReplaceTempView("rc_docs")
-    return spark.sql("""
-        WITH RECURSIVE nodes AS (
-          SELECT DISTINCT CAST(doc_id % 64 AS BIGINT) AS n FROM rc_docs
-        ),
-        walk(n, depth, path_w) AS (
-          SELECT n, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-          FROM nodes WHERE n <= 1
-          UNION ALL
-          SELECT nodes.n, walk.depth + 1, walk.path_w + nodes.n
-          FROM walk JOIN nodes ON nodes.n DIV 2 = walk.n
-          WHERE nodes.n >= 2
-        )
-        SELECT n, depth, path_w FROM walk
-    """)
-
-
-_RECURSIVE_CTE_SQL = """
-WITH RECURSIVE nodes AS (
-  SELECT DISTINCT CAST(doc_id % 64 AS BIGINT) AS n FROM documents
-),
-walk(n, depth, path_w) AS (
-  SELECT n, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-  FROM nodes WHERE n <= 1
-  UNION ALL
-  SELECT nodes.n, walk.depth + 1, walk.path_w + nodes.n
-  FROM walk JOIN nodes ON nodes.n // 2 = walk.n
-  WHERE nodes.n >= 2
-)
-SELECT n, depth, path_w FROM walk
 """
 
 
@@ -7848,87 +6951,6 @@ _ARROW_GROUP_SQL = """
 SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
        CAST(sum(event_id % 1000) AS BIGINT) AS sum_id
 FROM events GROUP BY user_id
-"""
-
-
-def _q_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-aggregate pandas UDF: a custom UDAF through the Arrow
-    batch path (SQL_GROUPED_AGG_PANDAS_UDF) — the user-defined-
-    aggregation surface. Integer series sum → exact."""
-    from pyspark.sql.functions import PandasUDFType
-
-    # explicit functionType: under `from __future__ import annotations`
-    # the hint-based dispatch can't resolve the stringified pd.Series
-    @F.pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def idsum2(v):
-        return int(v.sum() * 2 + len(v))
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (ev.select("event_type",
-                      (F.col("event_id") % 1000).alias("idm"))
-            .groupBy("event_type")
-            .agg(idsum2("idm").alias("agg_val")))
-
-
-_PANDAS_UDAF_SQL = """
-SELECT event_type,
-       CAST(sum(event_id % 1000) * 2 + count(*) AS BIGINT) AS agg_val
-FROM events GROUP BY event_type
-"""
-
-
-def _q_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL scripting (Spark 4 BEGIN…END): a multi-statement procedural
-    block — DECLARE a variable, assign it from a scalar subquery over
-    the fixture, use it as a data-dependent gate. The oracle replays
-    the same logic as one nested query."""
-    spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .createOrReplaceTempView("script_events")
-    return spark.sql("""
-        BEGIN
-          DECLARE thr BIGINT DEFAULT 0;
-          SET thr = (SELECT max(user_id) FROM script_events) / 2;
-          SELECT CASE WHEN user_id <= thr THEN 'low' ELSE 'high' END
-                   AS band,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(event_id % 100) AS BIGINT) AS sum_id
-          FROM script_events GROUP BY 1;
-        END
-    """)
-
-
-_SQL_SCRIPT_SQL = """
-WITH t AS (SELECT max(user_id) // 2 AS thr FROM events)
-SELECT CASE WHEN user_id <= t.thr THEN 'low' ELSE 'high' END AS band,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(event_id % 100) AS BIGINT) AS sum_id
-FROM events, t GROUP BY 1
-"""
-
-
-def _q_param_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parameterized SQL + session variables + EXECUTE IMMEDIATE
-    (Spark 4): the injection-safe query surface — a named parameter
-    marker (:lo), a DECLAREd session variable consumed by EXECUTE
-    IMMEDIATE with a positional USING binding. Constants inline in the
-    oracle."""
-    spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .createOrReplaceTempView("param_events")
-    spark.sql("DECLARE OR REPLACE VARIABLE param_hi BIGINT DEFAULT 0")
-    spark.sql("SET VAR param_hi = 7")
-    return spark.sql(
-        """EXECUTE IMMEDIATE
-             'SELECT event_type, CAST(count(*) AS BIGINT) AS n
-              FROM param_events
-              WHERE user_id % 10 BETWEEN :lo AND param_hi
-              GROUP BY event_type'
-           USING 2 AS lo""")
-
-
-_PARAM_SQL_SQL = """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n
-FROM events WHERE user_id % 10 BETWEEN 2 AND 7
-GROUP BY event_type
 """
 
 
@@ -8092,27 +7114,6 @@ FROM members m1 JOIN members m2
 """
 
 
-def _q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CSV codec round-trip (to_csv → from_csv with explicit schema):
-    the inline-CSV ingest surface (sidecar feeds, header-free logs).
-    The oracle is the original columns — the round-trip must be the
-    identity on integers and delimiter-free strings."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    line = F.to_csv(F.struct(
-        F.col("event_id"), F.col("user_id"), F.col("event_type")))
-    parsed = F.from_csv(
-        line, "event_id bigint, user_id bigint, event_type string")
-    return ev.select(parsed.alias("p")).select(
-        F.col("p.event_id").alias("event_id"),
-        F.col("p.user_id").alias("user_id"),
-        F.col("p.event_type").alias("event_type"))
-
-
-_CSV_ROUNDTRIP_SQL = """
-SELECT event_id, user_id, event_type FROM events
-"""
-
-
 def _q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining by lift (corpus.py:collocations): adjacent
     bigram counts + unigram marginals, lift = n_xy·N/(n_x·n_y) — the
@@ -8148,46 +7149,6 @@ SELECT w1, w2, n_xy, u1.n AS n_x, u2.n AS n_y,
 FROM nxy
 JOIN uni u1 ON w1 = u1.tok
 JOIN uni u2 ON w2 = u2.tok, tot
-"""
-
-
-def _q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 VariantType: a nested JSON document parsed with
-    parse_json into the binary variant encoding, then typed path
-    extraction via variant_get — the shredded semi-structured scan
-    path (vs json_extract's string re-parse per access). The document
-    nests the fixture's props under a synthesized envelope so the
-    extraction exercises two levels; aggregates are all-BIGINT so the
-    DuckDB json_extract oracle is value-exact."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    doc = F.concat(
-        F.lit('{"meta":{"u":'), F.col("user_id").cast("string"),
-        F.lit(',"ty":"'), F.col("event_type"), F.lit('"},"p":'),
-        F.col("props"), F.lit("}"))
-    v = F.parse_json(doc)
-    return (
-        ev.select(
-            "event_type",
-            F.variant_get(v, "$.meta.u", "bigint").alias("u"),
-            F.variant_get(v, "$.p.k", "bigint").alias("k"),
-            F.try_variant_get(v, "$.absent.path", "bigint").alias("miss"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum("u").alias("sum_u"),
-             F.sum("k").alias("sum_k"),
-             F.count("miss").alias("n_miss"))
-    )
-
-
-_VARIANT_EXTRACT_SQL = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(user_id) AS BIGINT) AS sum_u,
-       CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
-         AS sum_k,
-       CAST(0 AS BIGINT) AS n_miss
-FROM events
-GROUP BY event_type
 """
 
 
@@ -8601,7 +7562,7 @@ def _q_cohort_ret(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort-retention triangle (temporal.py:cohort_retention): users
     bucketed by first-active week x active week, distinct-user counts.
     Weeks are integer-µs arithmetic (unix_micros on a TIMESTAMP cast —
-    the sessionize precedent for NTZ fixtures), so both engines bucket
+    the NTZ-fixture convention), so both engines bucket
     identically."""
     from bdtopo2refhydro_spark.operators.temporal import cohort_retention
 
@@ -8869,9 +7830,9 @@ FROM u GROUP BY 1, 2 HAVING count(*) >= 2
 
 def _q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS + grouping() flags: the multi-granularity rollup
-    surface (cube/rollup's general form — cube_counts/rollup_counts
-    pin the other two). One Expand + one aggregate; grouping() flags
-    disambiguate NULL-valued group keys, cast INT on both sides."""
+    surface (cube/rollup's general form). One Expand + one aggregate;
+    grouping() flags disambiguate NULL-valued group keys, cast INT on
+    both sides."""
     _docs(spark, sf_dir).createOrReplaceTempView("gs_docs")
     return spark.sql("""
         SELECT source, lang,
@@ -8947,7 +7908,7 @@ def _q_time_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-filled activity series (temporal.py:gap_fill_counts): per
     user, a sequence()+explode week spine from first to last active
     week left-joined onto observed counts, zeros on gaps. Weeks are
-    integer-µs arithmetic (the sessionize/cohort_ret NTZ precedent)."""
+    integer-µs arithmetic (the cohort_ret NTZ precedent)."""
     from bdtopo2refhydro_spark.operators.temporal import gap_fill_counts
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -8974,46 +7935,6 @@ spine AS (
 SELECT s.user_id, CAST(s.wk AS BIGINT) AS wk,
        CAST(coalesce(a.n, 0) AS BIGINT) AS n
 FROM spine s LEFT JOIN act a USING (user_id, wk)
-"""
-
-
-def _q_explode_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Generator variants: posexplode_outer — ordinal positions AND
-    null-row preservation for empty arrays (every 5th doc's token array
-    is emptied) in one Generate. The oracle emulates ordinality with a
-    range(len) unnest + element pick, plus a UNION ALL of the empties
-    (DuckDB 1.0 lacks WITH ORDINALITY)."""
-    docs = _docs(spark, sf_dir)
-    arr = F.slice(
-        F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-                 lambda t: t != ""), 1, 3)
-    d = docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 5 == 0,
-               F.array().cast("array<string>"))
-        .otherwise(arr).alias("arr"))
-    return d.select(
-        "doc_id",
-        F.posexplode_outer("arr").alias("pos", "tok")
-    ).select("doc_id", F.col("pos").cast("long").alias("pos"), "tok")
-
-
-_EXPLODE_POS_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 5 = 0 THEN CAST([] AS VARCHAR[])
-              ELSE list_slice(list_filter(
-                     regexp_split_to_array(trim(lower(text)), '\\s+'),
-                     t -> t != ''), 1, 3) END AS arr
-  FROM documents
-),
-e AS (
-  SELECT doc_id, arr, unnest(range(len(arr))) AS pos
-  FROM d WHERE len(arr) > 0
-)
-SELECT doc_id, CAST(pos AS BIGINT) AS pos, arr[pos + 1] AS tok FROM e
-UNION ALL
-SELECT doc_id, NULL, NULL FROM d WHERE len(arr) = 0
 """
 
 
@@ -9090,74 +8011,6 @@ def _q_stream_pysink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STREAM_PYSINK_SQL = """
 SELECT event_id, event_type FROM events
-"""
-
-
-def _q_pandas_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pandas UDAF evaluated OVER A WINDOW FRAME (the third pandas-UDF
-    evaluation mode next to grouped-agg and grouped-map): a trailing
-    4-row integer sum per user computed inside Arrow batches. All
-    BIGINT, so the window result replays exactly in plain SQL."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import PandasUDFType
-
-    # explicit functionType (the pandas_udaf precedent): under
-    # `from __future__ import annotations` hint dispatch can't resolve
-    @F.pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def roll_sum(v):
-        return int(v.sum())
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = (Window.partitionBy("user_id").orderBy("event_id")
-         .rowsBetween(-3, Window.currentRow))
-    x = (F.col("event_id") % 100).cast("long")
-    return ev.select(
-        "user_id", "event_id",
-        roll_sum(x).over(w).alias("roll4"))
-
-
-_PANDAS_WINDOW_SQL = """
-SELECT user_id, event_id,
-       CAST(sum(event_id % 100)
-              OVER (PARTITION BY user_id ORDER BY event_id
-                    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS roll4
-FROM events
-"""
-
-
-def _q_dyn_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic partition overwrite: a partitioned table is rewritten
-    for ONLY the partitions present in the incoming frame
-    (partitionOverwriteMode=dynamic as a WRITE OPTION, not a global
-    conf) — the idempotent daily-recompute primitive; static mode
-    would wipe the untouched partitions. The read-back must show
-    'purchase' rows doubled and every other partition intact."""
-    import os
-    import shutil
-
-    base = os.path.basename(sf_dir.rstrip("/"))
-    d = f"/tmp/spark_graft_dynow_{base}"
-    shutil.rmtree(d, ignore_errors=True)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", "event_type",
-        (F.col("event_id") % 1000).cast("long").alias("amount"))
-    ev.write.partitionBy("event_type").mode("overwrite").parquet(d)
-    patch = (ev.where(F.col("event_type") == "purchase")
-             .withColumn("amount", F.col("amount") * 2))
-    (patch.write.partitionBy("event_type")
-     .option("partitionOverwriteMode", "dynamic")
-     .mode("overwrite").parquet(d))
-    back = spark.read.parquet(d)
-    return back.select("event_id", "user_id", "event_type", "amount")
-
-
-_DYN_OVERWRITE_SQL = """
-SELECT event_id, user_id, event_type,
-       CAST(CASE WHEN event_type = 'purchase'
-                 THEN (event_id % 1000) * 2
-                 ELSE event_id % 1000 END AS BIGINT) AS amount
-FROM events
 """
 
 
@@ -9405,39 +8258,6 @@ def _q_html_unescape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HTML_UNESCAPE_SQL = """
 SELECT doc_id, text AS unescaped FROM documents
-"""
-
-
-_ETYPE_IDX = ("CASE event_type WHEN 'click' THEN 0 WHEN 'error' THEN 1 "
-              "WHEN 'purchase' THEN 2 WHEN 'signup' THEN 3 "
-              "ELSE 4 END")
-
-
-def _q_window_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-count over a sliding window WITHOUT collect_set: the
-    small event-type universe packs into a bitmap (1 << type_idx),
-    bit_or over the trailing 8 rows, bit_count pops the answer — an
-    O(1)-state windowed COUNT(DISTINCT) (which neither engine supports
-    natively as a window aggregate)."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = (Window.partitionBy("user_id").orderBy("event_id")
-         .rowsBetween(-7, Window.currentRow))
-    # variable shift amount → SQL expr (python shiftleft takes int only)
-    bit = F.expr(f"cast(shiftleft(1, {_ETYPE_IDX}) as bigint)")
-    return ev.select(
-        "user_id", "event_id",
-        F.bit_count(F.bit_or(bit).over(w)).cast("int").alias("nd"))
-
-
-_WINDOW_DISTINCT_SQL = f"""
-SELECT user_id, event_id,
-       CAST(bit_count(CAST(bit_or(1 << ({_ETYPE_IDX})) OVER
-         (PARTITION BY user_id ORDER BY event_id
-          ROWS BETWEEN 7 PRECEDING AND CURRENT ROW) AS BIGINT)) AS INT)
-         AS nd
-FROM events
 """
 
 
@@ -9706,29 +8526,6 @@ FROM idx
 """
 
 
-def _q_file_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hidden file-metadata columns (_metadata.file_path): per-input-
-    file row counts and id sums — the lineage/debugging surface of the
-    file sources. The sf fixtures are single files, so the oracle pins
-    the constant basename (DuckDB's read_parquet(filename=true) twin
-    was verified out-of-band; the driver views hide the path)."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (df.select(
-        F.element_at(F.split(F.expr("_metadata.file_path"), "/"), -1)
-        .alias("fname"), "doc_id")
-        .groupBy("fname")
-        .agg(F.count("*").cast("long").alias("n"),
-             F.sum("doc_id").cast("long").alias("sum_id")))
-
-
-_FILE_META_SQL = """
-SELECT 'documents.parquet' AS fname,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(doc_id) AS BIGINT) AS sum_id
-FROM documents
-"""
-
-
 def _q_udtf_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polymorphic UDTF (text.py:register_first_tokens_udtf — the
     Spark 4 analyze() API): output schema tok_1..tok_3 COMPUTED at
@@ -9788,8 +8585,7 @@ GROUP BY 1, 2, 3, 4
 """
 
 
-# -- batch 30: geohash encode, public-suffix eTLD+1, crosstab, Arrow
-# scalar UDF, statestore reader, mergeSchema evolution ----------------
+# -- batch 30: geohash encode, public-suffix eTLD+1, statestore reader --
 
 # exact-dyadic-free but IEEE-identical synthetic lon/lat: the SAME
 # expression tree evaluates in both engines, so the doubles (and hence
@@ -9895,48 +8691,6 @@ FROM reg
 """
 
 
-def _q_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """df.stat.crosstab — the contingency-table convenience surface
-    (source × lang counts, exact). The fixture domains are stable
-    across SFs (5 langs), so the pivoted schema is deterministic."""
-    return _docs(spark, sf_dir).stat.crosstab("source", "lang")
-
-
-_CROSSTAB_SQL = """
-SELECT source AS source_lang,
-       CAST(count(*) FILTER (lang = 'de') AS BIGINT) AS de,
-       CAST(count(*) FILTER (lang = 'en') AS BIGINT) AS en,
-       CAST(count(*) FILTER (lang = 'es') AS BIGINT) AS es,
-       CAST(count(*) FILTER (lang = 'fr') AS BIGINT) AS fr,
-       CAST(count(*) FILTER (lang = 'zh') AS BIGINT) AS zh
-FROM documents GROUP BY source
-"""
-
-
-def _q_arrow_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-optimized scalar Python UDF (F.udf(useArrow=True) — the
-    Spark 4 fast path for row-level Python: Arrow batch transfer
-    without the pandas_udf signature). Counts lowercase vowels; the
-    oracle counts them via regexp deletion — two independent
-    implementations of the same integer."""
-    @F.udf("long", useArrow=True)
-    def n_vowels(s: str) -> int:
-        return sum(s.count(c) for c in "aeiou") if s is not None else None
-
-    return (_docs(spark, sf_dir)
-            .select("doc_id", F.lower(F.col("text")).alias("lt"))
-            .select("doc_id", n_vowels("lt").alias("n_vowels")))
-
-
-_ARROW_UDF_SQL = """
-SELECT doc_id,
-       CAST(length(lower(text)) -
-            length(regexp_replace(lower(text), '[aeiou]', '', 'g'))
-            AS BIGINT) AS n_vowels
-FROM documents
-"""
-
-
 def _q_state_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State-store DataSource read-back (spark.read.format(
     'statestore') — Spark 4 state observability): run a streaming
@@ -9956,33 +8710,6 @@ def _q_state_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STATE_SOURCE_SQL = """
 SELECT DISTINCT user_id, event_type FROM events
-"""
-
-
-def _q_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolution read (mergeSchema): two parquet shards written
-    with DIFFERENT column sets (the long-lived-corpus reality — columns
-    arrive over time) are read as one table, NULL-padding each side.
-    The oracle reconstructs the union by parity."""
-    import os
-
-    base = f"/tmp/se_{os.path.basename(os.path.normpath(sf_dir))}"
-    d = _docs(spark, sf_dir)
-    (d.filter("doc_id % 2 = 0").select("doc_id", "lang")
-     .write.mode("overwrite").parquet(f"{base}/a"))
-    (d.filter("doc_id % 2 = 1").select("doc_id", "source", "n_chars")
-     .write.mode("overwrite").parquet(f"{base}/b"))
-    merged = (spark.read.option("mergeSchema", "true")
-              .parquet(f"{base}/a", f"{base}/b"))
-    return merged.select("doc_id", "lang", "source", "n_chars")
-
-
-_SCHEMA_EVOLVE_SQL = """
-SELECT doc_id,
-       CASE WHEN doc_id % 2 = 0 THEN lang END AS lang,
-       CASE WHEN doc_id % 2 = 1 THEN source END AS source,
-       CASE WHEN doc_id % 2 = 1 THEN n_chars END AS n_chars
-FROM documents
 """
 
 
@@ -10333,159 +9060,6 @@ FROM num
 """
 
 
-def _q_luhn_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 luhn_check over synthesized 12-digit account strings —
-    checksum validation at ingest (PII/card-number heuristics in a
-    crawl cleaner). Oracle re-implements Luhn as an explicit
-    double-every-second-digit CASE sum: two independent mod-10
-    implementations of the same integer predicate."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    acct = F.lpad(
-        ((F.col("event_id") * 37 + 11) % F.lit(10**12)).cast("string"),
-        12, "0")
-    return (ev.select("event_id", acct.alias("acct"))
-            .select("event_id", "acct",
-                    F.expr("luhn_check(acct)").alias("is_valid")))
-
-
-def _luhn_sql() -> str:
-    # positions from LEFT whose digit is doubled for length 12:
-    # every 2nd from the right excluding the check digit -> 11,9,7,5,3,1
-    terms = []
-    for k in range(1, 13):
-        d = f"CAST(substr(acct, {k}, 1) AS INT)"
-        if (12 - k) % 2 == 1:  # doubled
-            terms.append(f"(CASE WHEN 2 * {d} > 9 THEN 2 * {d} - 9 "
-                         f"ELSE 2 * {d} END)")
-        else:
-            terms.append(d)
-    total = " + ".join(terms)
-    return f"""
-WITH base AS (
-  SELECT event_id,
-         lpad(CAST((event_id * 37 + 11) % 1000000000000 AS VARCHAR),
-              12, '0') AS acct
-  FROM events
-)
-SELECT event_id, acct, ({total}) % 10 = 0 AS is_valid
-FROM base
-"""
-
-
-def _q_bit_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bitwise aggregate surface: bit_and / bit_or / bit_xor + summed
-    popcount per language — the permission-mask / feature-flag rollup
-    idiom. All-integer, partial-aggregated map-side, one shuffle of
-    |langs| rows."""
-    d = _docs(spark, sf_dir).select(
-        "lang",
-        ((F.col("doc_id") * 2654435761) % F.lit(1 << 31))
-        .cast("long").alias("m"))
-    return d.groupBy("lang").agg(
-        F.expr("bit_and(m)").cast("long").alias("mask_and"),
-        F.expr("bit_or(m)").cast("long").alias("mask_or"),
-        F.expr("bit_xor(m)").cast("long").alias("mask_xor"),
-        F.sum(F.bit_count("m")).cast("long").alias("popcount"))
-
-
-_BIT_OPS_SQL = """
-WITH base AS (
-  SELECT lang,
-         CAST((doc_id * 2654435761) % 2147483648 AS BIGINT) AS m
-  FROM documents
-)
-SELECT lang, CAST(bit_and(m) AS BIGINT) AS mask_and,
-       CAST(bit_or(m) AS BIGINT) AS mask_or,
-       CAST(bit_xor(m) AS BIGINT) AS mask_xor,
-       CAST(sum(bit_count(m)) AS BIGINT) AS popcount
-FROM base GROUP BY lang
-"""
-
-
-def _q_regexp_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """regexp_count / regexp_instr / regexp_extract(_all) /
-    regexp_replace showcase over digit-salted text, in the shared
-    Java-regex ∩ RE2 dialect. The oracle derives regexp_instr as
-    1 + length of the non-digit prefix — an independent formulation
-    of the same position."""
-    txt = F.concat(
-        F.col("text"), F.lit(" "),
-        (F.col("doc_id") * 7919).cast("string"), F.lit("x"),
-        (F.col("doc_id") % 97).cast("string"))
-    d = _docs(spark, sf_dir).select("doc_id", txt.alias("t"))
-    return d.select(
-        "doc_id",
-        F.expr("regexp_count(t, '[a-z]+')").alias("n_words"),
-        F.expr("regexp_count(t, '[0-9]+')").alias("n_nums"),
-        F.regexp_extract("t", "[0-9]+", 0).alias("first_num"),
-        F.expr("regexp_instr(t, '[0-9]+')").alias("num_pos"),
-        F.length(F.regexp_replace("t", "[aeiou]", ""))
-        .alias("novowel_len"),
-        F.array_join(F.expr("regexp_extract_all(t, '[0-9]+', 0)"), ",")
-        .alias("nums"))
-
-
-_REGEXP_FUNCS_SQL = """
-WITH base AS (
-  SELECT doc_id,
-         text || ' ' || CAST(doc_id * 7919 AS VARCHAR) || 'x'
-              || CAST(doc_id % 97 AS VARCHAR) AS t
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(t, '[a-z]+')) AS INT) AS n_words,
-       CAST(len(regexp_extract_all(t, '[0-9]+')) AS INT) AS n_nums,
-       regexp_extract(t, '[0-9]+', 0) AS first_num,
-       CAST(length(regexp_extract(t, '^[^0-9]*', 0)) + 1 AS INT)
-         AS num_pos,
-       CAST(length(regexp_replace(t, '[aeiou]', '', 'g')) AS INT)
-         AS novowel_len,
-       array_to_string(regexp_extract_all(t, '[0-9]+'), ',') AS nums
-FROM base
-"""
-
-
-def _q_window_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percent_rank / cume_dist / nth_value / defaulted lag+lead in
-    one pass — the remaining ranking-window surface (rank/dense_rank/
-    ntile live in rank_funcs). percent_rank and cume_dist are single
-    IEEE divisions of small integers → bit-exact across engines."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    base = ev.select("user_id", "event_id",
-                     (F.col("event_id") % 1000).cast("int").alias("v"))
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    wf = w.rowsBetween(Window.unboundedPreceding,
-                       Window.unboundedFollowing)
-    return base.select(
-        "user_id", "event_id", "v",
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cume"),
-        F.nth_value("v", 2).over(wf).alias("second_v"),
-        F.lag("v", 2, -1).over(w).alias("lag2"),
-        F.lead("v", 3, -7).over(w).alias("lead3"))
-
-
-_WINDOW_PCT_SQL = """
-WITH base AS (
-  SELECT user_id, event_id, CAST(event_id % 1000 AS INT) AS v
-  FROM events
-)
-SELECT user_id, event_id, v,
-       percent_rank() OVER (PARTITION BY user_id ORDER BY event_id)
-         AS pct_rank,
-       cume_dist() OVER (PARTITION BY user_id ORDER BY event_id)
-         AS cume,
-       nth_value(v, 2) OVER (PARTITION BY user_id ORDER BY event_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         AS second_v,
-       lag(v, 2, -1) OVER (PARTITION BY user_id ORDER BY event_id)
-         AS lag2,
-       lead(v, 3, -7) OVER (PARTITION BY user_id ORDER BY event_id)
-         AS lead3
-FROM base
-"""
-
-
 # ---- batch 47: Luby MIS + time-respecting reachability -----------------
 
 
@@ -10636,58 +9210,6 @@ def _max_matching_sql(rounds: int = 12) -> str:
     hits = " UNION ALL ".join(
         f"SELECT eid, u, v, w FROM hit{r}" for r in range(rounds))
     return "WITH " + ",\n".join(ctes) + f"\n{hits}"
-
-
-# ---- batch 45: schema-mismatch union + JSON encode round-trip ---------
-
-
-def _q_union_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """unionByName(allowMissingColumns=True) — the schema-drift merge
-    every multi-vintage corpus hits: absent columns null-pad instead
-    of failing. The oracle spells the padding out as explicit NULLs."""
-    d = _docs(spark, sf_dir)
-    old = d.where("doc_id % 2 = 0").select(
-        "doc_id", "lang", F.col("n_chars").alias("len_v1"))
-    new = d.where("doc_id % 2 = 1").select(
-        "doc_id", "lang", F.col("n_chars").alias("len_v2"),
-        F.lit("crawl2").alias("vintage"))
-    return old.unionByName(new, allowMissingColumns=True)
-
-
-_UNION_MISSING_SQL = """
-SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS len_v1,
-       CAST(NULL AS BIGINT) AS len_v2, CAST(NULL AS VARCHAR) AS vintage
-FROM documents WHERE doc_id % 2 = 0
-UNION ALL
-SELECT doc_id, lang, NULL, CAST(n_chars AS BIGINT), 'crawl2'
-FROM documents WHERE doc_id % 2 = 1
-"""
-
-
-def _q_to_json_rt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """to_json → from_json round-trip (the inverse pair of
-    json_extract's parse path): serialization must be the identity on
-    (long, string) structs, and the wire format itself is pinned —
-    Spark's to_json emits fields in struct order with no whitespace,
-    which the oracle reconstructs by string concat."""
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars")
-    j = F.to_json(F.struct("doc_id", "lang", "n_chars"))
-    parsed = F.from_json(
-        j, "doc_id bigint, lang string, n_chars bigint")
-    return d.select(
-        "doc_id", j.alias("js"),
-        parsed["lang"].alias("lang_rt"),
-        parsed["n_chars"].alias("n_chars_rt"))
-
-
-_TO_JSON_RT_SQL = """
-SELECT doc_id,
-       '{"doc_id":' || CAST(doc_id AS VARCHAR)
-         || ',"lang":"' || lang || '","n_chars":'
-         || CAST(n_chars AS VARCHAR) || '}' AS js,
-       lang AS lang_rt, CAST(n_chars AS BIGINT) AS n_chars_rt
-FROM documents
-"""
 
 
 # ---- batch 44: positional phrase search --------------------------------
@@ -11073,125 +9595,6 @@ JOIN cyc_min c ON c.node = f.node
 """
 
 
-# ---- batch 38: array/binary function surfaces + percentile contract --
-
-
-def _q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array set algebra (union/intersect/except/concat/slice/
-    position/contains) — normalized through sort_array so the two
-    engines' (both legal) element orders cannot fake a diff."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr("array(doc_id % 7, doc_id % 5, doc_id % 3)").alias("a"),
-        F.expr("array(doc_id % 5, doc_id % 4)").alias("b"))
-    return d.select(
-        "doc_id",
-        F.array_join(F.sort_array(F.array_union("a", "b")), ",")
-        .alias("un"),
-        F.array_join(F.sort_array(F.array_intersect("a", "b")), ",")
-        .alias("inter"),
-        F.array_join(F.sort_array(F.array_except("a", "b")), ",")
-        .alias("exc"),
-        F.array_join(F.slice(F.sort_array(F.concat("a", "b")), 2, 2),
-                     ",").alias("mid2"),
-        F.array_position("a", F.col("doc_id") % 5).cast("long")
-        .alias("pos5"),
-        F.array_contains("a", F.lit(2)).alias("has2"))
-
-
-_ARRAY_FUNCS_SQL = """
-WITH base AS (
-  SELECT doc_id, [doc_id % 7, doc_id % 5, doc_id % 3] AS a,
-         [doc_id % 5, doc_id % 4] AS b
-  FROM documents
-)
-SELECT doc_id,
-       array_to_string(list_sort(list_distinct(list_concat(a, b))), ',')
-         AS un,
-       array_to_string(list_sort(list_distinct(
-         list_filter(a, x -> list_contains(b, x)))), ',') AS inter,
-       coalesce(array_to_string(list_sort(list_distinct(
-         list_filter(a, x -> NOT list_contains(b, x)))), ','), '')
-         AS exc,
-       array_to_string(list_sort(list_concat(a, b))[2:3], ',') AS mid2,
-       CAST(coalesce(list_position(a, doc_id % 5), 0) AS BIGINT)
-         AS pos5,
-       list_contains(a, 2) AS has2
-FROM base
-"""
-
-
-def _q_bin_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary/encoding function surface: base64 round-trip, hex of a
-    bigint, base-16 conv, and mask() — the PII-display primitive,
-    whose oracle is three independent regexp class replacements."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(F.lit("k"), F.col("doc_id")).alias("p"),
-        F.concat(F.upper(F.expr("substring(text, 1, 3)")),
-                 F.expr("substring(text, 4, 5)"),
-                 F.col("doc_id").cast("string")).alias("m"))
-    return d.select(
-        "doc_id",
-        F.base64(F.col("p").cast("binary")).alias("b64"),
-        F.expr("string(unbase64(base64(cast(p AS binary))))")
-        .alias("rt"),
-        F.hex((F.col("doc_id") * 2654435761)).alias("hx"),
-        F.conv(F.col("doc_id").cast("string"), 10, 16).alias("cv"),
-        F.expr("mask(m)").alias("masked"))
-
-
-_BIN_FUNCS_SQL = """
-WITH base AS (
-  SELECT doc_id, 'k' || CAST(doc_id AS VARCHAR) AS p,
-         upper(substr(text, 1, 3)) || substr(text, 4, 5)
-           || CAST(doc_id AS VARCHAR) AS m
-  FROM documents
-)
-SELECT doc_id,
-       base64(encode(p)) AS b64,
-       p AS rt,
-       hex(doc_id * 2654435761) AS hx,
-       upper(to_hex(doc_id)) AS cv,
-       regexp_replace(regexp_replace(regexp_replace(m,
-         '[A-Z]', 'X', 'g'), '[a-z]', 'x', 'g'), '[0-9]', 'n', 'g')
-         AS masked
-FROM base
-"""
-
-
-def _q_pctl_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_percentile with the accuracy CONTRACT pinned (like
-    hll_distinct): at accuracy=100000 the GK sketch's rank error is
-    < n/100000 < 1 at test scale, so the estimate must land within 2
-    of the exact discrete quantile (values are dense integers). The
-    oracle recomputes exact quantiles and asserts the bound as a
-    boolean both engines agree is TRUE."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", (F.col("event_id") % 1009).cast("long").alias("v"))
-    ap = ev.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.expr("approx_percentile(v, 0.5, 100000)").alias("a50"),
-        F.expr("approx_percentile(v, 0.9, 100000)").alias("a90"),
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY v)")
-        .alias("e50"),
-        F.expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY v)")
-        .alias("e90"))
-    return ap.select(
-        "event_type", "n",
-        (F.abs(F.col("a50") - F.col("e50")) <= 2).alias("ok50"),
-        (F.abs(F.col("a90") - F.col("e90")) <= 2).alias("ok90"))
-
-
-_PCTL_CONTRACT_SQL = """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       TRUE AS ok50, TRUE AS ok90
-FROM (SELECT event_type, CAST(event_id % 1009 AS BIGINT) AS v
-      FROM events) t
-GROUP BY event_type
-"""
-
-
 # ---- batch 37: distributed MST (Borůvka) -----------------------------
 
 # MST fixture: the hydro forest with DISTINCT integer weights, plus
@@ -11410,154 +9813,6 @@ FROM toks GROUP BY stem HAVING count(*) >= 2
 """
 
 
-# ---- batch 35: remaining IO source surfaces + HLL sketches ----------
-
-
-def _q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC write → read round-trip (Spark's second built-in columnar
-    format; zlib-compressed, predicate-pushdown-capable like parquet).
-    The oracle is the same rollup computed from the parquet source —
-    the codec must be the identity on longs and strings."""
-    import os
-    import shutil
-
-    base = os.path.basename(sf_dir.rstrip("/"))
-    d = f"/tmp/spark_graft_orc_{base}"
-    shutil.rmtree(d, ignore_errors=True)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type",
-        (F.col("event_id") % 997).cast("long").alias("amount"))
-    ev.write.mode("overwrite").orc(d)
-    back = spark.read.orc(d)
-    return (back.groupBy("event_type")
-            .agg(F.count("*").cast("long").alias("n"),
-                 F.sum("amount").cast("long").alias("total")))
-
-
-_ORC_ROUNDTRIP_SQL = """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(event_id % 997) AS BIGINT) AS total
-FROM events GROUP BY event_type
-"""
-
-
-def _q_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spark.read.format('binaryFile') — the opaque-blob ingest path
-    for image/audio payloads (SURVEY multimodal plumbing): one row per
-    file with path/length/content. 64 deterministic blobs are written,
-    read back, and fingerprinted with md5; the oracle synthesizes the
-    identical bytes per doc_id and must agree on length + digest."""
-    import os
-    import shutil
-
-    base = os.path.basename(sf_dir.rstrip("/"))
-    d = f"/tmp/spark_graft_blobs_{base}"
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    for i in range(64):
-        with open(os.path.join(d, f"blob_{i:04d}.bin"), "wb") as f:
-            f.write(f"blob-{i}:".encode() + b"x" * (i % 17))
-    files = spark.read.format("binaryFile").load(d)
-    return files.select(
-        F.regexp_extract(F.col("path"), r"blob_(\d+)\.bin", 1)
-        .cast("long").alias("blob_id"),
-        F.col("length").cast("long").alias("n_bytes"),
-        F.md5(F.col("content")).alias("digest"))
-
-
-_BINARY_FILES_SQL = """
-WITH ids AS (SELECT DISTINCT doc_id AS i FROM documents
-             WHERE doc_id BETWEEN 0 AND 63),
-blobs AS (
-  SELECT i, 'blob-' || CAST(i AS VARCHAR) || ':'
-           || repeat('x', CAST(i % 17 AS INT)) AS payload
-  FROM ids
-)
-SELECT i AS blob_id, CAST(length(payload) AS BIGINT) AS n_bytes,
-       md5(payload) AS digest
-FROM blobs
-"""
-
-
-def _q_ignore_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ignoreCorruptFiles: a scan over a directory holding one valid
-    parquet part AND one garbage file with a .parquet name must
-    return exactly the valid rows instead of failing the job — the
-    crawl-segment reality where a truncated upload lands next to good
-    data. The oracle is the valid half computed from the source."""
-    import os
-    import shutil
-
-    base = os.path.basename(sf_dir.rstrip("/"))
-    d = f"/tmp/spark_graft_corrupt_{base}"
-    shutil.rmtree(d, ignore_errors=True)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id")
-    ev.coalesce(1).write.mode("overwrite").parquet(d)
-    with open(os.path.join(d, "part-junk.parquet"), "wb") as f:
-        f.write(b"PAR1 this is not a parquet footer" * 10)
-    back = (spark.read.option("ignoreCorruptFiles", "true")
-            .parquet(d))
-    return back.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("event_id").cast("long").alias("sum_id"),
-        F.sum("user_id").cast("long").alias("sum_user"))
-
-
-_IGNORE_CORRUPT_SQL = """
-SELECT CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(event_id) AS BIGINT) AS sum_id,
-       CAST(sum(user_id) AS BIGINT) AS sum_user
-FROM events
-"""
-
-
-def _q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apache DataSketches HLL via hll_sketch_agg / hll_union_agg —
-    the mergeable distinct-count sketch (completing the sketch family
-    next to KMV/CMS/Bloom). Per-lang sketches are UNIONED to a global
-    estimate — the two-level rollup a 100 TB corpus needs (partial
-    sketches merge map-side; raw ids never re-shuffle). The driver
-    gate pins the 2%-accuracy CONTRACT: the oracle recomputes exact
-    distinct counts and asserts |est/exact - 1| <= 0.02 as a boolean
-    both engines must agree is TRUE."""
-    d = _docs(spark, sf_dir).select(
-        "lang", (F.col("doc_id") * 7 % 1000003).alias("uid"))
-    per = (d.groupBy("lang")
-           .agg(F.expr("hll_sketch_agg(uid, 14)").alias("sk"),
-                F.count_distinct(F.col("uid")).alias("n_exact")))
-    per_l = per.select(
-        "lang", F.col("n_exact").cast("long").alias("n_exact"),
-        (F.abs(F.expr("hll_sketch_estimate(sk)")
-               / F.col("n_exact") - 1.0) <= 0.02).alias("est_ok"))
-    glob = (per.agg(
-        F.expr("hll_sketch_estimate(hll_union_agg(sk, true))")
-        .alias("est_all"))
-        .crossJoin(d.agg(F.count_distinct("uid").alias("nd_all")))
-        .select(F.lit("__all__").alias("lang"),
-                F.col("nd_all").cast("long").alias("n_exact"),
-                (F.abs(F.col("est_all") / F.col("nd_all") - 1.0)
-                 <= 0.02).alias("est_ok")))
-    return per_l.unionByName(glob)
-
-
-_HLL_DISTINCT_SQL = """
-WITH base AS (
-  SELECT lang, (doc_id * 7) % 1000003 AS uid FROM documents
-),
-per AS (
-  SELECT lang, CAST(count(DISTINCT uid) AS BIGINT) AS n_exact,
-         TRUE AS est_ok
-  FROM base GROUP BY lang
-)
-SELECT * FROM per
-UNION ALL
-SELECT '__all__' AS lang, CAST(count(DISTINCT uid) AS BIGINT)
-       AS n_exact, TRUE AS est_ok
-FROM base
-"""
-
-
 # ---- batch 48: computational geometry (operators/geometry.py) -----------
 
 
@@ -11773,138 +10028,6 @@ FROM sufs a
 """
 
 
-def _q_poly_mult(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped polynomial convolution c_k = Σ a_i·b_{k−i} — the
-    signal/generating-function primitive as ONE index-arithmetic join
-    + groupBy; all-integer coefficients."""
-    mm = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 120).alias("m")).distinct()
-    a = mm.selectExpr("cast(m % 6 as long) as g",
-                      "cast(m div 6 as long) as i",
-                      "cast((m * 7) % 19 - 9 as long) as ca") \
-        .where("i < 11")
-    b = mm.selectExpr("cast(m % 6 as long) as g",
-                      "cast(m div 6 as long) as j",
-                      "cast((m * 5) % 17 - 8 as long) as cb") \
-        .where("j < 9")
-    return (a.join(b, "g")
-            .groupBy("g", (F.col("i") + F.col("j")).alias("k"))
-            .agg(F.sum(F.col("ca") * F.col("cb")).cast("long")
-                 .alias("ck"))
-            .select("g", F.col("k").cast("long").alias("k"), "ck"))
-
-
-_POLY_MULT_SQL = """
-WITH mm AS (SELECT DISTINCT doc_id % 120 AS m FROM documents),
-a AS (SELECT m % 6 AS g, m // 6 AS i, (m * 7) % 19 - 9 AS ca
-      FROM mm WHERE m // 6 < 11),
-b AS (SELECT m % 6 AS g, m // 6 AS j, (m * 5) % 17 - 8 AS cb
-      FROM mm WHERE m // 6 < 9)
-SELECT CAST(a.g AS BIGINT) AS g, CAST(i + j AS BIGINT) AS k,
-       CAST(sum(ca * cb) AS BIGINT) AS ck
-FROM a JOIN b ON b.g = a.g
-GROUP BY a.g, i + j
-"""
-
-
-# ---- batch 74: nucleus (top-p) selection + de Bruijn stats ---------------
-
-
-def _q_nucleus_sel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact nucleus (top-p) selection per group: the smallest
-    (weight desc, item asc)-prefix whose cumulative weight reaches 90%
-    of the total, decided by the INTEGER cross-multiplied test
-    10·(cum − w) < 9·total (strictly includes the crossing item, no
-    float thresholds) — the data-selection analog of LLM top-p."""
-    base = (_docs(spark, sf_dir)
-            .select((F.col("doc_id") % 180).alias("m")).distinct()
-            .selectExpr("cast(m % 6 as long) as g",
-                        "cast(m div 6 as long) as item",
-                        "cast(1 + (m * m) % 50 as long) as w"))
-    win = (Window.partitionBy("g").orderBy(F.desc("w"), F.asc("item"))
-           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    tot = Window.partitionBy("g")
-    cum = (base.withColumn("cum", F.sum("w").over(win))
-           .withColumn("_t", F.sum("w").over(tot)))
-    return (cum.where(10 * (F.col("cum") - F.col("w")) < 9 * F.col("_t"))
-            .select("g", "item", "w", F.col("cum").cast("long")
-                    .alias("cum")))
-
-
-_NUCLEUS_SQL = """
-WITH mm AS (SELECT DISTINCT doc_id % 180 AS m FROM documents),
-base AS (
-  SELECT m % 6 AS g, m // 6 AS item, 1 + (m * m) % 50 AS w FROM mm),
-cum AS (
-  SELECT g, item, w,
-    sum(w) OVER (PARTITION BY g ORDER BY w DESC, item
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      AS cum,
-    sum(w) OVER (PARTITION BY g) AS t
-  FROM base)
-SELECT CAST(g AS BIGINT) AS g, CAST(item AS BIGINT) AS item,
-       CAST(w AS BIGINT) AS w, CAST(cum AS BIGINT) AS cum
-FROM cum WHERE 10 * (cum - w) < 9 * t
-"""
-
-
-def _q_debruijn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """De Bruijn 2-mer graph over the word fixture (the assembly /
-    string-graph primitive): 3-mers contribute (prefix 2-mer →
-    suffix 2-mer) edges; per node the edge multiplicities, distinct
-    neighbor counts, and the unitig classification (linear ⟺ ≤1
-    distinct neighbor each side — where chain contraction would
-    compact)."""
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word"))
-    edges = words.selectExpr(
-        "explode(transform(sequence(1, length(word) - 2), "
-        "i -> struct(substring(word, i, 2) as src, "
-        "substring(word, i + 1, 2) as dst))) as e").select("e.*")
-    outs = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("out_m"),
-        F.count_distinct("dst").alias("n_out"))
-    ins = edges.groupBy(F.col("dst").alias("node")).agg(
-        F.count("*").alias("in_m"),
-        F.count_distinct("src").alias("n_in"))
-    return (outs.join(ins, "node", "full_outer")
-            .select("node",
-                    F.coalesce("in_m", F.lit(0)).cast("long")
-                    .alias("in_m"),
-                    F.coalesce("out_m", F.lit(0)).cast("long")
-                    .alias("out_m"),
-                    F.coalesce("n_in", F.lit(0)).cast("long")
-                    .alias("n_in"),
-                    F.coalesce("n_out", F.lit(0)).cast("long")
-                    .alias("n_out"),
-                    F.when((F.coalesce("n_in", F.lit(0)) <= 1)
-                           & (F.coalesce("n_out", F.lit(0)) <= 1),
-                           "linear").otherwise("branch").alias("klass")))
-
-
-_DEBRUIJN_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT {_UNI_WORD_D} AS word FROM mm),
-edges AS MATERIALIZED (
-  SELECT substr(word, CAST(i AS INT), 2) AS src,
-         substr(word, CAST(i AS INT) + 1, 2) AS dst
-  FROM words, UNNEST(range(1, len(word) - 1)) t(i)),
-outs AS (SELECT src AS node, count(*) AS out_m,
-                count(DISTINCT dst) AS n_out FROM edges GROUP BY src),
-ins AS (SELECT dst AS node, count(*) AS in_m,
-               count(DISTINCT src) AS n_in FROM edges GROUP BY dst)
-SELECT coalesce(outs.node, ins.node) AS node,
-  CAST(coalesce(in_m, 0) AS BIGINT) AS in_m,
-  CAST(coalesce(out_m, 0) AS BIGINT) AS out_m,
-  CAST(coalesce(n_in, 0) AS BIGINT) AS n_in,
-  CAST(coalesce(n_out, 0) AS BIGINT) AS n_out,
-  CASE WHEN coalesce(n_in, 0) <= 1 AND coalesce(n_out, 0) <= 1
-       THEN 'linear' ELSE 'branch' END AS klass
-FROM outs FULL OUTER JOIN ins ON ins.node = outs.node
-"""
-
-
 # ---- batch 73: ancestor queries via Euler intervals ----------------------
 
 
@@ -12067,59 +10190,6 @@ def _sp_counts_sql(rounds: int = 10) -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + unions
 
 
-def _q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fellegi–Sunter-style record linkage with INTEGER log-odds
-    weights: blocking on host (the candidate generator — never
-    all-pairs), field-agreement vector → score = 6·name + 2·year_eq +
-    1·year_near, thresholds classify match/possible. The entity-
-    resolution shape with all-integer scoring."""
-    d = _docs(spark, sf_dir)
-    a = (d.select((F.col("doc_id") % 120).alias("m")).distinct()
-         .selectExpr("cast(m as long) as aid",
-                     "concat('n', cast(m % 40 as string)) as a_name",
-                     "concat('h', cast(m % 15 as string)) as host",
-                     "cast(2000 + m % 20 as long) as a_year"))
-    b = (d.select((F.col("doc_id") % 100).alias("n")).distinct()
-         .selectExpr("cast(n as long) as bid",
-                     "concat('n', cast((n * 3) % 40 as string)) as b_name",
-                     "concat('h', cast(n % 15 as string)) as host",
-                     "cast(2000 + (n * 7) % 20 as long) as b_year"))
-    j = a.join(b, "host")
-    score = (F.when(F.col("a_name") == F.col("b_name"), 6).otherwise(0)
-             + F.when(F.col("a_year") == F.col("b_year"), 2).otherwise(0)
-             + F.when((F.abs(F.col("a_year") - F.col("b_year")) <= 2)
-                      & (F.col("a_year") != F.col("b_year")), 1)
-             .otherwise(0))
-    out = j.select("aid", "bid", score.cast("long").alias("score"))
-    return (out.where(F.col("score") >= 2)
-            .withColumn("klass",
-                        F.when(F.col("score") >= 7, "match")
-                        .otherwise("possible")))
-
-
-_RECORD_LINKAGE_SQL = """
-WITH am AS (SELECT DISTINCT doc_id % 120 AS m FROM documents),
-a AS (SELECT m AS aid, 'n' || CAST(m % 40 AS VARCHAR) AS a_name,
-             'h' || CAST(m % 15 AS VARCHAR) AS host,
-             2000 + m % 20 AS a_year FROM am),
-bn AS (SELECT DISTINCT doc_id % 100 AS n FROM documents),
-b AS (SELECT n AS bid, 'n' || CAST((n * 3) % 40 AS VARCHAR) AS b_name,
-             'h' || CAST(n % 15 AS VARCHAR) AS host,
-             2000 + (n * 7) % 20 AS b_year FROM bn),
-s AS (
-  SELECT a.aid, b.bid,
-    (CASE WHEN a_name = b_name THEN 6 ELSE 0 END
-     + CASE WHEN a_year = b_year THEN 2 ELSE 0 END
-     + CASE WHEN abs(a_year - b_year) <= 2 AND a_year != b_year
-            THEN 1 ELSE 0 END) AS score
-  FROM a JOIN b ON b.host = a.host)
-SELECT CAST(aid AS BIGINT) AS aid, CAST(bid AS BIGINT) AS bid,
-       CAST(score AS BIGINT) AS score,
-       CASE WHEN score >= 7 THEN 'match' ELSE 'possible' END AS klass
-FROM s WHERE score >= 2
-"""
-
-
 # ---- batch 70: polygon convexity + distinct substrings -------------------
 
 _PC_BASES = {
@@ -12192,33 +10262,6 @@ FROM agg
 """
 
 
-def _q_distinct_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct substring counts (text.py:distinct_substring_counts)
-    on the unigram word fixture; oracle enumerates all (i, len) pairs
-    and counts DISTINCT substr."""
-    from bdtopo2refhydro_spark.operators.text import (
-        distinct_substring_counts)
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    return distinct_substring_counts(words)
-
-
-_DISTINCT_SUBSTR_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm)
-SELECT word,
-  CAST(count(DISTINCT substr(word, CAST(a.i AS INT), CAST(b.j AS INT)))
-       AS BIGINT) AS n_distinct
-FROM words,
-     UNNEST(range(1, len(word) + 1)) a(i),
-     UNNEST(range(1, len(word) + 1)) b(j)
-WHERE a.i + b.j <= len(word) + 1
-GROUP BY word
-"""
-
-
 # ---- batch 69: python DataSource filter pushdown -------------------------
 
 
@@ -12245,55 +10288,6 @@ SELECT CAST(t.n AS BIGINT) AS id,
        CAST((t.n * t.n) % 97 AS BIGINT) AS val
 FROM UNNEST(range(1000, 1300)) t(n)
 WHERE ((t.n * t.n) % 97) % 3 = 0
-"""
-
-
-# ---- batch 68: digest functions + thresholded levenshtein ----------------
-
-
-def _q_hash_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cryptographic digest surface: md5 + sha2-256 over derived
-    strings (DuckDB mirrors with md5/sha256) — the content-addressing
-    primitives behind exact_dedup's digests, surfaced directly."""
-    return _docs(spark, sf_dir).selectExpr(
-        "doc_id",
-        "md5(concat('d', cast(doc_id as string))) as h_md5",
-        "sha2(concat('d', cast(doc_id as string)), 256) as h_sha256")
-
-
-_HASH_FUNCS_SQL = """
-SELECT doc_id,
-  md5('d' || CAST(doc_id AS VARCHAR)) AS h_md5,
-  sha256('d' || CAST(doc_id AS VARCHAR)) AS h_sha256
-FROM documents
-"""
-
-
-def _q_lev_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Thresholded levenshtein (Spark 4's 3-arg form returns −1 past
-    the bound — the early-exit band DP); oracle mirrors with a CASE
-    over DuckDB's unbounded levenshtein."""
-    d = _docs(spark, sf_dir).selectExpr(
-        "doc_id",
-        "concat('w', cast(doc_id % 37 as string), 'x') as a",
-        "concat('w', cast((doc_id * 7) % 37 as string), 'y') as b")
-    return d.selectExpr(
-        "doc_id", "a", "b",
-        "cast(levenshtein(a, b) as bigint) as d_full",
-        "cast(levenshtein(a, b, 2) as bigint) as d_capped")
-
-
-_LEV_THRESHOLD_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         'w' || CAST(doc_id % 37 AS VARCHAR) || 'x' AS a,
-         'w' || CAST((doc_id * 7) % 37 AS VARCHAR) || 'y' AS b
-  FROM documents)
-SELECT doc_id, a, b,
-  CAST(levenshtein(a, b) AS BIGINT) AS d_full,
-  CAST(CASE WHEN levenshtein(a, b) > 2 THEN -1
-            ELSE levenshtein(a, b) END AS BIGINT) AS d_capped
-FROM d
 """
 
 
@@ -12336,50 +10330,6 @@ SELECT CAST(l.lid AS BIGINT) AS lid, CAST(l.k AS BIGINT) AS k,
        CAST(l.t AS BIGINT) AS t,
        CAST(coalesce(c.v, -1) AS BIGINT) AS nxt_v
 FROM l LEFT JOIN cand c ON c.lid = l.lid
-"""
-
-
-def _q_join_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT join cardinality WITHOUT materializing the join — the
-    optimizer statistic Σ_k cntA(k)·cntB(k): two map-side-combined
-    groupBys + one join on distinct keys. The oracle literally COUNTS
-    the real joins (different computation path, same number), over the
-    SCALED lineitem/orders/part tables."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-
-    def card(a, ka, b, kb, name):
-        ca = a.groupBy(F.col(ka).alias("key")).agg(
-            F.count("*").alias("ca"))
-        cb = b.groupBy(F.col(kb).alias("key")).agg(
-            F.count("*").alias("cb"))
-        return (ca.join(cb, "key")
-                .agg(F.sum(F.col("ca") * F.col("cb")).alias("n_pairs"),
-                     F.count("*").alias("n_shared_keys"))
-                .selectExpr(f"'{name}' as join_name",
-                            "cast(n_pairs as bigint) n_pairs",
-                            "cast(n_shared_keys as bigint)"
-                            " n_shared_keys"))
-
-    return card(li, "l_partkey", part, "p_partkey", "li_part") \
-        .unionByName(card(li, "l_orderkey", orders, "o_orderkey",
-                          "li_orders"))
-
-
-_JOIN_CARD_SQL = """
-SELECT 'li_part' AS join_name,
-  CAST((SELECT count(*) FROM lineitem l
-        JOIN part p ON p.p_partkey = l.l_partkey) AS BIGINT) AS n_pairs,
-  CAST((SELECT count(DISTINCT l.l_partkey) FROM lineitem l
-        JOIN part p ON p.p_partkey = l.l_partkey) AS BIGINT)
-    AS n_shared_keys
-UNION ALL
-SELECT 'li_orders',
-  CAST((SELECT count(*) FROM lineitem l
-        JOIN orders o ON o.o_orderkey = l.l_orderkey) AS BIGINT),
-  CAST((SELECT count(DISTINCT l.l_orderkey) FROM lineitem l
-        JOIN orders o ON o.o_orderkey = l.l_orderkey) AS BIGINT)
 """
 
 
@@ -12544,50 +10494,6 @@ FROM e WHERE n >= 4
 # ---- batch 64: FILTER aggs, lateral aliases, top-N plan ------------------
 
 
-def _q_filter_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate FILTER clause surface (shared syntax in both
-    dialects): conditional counts/sums without CASE scaffolding."""
-    return _docs(spark, sf_dir).selectExpr(
-        "doc_id % 5 as g", "doc_id",
-        "(doc_id * 11) % 50 as v").groupBy("g").agg(
-        F.expr("count(*) FILTER (WHERE v > 25)").alias("n_big"),
-        F.expr("sum(v) FILTER (WHERE doc_id % 2 = 0)").alias("s_even"),
-        F.expr("max(v) FILTER (WHERE v % 3 = 0)").alias("m_div3"),
-    ).selectExpr("cast(g as bigint) g", "cast(n_big as bigint) n_big",
-                 "cast(s_even as bigint) s_even",
-                 "cast(m_div3 as bigint) m_div3")
-
-
-_FILTER_AGG_SQL = """
-WITH base AS (
-  SELECT doc_id % 5 AS g, doc_id, (doc_id * 11) % 50 AS v
-  FROM documents)
-SELECT CAST(g AS BIGINT) AS g,
-  CAST(count(*) FILTER (WHERE v > 25) AS BIGINT) AS n_big,
-  CAST(sum(v) FILTER (WHERE doc_id % 2 = 0) AS BIGINT) AS s_even,
-  CAST(max(v) FILTER (WHERE v % 3 = 0) AS BIGINT) AS m_div3
-FROM base GROUP BY g
-"""
-
-
-def _q_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lateral column alias surface (Spark 4): SELECT expressions
-    referencing earlier aliases in the SAME select list — identical
-    syntax works in DuckDB."""
-    _docs(spark, sf_dir).createOrReplaceTempView("docs_la")
-    return spark.sql(
-        "SELECT doc_id, (doc_id * 7) % 100 AS base, "
-        "base * base AS sq, sq + base AS total "
-        "FROM docs_la")
-
-
-_LATERAL_ALIAS_SQL = """
-SELECT doc_id, (doc_id * 7) % 100 AS base,
-       base * base AS sq, sq + base AS total
-FROM documents
-"""
-
-
 def _q_topn_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N under a deterministic total order: Spark plans
     orderBy+limit as TakeOrderedAndProject (per-partition partial
@@ -12654,208 +10560,6 @@ def _max_cov_sql(k: int = 5) -> str:
             + f"\nSELECT CAST(round AS BIGINT) AS round,"
               f" CAST(sid AS BIGINT) AS sid,"
               f" CAST(gain AS BIGINT) AS gain FROM ({finals})")
-
-
-# ---- batch 62: storage codecs — front coding + Gorilla DoD ---------------
-
-# dialect-neutral LCP(url, prev) for bounded-length strings: count of
-# prefix lengths that match fully (monotone, so the sum IS the LCP)
-_LCP_EXPR = "(" + " + ".join(
-    f"(CASE WHEN substr(url, 1, {j}) = substr(prev, 1, {j}) "
-    f"THEN 1 ELSE 0 END)" for j in range(1, 49)) + ")"
-
-
-def _q_front_coding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Front coding (incremental/prefix encoding) of per-host sorted
-    URL runs — the posting/term-dictionary compression layout: each
-    url stores only (lcp, suffix) vs its predecessor. The LCP is a
-    dialect-neutral Σ-of-prefix-matches expression shared verbatim
-    with the oracle; one window per host partition, no UDFs."""
-    d = _docs(spark, sf_dir).select(
-        "source", F.expr(_CLEANURL).alias("url"))
-    w = Window.partitionBy("source").orderBy("url")
-    coded = (d.withColumn("prev", F.coalesce(F.lag("url").over(w),
-                                             F.lit("")))
-             .withColumn("lcp", F.expr(_LCP_EXPR).cast("long")))
-    return coded.select(
-        "url", "lcp",
-        F.expr("substr(url, cast(lcp as int) + 1)").alias("suffix"))
-
-
-_FRONT_CODING_SQL = f"""
-WITH d AS (SELECT source, {_CLEANURLD} AS url FROM documents),
-coded AS (
-  SELECT url,
-         coalesce(lag(url) OVER (PARTITION BY source ORDER BY url), '')
-           AS prev
-  FROM d),
-lcped AS (SELECT url, CAST({_LCP_EXPR} AS BIGINT) AS lcp FROM coded)
-SELECT url, lcp, substr(url, CAST(lcp AS INT) + 1) AS suffix
-FROM lcped
-"""
-
-
-def _q_gorilla_dod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gorilla-style delta-of-delta timestamp encoding over per-user
-    event series (integer µs, (ts, event_id) total order) plus the
-    zigzag-varint byte cost per stored value — the TSDB compression
-    accounting that decides block sizes. All-integer."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = F.unix_micros(F.col("ts").cast("timestamp"))
-    d = e.withColumn("delta", t - F.lag(t).over(w)) \
-         .withColumn("dod", F.col("delta") - F.lag("delta").over(w))
-    zz = F.when(F.col("dod") >= 0, 2 * F.col("dod")) \
-        .otherwise(-2 * F.col("dod") - 1)
-    nbytes = (F.when(zz < 128, 1).when(zz < 16384, 2)
-              .when(zz < 2097152, 3).when(zz < 268435456, 4)
-              .otherwise(5))
-    return d.select(
-        "event_id", "user_id", F.col("dod").cast("long").alias("dod"),
-        F.when(F.col("dod").isNull(), None).otherwise(nbytes)
-        .cast("long").alias("nbytes"))
-
-
-_GORILLA_SQL = """
-WITH s AS (
-  SELECT event_id, user_id, epoch_us(ts) AS t
-  FROM events),
-d1 AS (
-  SELECT event_id, user_id, t,
-         t - lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
-           AS delta
-  FROM s),
-d2 AS (
-  SELECT event_id, user_id,
-         delta - lag(delta)
-           OVER (PARTITION BY user_id ORDER BY t, event_id) AS dod
-  FROM d1)
-SELECT event_id, user_id, CAST(dod AS BIGINT) AS dod,
-  CAST(CASE WHEN dod IS NULL THEN NULL ELSE
-    CASE WHEN (CASE WHEN dod >= 0 THEN 2 * dod
-               ELSE -2 * dod - 1 END) < 128 THEN 1
-         WHEN (CASE WHEN dod >= 0 THEN 2 * dod
-               ELSE -2 * dod - 1 END) < 16384 THEN 2
-         WHEN (CASE WHEN dod >= 0 THEN 2 * dod
-               ELSE -2 * dod - 1 END) < 2097152 THEN 3
-         WHEN (CASE WHEN dod >= 0 THEN 2 * dod
-               ELSE -2 * dod - 1 END) < 268435456 THEN 4
-         ELSE 5 END END AS BIGINT) AS nbytes
-FROM d2
-"""
-
-
-# ---- batch 61: agg surface #2, BWT, JSON path ----------------------------
-
-
-def _q_agg_funcs2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second aggregate-function surface: max_by/min_by (deterministic
-    — the ordering value doc_id is unique), count_if, bool_and/
-    bool_or, any_value over a per-group CONSTANT (the one case where
-    any_value is deterministic). DuckDB mirrors via arg_max/arg_min/
-    FILTER-free CASE sums."""
-    base = _docs(spark, sf_dir).selectExpr(
-        "cast(doc_id % 7 as long) as g", "doc_id",
-        "cast((doc_id * 13) % 97 as long) as val")
-    return base.groupBy("g").agg(
-        F.expr("max_by(val, doc_id)").cast("long").alias("last_val"),
-        F.expr("min_by(val, doc_id)").cast("long").alias("first_val"),
-        F.expr("count_if(val % 3 = 0)").cast("long").alias("n_div3"),
-        F.expr("bool_and(val % 2 = 0)").alias("all_even"),
-        F.expr("bool_or(val > 90)").alias("any_big"),
-        F.expr("any_value(g * 100)").cast("long").alias("tag"))
-
-
-_AGG_FUNCS2_SQL = """
-WITH base AS (
-  SELECT doc_id % 7 AS g, doc_id, (doc_id * 13) % 97 AS val
-  FROM documents)
-SELECT CAST(g AS BIGINT) AS g,
-  CAST(arg_max(val, doc_id) AS BIGINT) AS last_val,
-  CAST(arg_min(val, doc_id) AS BIGINT) AS first_val,
-  CAST(sum(CASE WHEN val % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_div3,
-  bool_and(val % 2 = 0) AS all_even,
-  bool_or(val > 90) AS any_big,
-  CAST(min(g * 100) AS BIGINT) AS tag
-FROM base GROUP BY g
-"""
-
-
-def _q_bwt_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burrows–Wheeler transform (text.py:bwt_encode) on the unigram
-    word fixture: sorted-rotation last column + primary index, sorted
-    in codepoint order on both sides (sentinel '|' > 'c'). The oracle
-    builds every rotation via UNNEST(range) circular substr and
-    ORDER BY-aggregates the last characters."""
-    from bdtopo2refhydro_spark.operators.text import bwt_encode
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    return bwt_encode(words)
-
-
-_BWT_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-wt AS (SELECT word, word || '|' AS t FROM words),
-rots AS (
-  SELECT word, t, CAST(i AS INT) AS i,
-         substr(t, CAST(i AS INT) + 1)
-           || substr(t, 1, CAST(i AS INT)) AS rot
-  FROM wt, UNNEST(range(0, len(t))) u(i)),
-agg AS (
-  SELECT word,
-         string_agg(substr(rot, len(rot), 1), '' ORDER BY rot) AS bwt
-  FROM rots GROUP BY word),
-prim AS (
-  SELECT r.word,
-         CAST(count(*) AS INT) AS primary
-  FROM rots r JOIN rots s
-    ON s.word = r.word AND s.rot < r.rot
-  WHERE r.rot = r.t
-  GROUP BY r.word)
-SELECT a.word, a.bwt,
-       CAST(coalesce(p.primary, 0) AS INT) AS "primary"
-FROM agg a LEFT JOIN prim p ON p.word = a.word
-"""
-
-
-def _q_json_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON path surface (get_json_object + json_tuple) over documents
-    carrying a derived JSON payload; DuckDB mirrors with
-    json_extract_string (0-based array paths in both)."""
-    j = ("concat('{\"a\": ', cast(doc_id % 100 as string), "
-         "', \"b\": {\"c\": \"v', cast(doc_id % 7 as string), '\"}, "
-         "\"arr\": [', cast(doc_id as string), ',', "
-         "cast(doc_id + 1 as string), ']}')")
-    d = _docs(spark, sf_dir).selectExpr("doc_id", f"{j} as js")
-    return d.selectExpr(
-        "doc_id",
-        "get_json_object(js, '$.a') as a",
-        "get_json_object(js, '$.b.c') as c",
-        "get_json_object(js, '$.arr[1]') as arr1",
-        "json_tuple(js, 'a', 'b')").toDF(
-        "doc_id", "a", "c", "arr1", "ta", "tb").select(
-        "doc_id", "a", "c", "arr1", "ta")
-
-
-_JSON_PATH_SQL = """
-WITH d AS (
-  SELECT doc_id,
-    '{"a": ' || CAST(doc_id % 100 AS VARCHAR)
-    || ', "b": {"c": "v' || CAST(doc_id % 7 AS VARCHAR) || '"}, "arr": ['
-    || CAST(doc_id AS VARCHAR) || ',' || CAST(doc_id + 1 AS VARCHAR)
-    || ']}' AS js
-  FROM documents)
-SELECT doc_id,
-  json_extract_string(js, '$.a') AS a,
-  json_extract_string(js, '$.b.c') AS c,
-  json_extract_string(js, '$.arr[1]') AS arr1,
-  json_extract_string(js, '$.a') AS ta
-FROM d
-"""
 
 
 # ---- batch 60: densest subgraph by parallel peel -------------------------
@@ -13408,67 +11112,6 @@ rules AS (
 SELECT a.host, a.agent, ru.rule, ru.path,
        CAST(ru.line_no AS BIGINT) AS line_no
 FROM agents a JOIN rules ru ON ru.host = a.host AND ru.grp = a.grp
-"""
-
-
-def _q_surt_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURT canonical keys (Sort-friendly URI Reordering Transform, the
-    CDX-index key format): host components reversed and comma-joined +
-    ')' + path — groups every capture of a host subtree under one sort
-    range. Pure JVM string/array ops; per-key capture rollup."""
-    d = _docs(spark, sf_dir)
-    u = d.select("doc_id", F.expr(_CLEANURL).alias("url"))
-    rest = F.expr("substring_index(url, '://', -1)")
-    host = F.substring_index(rest, "/", 1)
-    path = F.expr("substr(substring_index(url, '://', -1), "
-                  "instr(substring_index(url, '://', -1), '/'))")
-    surt = F.concat(
-        F.array_join(F.reverse(F.split(host, "[.]")), ","),
-        F.lit(")"), path)
-    return (u.select(surt.alias("surt"))
-            .groupBy("surt")
-            .agg(F.count("*").cast("long").alias("n_captures")))
-
-
-_SURT_SQL = f"""
-WITH u AS (SELECT doc_id, {_CLEANURLD} AS url FROM documents),
-parts AS (
-  SELECT doc_id,
-         split_part(url, '://', 2) AS rest
-  FROM u),
-hp AS (
-  SELECT doc_id, split_part(rest, '/', 1) AS host,
-         substr(rest, strpos(rest, '/')) AS path
-  FROM parts)
-SELECT array_to_string(list_reverse(string_split(host, '.')), ',')
-       || ')' || path AS surt,
-       CAST(count(*) AS BIGINT) AS n_captures
-FROM hp GROUP BY 1
-"""
-
-
-def _q_na_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrameNaFunctions surface (na.fill / na.replace / na.drop)
-    over injected nulls — the missing-data API pinned end to end."""
-    base = _docs(spark, sf_dir).selectExpr(
-        "doc_id",
-        "case when doc_id % 5 = 0 then cast(null as long) "
-        "else cast(doc_id % 100 as long) end as v1",
-        "case when doc_id % 7 = 0 then cast(null as string) "
-        "else concat('t', cast(doc_id % 10 as string)) end as s")
-    out = (base.na.fill({"v1": -1})
-           .na.replace("t3", "T3", subset=["s"])
-           .na.drop(subset=["s"]))
-    return out.select("doc_id", "v1", "s")
-
-
-_NA_FUNCS_SQL = """
-SELECT doc_id,
-  CAST(CASE WHEN doc_id % 5 = 0 THEN -1
-            ELSE doc_id % 100 END AS BIGINT) AS v1,
-  CASE WHEN doc_id % 10 = 3 THEN 'T3'
-       ELSE 't' || CAST(doc_id % 10 AS VARCHAR) END AS s
-FROM documents WHERE doc_id % 7 != 0
 """
 
 
@@ -14308,88 +11951,6 @@ FROM pick WHERE pr = 1 ORDER BY qid
 """
 
 
-def _q_soundex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Soundex phonetic codes over the document vocabulary — engine
-    side is Spark's BUILT-IN soundex (JVM codegen, zero Python); the
-    oracle REIMPLEMENTS Spark's exact algorithm (the Commons-codec
-    variant: h/w are fully transparent — they neither emit nor reset,
-    so duplicates are suppressed ACROSS them, 'ashcraft' → A261, and
-    vowels reset the duplicate guard) as pure window SQL: map chars
-    through the US_ENGLISH table, drop the '7' (h/w) rows, lag() for
-    the previous effective code, keep the first 3 appended digits.
-    The fixture restricts to ^[a-z]+$ tokens so the non-alpha
-    passthrough branch never fires."""
-    toks = (_docs(spark, sf_dir)
-            .select(F.explode(F.split(F.lower("text"), r"\s+"))
-                    .alias("w"))
-            .where(F.col("w").rlike("^[a-z]+$"))
-            .distinct())
-    return toks.select("w", F.soundex("w").alias("sx")).orderBy("w")
-
-
-_SOUNDEX_SQL = r"""
-WITH lists AS (
-  SELECT regexp_split_to_array(lower(text), '\s+') AS l FROM documents),
-words AS (
-  SELECT DISTINCT t.tok AS w FROM lists, unnest(l) t(tok)
-  WHERE regexp_matches(t.tok, '^[a-z]+$')),
-chars AS (
-  -- DuckDB 1.0 can't lateral-join generate_series on a column: use a
-  -- fixed 1..64 series (tokens are far shorter) + a length guard
-  SELECT w, g.p, substr(w, CAST(g.p AS INTEGER), 1) AS ch
-  FROM words CROSS JOIN generate_series(1, 64) g(p)
-  WHERE g.p <= length(w)),
-coded AS (
-  SELECT w, p,
-         substr('01230127022455012623017202', ascii(ch) - 96, 1) AS code
-  FROM chars),
-filt AS (
-  SELECT w, p, code,
-         lag(code) OVER (PARTITION BY w ORDER BY p) AS prev
-  FROM coded WHERE code != '7'),
-app AS (
-  SELECT w, p, code,
-         row_number() OVER (PARTITION BY w ORDER BY p) AS rn
-  FROM filt
-  WHERE p > 1 AND code != '0' AND (prev IS NULL OR code != prev)),
-sx AS (
-  SELECT wo.w,
-         upper(substr(wo.w, 1, 1))
-           || coalesce(string_agg(a.code, '' ORDER BY a.p), '') AS s
-  FROM words wo LEFT JOIN app a ON a.w = wo.w AND a.rn <= 3
-  GROUP BY wo.w)
-SELECT w, substr(s || '000', 1, 4) AS sx FROM sx ORDER BY w
-"""
-
-
-def _q_group_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL / ORDER BY ALL SQL surface (Spark 4 supports the
-    DuckDB-originated shorthand): grouping keys inferred from the
-    non-aggregate select items, ordering over every output column —
-    the two dialects must infer the SAME key set or the hash
-    mismatches. All-integer aggregates."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("v_orders_ga")
-    return spark.sql("""
-        SELECT o_orderstatus, o_orderpriority,
-               count(*) AS n,
-               cast(sum(o_orderkey % 1000) AS bigint) AS s
-        FROM v_orders_ga
-        GROUP BY ALL
-        ORDER BY ALL
-    """)
-
-
-_GROUP_ALL_SQL = """
-SELECT o_orderstatus, o_orderpriority,
-       count(*) AS n,
-       CAST(sum(o_orderkey % 1000) AS BIGINT) AS s
-FROM orders
-GROUP BY ALL
-ORDER BY ALL
-"""
-
-
 def _q_jp_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jones-Plassmann greedy coloring (graph.py:jp_coloring):
     deterministic Knuth-hash priorities packed into one comparable
@@ -14525,48 +12086,6 @@ GROUP BY qs.qid ORDER BY qid
 """
 
 
-_AC_PATS = ["the", "he", "her", "data", "at", "ata", "ion", "on",
-            "an", "and"]
-
-
-def _q_aho_corasick(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-pattern OVERLAPPING substring counts by a broadcast
-    Aho-Corasick automaton (text.py:aho_corasick_counts): dictionary
-    built driver-side (goto trie + BFS fail links, suffix-output
-    union), one linear scan per document regardless of pattern count,
-    big side never shuffles. The pattern set nests ('at' ⊂ 'ata' ⊂
-    'data', 'he' ⊂ 'the'/'her', 'on' ⊂ 'ion', 'an' ⊂ 'and') so the
-    fail/output-link union is load-bearing, not decorative. Oracle:
-    brute-force position scan counting every window equal to a
-    pattern."""
-    from bdtopo2refhydro_spark.operators.text import aho_corasick_counts
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.expr("substr(text, 1, 200)").alias("text"))
-    return aho_corasick_counts(d, _AC_PATS).orderBy("doc_id")
-
-
-def _aho_sql() -> str:
-    vals = ", ".join(f"('{p}')" for p in _AC_PATS)
-    return f"""
-WITH pats AS (SELECT pat FROM (VALUES {vals}) p(pat)),
-d AS (SELECT doc_id, lower(substr(text, 1, 200)) AS t FROM documents),
-hits AS (
-  SELECT d.doc_id, p.pat
-  FROM d CROSS JOIN pats p CROSS JOIN generate_series(1, 200) g(i)
-  WHERE g.i + length(p.pat) - 1 <= length(d.t)
-    AND substr(d.t, CAST(g.i AS INTEGER), length(p.pat)) = p.pat),
-agg AS (SELECT doc_id, count(*) AS n_matches,
-               count(DISTINCT pat) AS n_pats
-        FROM hits GROUP BY doc_id)
-SELECT d.doc_id,
-       CAST(coalesce(a.n_matches, 0) AS BIGINT) AS n_matches,
-       CAST(coalesce(a.n_pats, 0) AS BIGINT) AS n_pats
-FROM d LEFT JOIN agg a ON a.doc_id = d.doc_id
-ORDER BY d.doc_id
-"""
-
-
 def _q_merkle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merkle tree of the documents table (dq.py:merkle_levels):
     leaf = md5(doc_id ':' n_chars) in doc_id order (two-level
@@ -14607,82 +12126,6 @@ l{r} AS MATERIALIZED (
             + "\nUNION ALL ".join(selects)
             + ") u ORDER BY level, idx\n")
     return base + "".join(parts) + tail
-
-
-def _q_lcp_array(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LCP array per word by KASAI'S linear algorithm
-    (text.py:lcp_array — the h-carryover amortization), checked
-    against the naive definition: the oracle ranks suffixes by
-    count-of-smaller and computes each rank-adjacent pair's LCP as
-    max k with equal length-k prefixes (prefix equality is monotone
-    in k, so max = LCP). Same synthesized-word fixture as
-    suffix_array."""
-    from bdtopo2refhydro_spark.operators.text import lcp_array
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    return lcp_array(words)
-
-
-_LCP_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-sufs AS MATERIALIZED (
-  SELECT word, substr(word, CAST(i AS INT)) AS suf
-  FROM words, UNNEST(range(1, len(word) + 1)) t(i)),
-ranked AS MATERIALIZED (
-  SELECT a.word, a.suf,
-         (SELECT count(*) FROM sufs b
-          WHERE b.word = a.word AND b.suf < a.suf) AS rank
-  FROM sufs a),
-pairs AS MATERIALIZED (
-  SELECT r.word, r.rank, r.suf AS s1, p.suf AS s2
-  FROM ranked r LEFT JOIN ranked p
-    ON p.word = r.word AND p.rank = r.rank - 1),
-lcpk AS (
-  SELECT p.word, p.rank, t.k
-  FROM pairs p,
-       UNNEST(range(1, least(len(p.s1), len(p.s2)) + 1)) t(k)
-  WHERE substr(p.s1, 1, CAST(t.k AS INT))
-        = substr(p.s2, 1, CAST(t.k AS INT)))
-SELECT p.word, CAST(p.rank AS BIGINT) AS rank,
-       CAST(coalesce((SELECT max(k) FROM lcpk l
-                      WHERE l.word = p.word AND l.rank = p.rank), 0)
-            AS BIGINT) AS lcp
-FROM pairs p
-"""
-
-
-def _q_month_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar month arithmetic parity pin: add_months' month-end
-    CLAMPING (Jan 31 + 1 month = Feb 29) and last_day must agree
-    between Spark and DuckDB's date + to_months() across positive AND
-    negative offsets over a fixture sweeping month boundaries. Dates
-    emitted as strings (datetime64 unit mismatch, repo convention)."""
-    mm = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 60).alias("m")).distinct())
-    return mm.selectExpr(
-        "cast(m as long) as m",
-        "cast(date_add(date'2023-12-31', cast(m * 13 as int)) as string)"
-        " as d0",
-        "cast(add_months(date_add(date'2023-12-31', cast(m * 13 as "
-        "int)), cast(m % 7 - 3 as int)) as string) as dm",
-        "cast(last_day(date_add(date'2023-12-31', cast(m * 13 as "
-        "int))) as string) as ld")
-
-
-_MONTH_ARITH_SQL = """
-WITH mm AS (SELECT DISTINCT doc_id % 60 AS m FROM documents),
-d AS (SELECT m, DATE '2023-12-31' + CAST(m * 13 AS INTEGER) AS d0
-      FROM mm)
-SELECT CAST(m AS BIGINT) AS m,
-       CAST(d0 AS VARCHAR) AS d0,
-       CAST(CAST(d0 + to_months(CAST(m % 7 - 3 AS INTEGER)) AS DATE)
-            AS VARCHAR) AS dm,
-       CAST(last_day(d0) AS VARCHAR) AS ld
-FROM d
-"""
 
 
 def _q_irv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14744,42 +12187,6 @@ e{k} AS MATERIALIZED (
             + "\nUNION ALL ".join(selects)
             + ") u ORDER BY round, cand\n")
     return base + "".join(parts) + tail
-
-
-def _q_longest_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest repeated substring per word = max(LCP array) — the
-    classic suffix-structure corollary, composing suffix_array's
-    fixture with lcp_array (Kasai). The oracle knows nothing of
-    suffix arrays: it enumerates EVERY (position, length) window and
-    takes the longest window value occurring twice — an O(n²)
-    independent definition."""
-    from bdtopo2refhydro_spark.operators.text import lcp_array
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    return (lcp_array(words).groupBy("word")
-            .agg(F.max("lcp").alias("lrs_len")))
-
-
-_LONGEST_REPEAT_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-subs AS (
-  SELECT word, substr(word, CAST(t.i AS INT), CAST(u.l AS INT)) AS sub,
-         u.l
-  FROM words,
-       UNNEST(range(1, len(word) + 1)) t(i),
-       UNNEST(range(1, len(word) + 1)) u(l)
-  WHERE t.i + u.l <= len(word) + 1),
-rep AS (
-  SELECT word, max(l) AS m FROM (
-    SELECT word, l, sub FROM subs GROUP BY word, l, sub
-    HAVING count(*) >= 2) g
-  GROUP BY word)
-SELECT w.word, CAST(coalesce(r.m, 0) AS BIGINT) AS lrs_len
-FROM words w LEFT JOIN rep r ON r.word = w.word
-"""
 
 
 def _q_euler_path(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -15280,34 +12687,6 @@ FROM scored GROUP BY t ORDER BY root
 """
 
 
-def _q_min_period(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Smallest string period by the REAL KMP failure function
-    (text.py:min_period — period = n − longest border, linear
-    fallback scan) vs the O(n²) definitional oracle: min p with
-    prefix(n−p) = suffix shifted by p. Same synthesized-word fixture
-    as suffix_array/lcp_array."""
-    from bdtopo2refhydro_spark.operators.text import min_period
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    return min_period(words).orderBy("word")
-
-
-_MIN_PERIOD_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-cand AS (
-  SELECT word, t.p
-  FROM words, UNNEST(range(1, len(word) + 1)) t(p)
-  WHERE substr(word, 1, CAST(len(word) - t.p AS INT))
-        = substr(word, CAST(t.p + 1 AS INT)))
-SELECT w.word, CAST(min(c.p) AS BIGINT) AS period
-FROM words w JOIN cand c ON c.word = w.word
-GROUP BY w.word ORDER BY w.word
-"""
-
-
 def _q_apsp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs shortest paths by min-plus matrix squaring
     (graph.py:apsp_minplus): D ← min(D, D∘D) per round — an L-hop
@@ -15392,38 +12771,6 @@ ORDER BY host, event_id
 """
 
 
-def _q_lis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIS per group by PATIENCE SORTING (ml.py:lis_lengths — real
-    O(n log n) bisect-on-tails) vs the oracle's quadratic pair-DAG
-    longest-chain recursion — two unrelated algorithms, one
-    integer per group."""
-    from bdtopo2refhydro_spark.operators.ml import lis_lengths
-
-    seq = _docs(spark, sf_dir).selectExpr(
-        "cast(doc_id % 8 as long) as g",
-        "cast(doc_id div 8 as long) as i",
-        "cast((doc_id * 37) % 997 as long) as a")
-    return lis_lengths(seq).orderBy("g")
-
-
-_LIS_SQL = """
-WITH RECURSIVE seq AS MATERIALIZED (
-  SELECT doc_id % 8 AS g, doc_id // 8 AS i, (doc_id * 37) % 997 AS a
-  FROM documents),
-pairs AS MATERIALIZED (
-  SELECT s1.g, s1.i AS i, s2.i AS j
-  FROM seq s1 JOIN seq s2
-    ON s2.g = s1.g AND s2.i > s1.i AND s2.a > s1.a),
-chain(g, j, len) AS (
-  SELECT g, i, 1 FROM seq
-  UNION
-  SELECT p.g, p.j, c.len + 1
-  FROM chain c JOIN pairs p ON p.g = c.g AND p.i = c.j)
-SELECT CAST(g AS BIGINT) AS g, CAST(max(len) AS BIGINT) AS lis
-FROM chain GROUP BY g ORDER BY g
-"""
-
-
 def _q_range_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-array range updates: R inclusive [l, r] += v
     updates collapse to 2R boundary deltas, and EVERY position's
@@ -15465,379 +12812,6 @@ SELECT CAST(g.p AS BIGINT) AS pos,
 FROM generate_series(0, 299) g(p)
 LEFT JOIN upd u ON g.p >= u.l AND g.p <= u.r
 GROUP BY g.p ORDER BY pos
-"""
-
-
-def _q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average per user: Σ v·Δt as exact integer
-    microsecond arithmetic, ONE final IEEE division (the repo's
-    bit-exact float recipe) — the time-series aggregate plain AVG
-    gets wrong whenever samples are irregular. Value derived as an
-    integer (event_id % 100); users with a single event excluded on
-    both sides."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
-        "user_id", "unix_micros(cast(ts as timestamp)) as t",
-        "event_id", "cast(event_id % 100 as long) as v")
-    w = Window.partitionBy("user_id").orderBy("t", "event_id")
-    seg = (ev.withColumn("tn", F.lead("t").over(w))
-           .where(F.col("tn").isNotNull())
-           .groupBy("user_id")
-           .agg(F.sum(F.col("v") * (F.col("tn") - F.col("t")))
-                .alias("num"),
-                (F.max("tn") - F.min("t")).alias("den")))
-    return (seg.select(F.col("user_id"),
-                       (F.col("num") / F.col("den")).alias("twap"),
-                       F.col("num"), F.col("den"))
-            .orderBy("user_id"))
-
-
-_TWAP_SQL = """
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS t, event_id, event_id % 100 AS v
-  FROM events),
-seg AS (
-  SELECT user_id, t, v,
-         lead(t) OVER (PARTITION BY user_id
-                       ORDER BY t, event_id) AS tn
-  FROM ev),
-agg AS (
-  SELECT user_id, sum(v * (tn - t)) AS num, max(tn) - min(t) AS den
-  FROM seg WHERE tn IS NOT NULL GROUP BY user_id)
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS twap,
-       CAST(num AS BIGINT) AS num, CAST(den AS BIGINT) AS den
-FROM agg ORDER BY user_id
-"""
-
-
-def _q_gap_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-constrained sequential pattern counts: (type₁ → type₂)
-    pairs where the second event lands within 1 h strictly after
-    the first, per user — the SPADE-style co-occurrence primitive
-    beyond adjacent transitions (event_transitions covers adjacency).
-    At 100 TB the self-join runs time-bucketed
-    (temporal.range_join_buckets); fixture-scale uses the plain
-    user equi-join + band filter with identical semantics."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
-        "user_id", "unix_micros(cast(ts as timestamp)) as t",
-        "event_type", "event_id")
-    a = ev.selectExpr("user_id", "t as t1", "event_type as e1",
-                      "event_id as id1")
-    b = ev.selectExpr("user_id", "t as t2", "event_type as e2",
-                      "event_id as id2")
-    pairs = (a.join(b, "user_id")
-             .where((F.col("t2") > F.col("t1"))
-                    & (F.col("t2") - F.col("t1") <= 3_600_000_000)))
-    return (pairs.groupBy("e1", "e2")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy("e1", "e2"))
-
-
-_GAP_PATTERNS_SQL = """
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS t, event_type FROM events)
-SELECT a.event_type AS e1, b.event_type AS e2,
-       CAST(count(*) AS BIGINT) AS n
-FROM ev a JOIN ev b
-  ON b.user_id = a.user_id
- AND b.t > a.t AND b.t - a.t <= 3600000000
-GROUP BY a.event_type, b.event_type
-ORDER BY e1, e2
-"""
-
-
-def _q_knapsack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """0/1 knapsack optimum per group (ml.py:knapsack01 — the real
-    O(n·W) descending-scan DP) vs the oracle's brute force over all
-    2¹² item subsets with a bitmask weight/value fold — exponential
-    definition against pseudo-polynomial DP."""
-    from bdtopo2refhydro_spark.operators.ml import knapsack01
-
-    it = (_docs(spark, sf_dir).where("doc_id div 10 < 12")
-          .selectExpr("cast(doc_id % 10 as long) as g",
-                      "cast(1 + (doc_id * 7) % 9 as long) as wt",
-                      "cast(1 + (doc_id * 11) % 20 as long) as val"))
-    return knapsack01(it, 20).orderBy("g")
-
-
-_KNAPSACK_SQL = """
-WITH it AS MATERIALIZED (
-  SELECT doc_id % 10 AS g,
-         row_number() OVER (PARTITION BY doc_id % 10
-                            ORDER BY doc_id) - 1 AS li,
-         1 + (doc_id * 7) % 9 AS wt, 1 + (doc_id * 11) % 20 AS val
-  FROM documents WHERE doc_id // 10 < 12),
-subs AS (
-  SELECT t.g, g2.s FROM (SELECT DISTINCT g FROM it) t
-  CROSS JOIN generate_series(0, 4095) g2(s)),
-scored AS (
-  SELECT sb.g, sb.s,
-         sum(CASE WHEN ((sb.s >> it.li) & 1) = 1
-                  THEN it.wt ELSE 0 END) AS w,
-         sum(CASE WHEN ((sb.s >> it.li) & 1) = 1
-                  THEN it.val ELSE 0 END) AS v
-  FROM subs sb JOIN it ON it.g = sb.g
-  GROUP BY sb.g, sb.s)
-SELECT CAST(g AS BIGINT) AS g,
-       CAST(max(CASE WHEN w <= 20 THEN v ELSE 0 END) AS BIGINT) AS best
-FROM scored GROUP BY g ORDER BY g
-"""
-
-
-def _q_wis_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted interval scheduling optimum
-    (ml.py:weighted_interval_max — the real O(n log n) sort-by-end +
-    bisect-predecessor DP) vs the oracle's max-weight
-    compatible-chain recursion over the (s_j ≥ e_i) DAG — the
-    weighted upgrade of interval_sched's greedy count."""
-    from bdtopo2refhydro_spark.operators.ml import weighted_interval_max
-
-    iv = _docs(spark, sf_dir).selectExpr(
-        "cast(doc_id % 10 as long) as g",
-        "cast((doc_id * 37) % 500 as long) as s",
-        "cast((doc_id * 37) % 500 + 1 + (doc_id * 11) % 40 as long)"
-        " as e",
-        "cast(1 + (doc_id * 13) % 6 as long) as val")
-    return weighted_interval_max(iv).orderBy("g")
-
-
-_WIS_MAX_SQL = """
-WITH RECURSIVE iv AS MATERIALIZED (
-  SELECT doc_id % 10 AS g, (doc_id * 37) % 500 AS s,
-         (doc_id * 37) % 500 + 1 + (doc_id * 11) % 40 AS e,
-         1 + (doc_id * 13) % 6 AS v, doc_id AS iid
-  FROM documents),
-chain(g, iid, tot) AS (
-  SELECT g, iid, v FROM iv
-  UNION
-  SELECT j.g, j.iid, c.tot + j.v
-  FROM chain c JOIN iv i ON i.g = c.g AND i.iid = c.iid
-  JOIN iv j ON j.g = c.g AND j.s >= i.e)
-SELECT CAST(g AS BIGINT) AS g, CAST(max(tot) AS BIGINT) AS best
-FROM chain GROUP BY g ORDER BY g
-"""
-
-
-def _q_bot_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bot detection by inter-arrival REGULARITY: per user, integer
-    second gaps between consecutive events; variance numerator
-    n·Σg² − (Σg)² stays exact in BIGINT (gaps floored to seconds so
-    squares can't overflow), and the regularity flag is a pure
-    integer cross-multiplication — machine-like traffic has
-    suspiciously low gap variance. No floats anywhere."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
-        "user_id", "unix_micros(cast(ts as timestamp)) as t",
-        "event_id")
-    w = Window.partitionBy("user_id").orderBy("t", "event_id")
-    gaps = (ev.withColumn("tn", F.lead("t").over(w))
-            .where(F.col("tn").isNotNull())
-            .selectExpr("user_id",
-                        "(tn - t) div 1000000 as g"))
-    agg = gaps.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("g").alias("s"),
-        F.sum(F.col("g") * F.col("g")).alias("sq"))
-    return (agg.selectExpr(
-        "user_id", "n", "s", "sq",
-        "n * sq - s * s as var_num",
-        "100 * (n * sq - s * s) < s * s as is_regular")
-        .orderBy("user_id"))
-
-
-_BOT_GAPS_SQL = """
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS t, event_id FROM events),
-gaps AS (
-  SELECT user_id, (tn - t) // 1000000 AS g FROM (
-    SELECT user_id, t,
-           lead(t) OVER (PARTITION BY user_id
-                         ORDER BY t, event_id) AS tn
-    FROM ev) s
-  WHERE tn IS NOT NULL),
-agg AS (
-  SELECT user_id, count(*) AS n, sum(g) AS s, sum(g * g) AS sq
-  FROM gaps GROUP BY user_id)
-SELECT CAST(user_id AS BIGINT) AS user_id, CAST(n AS BIGINT) AS n,
-       CAST(s AS BIGINT) AS s, CAST(sq AS BIGINT) AS sq,
-       CAST(n * sq - s * s AS BIGINT) AS var_num,
-       100 * (n * sq - s * s) < s * s AS is_regular
-FROM agg ORDER BY user_id
-"""
-
-
-def _q_rrf_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocal-rank fusion of two document rankings: score =
-    1/(60+r₁) + 1/(60+r₂) with the FIXED op tree (two IEEE
-    divisions + one add — identical expression text in both
-    dialects, so bit-identical doubles), deterministic (score desc,
-    doc_id) top-20. The standard zero-training retrieval ensembling
-    primitive."""
-    d = _docs(spark, sf_dir).selectExpr(
-        "doc_id",
-        "cast((doc_id * 37) % 997 as long) as k1",
-        "cast((doc_id * 61) % 991 as long) as k2")
-    w1 = Window.orderBy("k1", "doc_id")
-    w2 = Window.orderBy("k2", "doc_id")
-    ranked = (d.withColumn("r1", F.row_number().over(w1))
-              .withColumn("r2", F.row_number().over(w2))
-              .selectExpr("doc_id", "cast(r1 as long) as r1",
-                          "cast(r2 as long) as r2",
-                          "cast(1 as double) / (60 + r1)"
-                          " + cast(1 as double) / (60 + r2) as score"))
-    wf = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (ranked.withColumn("rank", F.row_number().over(wf)
-                              .cast("long"))
-            .where(F.col("rank") <= 20)
-            .select("rank", "doc_id", "r1", "r2", "score"))
-
-
-_RRF_FUSE_SQL = """
-WITH d AS (
-  SELECT doc_id, (doc_id * 37) % 997 AS k1, (doc_id * 61) % 991 AS k2
-  FROM documents),
-ranked AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY k1, doc_id) AS r1,
-         row_number() OVER (ORDER BY k2, doc_id) AS r2
-  FROM d),
-scored AS (
-  SELECT doc_id, CAST(r1 AS BIGINT) AS r1, CAST(r2 AS BIGINT) AS r2,
-         CAST(1 AS DOUBLE) / (60 + r1)
-           + CAST(1 AS DOUBLE) / (60 + r2) AS score
-  FROM ranked)
-SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-            AS BIGINT) AS rank,
-       doc_id, r1, r2, CAST(score AS DOUBLE) AS score
-FROM scored
-QUALIFY rank <= 20
-ORDER BY rank
-"""
-
-
-def _q_coord_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coordinated (consistent) sampling: the SAME multiplicative-
-    hash predicate on the join key samples orders and lineitem, so
-    join-of-samples ≡ sample-of-join (Broder coordination — the
-    property that makes cross-table sampling composable in a
-    pipeline). The flag is computed honestly from both counts, not
-    assumed; hash is (k·2654435761) mod 2³¹ < 0.3·2³¹, dialect-
-    portable integer arithmetic."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    pred_o = F.expr("(o_orderkey * 2654435761) % 2147483648"
-                    " < 644245094")
-    pred_l = F.expr("(l_orderkey * 2654435761) % 2147483648"
-                    " < 644245094")
-    so = o.where(pred_o)
-    sl = l.where(pred_l)
-    n_o = so.count()
-    n_l = sl.count()
-    n_join = so.join(sl, F.col("o_orderkey") == F.col("l_orderkey")) \
-        .count()
-    n_filter_join = (o.join(l, F.col("o_orderkey")
-                            == F.col("l_orderkey"))
-                     .where(pred_o).count())
-    return spark.createDataFrame(
-        [(n_o, n_l, n_join, n_join == n_filter_join)],
-        "n_o long, n_l long, n_join long, coordinated boolean")
-
-
-_COORD_SAMPLE_SQL = """
-WITH so AS (SELECT * FROM orders
-            WHERE (o_orderkey * 2654435761) % 2147483648 < 644245094),
-sl AS (SELECT * FROM lineitem
-       WHERE (l_orderkey * 2654435761) % 2147483648 < 644245094),
-j1 AS (SELECT count(*) AS n FROM so JOIN sl
-       ON sl.l_orderkey = so.o_orderkey),
-j2 AS (SELECT count(*) AS n FROM orders o JOIN lineitem l
-       ON l.l_orderkey = o.o_orderkey
-       WHERE (o.o_orderkey * 2654435761) % 2147483648 < 644245094)
-SELECT CAST((SELECT count(*) FROM so) AS BIGINT) AS n_o,
-       CAST((SELECT count(*) FROM sl) AS BIGINT) AS n_l,
-       CAST(j1.n AS BIGINT) AS n_join,
-       j1.n = j2.n AS coordinated
-FROM j1, j2
-"""
-
-
-def _q_mad_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Median absolute deviation per group, EXACT discrete ranks
-    (k = (n+1) div 2 on (value, doc_id) order — no interpolation, so
-    integers stay integers): median pass, then the same rank
-    arithmetic over |x − median|. The robust-statistics gate
-    quantile_gates' machinery, composed twice."""
-    d = _docs(spark, sf_dir).selectExpr(
-        "cast(doc_id % 7 as long) as g", "doc_id",
-        "cast((doc_id * 31) % 501 as long) as x")
-    w = Window.partitionBy("g").orderBy("x", "doc_id")
-    med = (d.withColumn("rn", F.row_number().over(w))
-           .withColumn("n", F.count(F.lit(1))
-                       .over(Window.partitionBy("g")))
-           .where(F.col("rn") == F.expr("(n + 1) div 2"))
-           .select("g", F.col("x").alias("med")))
-    dev = (d.join(med, "g")
-           .selectExpr("g", "doc_id", "abs(x - med) as ad", "med"))
-    w2 = Window.partitionBy("g").orderBy("ad", "doc_id")
-    mad = (dev.withColumn("rn", F.row_number().over(w2))
-           .withColumn("n", F.count(F.lit(1))
-                       .over(Window.partitionBy("g")))
-           .where(F.col("rn") == F.expr("(n + 1) div 2"))
-           .select("g", "med", F.col("ad").alias("mad")))
-    return mad.orderBy("g")
-
-
-_MAD_GROUPS_SQL = """
-WITH d AS (
-  SELECT doc_id % 7 AS g, doc_id, (doc_id * 31) % 501 AS x
-  FROM documents),
-med AS (
-  SELECT g, x AS med FROM (
-    SELECT g, x,
-           row_number() OVER (PARTITION BY g ORDER BY x, doc_id) AS rn,
-           count(*) OVER (PARTITION BY g) AS n
-    FROM d) s
-  WHERE rn = (n + 1) // 2),
-dev AS (
-  SELECT d.g, d.doc_id, abs(d.x - m.med) AS ad, m.med
-  FROM d JOIN med m ON m.g = d.g)
-SELECT g, CAST(med AS BIGINT) AS med, CAST(ad AS BIGINT) AS mad
-FROM (
-  SELECT g, med, ad,
-         row_number() OVER (PARTITION BY g ORDER BY ad, doc_id) AS rn,
-         count(*) OVER (PARTITION BY g) AS n
-  FROM dev) s
-WHERE rn = (n + 1) // 2
-ORDER BY g
-"""
-
-
-def _q_format_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String-formatting surface parity: Spark format_string ≡
-    DuckDB printf (%05d / %s / %x), plus lpad/rpad (incl.
-    truncation when the input exceeds the pad length), translate,
-    repeat, reverse — the report-layer functions a migrating user
-    hits immediately."""
-    return _docs(spark, sf_dir).where("doc_id % 3 = 0").selectExpr(
-        "doc_id",
-        "format_string('id-%05d-%s', doc_id, lang) as fmt",
-        "format_string('%x', doc_id * 255) as hexs",
-        "lpad(lang, 8, '.') as lp",
-        "rpad(lang, 2, '*') as rp",
-        "translate(source, 'aeiou', '12345') as tr",
-        "repeat(lang, cast(doc_id % 4 as int)) as rep",
-        "reverse(source) as rev").orderBy("doc_id")
-
-
-_FORMAT_FUNCS_SQL = """
-SELECT doc_id,
-       printf('id-%05d-%s', doc_id, lang) AS fmt,
-       printf('%x', doc_id * 255) AS hexs,
-       lpad(lang, 8, '.') AS lp,
-       rpad(lang, 2, '*') AS rp,
-       translate(source, 'aeiou', '12345') AS tr,
-       repeat(lang, CAST(doc_id % 4 AS INTEGER)) AS rep,
-       reverse(source) AS rev
-FROM documents WHERE doc_id % 3 = 0 ORDER BY doc_id
 """
 
 
@@ -15909,172 +12883,6 @@ GROUP BY b.pos - a.pos ORDER BY dist
 """
 
 
-def _q_det_bareiss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact integer determinants (ml.py:det_bareiss — fraction-free
-    Bareiss elimination with sign-tracking pivoting): the fixture
-    builds A = L·U from formula-defined unit-lower L and upper U
-    (diag ∈ {−2,−1,1,2}), so det(A) = Π diag(U) is CLOSED FORM for
-    the oracle while the engine runs genuine elimination on the
-    dense product matrix."""
-    from bdtopo2refhydro_spark.operators.ml import det_bareiss
-
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 12).alias("g")).distinct())
-    cells = (gg.select(
-        "g",
-        F.explode(F.sequence(F.lit(0), F.lit(4))).alias("i"))
-        .select("g", "i",
-                F.explode(F.sequence(F.lit(0), F.lit(4))).alias("j"))
-        .select("g", "i", "j",
-                F.explode(F.sequence(F.lit(0), F.lit(4))).alias("k"))
-        .where("k <= least(i, j)")
-        .selectExpr(
-            "g", "i", "j",
-            # L[i,k]: unit diag, formula below; U[k,j]: diag from the
-            # ±{1,2} table, formula above
-            "(case when k = i then 1 "
-            " else (g * 7 + i * 3 + k) % 5 - 2 end) * "
-            "(case when k = j then "
-            "  (case (g + k) % 4 when 0 then 1 when 1 then -1 "
-            "   when 2 then 2 else -2 end) "
-            " else (g * 11 + k * 2 + j) % 7 - 3 end) as term")
-        .groupBy("g", "i", "j")
-        .agg(F.sum("term").alias("v"))
-        .selectExpr("cast(g as long) as g", "cast(i as long) as i",
-                    "cast(j as long) as j", "cast(v as long) as v"))
-    return det_bareiss(cells, 5).orderBy("g")
-
-
-_DET_BAREISS_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 12 AS g FROM documents),
-ks AS (SELECT g, k.x AS k FROM gg
-       CROSS JOIN generate_series(0, 4) k(x))
-SELECT CAST(g AS BIGINT) AS g,
-       CAST(product(CASE (g + k) % 4 WHEN 0 THEN 1 WHEN 1 THEN -1
-                    WHEN 2 THEN 2 ELSE -2 END) AS BIGINT) AS det
-FROM ks GROUP BY g ORDER BY g
-"""
-
-
-def _q_anagrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anagram classes over the synthesized vocabulary: signature =
-    characters sorted and re-concatenated (JVM
-    transform+array_sort on the Spark side, char-explode +
-    string_agg ORDER BY on the DuckDB side — two different
-    mechanisms, same canonical form); classes with ≥2 members."""
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    sig = words.selectExpr(
-        "word",
-        "concat_ws('', array_sort(transform(sequence(1, length(word)),"
-        " i -> substring(word, i, 1)))) as sig")
-    return (sig.groupBy("sig")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.min("word").alias("first_word"))
-            .where("n >= 2")
-            .orderBy("sig"))
-
-
-_ANAGRAMS_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-chars AS (
-  SELECT word, substr(word, CAST(t.i AS INT), 1) AS ch, t.i
-  FROM words, UNNEST(range(1, len(word) + 1)) t(i)),
-sigs AS (
-  SELECT word, string_agg(ch, '' ORDER BY ch, i) AS sig
-  FROM chars GROUP BY word)
-SELECT sig, CAST(count(*) AS BIGINT) AS n, min(word) AS first_word
-FROM sigs GROUP BY sig HAVING count(*) >= 2
-ORDER BY sig
-"""
-
-
-def _q_inversions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inversion counts per group (ml.py:inversion_counts — real
-    merge-sort divide-and-conquer) vs the oracle's O(n²) ordered
-    pair join — the permutation-disorder statistic behind Kendall's
-    tau."""
-    from bdtopo2refhydro_spark.operators.ml import inversion_counts
-
-    seq = _docs(spark, sf_dir).selectExpr(
-        "cast(doc_id % 8 as long) as g",
-        "cast(doc_id div 8 as long) as i",
-        "cast((doc_id * 53) % 997 as long) as a")
-    return inversion_counts(seq).orderBy("g")
-
-
-_INVERSIONS_SQL = """
-WITH seq AS (
-  SELECT doc_id % 8 AS g, doc_id // 8 AS i, (doc_id * 53) % 997 AS a
-  FROM documents)
-SELECT CAST(s1.g AS BIGINT) AS g, CAST(count(*) AS BIGINT) AS inv
-FROM seq s1 JOIN seq s2
-  ON s2.g = s1.g AND s2.i > s1.i AND s2.a < s1.a
-GROUP BY s1.g ORDER BY g
-"""
-
-
-def _q_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT sign test per group — the nonparametric A/B decision
-    with NO floats anywhere: zeros discarded, test statistic m =
-    min(#pos, #neg), tail mass Σ_{k≤m} C(n,k) as exact integers
-    (math.comb engine-side, a Pascal product-recursion CTE
-    oracle-side — two mechanisms), and the α=0.05 two-sided decision
-    is the integer cross-multiplication 100·2·tail ≤ 5·2ⁿ."""
-    agg = (_docs(spark, sf_dir).where("doc_id < 300")
-           .selectExpr("cast(doc_id % 6 as long) as g",
-                       "cast((doc_id * 29) % 21 - 10 as long) as d")
-           .groupBy("g")
-           .agg(F.sum(F.when(F.col("d") > 0, 1).otherwise(0))
-                .alias("np"),
-                F.sum(F.when(F.col("d") < 0, 1).otherwise(0))
-                .alias("nn")))
-    import math
-
-    rows = []
-    for r in agg.collect():
-        n = int(r["np"] + r["nn"])
-        m = int(min(r["np"], r["nn"]))
-        tail = sum(math.comb(n, k) for k in range(m + 1))
-        reject = 100 * 2 * tail <= 5 * (1 << n)
-        rows.append((int(r["g"]), int(r["np"]), int(r["nn"]),
-                     tail, reject))
-    return (spark.createDataFrame(
-        rows, "g long, n_pos long, n_neg long, tail long, "
-        "reject boolean").orderBy("g"))
-
-
-_SIGN_TEST_SQL = """
-WITH RECURSIVE d AS (
-  SELECT doc_id % 6 AS g, (doc_id * 29) % 21 - 10 AS d FROM documents
-  WHERE doc_id < 300),
-agg AS MATERIALIZED (
-  SELECT g, sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS np,
-         sum(CASE WHEN d < 0 THEN 1 ELSE 0 END) AS nn
-  FROM d GROUP BY g),
-pas(g, k, c, s) AS (
-  SELECT g, 0, CAST(1 AS HUGEINT), CAST(1 AS HUGEINT) FROM agg
-  UNION ALL
-  SELECT p.g, p.k + 1,
-         p.c * (a.np + a.nn - p.k) // (p.k + 1),
-         p.s + p.c * (a.np + a.nn - p.k) // (p.k + 1)
-  FROM pas p JOIN agg a ON a.g = p.g
-  WHERE p.k + 1 <= least(a.np, a.nn))
-SELECT CAST(a.g AS BIGINT) AS g, CAST(a.np AS BIGINT) AS n_pos,
-       CAST(a.nn AS BIGINT) AS n_neg,
-       CAST(t.s AS BIGINT) AS tail,
-       100 * 2 * t.s <= 5 * (CAST(1 AS HUGEINT)
-                             << CAST(a.np + a.nn AS INTEGER)) AS reject
-FROM agg a JOIN (
-  SELECT g, s FROM pas p
-  WHERE k = (SELECT least(np, nn) FROM agg a2 WHERE a2.g = p.g)) t
-  ON t.g = a.g
-ORDER BY g
-"""
-
-
 def _q_bom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bill-of-materials explosion (graph.py:bom_rollup): per-root
     total part quantities = Σ over DAG paths of Π edge
@@ -16113,101 +12921,6 @@ SELECT CAST(root AS BIGINT) AS root, CAST(part AS BIGINT) AS part,
        CAST(sum(qty) AS BIGINT) AS qty
 FROM walk WHERE part != root
 GROUP BY root, part ORDER BY root, part
-"""
-
-
-def _q_autocomplete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix autocomplete: every 1–4-char prefix of the vocabulary
-    maps to its top-3 completions by (freq desc, word asc) — prefix
-    explosion is a JVM transform/sequence expression, ranking one
-    window per prefix; freq derived from the word itself so the
-    DISTINCT vocabulary stays deterministic."""
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    wf = words.selectExpr(
-        "word",
-        "length(word) * 7 + ascii(substring(word, 1, 1)) % 31 as freq")
-    pref = wf.select(
-        "word", "freq",
-        F.explode(F.expr(
-            "transform(sequence(1, least(4, length(word))), "
-            "i -> substring(word, 1, i))")).alias("prefix"))
-    w = Window.partitionBy("prefix").orderBy(F.desc("freq"),
-                                             F.asc("word"))
-    return (pref.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .where("rnk <= 3")
-            .select("prefix", "rnk", "word",
-                    F.col("freq").cast("long").alias("freq"))
-            .orderBy("prefix", "rnk"))
-
-
-_AUTOCOMPLETE_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-wf AS (
-  SELECT word,
-         len(word) * 7 + ascii(substr(word, 1, 1)) % 31 AS freq
-  FROM words),
-pref AS (
-  SELECT word, freq, substr(word, 1, CAST(t.i AS INT)) AS prefix
-  FROM wf, UNNEST(range(1, least(4, len(word)) + 1)) t(i)),
-ranked AS (
-  SELECT prefix, word, freq,
-         row_number() OVER (PARTITION BY prefix
-                            ORDER BY freq DESC, word ASC) AS rnk
-  FROM pref)
-SELECT prefix, CAST(rnk AS BIGINT) AS rnk, word,
-       CAST(freq AS BIGINT) AS freq
-FROM ranked WHERE rnk <= 3 ORDER BY prefix, rnk
-"""
-
-
-def _q_huffman_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Optimal prefix-code cost (ml.py:huffman_cost — the real
-    heap-merge Huffman) vs an independent characterization: minimum
-    over ALL Kraft-tight depth multisets of 6 leaves (exactly 5
-    exist, enumerated from full binary trees at code-generation
-    time) with the rearrangement-optimal pairing (largest freq ↔
-    smallest depth)."""
-    from bdtopo2refhydro_spark.operators.ml import huffman_cost
-
-    fr = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 20).alias("g")).distinct()
-          .select("g", F.explode(F.sequence(F.lit(0), F.lit(5)))
-                  .alias("s"))
-          .selectExpr("cast(g as long) as g",
-                      "cast(1 + (g * 7 + s * 13) % 40 as long) as f"))
-    return huffman_cost(fr).orderBy("g")
-
-
-def _huffman_sql() -> str:
-    # all Kraft-tight depth multisets for 6 leaves (full binary
-    # trees), sorted ascending; slot i pairs with the i-th largest
-    # frequency (rearrangement optimality within a multiset)
-    cands = [(1, 2, 3, 4, 5, 5), (1, 2, 4, 4, 4, 4),
-             (1, 3, 3, 3, 4, 4), (2, 2, 2, 3, 4, 4),
-             (2, 2, 3, 3, 3, 3)]
-    vals = ", ".join(f"({ci}, {slot}, {d})"
-                     for ci, ms in enumerate(cands)
-                     for slot, d in enumerate(ms))
-    return f"""
-WITH gg AS (SELECT DISTINCT doc_id % 20 AS g FROM documents),
-fr AS (
-  SELECT g, s.x AS s, 1 + (g * 7 + s.x * 13) % 40 AS f
-  FROM gg CROSS JOIN generate_series(0, 5) s(x)),
-ranked AS (
-  SELECT g, f,
-         row_number() OVER (PARTITION BY g
-                            ORDER BY f DESC, s) - 1 AS slot
-  FROM fr),
-cand(cid, slot, d) AS (VALUES {vals}),
-costs AS (
-  SELECT r.g, c.cid, sum(r.f * c.d) AS cost
-  FROM ranked r JOIN cand c ON c.slot = r.slot
-  GROUP BY r.g, c.cid)
-SELECT CAST(g AS BIGINT) AS g, CAST(min(cost) AS BIGINT) AS cost
-FROM costs GROUP BY g ORDER BY g
 """
 
 
@@ -16277,100 +12990,6 @@ FROM {prev} ORDER BY inst, atom
     return base + "".join(parts) + tail
 
 
-def _q_spanning_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spanning-tree COUNTS by Kirchhoff's Matrix-Tree theorem:
-    #spanning trees = det of the Laplacian minor (row/col 0
-    deleted), computed by the exact Bareiss elimination
-    (ml.py:det_bareiss) on a Laplacian built with joins. The oracle
-    writes the CLOSED FORMS down: cycle Cₙ → n, complete Kₙ →
-    n^(n−2) (Cayley), path Pₙ → 1 — three structure families per
-    group, so the generic determinant machinery is checked against
-    graph-theory identities it knows nothing about."""
-    from bdtopo2refhydro_spark.operators.ml import det_bareiss
-
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 9).alias("g")).distinct())
-    # per group: t = g%3 structure, n = base size + g div 3
-    ii = gg.select("g", F.explode(F.sequence(F.lit(0), F.lit(5)))
-                   .alias("i"))
-    pairs = (ii.alias("x")
-             .join(ii.selectExpr("g", "i as j").alias("y"), "g")
-             .selectExpr("g", "i", "j", "g % 3 as t",
-                         "case when g % 3 = 1 then 3 + g div 3 "
-                         "else 4 + g div 3 end as n")
-             .where("i < n and j < n and i < j"))
-    edges = pairs.where(
-        "(t = 0 and (j - i = 1 or (i = 0 and j = n - 1))) "
-        "or t = 1 "
-        "or (t = 2 and j - i = 1)").select("g", "i", "j")
-    edges = edges.localCheckpoint(eager=False)
-    deg = (edges.selectExpr("g", "i as node")
-           .unionAll(edges.selectExpr("g", "j as node"))
-           .groupBy("g", "node")
-           .agg(F.count(F.lit(1)).alias("deg")))
-    # Laplacian minor: drop row/col 0, shift indices by -1
-    diag = deg.where("node >= 1").selectExpr(
-        "g", "cast(node - 1 as long) as i",
-        "cast(node - 1 as long) as j", "cast(deg as long) as v")
-    offd = (edges.where("i >= 1")
-            .selectExpr("g", "cast(i - 1 as long) as i",
-                        "cast(j - 1 as long) as j",
-                        "cast(-1 as long) as v"))
-    offd2 = (edges.where("i >= 1")
-             .selectExpr("g", "cast(j - 1 as long) as i",
-                         "cast(i - 1 as long) as j",
-                         "cast(-1 as long) as v"))
-    cells = diag.unionByName(offd).unionByName(offd2)
-    return (det_bareiss(cells)
-            .withColumnRenamed("det", "n_spanning").orderBy("g"))
-
-
-_SPANNING_COUNT_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 9 AS g FROM documents),
-sized AS (
-  SELECT g, g % 3 AS t,
-         CASE WHEN g % 3 = 1 THEN 3 + g // 3
-              ELSE 4 + g // 3 END AS n
-  FROM gg)
-SELECT CAST(g AS BIGINT) AS g,
-       CAST(CASE t WHEN 0 THEN n
-                   WHEN 1 THEN CAST(power(n, n - 2) AS BIGINT)
-                   ELSE 1 END AS BIGINT) AS n_spanning
-FROM sized ORDER BY g
-"""
-
-
-def _q_manacher(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest palindromic substring by MANACHER'S linear algorithm
-    (text.py:longest_palindrome — mirrored-center radius carry) vs
-    the O(n²) definitional oracle: max window length whose substring
-    equals its own reverse. Same synthesized vocabulary as the other
-    string-index entries."""
-    from bdtopo2refhydro_spark.operators.text import longest_palindrome
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    return longest_palindrome(words).orderBy("word")
-
-
-_MANACHER_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-wins AS (
-  SELECT word, u.l
-  FROM words,
-       UNNEST(range(1, len(word) + 1)) t(i),
-       UNNEST(range(1, len(word) + 1)) u(l)
-  WHERE t.i + u.l <= len(word) + 1
-    AND substr(word, CAST(t.i AS INT), CAST(u.l AS INT))
-        = reverse(substr(word, CAST(t.i AS INT), CAST(u.l AS INT))))
-SELECT w.word, CAST(coalesce(max(x.l), 0) AS BIGINT) AS pal_len
-FROM words w LEFT JOIN wins x ON x.word = w.word
-GROUP BY w.word ORDER BY w.word
-"""
-
-
 def _q_pareto_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominance onion layers (corpus.py:pareto_layers): engine
     literally PEELS skylines round by round; oracle applies MIRSKY'S
@@ -16405,59 +13024,6 @@ chain(g, x, y, len) AS (
 SELECT CAST(g AS BIGINT) AS g, CAST(x AS BIGINT) AS x,
        CAST(y AS BIGINT) AS y, CAST(max(len) AS BIGINT) AS layer
 FROM chain GROUP BY g, x, y ORDER BY g, x, y
-"""
-
-
-def _q_lag_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Activity periodicity: per user, circular integer
-    autocorrelation over week-hour buckets — dot(lag) =
-    Σ c_b·c_{(b+lag) mod 168} for lags 1..24, peak by (dot desc,
-    lag asc). All-integer; the bot/session-rhythm detector."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
-        "user_id",
-        "(unix_micros(cast(ts as timestamp)) div 3600000000) % 168"
-        " as b")
-    cnt = ev.groupBy("user_id", "b").agg(
-        F.count(F.lit(1)).alias("c"))
-    lags = spark.range(1, 25).select(F.col("id").alias("lag"))
-    shifted = (cnt.crossJoin(F.broadcast(lags))
-               .selectExpr("user_id", "lag",
-                           "(b + lag) % 168 as b2", "c as c1"))
-    dots = (shifted.join(cnt.selectExpr("user_id", "b as b2",
-                                        "c as c2"),
-                         ["user_id", "b2"])
-            .groupBy("user_id", "lag")
-            .agg(F.sum(F.col("c1") * F.col("c2")).alias("dot")))
-    w = Window.partitionBy("user_id").orderBy(F.desc("dot"),
-                                              F.asc("lag"))
-    return (dots.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-            .selectExpr("cast(user_id as long) as user_id",
-                        "cast(lag as long) as lag",
-                        "cast(dot as long) as dot")
-            .orderBy("user_id"))
-
-
-_LAG_AUTOCORR_SQL = """
-WITH ev AS (
-  SELECT user_id, (epoch_us(ts) // 3600000000) % 168 AS b
-  FROM events),
-cnt AS (SELECT user_id, b, count(*) AS c FROM ev GROUP BY user_id, b),
-dots AS (
-  SELECT a.user_id, l.x AS lag, sum(a.c * b.c) AS dot
-  FROM cnt a
-  CROSS JOIN generate_series(1, 24) l(x)
-  JOIN cnt b ON b.user_id = a.user_id
-            AND b.b = (a.b + l.x) % 168
-  GROUP BY a.user_id, l.x),
-ranked AS (
-  SELECT user_id, lag, dot,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY dot DESC, lag ASC) AS rn
-  FROM dots)
-SELECT CAST(user_id AS BIGINT) AS user_id, CAST(lag AS BIGINT) AS lag,
-       CAST(dot AS BIGINT) AS dot
-FROM ranked WHERE rn = 1 ORDER BY user_id
 """
 
 
@@ -16510,29 +13076,6 @@ ORDER BY code
 """
 
 
-def _q_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiclass confusion counts + exact per-class precision/recall
-    NUMERATORS (floats avoided: the (tp, pred_n, true_n) triple IS
-    the precision/recall pair as exact rationals): predictions and
-    truths are arithmetic labelings of the docs."""
-    d = _docs(spark, sf_dir).selectExpr(
-        "cast((doc_id * 7) % 4 as long) as truth",
-        "cast((doc_id * 7 + doc_id div 50) % 4 as long) as pred")
-    cells = (d.groupBy("truth", "pred")
-             .agg(F.count(F.lit(1)).alias("n")))
-    return cells.orderBy("truth", "pred")
-
-
-_CONFUSION_SQL = """
-SELECT CAST((doc_id * 7) % 4 AS BIGINT) AS truth,
-       CAST((doc_id * 7 + doc_id // 50) % 4 AS BIGINT) AS pred,
-       CAST(count(*) AS BIGINT) AS n
-FROM documents
-GROUP BY (doc_id * 7) % 4, (doc_id * 7 + doc_id // 50) % 4
-ORDER BY truth, pred
-"""
-
-
 def _q_earliest_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal earliest-arrival journeys
     (graph.py:earliest_arrival): an edge is usable only if dep ≥
@@ -16565,1589 +13108,6 @@ walk(node, a) AS (
 SELECT CAST(node AS BIGINT) AS node,
        CAST(min(a) AS BIGINT) AS earliest
 FROM walk GROUP BY node ORDER BY node
-"""
-
-
-def _q_gcd_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group GCD fold — neither engine has a gcd AGGREGATE, so
-    the two sides must build it from different primitives: Spark
-    folds math.gcd in an Arrow group scan (associative ⟹ any order,
-    deterministic result); DuckDB walks the rows linearly through
-    its scalar gcd() in a recursive CTE. Also emits the count of
-    values equal to the gcd (how many attain it)."""
-    import math
-
-    import pandas as pd
-
-    d = _docs(spark, sf_dir).selectExpr(
-        "cast(doc_id % 12 as long) as g",
-        "cast(60 * (1 + doc_id % 7) * (1 + (doc_id div 7) % 5) as "
-        "long) as v")
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            acc = 0
-            for v in grp["v"]:
-                acc = math.gcd(acc, int(v))
-            out.append((gv, acc, int((grp["v"] == acc).sum())))
-        return pd.DataFrame(out, columns=["g", "gcd", "n_at"])
-
-    return (d.groupBy("g")
-            .applyInPandas(run, "g long, gcd long, n_at long")
-            .orderBy("g"))
-
-
-_GCD_FOLD_SQL = """
-WITH RECURSIVE d AS MATERIALIZED (
-  SELECT doc_id % 12 AS g,
-         60 * (1 + doc_id % 7) * (1 + (doc_id // 7) % 5) AS v,
-         row_number() OVER (PARTITION BY doc_id % 12
-                            ORDER BY doc_id) AS rn
-  FROM documents),
-fold(g, rn, acc) AS (
-  SELECT g, 1, v FROM d WHERE rn = 1
-  UNION ALL
-  SELECT f.g, f.rn + 1, gcd(f.acc, d.v)
-  FROM fold f JOIN d ON d.g = f.g AND d.rn = f.rn + 1)
-SELECT CAST(f.g AS BIGINT) AS g, CAST(f.acc AS BIGINT) AS gcd,
-       CAST((SELECT count(*) FROM d d2
-             WHERE d2.g = f.g AND d2.v = f.acc) AS BIGINT) AS n_at
-FROM fold f
-WHERE f.rn = (SELECT max(rn) FROM d d3 WHERE d3.g = f.g)
-ORDER BY g
-"""
-
-
-def _q_contfrac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continued-fraction expansions of derived rationals num/den:
-    engine runs the Euclidean quotient loop per pair (Arrow scan),
-    the oracle the same recurrence as a recursive CTE — exact
-    integers, terms exploded as (pair, pos, term)."""
-    import pandas as pd
-
-    d = (_docs(spark, sf_dir)
-         .select((F.col("doc_id") % 40).alias("m")).distinct()
-         .selectExpr("cast(m as long) as pair",
-                     "cast(1000 + m * 37 as long) as num",
-                     "cast(7 + m * 3 as long) as den"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for pair, num, den in zip(pdf["pair"], pdf["num"], pdf["den"]):
-            a, b, pos = int(num), int(den), 0
-            while b:
-                out.append((int(pair), pos, a // b))
-                a, b = b, a % b
-                pos += 1
-        return pd.DataFrame(out, columns=["pair", "pos", "term"])
-
-    return (d.groupBy("pair")
-            .applyInPandas(lambda pdf: run(pdf),
-                           "pair long, pos long, term long")
-            .orderBy("pair", "pos"))
-
-
-_CONTFRAC_SQL = """
-WITH RECURSIVE d AS (
-  SELECT DISTINCT doc_id % 40 AS pair, 1000 + (doc_id % 40) * 37 AS num,
-         7 + (doc_id % 40) * 3 AS den
-  FROM documents),
-walk(pair, pos, a, b, term) AS (
-  SELECT pair, 0, num, den, num // den FROM d
-  UNION ALL
-  SELECT pair, pos + 1, b, a % b, b // (a % b)
-  FROM walk WHERE a % b != 0)
-SELECT CAST(pair AS BIGINT) AS pair, CAST(pos AS BIGINT) AS pos,
-       CAST(term AS BIGINT) AS term
-FROM walk ORDER BY pair, pos
-"""
-
-
-def _q_convergents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continued-fraction CONVERGENTS hₖ/kₖ — the best rational
-    approximations — via the three-term recurrence hₖ = aₖhₖ₋₁ + hₖ₋₂
-    (same derived rationals as contfrac); the last convergent must
-    equal num/den reduced, which both sides verify as an exact
-    boolean. Engine: Euclid + recurrence per pair (Arrow scan);
-    oracle: one recursive CTE carrying (a, b, h₁, h₀, k₁, k₀)."""
-    import math
-
-    import pandas as pd
-
-    d = (_docs(spark, sf_dir)
-         .select((F.col("doc_id") % 40).alias("m")).distinct()
-         .selectExpr("cast(m as long) as pair",
-                     "cast(1000 + m * 37 as long) as num",
-                     "cast(7 + m * 3 as long) as den"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for pair, num, den in zip(pdf["pair"], pdf["num"], pdf["den"]):
-            a, b = int(num), int(den)
-            h1, h0, k1, k0 = 1, 0, 0, 1
-            pos = 0
-            while b:
-                q = a // b
-                h1, h0 = q * h1 + h0, h1
-                k1, k0 = q * k1 + k0, k1
-                gg = math.gcd(int(num), int(den))
-                out.append((int(pair), pos, h1, k1,
-                            h1 == num // gg and k1 == den // gg))
-                a, b = b, a % b
-                pos += 1
-        return pd.DataFrame(
-            out, columns=["pair", "pos", "h", "k", "is_exact"])
-
-    return (d.groupBy("pair")
-            .applyInPandas(lambda pdf: run(pdf),
-                           "pair long, pos long, h long, k long, "
-                           "is_exact boolean")
-            .orderBy("pair", "pos"))
-
-
-_CONVERGENTS_SQL = """
-WITH RECURSIVE d AS (
-  SELECT DISTINCT doc_id % 40 AS pair,
-         1000 + (doc_id % 40) * 37 AS num, 7 + (doc_id % 40) * 3 AS den
-  FROM documents),
-walk(pair, pos, a, b, h1, h0, k1, k0) AS (
-  SELECT pair, 0, num, den,
-         (num // den) * 1 + 0, 1,
-         (num // den) * 0 + 1, 0
-  FROM d
-  UNION ALL
-  SELECT pair, pos + 1, b, a % b,
-         (b // (a % b)) * h1 + h0, h1,
-         (b // (a % b)) * k1 + k0, k1
-  FROM walk WHERE a % b != 0)
-SELECT CAST(w.pair AS BIGINT) AS pair, CAST(w.pos AS BIGINT) AS pos,
-       CAST(w.h1 AS BIGINT) AS h, CAST(w.k1 AS BIGINT) AS k,
-       (w.h1 = d.num // gcd(d.num, d.den)
-        AND w.k1 = d.den // gcd(d.num, d.den)) AS is_exact
-FROM walk w JOIN d ON d.pair = w.pair
-ORDER BY pair, pos
-"""
-
-
-def _q_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic regression by POOL-ADJACENT-VIOLATORS
-    (ml.py:isotonic_fit — the real stack pooling) vs the MINIMAX
-    characterization fitted_i = max_{j≤i} min_{k≥i} mean(a[j..k]).
-    Both sides emit one correctly-rounded IEEE division of exact
-    integer (sum, count) pairs for the SAME rational, so the doubles
-    are bit-identical; distinct interval means on this fixture are
-    separated by ≥1/c² ≫ double error, so the min/max comparisons
-    can't misorder."""
-    from bdtopo2refhydro_spark.operators.ml import isotonic_fit
-
-    seq = _docs(spark, sf_dir).selectExpr(
-        "cast(doc_id % 8 as long) as g",
-        "cast(doc_id div 8 as long) as i",
-        "cast((doc_id * 53) % 200 as long) as a")
-    return isotonic_fit(seq).orderBy("g", "i")
-
-
-_ISOTONIC_SQL = """
-WITH seq AS (
-  SELECT doc_id % 8 AS g, doc_id // 8 AS i, (doc_id * 53) % 200 AS a
-  FROM documents),
-ps AS (
-  SELECT g, i, a,
-         sum(a) OVER (PARTITION BY g ORDER BY i) AS cum
-  FROM seq),
-ivl AS (
-  SELECT j.g, j.i AS j, k.i AS k,
-         CAST(k.cum - j.cum + j.a AS DOUBLE)
-           / (k.i - j.i + 1) AS m
-  FROM ps j JOIN ps k ON k.g = j.g AND k.i >= j.i),
-inner_min AS (
-  SELECT v.g, v.j, p.i, min(v.m) AS mn
-  FROM ivl v JOIN seq p
-    ON p.g = v.g AND v.j <= p.i AND v.k >= p.i
-  GROUP BY v.g, v.j, p.i)
-SELECT CAST(g AS BIGINT) AS g, CAST(i AS BIGINT) AS i,
-       max(mn) AS fit
-FROM inner_min GROUP BY g, i ORDER BY g, i
-"""
-
-
-def _q_lz_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lempel-Ziv factor counts (text.py:lz_complexity — the real
-    greedy longest-earlier-match scan, overlaps allowed) vs an oracle
-    that brute-forces every (pos, len) earlier-occurrence test and
-    walks the factorization as a linear recursion — the compression-
-    complexity text metric."""
-    from bdtopo2refhydro_spark.operators.text import lz_complexity
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    return lz_complexity(words).orderBy("word")
-
-
-_LZ_COMPLEXITY_SQL = f"""
-WITH RECURSIVE mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-occ AS MATERIALIZED (
-  SELECT w.word, p.pos, max(t.l) AS best
-  FROM words w,
-       UNNEST(range(0, len(w.word))) p(pos),
-       UNNEST(range(1, len(w.word) + 1)) t(l),
-       UNNEST(range(0, len(w.word))) q(p2)
-  WHERE p.pos + t.l <= len(w.word) AND q.p2 < p.pos
-    AND substr(w.word, CAST(q.p2 + 1 AS INT), CAST(t.l AS INT))
-        = substr(w.word, CAST(p.pos + 1 AS INT), CAST(t.l AS INT))
-  GROUP BY w.word, p.pos),
-step AS MATERIALIZED (
-  SELECT pp.word, pp.pos, greatest(1, coalesce(o.best, 0)) AS st
-  FROM (SELECT w.word, p.pos
-        FROM words w, UNNEST(range(0, len(w.word))) p(pos)) pp
-  LEFT JOIN occ o ON o.word = pp.word AND o.pos = pp.pos),
-walk(word, pos, cnt) AS (
-  SELECT word, 0, 0 FROM words
-  UNION ALL
-  SELECT s.word, w2.pos + s.st, w2.cnt + 1
-  FROM walk w2 JOIN step s ON s.word = w2.word AND s.pos = w2.pos)
-SELECT word, CAST(max(cnt) AS BIGINT) AS n_factors
-FROM walk GROUP BY word ORDER BY word
-"""
-
-
-def _q_mtf_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Move-to-front coding stats (text.py:mtf_encode_stats — the
-    bzip2 BWT→RLE middle stage): the oracle threads the permutation
-    TABLE through a recursive CTE as a LIST column (list_position +
-    prepend + filter per step) — sequential state carried through SQL
-    recursion, vs the engine's real list scan."""
-    from bdtopo2refhydro_spark.operators.text import mtf_encode_stats
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-    return mtf_encode_stats(words).orderBy("word")
-
-
-_MTF_SQL = f"""
-WITH RECURSIVE mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-init AS MATERIALIZED (
-  SELECT w.word,
-         list_sort(list_distinct(list_transform(
-           range(1, len(w.word) + 1),
-           i -> substr(w.word, CAST(i AS INT), 1)))) AS st
-  FROM words w),
-walk(word, pos, st, tot, mx) AS (
-  SELECT word, 0, st, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM init
-  UNION ALL
-  SELECT w.word, w.pos + 1,
-         list_prepend(substr(wo.word, CAST(w.pos + 1 AS INT), 1),
-           list_filter(w.st,
-             x -> x != substr(wo.word, CAST(w.pos + 1 AS INT), 1))),
-         w.tot + list_position(w.st,
-           substr(wo.word, CAST(w.pos + 1 AS INT), 1)) - 1,
-         greatest(w.mx, list_position(w.st,
-           substr(wo.word, CAST(w.pos + 1 AS INT), 1)) - 1)
-  FROM walk w JOIN words wo ON wo.word = w.word
-  WHERE w.pos < len(wo.word))
-SELECT w.word, CAST(w.tot AS BIGINT) AS code_sum,
-       CAST(w.mx AS BIGINT) AS max_code
-FROM walk w JOIN words wo2 ON wo2.word = w.word
-WHERE w.pos = len(wo2.word)
-ORDER BY w.word
-"""
-
-
-def _q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald-Wolfowitz runs statistics per user over the event-derived
-    bit sequence (bit = event_id parity in time order): run count R
-    via one lag window, plus the BELOW-MEAN indicator as the integer
-    cross-multiplication R·n < n + 2·n₁·n₀ — no floats, the
-    randomness screen for clickstreams."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
-        "user_id", "unix_micros(cast(ts as timestamp)) as t",
-        "event_id", "cast(event_id % 2 as long) as b")
-    w = Window.partitionBy("user_id").orderBy("t", "event_id")
-    runs = (ev.withColumn("pb", F.lag("b").over(w))
-            .groupBy("user_id")
-            .agg(F.sum(F.when(F.col("pb").isNull()
-                              | (F.col("b") != F.col("pb")), 1)
-                       .otherwise(0)).alias("runs"),
-                 F.sum("b").alias("n1"),
-                 F.sum(F.lit(1) - F.col("b")).alias("n0")))
-    return (runs.selectExpr(
-        "cast(user_id as long) as user_id",
-        "cast(runs as long) as runs",
-        "cast(n1 as long) as n1", "cast(n0 as long) as n0",
-        "runs * (n1 + n0) < (n1 + n0) + 2 * n1 * n0 as below_mean")
-        .orderBy("user_id"))
-
-
-_RUNS_TEST_SQL = """
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS t, event_id, event_id % 2 AS b
-  FROM events),
-lagged AS (
-  SELECT user_id, b,
-         lag(b) OVER (PARTITION BY user_id
-                      ORDER BY t, event_id) AS pb
-  FROM ev),
-agg AS (
-  SELECT user_id,
-         sum(CASE WHEN pb IS NULL OR b != pb THEN 1 ELSE 0 END)
-           AS runs,
-         sum(b) AS n1, sum(1 - b) AS n0
-  FROM lagged GROUP BY user_id)
-SELECT CAST(user_id AS BIGINT) AS user_id, CAST(runs AS BIGINT) AS runs,
-       CAST(n1 AS BIGINT) AS n1, CAST(n0 AS BIGINT) AS n0,
-       runs * (n1 + n0) < (n1 + n0) + 2 * n1 * n0 AS below_mean
-FROM agg ORDER BY user_id
-"""
-
-
-def _q_damerau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unrestricted Damerau-Levenshtein distances
-    (text.py:damerau_levenshtein_pairs — the full LOWRANCE-WAGNER DP
-    with alphabet-indexed last-occurrence rows; distant
-    transpositions allowed, 'ca'→'abc' = 2 where restricted OSA says
-    3) vs DuckDB's BUILT-IN damerau_levenshtein, empirically the
-    unrestricted variant. Word pairs (w(m), w((3m+1) mod 200)) over
-    the small-alphabet vocabulary so transpositions actually
-    occur."""
-    from bdtopo2refhydro_spark.operators.text import \
-        damerau_levenshtein_pairs
-
-    base = (_docs(spark, sf_dir)
-            .select((F.col("doc_id") % 200).alias("m")).distinct()
-            .selectExpr("m", f"{_UNI_WORD} as word"))
-    pairs = (base.selectExpr("m", "word as w1",
-                             "cast((m * 3 + 1) % 200 as long) as m2")
-             .join(base.selectExpr("m as m2", "word as w2"), "m2")
-             .selectExpr("cast(m as long) as pid", "w1", "w2"))
-    return (damerau_levenshtein_pairs(pairs)
-            .select("pid", "w1", "w2", "dist").orderBy("pid"))
-
-
-_DAMERAU_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-base AS MATERIALIZED (SELECT m, {_UNI_WORD_D} AS word FROM mm)
-SELECT CAST(a.m AS BIGINT) AS pid, a.word AS w1, b.word AS w2,
-       CAST(damerau_levenshtein(a.word, b.word) AS BIGINT) AS dist
-FROM base a JOIN base b ON b.m = (a.m * 3 + 1) % 200
-ORDER BY pid
-"""
-
-
-_SHAMIR_P = 10007
-
-
-def _q_shamir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shamir secret sharing over GF(10007): shares are evaluations
-    of a planted degree-2 polynomial at x = 1..3 (built with
-    identical modular arithmetic on both sides); the ENGINE
-    reconstructs the secret by Lagrange interpolation at 0 with
-    Fermat-inverse exponentiation — the oracle simply writes the
-    PLANTED constant term down. Reconstruction must invert the whole
-    field arithmetic exactly to match."""
-    import pandas as pd
-
-    p = _SHAMIR_P
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 30).alias("g")).distinct())
-    shares = (gg.select("g", F.explode(F.sequence(F.lit(1), F.lit(3)))
-                        .alias("x"))
-              .selectExpr(
-        "cast(g as long) as g", "cast(x as long) as x",
-        f"cast(((g * 97 + 13) + (g * 31 + 7) * x "
-        f"+ (g * 53 + 3) * x * x) % {p} as long) as y"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            pts = list(zip(grp["x"], grp["y"]))
-            s = 0
-            for xi, yi in pts:
-                num, den = 1, 1
-                for xj, _ in pts:
-                    if xj != xi:
-                        num = (num * (-xj)) % p
-                        den = (den * (xi - xj)) % p
-                s = (s + yi * num * pow(int(den), p - 2, p)) % p
-            out.append((gv, int(s)))
-        return pd.DataFrame(out, columns=["g", "secret"])
-
-    return (shares.groupBy("g")
-            .applyInPandas(run, "g long, secret long")
-            .orderBy("g"))
-
-
-_SHAMIR_SQL = f"""
-WITH gg AS (SELECT DISTINCT doc_id % 30 AS g FROM documents)
-SELECT CAST(g AS BIGINT) AS g,
-       CAST((g * 97 + 13) % {_SHAMIR_P} AS BIGINT) AS secret
-FROM gg ORDER BY g
-"""
-
-
-def _q_gf2_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GF(2) matrix rank by bitmask Gaussian elimination (the parity
-    / cycle-space primitive): each group's rows are XOR combinations
-    of r planted basis vectors (r = 1 + g mod 5, basis = shifted
-    odd masks ⟹ independent), so the ORACLE knows rank = r in
-    closed form while the engine runs genuine elimination over the
-    20 noisy combination rows."""
-    import pandas as pd
-
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 10).alias("g")).distinct())
-    # basis vector j of group g: (2j+1) << (3j)  (odd ⟹ lowest set
-    # bit unique per j ⟹ linearly independent); row i = XOR of the
-    # basis vectors selected by the bits of (i * 37 + g) — nonzero
-    # selector guaranteed by OR-ing bit 0
-    rows = (gg.select("g", F.explode(F.sequence(F.lit(0), F.lit(19)))
-                      .alias("i"))
-            .selectExpr("cast(g as long) as g", "cast(i as long) as i",
-                        "cast(1 + g % 5 as long) as r",
-                        "cast((i * 37 + g) % 32 as long) as sel"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            r = int(grp["r"].iloc[0])
-            basis = [((2 * j + 1) << (3 * j)) for j in range(r)]
-            vecs = []
-            for i, sel in zip(grp["i"], grp["sel"]):
-                sel = (int(sel) % (1 << r)) | 1
-                v = 0
-                for j in range(r):
-                    if (sel >> j) & 1:
-                        v ^= basis[j]
-                vecs.append(v)
-            # genuine elimination
-            pivots = []
-            for v in vecs:
-                for p_ in pivots:
-                    v = min(v, v ^ p_)
-                if v:
-                    pivots.append(v)
-                    pivots.sort(reverse=True)
-            out.append((gv, len(pivots)))
-        return pd.DataFrame(out, columns=["g", "rank"])
-
-    return (rows.groupBy("g")
-            .applyInPandas(run, "g long, rank long")
-            .orderBy("g"))
-
-
-_GF2_RANK_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 10 AS g FROM documents)
-SELECT CAST(g AS BIGINT) AS g, CAST(1 + g % 5 AS BIGINT) AS rank
-FROM gg ORDER BY g
-"""
-
-
-def _q_lfsr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit Galois LFSR (taps 0xB400 — the classic maximal
-    polynomial) state sequences: engine iterates the shift-XOR per
-    seed in an Arrow scan, the oracle as a recursive CTE with
-    DuckDB's xor()/shifts — the deterministic PRNG machinery behind
-    salting and synthetic fixtures, state-for-state."""
-    import pandas as pd
-
-    seeds = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 25).alias("s")).distinct()
-             .selectExpr("cast(1 + s * 131 as long) as seed"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for seed in pdf["seed"]:
-            st = int(seed)
-            for k in range(24):
-                lsb = st & 1
-                st >>= 1
-                if lsb:
-                    st ^= 0xB400
-                out.append((int(seed), k, st))
-        return pd.DataFrame(out, columns=["seed", "k", "state"])
-
-    return (seeds.groupBy("seed")
-            .applyInPandas(lambda pdf: run(pdf),
-                           "seed long, k long, state long")
-            .orderBy("seed", "k"))
-
-
-_LFSR_SQL = """
-WITH RECURSIVE seeds AS (
-  SELECT DISTINCT 1 + (doc_id % 25) * 131 AS seed FROM documents),
-walk(seed, k, st) AS (
-  SELECT seed, -1, seed FROM seeds
-  UNION ALL
-  SELECT seed, k + 1,
-         CASE WHEN st % 2 = 1 THEN xor(st // 2, 46080)
-              ELSE st // 2 END
-  FROM walk WHERE k < 23)
-SELECT CAST(seed AS BIGINT) AS seed, CAST(k AS BIGINT) AS k,
-       CAST(st AS BIGINT) AS state
-FROM walk WHERE k >= 0 ORDER BY seed, k
-"""
-
-
-def _q_mod_sqrt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Modular square roots in GF(10007) by TONELLI-SHANKS (the real
-    algorithm: factor p−1 = q·2^s, find a non-residue by Euler's
-    criterion, walk the 2-group) on planted quadratic residues
-    a = seed² mod p; output the canonical min(x, p−x) root. Oracle:
-    brute-force probe — min x with x² ≡ a (mod p) over a full
-    generate_series sweep. Two unrelated routes to the same root."""
-    import pandas as pd
-
-    p = _SHAMIR_P
-    vals = (_docs(spark, sf_dir)
-            .select((F.col("doc_id") % 50).alias("s")).distinct()
-            .selectExpr("cast(s as long) as sid",
-                        f"cast(((s * 73 + 11) * (s * 73 + 11)) % {p}"
-                        " as long) as a"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        def ts(a):
-            if a == 0:
-                return 0
-            # p = 10007, p-1 = 2 * 5003 (5003 odd) -> s = 1: sqrt =
-            # a^((p+1)/4) — but implement the general machinery
-            q, s = p - 1, 0
-            while q % 2 == 0:
-                q //= 2
-                s += 1
-            z = 2
-            while pow(z, (p - 1) // 2, p) != p - 1:
-                z += 1
-            m, c = s, pow(z, q, p)
-            t, r = pow(a, q, p), pow(a, (q + 1) // 2, p)
-            while t != 1:
-                i, tt = 0, t
-                while tt != 1:
-                    tt = tt * tt % p
-                    i += 1
-                b = pow(c, 1 << (m - i - 1), p)
-                m, c = i, b * b % p
-                t, r = t * c % p, r * b % p
-            return min(r, p - r)
-        out = [(int(sid), int(a), ts(int(a)))
-               for sid, a in zip(pdf["sid"], pdf["a"])]
-        return pd.DataFrame(out, columns=["sid", "a", "root"])
-
-    return (vals.groupBy("sid")
-            .applyInPandas(lambda pdf: run(pdf),
-                           "sid long, a long, root long")
-            .orderBy("sid"))
-
-
-_MOD_SQRT_SQL = f"""
-WITH vals AS (
-  SELECT DISTINCT doc_id % 50 AS sid,
-         (((doc_id % 50) * 73 + 11) * ((doc_id % 50) * 73 + 11))
-           % {_SHAMIR_P} AS a
-  FROM documents)
-SELECT CAST(v.sid AS BIGINT) AS sid, CAST(v.a AS BIGINT) AS a,
-       CAST((SELECT min(g.x) FROM generate_series(0, {_SHAMIR_P - 1})
-             g(x) WHERE (g.x * g.x) % {_SHAMIR_P} = v.a) AS BIGINT)
-         AS root
-FROM vals v ORDER BY sid
-"""
-
-
-def _q_spf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Smallest prime factors by POLLARD'S RHO (deterministic
-    Brent-cycle variant with incrementing c, trial-division fallback
-    for small primes) on derived composites; oracle probes divisors
-    with one generate_series sweep to √max. Factorization machinery
-    vs the definition."""
-    import math
-
-    import pandas as pd
-
-    vals = (_docs(spark, sf_dir)
-            .select((F.col("doc_id") % 60).alias("s")).distinct()
-            .selectExpr("cast(s as long) as sid",
-                        "cast((1009 + s * 2) * (3001 + s * 4) as long)"
-                        " as n"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        def spf(n):
-            for q in (2, 3, 5, 7, 11, 13):
-                if n % q == 0:
-                    return q
-
-            def rho(n):
-                if n == 1:
-                    return 1
-                c = 1
-                while True:
-                    x = y = 2
-                    d = 1
-                    while d == 1:
-                        x = (x * x + c) % n
-                        y = (y * y + c) % n
-                        y = (y * y + c) % n
-                        d = math.gcd(abs(x - y), n)
-                    if d != n:
-                        return d
-                    c += 1
-
-            d = rho(n)
-            # d may be composite: recurse to a prime divisor, then
-            # the smallest prime of n divides one of the parts
-            def smallest_prime(m):
-                if m == 1:
-                    return 10 ** 18
-                for q in (2, 3, 5, 7, 11, 13):
-                    if m % q == 0:
-                        return q
-                if all(m % k for k in range(2, int(m ** 0.5) + 1)):
-                    return m
-                dd = rho(m)
-                return min(smallest_prime(dd), smallest_prime(m // dd))
-            return min(smallest_prime(d), smallest_prime(n // d))
-        out = [(int(sid), int(n), spf(int(n)))
-               for sid, n in zip(pdf["sid"], pdf["n"])]
-        return pd.DataFrame(out, columns=["sid", "n", "spf"])
-
-    return (vals.groupBy("sid")
-            .applyInPandas(lambda pdf: run(pdf),
-                           "sid long, n long, spf long")
-            .orderBy("sid"))
-
-
-_SPF_SQL = """
-WITH vals AS (
-  SELECT DISTINCT doc_id % 60 AS sid,
-         (1009 + (doc_id % 60) * 2) * (3001 + (doc_id % 60) * 4) AS n
-  FROM documents)
-SELECT CAST(v.sid AS BIGINT) AS sid, CAST(v.n AS BIGINT) AS n,
-       CAST((SELECT min(g.x) FROM generate_series(2, 4000) g(x)
-             WHERE v.n % g.x = 0) AS BIGINT) AS spf
-FROM vals v ORDER BY sid
-"""
-
-
-_CYK_BIN = [("S", "A", "B"), ("S", "B", "C"), ("A", "B", "A"),
-            ("B", "C", "C"), ("C", "A", "B")]
-_CYK_TERM = [("A", "a"), ("B", "b"), ("C", "a")]
-
-
-def _q_cyk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CYK membership for the classic Hopcroft CNF grammar
-    (S→AB|BC, A→BA|a, B→CC|b, C→AB|a) over the synthesized
-    vocabulary: engine runs the real O(n³) span DP per word (Arrow
-    scan); oracle unrolls span lengths 2..8 as CTE rounds joining
-    all split points — the parsing-at-scale primitive."""
-    import pandas as pd
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-
-    @F.pandas_udf("boolean")
-    def _cyk(s: pd.Series) -> pd.Series:
-        def parse(w):
-            n = len(w)
-            cell = {}
-            for i, ch in enumerate(w):
-                cell[(i, 1)] = {nt for nt, t in _CYK_TERM if t == ch}
-            for l in range(2, n + 1):
-                for i in range(n - l + 1):
-                    s_ = set()
-                    for m in range(1, l):
-                        left = cell.get((i, m), set())
-                        right = cell.get((i + m, l - m), set())
-                        for nt, x, y in _CYK_BIN:
-                            if x in left and y in right:
-                                s_.add(nt)
-                    cell[(i, l)] = s_
-            return "S" in cell.get((0, n), set())
-        return s.map(parse)
-
-    return words.select("word", _cyk(F.col("word")).alias("in_lang")) \
-        .orderBy("word")
-
-
-def _cyk_sql(max_len: int = 8) -> str:
-    term_cases = " UNION ALL ".join(
-        f"SELECT word, i, 1 AS l, '{nt}' AS nt FROM chars "
-        f"WHERE ch = '{t}'" for nt, t in _CYK_TERM)
-    base = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-chars AS (
-  SELECT word, t.i, substr(word, CAST(t.i AS INT), 1) AS ch
-  FROM words, UNNEST(range(1, len(word) + 1)) t(i)),
-acc1 AS MATERIALIZED ({term_cases})"""
-    parts, prev = [], "acc1"
-    for l in range(2, max_len + 1):
-        rule_sel = " UNION ALL ".join(
-            f"SELECT a.word, a.i, {l} AS l, '{nt}' AS nt "
-            f"FROM {prev} a JOIN {prev} b "
-            f"ON b.word = a.word AND b.i = a.i + a.l "
-            f"AND a.l + b.l = {l} "
-            f"AND a.nt = '{x}' AND b.nt = '{y}'"
-            for nt, x, y in _CYK_BIN)
-        parts.append(f""",
-acc{l} AS MATERIALIZED (
-  SELECT word, i, l, nt FROM {prev}
-  UNION
-  SELECT DISTINCT word, i, l, nt FROM ({rule_sel}) u)""")
-        prev = f"acc{l}"
-    tail = f"""
-SELECT w.word,
-       EXISTS (SELECT 1 FROM {prev} c
-               WHERE c.word = w.word AND c.i = 1
-                 AND c.l = len(w.word) AND c.nt = 'S') AS in_lang
-FROM words w ORDER BY w.word
-"""
-    return base + "".join(parts) + tail
-
-
-def _q_lp2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-variable LP optima: engine = a REAL simplex over exact
-    Fractions (Bland's rule, slack tableau — ml.py:lp2_simplex);
-    oracle = vertex ENUMERATION (Cramer determinants over all
-    constraint pairs incl. the axes, sign-aware cross-multiplied
-    feasibility, max of the rational objective values as
-    correctly-rounded doubles). All-positive coefficients keep every
-    region bounded."""
-    from bdtopo2refhydro_spark.operators.ml import lp2_simplex
-
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 15).alias("g")).distinct())
-    cons = (gg.select("g", F.explode(F.sequence(F.lit(0), F.lit(3)))
-                      .alias("i"))
-            .selectExpr("cast(g as long) as g",
-                        "cast(1 + (g * 3 + i) % 5 as long) as a",
-                        "cast(1 + (g * 7 + i * 2) % 5 as long) as b",
-                        "cast(20 + (g * 11 + i * 13) % 30 as long)"
-                        " as c"))
-    obj = gg.selectExpr("cast(g as long) as g",
-                        "cast(2 + g % 4 as long) as p",
-                        "cast(1 + g % 3 as long) as q")
-    return lp2_simplex(cons, obj).orderBy("g")
-
-
-_LP2_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 15 AS g FROM documents),
-cons AS MATERIALIZED (
-  SELECT g, i.x AS i, 1 + (g * 3 + i.x) % 5 AS a,
-         1 + (g * 7 + i.x * 2) % 5 AS b,
-         20 + (g * 11 + i.x * 13) % 30 AS c
-  FROM gg CROSS JOIN generate_series(0, 3) i(x)
-  UNION ALL SELECT g, 4, -1, 0, 0 FROM gg
-  UNION ALL SELECT g, 5, 0, -1, 0 FROM gg),
-obj AS (SELECT g, 2 + g % 4 AS p, 1 + g % 3 AS q FROM gg),
-verts AS MATERIALIZED (
-  SELECT c1.g, c1.a * c2.b - c2.a * c1.b AS d,
-         c1.c * c2.b - c2.c * c1.b AS xn,
-         c1.a * c2.c - c2.a * c1.c AS yn
-  FROM cons c1 JOIN cons c2 ON c2.g = c1.g AND c2.i > c1.i
-  WHERE c1.a * c2.b - c2.a * c1.b != 0),
-feas AS (
-  SELECT v.g, v.d, v.xn, v.yn FROM verts v
-  WHERE NOT EXISTS (
-    SELECT 1 FROM cons k WHERE k.g = v.g AND
-      CASE WHEN v.d > 0
-           THEN k.a * v.xn + k.b * v.yn > k.c * v.d
-           ELSE k.a * v.xn + k.b * v.yn < k.c * v.d END))
-SELECT CAST(f.g AS BIGINT) AS g,
-       max(CAST(o.p * f.xn + o.q * f.yn AS DOUBLE) / f.d) AS obj
-FROM feas f JOIN obj o ON o.g = f.g
-GROUP BY f.g ORDER BY g
-"""
-
-
-def _q_ntt_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cyclic convolution mod 12289 (the NTT-friendly lattice-crypto
-    prime, 3·2¹²+1) computed by a REAL radix-2 number-theoretic
-    transform — iterative Cooley-Tukey with bit-reversal, pointwise
-    product, inverse transform with n⁻¹ — vs the oracle's direct
-    O(n²) modular convolution. Length-16 sequences per group."""
-
-    p, n = 12289, 16
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 12).alias("g")).distinct())
-    seqs = (gg.select("g", F.explode(F.sequence(F.lit(0), F.lit(15)))
-                      .alias("k"))
-            .selectExpr("cast(g as long) as g", "cast(k as long) as k",
-                        "cast((g * 131 + k * 17 + 3) % 12289 as long)"
-                        " as x",
-                        "cast((g * 57 + k * k * 5 + 1) % 12289 as "
-                        "long) as y"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math as _m
-
-        w = pow(11, (p - 1) // n, p)  # 11 is a primitive root of p
-
-        def ntt(a, root):
-            a = a[:]
-            # bit reversal
-            j = 0
-            for i in range(1, n):
-                bit = n >> 1
-                while j & bit:
-                    j ^= bit
-                    bit >>= 1
-                j |= bit
-                if i < j:
-                    a[i], a[j] = a[j], a[i]
-            ln = 2
-            while ln <= n:
-                wl = pow(root, n // ln, p)
-                for i in range(0, n, ln):
-                    wcur = 1
-                    for k2 in range(ln // 2):
-                        u = a[i + k2]
-                        v = a[i + k2 + ln // 2] * wcur % p
-                        a[i + k2] = (u + v) % p
-                        a[i + k2 + ln // 2] = (u - v) % p
-                        wcur = wcur * wl % p
-                ln <<= 1
-            return a
-
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            grp = grp.sort_values("k")
-            x = [int(v) for v in grp["x"]]
-            y = [int(v) for v in grp["y"]]
-            fx, fy = ntt(x, w), ntt(y, w)
-            fz = [a * b % p for a, b in zip(fx, fy)]
-            z = ntt(fz, pow(w, p - 2, p))
-            ninv = pow(n, p - 2, p)
-            z = [v * ninv % p for v in z]
-            out += [(gv, k2, z[k2]) for k2 in range(n)]
-        return pd.DataFrame(out, columns=["g", "k", "z"])
-
-    return (seqs.groupBy("g")
-            .applyInPandas(run, "g long, k long, z long")
-            .orderBy("g", "k"))
-
-
-_NTT_CONV_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 12 AS g FROM documents),
-seqs AS MATERIALIZED (
-  SELECT g, k.x AS k,
-         (g * 131 + k.x * 17 + 3) % 12289 AS xv,
-         (g * 57 + k.x * k.x * 5 + 1) % 12289 AS yv
-  FROM gg CROSS JOIN generate_series(0, 15) k(x))
-SELECT CAST(a.g AS BIGINT) AS g, CAST(t.x AS BIGINT) AS k,
-       CAST(sum(a.xv * b.yv) % 12289 AS BIGINT) AS z
-FROM generate_series(0, 15) t(x)
-JOIN seqs a ON TRUE
-JOIN seqs b ON b.g = a.g AND b.k = (t.x - a.k + 16) % 16
-GROUP BY a.g, t.x ORDER BY g, k
-"""
-
-
-def _q_fenwick(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interleaved point-update / range-sum timeline replayed through
-    a REAL Fenwick tree (lowbit index walks) per group; the oracle
-    answers every query independently by summing the updates that
-    precede it in time and fall in [l, r] — the data structure vs the
-    definition. Ops derived arithmetically: even t = update(pos, δ),
-    odd t = query[l, r]."""
-
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 6).alias("g")).distinct())
-    ops = (gg.select("g", F.explode(F.sequence(F.lit(0), F.lit(59)))
-                     .alias("t"))
-           .selectExpr(
-        "cast(g as long) as g", "cast(t as long) as t",
-        "cast((g * 13 + t * 7) % 64 as long) as pos",
-        "cast((g + t) % 11 - 5 as long) as delta",
-        "cast((g * 5 + t * 3) % 64 as long) as l0",
-        "cast((g * 5 + t * 3) % 64 + (t * 11) % 20 as long) as r0"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        N = 96
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            tree = [0] * (N + 1)
-
-            def upd(i, d):
-                i += 1
-                while i <= N:
-                    tree[i] += d
-                    i += i & (-i)
-
-            def pref(i):
-                i += 1
-                s = 0
-                while i > 0:
-                    s += tree[i]
-                    i -= i & (-i)
-                return s
-
-            srt = grp.sort_values("t")
-            for t, pos, delta, l0, r0 in zip(
-                    srt["t"], srt["pos"], srt["delta"],
-                    srt["l0"], srt["r0"]):
-                if t % 2 == 0:
-                    upd(int(pos), int(delta))
-                else:
-                    s = pref(int(r0)) - (pref(int(l0) - 1)
-                                         if l0 > 0 else 0)
-                    out.append((gv, int(t), s))
-        return pd.DataFrame(out, columns=["g", "t", "range_sum"])
-
-    return (ops.groupBy("g")
-            .applyInPandas(run, "g long, t long, range_sum long")
-            .orderBy("g", "t"))
-
-
-_FENWICK_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 6 AS g FROM documents),
-ops AS MATERIALIZED (
-  SELECT g, t.x AS t,
-         (g * 13 + t.x * 7) % 64 AS pos,
-         (g + t.x) % 11 - 5 AS delta,
-         (g * 5 + t.x * 3) % 64 AS l0,
-         (g * 5 + t.x * 3) % 64 + (t.x * 11) % 20 AS r0
-  FROM gg CROSS JOIN generate_series(0, 59) t(x))
-SELECT CAST(q.g AS BIGINT) AS g, CAST(q.t AS BIGINT) AS t,
-       CAST(coalesce(sum(u.delta), 0) AS BIGINT) AS range_sum
-FROM ops q LEFT JOIN ops u
-  ON u.g = q.g AND u.t % 2 = 0 AND u.t < q.t
- AND u.pos >= q.l0 AND u.pos <= q.r0
-WHERE q.t % 2 = 1
-GROUP BY q.g, q.t ORDER BY g, t
-"""
-
-
-def _q_bigmul(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """30-digit decimal multiplication by REAL digit-level KARATSUBA
-    (recursive three-multiplication split on little-endian digit
-    lists, schoolbook base case, explicit carry normalization — no
-    python bignum shortcuts in the product path); the oracle computes
-    the same product by digit CONVOLUTION (join-aggregate) plus a
-    linear recursive carry walk, emitting the digit string. Two
-    textbook algorithms, one 60-digit string."""
-
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 20).alias("g")).distinct())
-    nums = gg.selectExpr(
-        "cast(g as long) as g",
-        # digit i (little-endian) of x: (g*7 + i*13) % 10, of y:
-        # (g*11 + i*17) % 10; top digit forced nonzero
-        "g as _g")
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        D = 30
-
-        def digits(g, a, b):
-            d = [(g * a + i * b) % 10 for i in range(D)]
-            d[D - 1] = 1 + (g * a + (D - 1) * b) % 9
-            return d
-
-        def norm(d):
-            out, carry = [], 0
-            for v in d:
-                carry, r = divmod(v + carry, 10)
-                out.append(r)
-            while carry:
-                carry, r = divmod(carry, 10)
-                out.append(r)
-            while len(out) > 1 and out[-1] == 0:
-                out.pop()
-            return out
-
-        def add(a, b):
-            n = max(len(a), len(b))
-            return [(a[i] if i < len(a) else 0)
-                    + (b[i] if i < len(b) else 0) for i in range(n)]
-
-        def sub(a, b):  # a >= b elementwise after normalization
-            n = max(len(a), len(b))
-            return [(a[i] if i < len(a) else 0)
-                    - (b[i] if i < len(b) else 0) for i in range(n)]
-
-        def kara(a, b):
-            if len(a) <= 8 or len(b) <= 8:
-                out = [0] * (len(a) + len(b))
-                for i, x in enumerate(a):
-                    for j, y in enumerate(b):
-                        out[i + j] += x * y
-                return out
-            m = min(len(a), len(b)) // 2
-            a0, a1 = a[:m], a[m:]
-            b0, b1 = b[:m], b[m:]
-            z0 = kara(a0, b0)
-            z2 = kara(a1, b1)
-            z1 = sub(sub(kara(add(a0, a1), add(b0, b1)), z0), z2)
-            out = [0] * (len(a) + len(b))
-            for i, v in enumerate(z0):
-                out[i] += v
-            for i, v in enumerate(z1):
-                out[i + m] += v
-            for i, v in enumerate(z2):
-                out[i + 2 * m] += v
-            return out
-
-        out = []
-        for g in pdf["g"]:
-            g = int(g)
-            x = digits(g, 7, 13)
-            y = digits(g, 11, 17)
-            prod = norm(kara(x, y))
-            out.append((g, "".join(str(v) for v in reversed(prod))))
-        return pd.DataFrame(out, columns=["g", "product"])
-
-    return (nums.groupBy("g")
-            .applyInPandas(run, "g long, product string")
-            .orderBy("g"))
-
-
-_BIGMUL_SQL = """
-WITH RECURSIVE gg AS (SELECT DISTINCT doc_id % 20 AS g FROM documents),
-dx AS (
-  SELECT g, i.x AS i,
-         CASE WHEN i.x = 29 THEN 1 + (g * 7 + 29 * 13) % 9
-              ELSE (g * 7 + i.x * 13) % 10 END AS d
-  FROM gg CROSS JOIN generate_series(0, 29) i(x)),
-dy AS (
-  SELECT g, i.x AS i,
-         CASE WHEN i.x = 29 THEN 1 + (g * 11 + 29 * 17) % 9
-              ELSE (g * 11 + i.x * 17) % 10 END AS d
-  FROM gg CROSS JOIN generate_series(0, 29) i(x)),
-conv AS MATERIALIZED (
-  SELECT x.g, x.i + y.i AS k, sum(x.d * y.d) AS c
-  FROM dx x JOIN dy y ON y.g = x.g
-  GROUP BY x.g, x.i + y.i),
-walk(g, k, dig, carry) AS (
-  SELECT c.g, 0, CAST((c.c) % 10 AS BIGINT),
-         CAST(c.c // 10 AS BIGINT)
-  FROM conv c WHERE c.k = 0
-  UNION ALL
-  SELECT w.g, w.k + 1,
-         (coalesce(c.c, 0) + w.carry) % 10,
-         (coalesce(c.c, 0) + w.carry) // 10
-  FROM walk w LEFT JOIN conv c ON c.g = w.g AND c.k = w.k + 1
-  WHERE w.k < 61 AND (w.k + 1 <= (SELECT max(k) FROM conv c2
-                                  WHERE c2.g = w.g)
-                      OR w.carry > 0)),
-digs AS (
-  SELECT g, k, dig FROM walk),
-strs AS (
-  SELECT g, string_agg(CAST(dig AS VARCHAR), '' ORDER BY k DESC)
-           AS raw
-  FROM digs GROUP BY g)
-SELECT CAST(g AS BIGINT) AS g,
-       CASE WHEN ltrim(raw, '0') = '' THEN '0'
-            ELSE ltrim(raw, '0') END AS product
-FROM strs ORDER BY g
-"""
-
-
-def _q_perm_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lexicographic permutation ranks via the LEHMER CODE: each
-    group's 12-element permutation (argsort of a hashed key — built
-    with row_number identically on both sides) gets rank =
-    Σ cᵢ·(n−1−i)! where cᵢ counts smaller elements to the right.
-    Engine: the sequential Lehmer scan; oracle: pair-join smaller-
-    to-the-right counts × factorials from a recursive product
-    walk — 12! < 2⁶³ keeps everything in BIGINT."""
-
-    n = 12
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 18).alias("g")).distinct())
-    base = (gg.select("g", F.explode(F.sequence(F.lit(0),
-                                                F.lit(n - 1)))
-                      .alias("i"))
-            .withColumn("key", (F.col("g") * 37 + F.col("i") * 61)
-                        % 101))
-    w = Window.partitionBy("g").orderBy("key", "i")
-    perm = base.select(F.col("g").cast("long").alias("g"),
-                       F.col("i").cast("long").alias("i"),
-                       (F.row_number().over(w) - 1).cast("long")
-                       .alias("p"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            p = [int(v) for v in grp.sort_values("i")["p"]]
-            rank = 0
-            for i in range(len(p)):
-                c = sum(1 for j in range(i + 1, len(p))
-                        if p[j] < p[i])
-                rank += c * math.factorial(len(p) - 1 - i)
-            out.append((gv, rank))
-        return pd.DataFrame(out, columns=["g", "rank"])
-
-    return (perm.groupBy("g")
-            .applyInPandas(run, "g long, rank long")
-            .orderBy("g"))
-
-
-_PERM_RANK_SQL = """
-WITH RECURSIVE gg AS (SELECT DISTINCT doc_id % 18 AS g FROM documents),
-base AS (
-  SELECT g, i.x AS i, (g * 37 + i.x * 61) % 101 AS key
-  FROM gg CROSS JOIN generate_series(0, 11) i(x)),
-perm AS MATERIALIZED (
-  SELECT g, i,
-         row_number() OVER (PARTITION BY g ORDER BY key, i) - 1 AS p
-  FROM base),
-fact(k, f) AS (
-  SELECT 0, CAST(1 AS BIGINT)
-  UNION ALL SELECT k + 1, f * (k + 1) FROM fact WHERE k < 11),
-cnts AS (
-  SELECT a.g, a.i, count(b.i) AS c
-  FROM perm a LEFT JOIN perm b
-    ON b.g = a.g AND b.i > a.i AND b.p < a.p
-  GROUP BY a.g, a.i)
-SELECT CAST(c.g AS BIGINT) AS g,
-       CAST(sum(c.c * f.f) AS BIGINT) AS rank
-FROM cnts c JOIN fact f ON f.k = 11 - c.i
-GROUP BY c.g ORDER BY g
-"""
-
-
-def _q_poly_gcd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polynomial GCD over GF(10007) by the real polynomial EUCLID
-    (degree-reduction long division with modular inverses, monic
-    normalization): inputs are g·(x+c₁) and g·(x+c₂) with c₁ ≠ c₂ —
-    distinct linear factors are coprime, so gcd = monic g, whose
-    quadratic coefficients the oracle writes down arithmetically.
-    The engine must expand, divide, and normalize to recover them."""
-
-    p = _SHAMIR_P
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 25).alias("g")).distinct()
-          .selectExpr("cast(g as long) as g",
-                      "cast(1 + g * 3 as long) as g0",
-                      "cast(2 + g * 5 as long) as g1",
-                      "cast(1 as long) as g2",
-                      "cast(10 + g as long) as c1",
-                      "cast(40 + g as long) as c2"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        def pmul(a, b):
-            out = [0] * (len(a) + len(b) - 1)
-            for i, x in enumerate(a):
-                for j, y in enumerate(b):
-                    out[i + j] = (out[i + j] + x * y) % p
-            return out
-
-        def pmod(a, b):
-            a = a[:]
-            db = len(b) - 1
-            inv = pow(b[-1], p - 2, p)
-            while len(a) - 1 >= db and any(a):
-                if a[-1] == 0:
-                    a.pop()
-                    continue
-                coef = a[-1] * inv % p
-                shift = len(a) - 1 - db
-                for i, x in enumerate(b):
-                    a[shift + i] = (a[shift + i] - coef * x) % p
-                a.pop()
-            while len(a) > 1 and a[-1] == 0:
-                a.pop()
-            return a
-
-        def pgcd(a, b):
-            while any(b):
-                a, b = b, pmod(a, b)
-            inv = pow(a[-1], p - 2, p)
-            return [x * inv % p for x in a]
-
-        out = []
-        for r in pdf.itertuples(index=False):
-            gpoly = [int(r.g0), int(r.g1), int(r.g2)]
-            pa = pmul(gpoly, [int(r.c1), 1])
-            pb = pmul(gpoly, [int(r.c2), 1])
-            gg_ = pgcd(pa, pb)
-            out.append((int(r.g), gg_[0], gg_[1], gg_[2]))
-        return pd.DataFrame(out, columns=["g", "k0", "k1", "k2"])
-
-    return (gg.groupBy("g")
-            .applyInPandas(run, "g long, k0 long, k1 long, k2 long")
-            .orderBy("g"))
-
-
-_POLY_GCD_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 25 AS g FROM documents)
-SELECT CAST(g AS BIGINT) AS g,
-       CAST(1 + g * 3 AS BIGINT) AS k0,
-       CAST(2 + g * 5 AS BIGINT) AS k1,
-       CAST(1 AS BIGINT) AS k2
-FROM gg ORDER BY g
-"""
-
-
-def _q_stable_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stable marriage, man-optimal, 6×6 per instance: engine runs
-    the REAL GALE-SHAPLEY proposal rounds; the oracle enumerates all
-    720 perfect matchings (a 6-fold distinctness join), keeps the
-    STABLE ones (no blocking pair — the definition), and selects the
-    one minimizing Σ men's ranks — which is exactly the man-optimal
-    matching (it minimizes every man's rank pointwise, so uniquely
-    minimizes the sum among stable matchings). Preference keys built
-    with identical arithmetic on both sides."""
-
-    n = 6
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 10).alias("inst")).distinct())
-    pairs = (gg.select("inst",
-                       F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
-                       .alias("m"))
-             .select("inst", "m",
-                     F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
-                     .alias("w"))
-             .withColumn("mkey", (F.col("m") * 7 + F.col("w") * 11
-                                  + F.col("inst") * 3) % 101)
-             .withColumn("wkey", (F.col("m") * 13 + F.col("w") * 5
-                                  + F.col("inst") * 17) % 103))
-    wm = Window.partitionBy("inst", "m").orderBy("mkey", "w")
-    ww = Window.partitionBy("inst", "w").orderBy("wkey", "m")
-    ranked = (pairs.withColumn("mr", F.row_number().over(wm) - 1)
-              .withColumn("wr", F.row_number().over(ww) - 1)
-              .selectExpr("cast(inst as long) as inst",
-                          "cast(m as long) as m", "cast(w as long) as w",
-                          "cast(mr as long) as mr",
-                          "cast(wr as long) as wr"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for iv, grp in pdf.groupby("inst", sort=False):
-            mpref = {}
-            wrank = {}
-            for r in grp.itertuples(index=False):
-                mpref.setdefault(int(r.m), {})[int(r.mr)] = int(r.w)
-                wrank[(int(r.w), int(r.m))] = int(r.wr)
-            nxt = {m: 0 for m in range(n)}
-            cur = {}  # woman -> man
-            free = list(range(n))
-            while free:
-                m = free.pop()
-                w = mpref[m][nxt[m]]
-                nxt[m] += 1
-                if w not in cur:
-                    cur[w] = m
-                elif wrank[(w, m)] < wrank[(w, cur[w])]:
-                    free.append(cur[w])
-                    cur[w] = m
-                else:
-                    free.append(m)
-            out += [(iv, m, w) for w, m in cur.items()]
-        return pd.DataFrame(out, columns=["inst", "m", "w"])
-
-    return (ranked.groupBy("inst")
-            .applyInPandas(run, "inst long, m long, w long")
-            .orderBy("inst", "m"))
-
-
-def _stable_match_sql(n: int = 6) -> str:
-    cols = ", ".join(f"p{m}.w AS w{m}" for m in range(n))
-    joins = "\n  ".join(
-        (f"FROM perm_src p0" if m == 0 else
-         f"JOIN perm_src p{m} ON p{m}.inst = p0.inst AND p{m}.m = {m}"
-         + "".join(f" AND p{m}.w != p{k}.w" for k in range(m)))
-        for m in range(n))
-    # fix p0's m
-    joins = joins.replace("FROM perm_src p0",
-                          "FROM perm_src p0")
-    msum = " + ".join(f"p{m}.mr" for m in range(n))
-    stable_checks = []
-    return f"""
-WITH gg AS (SELECT DISTINCT doc_id % 10 AS inst FROM documents),
-pairs AS (
-  SELECT inst, m.x AS m, w.x AS w,
-         (m.x * 7 + w.x * 11 + inst * 3) % 101 AS mkey,
-         (m.x * 13 + w.x * 5 + inst * 17) % 103 AS wkey
-  FROM gg
-  CROSS JOIN generate_series(0, {n - 1}) m(x)
-  CROSS JOIN generate_series(0, {n - 1}) w(x)),
-ranked AS MATERIALIZED (
-  SELECT inst, m, w,
-         row_number() OVER (PARTITION BY inst, m
-                            ORDER BY mkey, w) - 1 AS mr,
-         row_number() OVER (PARTITION BY inst, w
-                            ORDER BY wkey, m) - 1 AS wr
-  FROM pairs),
-perm_src AS (SELECT inst, m, w, mr FROM ranked),
-matchings AS MATERIALIZED (
-  SELECT p0.inst, {cols}, {msum} AS ranksum
-  {joins}
-  WHERE p0.m = 0),
-stable AS MATERIALIZED (
-  SELECT mt.* FROM matchings mt
-  WHERE NOT EXISTS (
-    -- blocking pair (m, w): m prefers w to his partner AND w
-    -- prefers m to her partner
-    SELECT 1 FROM ranked r
-    JOIN ranked rp ON rp.inst = mt.inst AND rp.m = r.m
-     AND rp.w = CASE r.m {' '.join(f'WHEN {m} THEN mt.w{m}' for m in range(n))} END
-    JOIN ranked rw ON rw.inst = mt.inst AND rw.w = r.w
-     AND ({' OR '.join(f'(mt.w{m} = r.w AND rw.m = {m})' for m in range(n))})
-    WHERE r.inst = mt.inst AND r.mr < rp.mr AND r.wr < rw.wr)),
-best AS (
-  SELECT inst, {', '.join(f'w{m}' for m in range(n))},
-         row_number() OVER (PARTITION BY inst ORDER BY ranksum) AS rn
-  FROM stable)
-SELECT CAST(inst AS BIGINT) AS inst, CAST(m.x AS BIGINT) AS m,
-       CAST(CASE m.x {' '.join(f'WHEN {m} THEN w{m}' for m in range(n))} END
-            AS BIGINT) AS w
-FROM best CROSS JOIN generate_series(0, {n - 1}) m(x)
-WHERE rn = 1
-ORDER BY inst, m
-"""
-
-
-def _q_dfa_min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DFA state equivalence: engine runs MOORE PARTITION REFINEMENT
-    (iterated signature (acc, class[δ₀], class[δ₁]) re-coding to a
-    fixpoint); the oracle computes the DISTINGUISHABLE-pairs closure
-    — seeded by acceptance mismatch, closed backward through the
-    transition function — and labels each state with its smallest
-    indistinguishable partner. Two dual characterizations of
-    Myhill-Nerode equivalence. 12-state binary DFAs per instance."""
-
-    S = 12
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 8).alias("inst")).distinct())
-    dfa = (gg.select("inst",
-                     F.explode(F.sequence(F.lit(0), F.lit(S - 1)))
-                     .alias("s"))
-           .selectExpr("cast(inst as long) as inst",
-                       "cast(s as long) as s",
-                       f"cast((s * 5 + inst + 1) % {S} as long) as d0",
-                       f"cast((s * 7 + inst * 3 + 2) % {S} as long)"
-                       " as d1",
-                       "cast((s + inst) % 3 = 0 as boolean) as acc"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for iv, grp in pdf.groupby("inst", sort=False):
-            grp = grp.sort_values("s")
-            d0 = list(grp["d0"])
-            d1 = list(grp["d1"])
-            acc = list(grp["acc"])
-            cls = [1 if a else 0 for a in acc]
-            while True:
-                sig = [(cls[i], cls[d0[i]], cls[d1[i]])
-                       for i in range(S)]
-                remap = {}
-                new = []
-                for sg in sig:
-                    if sg not in remap:
-                        remap[sg] = len(remap)
-                    new.append(remap[sg])
-                if new == cls:
-                    break
-                cls = new
-            # canonical label: min state in each class
-            rep = {}
-            for i in range(S):
-                rep.setdefault(cls[i], i)
-            out += [(iv, i, rep[cls[i]]) for i in range(S)]
-        return pd.DataFrame(out, columns=["inst", "s", "cls"])
-
-    return (dfa.groupBy("inst")
-            .applyInPandas(run, "inst long, s long, cls long")
-            .orderBy("inst", "s"))
-
-
-_DFA_MIN_SQL = """
-WITH RECURSIVE gg AS (SELECT DISTINCT doc_id % 8 AS inst FROM documents),
-dfa AS MATERIALIZED (
-  SELECT inst, s.x AS s, (s.x * 5 + inst + 1) % 12 AS d0,
-         (s.x * 7 + inst * 3 + 2) % 12 AS d1,
-         (s.x + inst) % 3 = 0 AS acc
-  FROM gg CROSS JOIN generate_series(0, 11) s(x)),
-dist(inst, p, q) AS (
-  SELECT a.inst, a.s, b.s
-  FROM dfa a JOIN dfa b ON b.inst = a.inst
-  WHERE a.acc != b.acc
-  UNION
-  SELECT a.inst, a.s, b.s
-  FROM dist d
-  JOIN dfa a ON a.inst = d.inst
-  JOIN dfa b ON b.inst = d.inst
-  WHERE (a.d0 = d.p AND b.d0 = d.q) OR (a.d1 = d.p AND b.d1 = d.q)),
-cls AS (
-  SELECT f.inst, f.s,
-         min(g.s) AS cls
-  FROM dfa f JOIN dfa g ON g.inst = f.inst
-  WHERE NOT EXISTS (SELECT 1 FROM dist d
-                    WHERE d.inst = f.inst AND d.p = f.s AND d.q = g.s)
-  GROUP BY f.inst, f.s)
-SELECT CAST(inst AS BIGINT) AS inst, CAST(s AS BIGINT) AS s,
-       CAST(cls AS BIGINT) AS cls
-FROM cls ORDER BY inst, s
-"""
-
-
-def _q_crt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chinese Remainder reconstruction: residues of a planted x
-    modulo the coprime triple (101, 103, 107) — the engine must run
-    real CRT (pairwise modular inverses via Fermat) to recover x <
-    101·103·107; the oracle writes the plant down."""
-
-    mods = (101, 103, 107)
-    M = mods[0] * mods[1] * mods[2]
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 40).alias("g")).distinct()
-          .selectExpr("cast(g as long) as g",
-                      f"cast((g * 987654 + 321) % {M} as long) as x"))
-    res = gg.selectExpr("g", *[f"cast(x % {m} as long) as r{i}"
-                               for i, m in enumerate(mods)])
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for r in pdf.itertuples(index=False):
-            x = 0
-            for i, m in enumerate(mods):
-                Mi = M // m
-                inv = pow(Mi, m - 2, m)
-                ri = int(getattr(r, f"r{i}"))
-                x = (x + ri * Mi * inv) % M
-            out.append((int(r.g), x))
-        return pd.DataFrame(out, columns=["g", "x"])
-
-    return (res.groupBy("g")
-            .applyInPandas(run, "g long, x long")
-            .orderBy("g"))
-
-
-_CRT_SQL = f"""
-WITH gg AS (SELECT DISTINCT doc_id % 40 AS g FROM documents)
-SELECT CAST(g AS BIGINT) AS g,
-       CAST((g * 987654 + 321) % {101 * 103 * 107} AS BIGINT) AS x
-FROM gg ORDER BY g
-"""
-
-
-def _q_dlog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discrete logs in GF(10007) by BABY-STEP GIANT-STEP: h = 5^x
-    for a planted exponent x (5 IS a primitive root of 10007 — 11 is
-    not, its order divides 5003, which the first run caught as an
-    x-collision; verified 5^2 ≠ 1 ≠ 5^5003) so x is unique mod p−1.
-    The engine builds the baby-step table and walks giant steps —
-    real Shanks — while the oracle writes the plant down."""
-
-    p = _SHAMIR_P
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 30).alias("g")).distinct()
-          .selectExpr("cast(g as long) as g",
-                      f"cast((g * 313 + 29) % {p - 1} as long)"
-                      " as xs"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-
-        m = math.isqrt(p) + 1
-        baby = {}
-        cur = 1
-        for j in range(m):
-            baby.setdefault(cur, j)
-            cur = cur * 5 % p
-        ginv = pow(pow(5, m, p), p - 2, p)
-        out = []
-        for r in pdf.itertuples(index=False):
-            h = pow(5, int(r.xs), p)
-            gamma = h
-            x = None
-            for i in range(m):
-                if gamma in baby:
-                    x = (i * m + baby[gamma]) % (p - 1)
-                    break
-                gamma = gamma * ginv % p
-            out.append((int(r.g), x))
-        return pd.DataFrame(out, columns=["g", "x"])
-
-    return (gg.groupBy("g")
-            .applyInPandas(run, "g long, x long")
-            .orderBy("g"))
-
-
-_DLOG_SQL = f"""
-WITH gg AS (SELECT DISTINCT doc_id % 30 AS g FROM documents)
-SELECT CAST(g AS BIGINT) AS g,
-       CAST((g * 313 + 29) % {_SHAMIR_P - 1} AS BIGINT) AS x
-FROM gg ORDER BY g
-"""
-
-
-def _q_catalan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalan numbers two ways: engine runs the CONVOLUTION DP
-    Cₙ₊₁ = Σ Cᵢ·Cₙ₋ᵢ; the oracle derives the closed form
-    binom(2n,n)/(n+1) through an exact product recursion — two
-    characterizations of the same integers up to C₃₀ (< 2⁶³)."""
-
-    ns = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 31).alias("n")).distinct()
-          .selectExpr("cast(n as long) as n"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        C = [1]
-        for k in range(31):
-            C.append(sum(C[i] * C[k - i] for i in range(k + 1)))
-        return pd.DataFrame(
-            [(int(n), C[int(n)]) for n in pdf["n"]],
-            columns=["n", "cat"])
-
-    return (ns.groupBy("n").applyInPandas(run, "n long, cat long")
-            .orderBy("n"))
-
-
-_CATALAN_SQL = """
-WITH RECURSIVE ns AS (SELECT DISTINCT doc_id % 31 AS n FROM documents),
--- C(n) = C(n-1) * 2(2n-1)/(n+1), exact at each step
-cat(n, c) AS (
-  SELECT 0, CAST(1 AS BIGINT)
-  UNION ALL
-  SELECT n + 1, c * 2 * (2 * n + 1) // (n + 2) FROM cat WHERE n < 30)
-SELECT CAST(ns.n AS BIGINT) AS n, CAST(cat.c AS BIGINT) AS cat
-FROM ns JOIN cat ON cat.n = ns.n ORDER BY n
-"""
-
-
-def _q_fib_double(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fibonacci by FAST DOUBLING — F(2k) = F(k)(2F(k+1)−F(k)),
-    F(2k+1) = F(k)²+F(k+1)², walking the exponent bits in O(log n)
-    steps — vs the oracle's linear recurrence walk. n ≤ 90 keeps
-    BIGINT."""
-
-    ns = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 91).alias("n")).distinct()
-          .selectExpr("cast(n as long) as n"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        def fd(n):
-            def rec(k):
-                if k == 0:
-                    return (0, 1)
-                a, b = rec(k >> 1)
-                c = a * (2 * b - a)
-                d = a * a + b * b
-                if k & 1:
-                    return (d, c + d)
-                return (c, d)
-            return rec(n)[0]
-        return pd.DataFrame(
-            [(int(n), fd(int(n))) for n in pdf["n"]],
-            columns=["n", "fib"])
-
-    return (ns.groupBy("n").applyInPandas(run, "n long, fib long")
-            .orderBy("n"))
-
-
-_FIB_SQL = """
-WITH RECURSIVE ns AS (SELECT DISTINCT doc_id % 91 AS n FROM documents),
-fib(n, a, b) AS (
-  SELECT 0, CAST(0 AS BIGINT), CAST(1 AS BIGINT)
-  UNION ALL SELECT n + 1, b, a + b FROM fib WHERE n < 90)
-SELECT CAST(ns.n AS BIGINT) AS n, CAST(fib.a AS BIGINT) AS fib
-FROM ns JOIN fib ON fib.n = ns.n ORDER BY n
 """
 
 
@@ -18233,221 +13193,6 @@ GROUP BY hamming ORDER BY hamming
 """
 
 
-def _q_max_cliques(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal-clique counts by BRON-KERBOSCH with pivoting (the real
-    recursive algorithm) on 13-node instances; the oracle checks all
-    2¹³ subsets by definition — clique (no missing internal edge) and
-    maximal (no extendable vertex). Exponential definition vs the
-    pruned search."""
-
-    N = 13
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 6).alias("inst")).distinct())
-    edges = (gg.select("inst",
-                       F.explode(F.sequence(F.lit(0), F.lit(N - 1)))
-                       .alias("u"))
-             .select("inst", "u",
-                     F.explode(F.sequence(F.lit(0), F.lit(N - 1)))
-                     .alias("v"))
-             .where("u < v and (u * 7 + v * 11 + inst * 5) % 3 = 0")
-             .selectExpr("cast(inst as long) as inst",
-                         "cast(u as long) as u", "cast(v as long) as v"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for iv, grp in pdf.groupby("inst", sort=False):
-            adj = {i: set() for i in range(N)}
-            for u, v in zip(grp["u"], grp["v"]):
-                adj[int(u)].add(int(v))
-                adj[int(v)].add(int(u))
-            count = [0]
-
-            def bk(r, p_, x):
-                if not p_ and not x:
-                    count[0] += 1
-                    return
-                pivot = max(p_ | x, key=lambda w: len(adj[w] & p_))
-                for v in list(p_ - adj[pivot]):
-                    bk(r | {v}, p_ & adj[v], x & adj[v])
-                    p_.remove(v)
-                    x.add(v)
-
-            bk(set(), set(range(N)), set())
-            out.append((iv, count[0]))
-        return pd.DataFrame(out, columns=["inst", "n_cliques"])
-
-    return (edges.groupBy("inst")
-            .applyInPandas(run, "inst long, n_cliques long")
-            .orderBy("inst"))
-
-
-_MAX_CLIQUES_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 6 AS inst FROM documents),
-edges AS MATERIALIZED (
-  SELECT inst, u.x AS u, v.x AS v
-  FROM gg
-  CROSS JOIN generate_series(0, 12) u(x)
-  CROSS JOIN generate_series(0, 12) v(x)
-  WHERE u.x < v.x AND (u.x * 7 + v.x * 11 + inst * 5) % 3 = 0),
-subs AS (
-  SELECT gg.inst, s.x AS s FROM gg
-  CROSS JOIN generate_series(1, 8191) s(x)),
-cliques AS MATERIALIZED (
-  SELECT sb.inst, sb.s FROM subs sb
-  WHERE NOT EXISTS (
-    -- a missing internal edge
-    SELECT 1 FROM generate_series(0, 12) a(x)
-    CROSS JOIN generate_series(0, 12) b(x)
-    WHERE a.x < b.x AND ((sb.s >> a.x) & 1) = 1
-      AND ((sb.s >> b.x) & 1) = 1
-      AND NOT EXISTS (SELECT 1 FROM edges e
-                      WHERE e.inst = sb.inst
-                        AND e.u = a.x AND e.v = b.x))),
-maximal AS (
-  SELECT c.inst, c.s FROM cliques c
-  WHERE NOT EXISTS (
-    -- an outside vertex adjacent to every member
-    SELECT 1 FROM generate_series(0, 12) w(x)
-    WHERE ((c.s >> w.x) & 1) = 0
-      AND NOT EXISTS (
-        SELECT 1 FROM generate_series(0, 12) m(x)
-        WHERE ((c.s >> m.x) & 1) = 1
-          AND NOT EXISTS (
-            SELECT 1 FROM edges e
-            WHERE e.inst = c.inst
-              AND e.u = least(w.x, m.x)
-              AND e.v = greatest(w.x, m.x)))))
-SELECT CAST(inst AS BIGINT) AS inst,
-       CAST(count(*) AS BIGINT) AS n_cliques
-FROM maximal GROUP BY inst ORDER BY inst
-"""
-
-
-def _q_totient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Euler's φ and Möbius μ via REAL prime factorization per value;
-    the oracle computes φ(n) by its DEFINITION — counting coprime
-    k ≤ n with a gcd() probe sweep — and μ(n) from the distinct/total
-    prime-divisor probe. Multiplicative number theory vs brute
-    force."""
-
-    ns = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 80).alias("m")).distinct()
-          .selectExpr("cast(2 + m * 37 as long) as n"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for n in pdf["n"]:
-            n = int(n)
-            m0, phi, mu, nf = n, n, 1, 0
-            d = 2
-            while d * d <= m0:
-                if m0 % d == 0:
-                    phi = phi // d * (d - 1)
-                    nf += 1
-                    e = 0
-                    while m0 % d == 0:
-                        m0 //= d
-                        e += 1
-                    if e > 1:
-                        mu = 0
-                d += 1
-            if m0 > 1:
-                phi = phi // m0 * (m0 - 1)
-                nf += 1
-            if mu != 0:
-                mu = -1 if nf % 2 else 1
-            out.append((n, phi, mu))
-        return pd.DataFrame(out, columns=["n", "phi", "mu"])
-
-    return (ns.groupBy("n").applyInPandas(run, "n long, phi long, "
-                                          "mu long")
-            .orderBy("n"))
-
-
-_TOTIENT_SQL = """
-WITH ns AS (
-  SELECT DISTINCT 2 + (doc_id % 80) * 37 AS n FROM documents),
-phi AS (
-  SELECT ns.n,
-         (SELECT count(*) FROM generate_series(1, 4000) k(x)
-          WHERE k.x <= ns.n AND gcd(k.x, ns.n) = 1) AS phi
-  FROM ns),
-fac AS (
-  SELECT ns.n,
-         (SELECT count(*) FROM generate_series(2, 4000) p(x)
-          WHERE ns.n % p.x = 0
-            AND NOT EXISTS (SELECT 1 FROM generate_series(2, 63) q(y)
-                            WHERE q.y < p.x AND p.x % q.y = 0))
-           AS npf,
-         (SELECT count(*) FROM generate_series(2, 4000) p(x)
-          WHERE ns.n % (p.x * p.x) = 0
-            AND NOT EXISTS (SELECT 1 FROM generate_series(2, 63) q(y)
-                            WHERE q.y < p.x AND p.x % q.y = 0))
-           AS nsq
-  FROM ns)
-SELECT CAST(p.n AS BIGINT) AS n, CAST(p.phi AS BIGINT) AS phi,
-       CAST(CASE WHEN f.nsq > 0 THEN 0
-                 WHEN f.npf % 2 = 1 THEN -1 ELSE 1 END AS BIGINT)
-         AS mu
-FROM phi p JOIN fac f ON f.n = p.n ORDER BY n
-"""
-
-
-def _q_hamming_code(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamming(7,4) ECC round trip — the storage/transport
-    single-error-correction primitive: the engine encodes each data
-    nibble with the real generator parities, flips the PLANTED bit
-    position, then syndrome-decodes and corrects. The oracle knows
-    the closed form: the syndrome equals the 1-based flipped
-    position, and correction always recovers the nibble. Output
-    (g, nibble, flip_pos, syndrome, recovered)."""
-
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 112).alias("m")).distinct()
-          .selectExpr("cast(m as long) as g",
-                      "cast(m % 16 as long) as nibble",
-                      "cast(1 + m div 16 as long) as flip"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for r in pdf.itertuples(index=False):
-            d = [int(r.nibble) >> k & 1 for k in range(4)]
-            # codeword positions 1..7: p1 p2 d1 p3 d2 d3 d4
-            c = [0] * 8
-            c[3], c[5], c[6], c[7] = d[0], d[1], d[2], d[3]
-            c[1] = c[3] ^ c[5] ^ c[7]
-            c[2] = c[3] ^ c[6] ^ c[7]
-            c[4] = c[5] ^ c[6] ^ c[7]
-            c[int(r.flip)] ^= 1
-            s = 0
-            for p_ in range(1, 8):
-                if c[p_]:
-                    s ^= p_
-            if s:
-                c[s] ^= 1
-            rec = c[3] | (c[5] << 1) | (c[6] << 2) | (c[7] << 3)
-            out.append((int(r.g), int(r.nibble), int(r.flip), s,
-                        rec == int(r.nibble)))
-        return pd.DataFrame(
-            out, columns=["g", "nibble", "flip", "syndrome",
-                          "recovered"])
-
-    return (gg.groupBy("g")
-            .applyInPandas(run, "g long, nibble long, flip long, "
-                           "syndrome long, recovered boolean")
-            .orderBy("g"))
-
-
-_HAMMING_CODE_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 112 AS m FROM documents)
-SELECT CAST(m AS BIGINT) AS g, CAST(m % 16 AS BIGINT) AS nibble,
-       CAST(1 + m // 16 AS BIGINT) AS flip,
-       CAST(1 + m // 16 AS BIGINT) AS syndrome,
-       TRUE AS recovered
-FROM gg ORDER BY g
-"""
-
-
 def _q_second_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shortest AND second-shortest DISTINCT path lengths from node 0
     (the k-shortest-paths primitive, k=2): engine runs
@@ -18526,822 +13271,6 @@ FROM ranked GROUP BY node ORDER BY node
 """
 
 
-def _q_z_array(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-arrays by the REAL Z-algorithm (the [l, r] window carry-over)
-    per word; oracle = the definition, max prefix-match length at
-    each position probed by substring equality. z[0] = n by
-    convention."""
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-
-    @F.pandas_udf("array<struct<i: long, z: long>>")
-    def _z(s: pd.Series) -> pd.Series:
-        def zarr(w):
-            n = len(w)
-            z = [0] * n
-            z[0] = n
-            l = r = 0
-            for i in range(1, n):
-                if i < r:
-                    z[i] = min(r - i, z[i - l])
-                while i + z[i] < n and w[z[i]] == w[i + z[i]]:
-                    z[i] += 1
-                if i + z[i] > r:
-                    l, r = i, i + z[i]
-            return [{"i": i, "z": z[i]} for i in range(n)]
-        return s.map(zarr)
-
-    return (words.select("word", F.explode(_z(F.col("word")))
-                         .alias("e"))
-            .select("word", "e.i", "e.z").orderBy("word", "i"))
-
-
-_Z_ARRAY_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-pos AS (
-  SELECT word, t.i FROM words, UNNEST(range(0, len(word))) t(i)),
-matches AS (
-  SELECT p.word, p.i, l.x AS l
-  FROM pos p, UNNEST(range(1, 65)) l(x)
-  WHERE p.i + l.x <= len(p.word)
-    AND substr(p.word, 1, CAST(l.x AS INT))
-        = substr(p.word, CAST(p.i + 1 AS INT), CAST(l.x AS INT)))
-SELECT p.word, CAST(p.i AS BIGINT) AS i,
-       CAST(coalesce((SELECT max(m2.l) FROM matches m2
-                      WHERE m2.word = p.word AND m2.i = p.i), 0)
-            AS BIGINT) AS z
-FROM pos p ORDER BY word, i
-"""
-
-
-def _q_border_array(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full KMP failure (border) arrays — border[i] = longest proper
-    border of the length-i prefix, by the real fallback scan; oracle
-    probes every candidate border length by prefix/suffix substring
-    equality. min_period's machinery exposed per position."""
-
-    words = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 200).alias("m")).distinct()
-             .selectExpr(f"{_UNI_WORD} as word").distinct())
-
-    @F.pandas_udf("array<struct<i: long, b: long>>")
-    def _bord(s: pd.Series) -> pd.Series:
-        def borders(w):
-            n = len(w)
-            fail = [0] * (n + 1)
-            k = 0
-            for i in range(1, n):
-                while k and w[i] != w[k]:
-                    k = fail[k]
-                if w[i] == w[k]:
-                    k += 1
-                fail[i + 1] = k
-            return [{"i": i, "b": fail[i]} for i in range(1, n + 1)]
-        return s.map(borders)
-
-    return (words.select("word", F.explode(_bord(F.col("word")))
-                         .alias("e"))
-            .select("word", "e.i", "e.b").orderBy("word", "i"))
-
-
-_BORDER_ARRAY_SQL = f"""
-WITH mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-words AS MATERIALIZED (SELECT DISTINCT {_UNI_WORD_D} AS word FROM mm),
-pref AS (
-  SELECT word, t.i FROM words, UNNEST(range(1, len(word) + 1)) t(i)),
-bs AS (
-  SELECT p.word, p.i, b.x AS b
-  FROM pref p, UNNEST(range(1, 65)) b(x)
-  WHERE b.x < p.i
-    AND substr(p.word, 1, CAST(b.x AS INT))
-        = substr(p.word, CAST(p.i - b.x + 1 AS INT), CAST(b.x AS INT)))
-SELECT p.word, CAST(p.i AS BIGINT) AS i,
-       CAST(coalesce((SELECT max(b2.b) FROM bs b2
-                      WHERE b2.word = p.word AND b2.i = p.i), 0)
-            AS BIGINT) AS b
-FROM pref p ORDER BY word, i
-"""
-
-
-def _q_bst_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Insertion-order BST shape: the engine actually BUILDS the tree
-    (pointer insertions) and reports each key's depth; the oracle
-    uses the classic characterization — y is an ancestor of x iff y
-    precedes x and every key strictly between them is inserted AFTER
-    y — as a pair join with a NOT EXISTS betweenness probe. Distinct
-    keys per group from a hashed permutation."""
-
-    n = 40
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 8).alias("g")).distinct())
-    seq = (gg.select("g", F.explode(F.sequence(F.lit(0),
-                                               F.lit(n - 1)))
-                     .alias("pos"))
-           .withColumn("key", (F.col("g") * 17 + F.col("pos") * 53)
-                       % 127)
-           .selectExpr("cast(g as long) as g",
-                       "cast(pos as long) as pos",
-                       "cast(key as long) as key"))
-    # hashed keys may collide within a group: keep first occurrence
-    w = Window.partitionBy("g", "key").orderBy("pos")
-    seq = (seq.withColumn("rn", F.row_number().over(w))
-           .where("rn = 1").drop("rn"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            grp = grp.sort_values("pos")
-            root = None
-            nodes = {}  # key -> (left, right)
-            depth = {}
-            for k in grp["key"]:
-                k = int(k)
-                if root is None:
-                    root = k
-                    nodes[k] = [None, None]
-                    depth[k] = 0
-                    continue
-                cur, d = root, 0
-                while True:
-                    nxt = 0 if k < cur else 1
-                    if nodes[cur][nxt] is None:
-                        nodes[cur][nxt] = k
-                        nodes[k] = [None, None]
-                        depth[k] = d + 1
-                        break
-                    cur = nodes[cur][nxt]
-                    d += 1
-            out += [(gv, k, d) for k, d in depth.items()]
-        return pd.DataFrame(out, columns=["g", "key", "depth"])
-
-    return (seq.groupBy("g")
-            .applyInPandas(run, "g long, key long, depth long")
-            .orderBy("g", "key"))
-
-
-_BST_DEPTHS_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 8 AS g FROM documents),
-raw AS (
-  SELECT g, p.x AS pos, (g * 17 + p.x * 53) % 127 AS key
-  FROM gg CROSS JOIN generate_series(0, 39) p(x)),
-seq AS MATERIALIZED (
-  SELECT g, key, min(pos) AS pos FROM raw GROUP BY g, key),
-pairs AS (
-  SELECT x.g, x.key
-  FROM seq x JOIN seq y
-    ON y.g = x.g AND y.pos < x.pos
-  WHERE NOT EXISTS (
-     SELECT 1 FROM seq z
-     WHERE z.g = x.g
-       AND z.key > least(x.key, y.key)
-       AND z.key < greatest(x.key, y.key)
-       AND z.pos < y.pos)),
-cnt AS (SELECT g, key, count(*) AS depth FROM pairs GROUP BY g, key)
-SELECT CAST(s.g AS BIGINT) AS g, CAST(s.key AS BIGINT) AS key,
-       CAST(coalesce(c.depth, 0) AS BIGINT) AS depth
-FROM seq s LEFT JOIN cnt c ON c.g = s.g AND c.key = s.key
-ORDER BY g, key
-"""
-
-
-def _q_cartesian_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cartesian trees (min-heap by value, inorder by position) — the
-    RMQ/treap substrate: engine runs the real O(n) STACK construction;
-    oracle uses the nearest-smaller characterization — parent(i) is
-    whichever of the previous-smaller / next-smaller neighbors has
-    the LARGER value (root: neither exists) — as position-range
-    argmin joins. Values made distinct by (hash, pos) packing."""
-
-    n = 48
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 8).alias("g")).distinct())
-    seq = (gg.select("g", F.explode(F.sequence(F.lit(0),
-                                               F.lit(n - 1)))
-                     .alias("pos"))
-           .selectExpr("cast(g as long) as g",
-                       "cast(pos as long) as pos",
-                       # distinct by construction: hash * 64 + pos
-                       "cast(((g * 29 + pos * 41) % 97) * 64 + pos "
-                       "as long) as v"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            grp = grp.sort_values("pos")
-            vals = list(zip(grp["pos"], grp["v"]))
-            stack = []  # (pos, v)
-            parent = {}
-            for pos, v in vals:
-                pos, v = int(pos), int(v)
-                last = None
-                while stack and stack[-1][1] > v:
-                    last = stack.pop()
-                if last is not None:
-                    parent[last[0]] = pos
-                if stack:
-                    parent[pos] = stack[-1][0]
-                stack.append((pos, v))
-            out += [(gv, int(p), parent.get(int(p)))
-                    for p, _ in vals]
-        return pd.DataFrame(out, columns=["g", "pos", "parent"])
-
-    return (seq.groupBy("g")
-            .applyInPandas(run, "g long, pos long, parent long")
-            .orderBy("g", "pos"))
-
-
-_CARTESIAN_TREE_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 8 AS g FROM documents),
-seq AS MATERIALIZED (
-  SELECT g, p.x AS pos,
-         ((g * 29 + p.x * 41) % 97) * 64 + p.x AS v
-  FROM gg CROSS JOIN generate_series(0, 47) p(x)),
-ps AS (
-  -- previous-smaller: the max position j < i with v_j < v_i
-  SELECT a.g, a.pos, max(b.pos) AS jpos
-  FROM seq a JOIN seq b ON b.g = a.g AND b.pos < a.pos AND b.v < a.v
-  GROUP BY a.g, a.pos),
-ns AS (
-  SELECT a.g, a.pos, min(b.pos) AS jpos
-  FROM seq a JOIN seq b ON b.g = a.g AND b.pos > a.pos AND b.v < a.v
-  GROUP BY a.g, a.pos)
-SELECT CAST(s.g AS BIGINT) AS g, CAST(s.pos AS BIGINT) AS pos,
-       CAST(CASE
-         WHEN p.jpos IS NULL AND n.jpos IS NULL THEN NULL
-         WHEN p.jpos IS NULL THEN n.jpos
-         WHEN n.jpos IS NULL THEN p.jpos
-         WHEN (SELECT v FROM seq t WHERE t.g = s.g AND t.pos = p.jpos)
-              > (SELECT v FROM seq t WHERE t.g = s.g
-                 AND t.pos = n.jpos)
-         THEN p.jpos ELSE n.jpos END AS BIGINT) AS parent
-FROM seq s
-LEFT JOIN ps p ON p.g = s.g AND p.pos = s.pos
-LEFT JOIN ns n ON n.g = s.g AND n.pos = s.pos
-ORDER BY g, pos
-"""
-
-
-def _q_farey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Farey sequences F_n by the REAL next-term recurrence
-    (k = ⌊(n + q₀)/q₁⌋; p₂ = k·p₁ − p₀ — each term from the previous
-    two, the Stern-Brocot mediant walk); the oracle enumerates all
-    reduced fractions with gcd probe + cross-multiplication-safe
-    ordering and ranks them. n = 5 + g mod 6 per group."""
-
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 12).alias("g")).distinct()
-          .selectExpr("cast(g as long) as g",
-                      "cast(5 + g % 6 as long) as n"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for g, n in zip(pdf["g"], pdf["n"]):
-            g, n = int(g), int(n)
-            a, b, c, d = 0, 1, 1, n
-            pos = 0
-            out.append((g, pos, a, b))
-            while c <= n:
-                pos += 1
-                out.append((g, pos, c, d))
-                k = (n + b) // d
-                a, b, c, d = c, d, k * c - a, k * d - b
-        return pd.DataFrame(out, columns=["g", "pos", "p", "q"])
-
-    return (gg.groupBy("g")
-            .applyInPandas(run, "g long, pos long, p long, q long")
-            .orderBy("g", "pos"))
-
-
-_FAREY_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 12 AS g FROM documents),
-fr AS (
-  SELECT gg.g, p.x AS p, q.x AS q
-  FROM gg
-  CROSS JOIN generate_series(0, 10) p(x)
-  CROSS JOIN generate_series(1, 10) q(x)
-  WHERE q.x <= 5 + gg.g % 6 AND p.x <= q.x AND gcd(p.x, q.x) = 1)
-SELECT CAST(g AS BIGINT) AS g,
-       CAST(row_number() OVER (PARTITION BY g
-                               ORDER BY CAST(p AS DOUBLE) / q) - 1
-            AS BIGINT) AS pos,
-       CAST(p AS BIGINT) AS p, CAST(q AS BIGINT) AS q
-FROM fr ORDER BY g, pos
-"""
-
-
-def _q_lcs_len(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest-common-subsequence lengths by the real O(nm) DP table;
-    the oracle models LCS as the LONGEST PATH in the alignment grid
-    DAG — moves right/down free, diagonal scores 1 on a character
-    match — explored by a recursive (i, j, score) walk with UNION
-    dedup, max score at the far corner. Word pairs truncated to 10
-    chars keep the grid recursion tiny."""
-
-    base = (_docs(spark, sf_dir)
-            .select((F.col("doc_id") % 200).alias("m")).distinct()
-            .selectExpr("m", f"substring({_UNI_WORD}, 1, 10) as word"))
-    pairs = (base.selectExpr("m", "word as w1",
-                             "cast((m * 7 + 3) % 200 as long) as m2")
-             .join(base.selectExpr("m as m2", "word as w2"), "m2")
-             .selectExpr("cast(m as long) as pid", "w1", "w2"))
-
-    @F.pandas_udf("long")
-    def _lcs(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-        def lcs(a, b):
-            dp = [[0] * (len(b) + 1) for _ in range(len(a) + 1)]
-            for i in range(1, len(a) + 1):
-                for j in range(1, len(b) + 1):
-                    if a[i - 1] == b[j - 1]:
-                        dp[i][j] = dp[i - 1][j - 1] + 1
-                    else:
-                        dp[i][j] = max(dp[i - 1][j], dp[i][j - 1])
-            return dp[len(a)][len(b)]
-        return pd.Series([lcs(a, b) for a, b in zip(a_s, b_s)])
-
-    return (pairs.select("pid", "w1", "w2",
-                         _lcs("w1", "w2").alias("lcs"))
-            .orderBy("pid"))
-
-
-_LCS_LEN_SQL = f"""
-WITH RECURSIVE mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-base AS MATERIALIZED (
-  SELECT m, substr({_UNI_WORD_D}, 1, 10) AS word FROM mm),
-pairs AS MATERIALIZED (
-  SELECT a.m AS pid, a.word AS w1, b.word AS w2
-  FROM base a JOIN base b ON b.m = (a.m * 7 + 3) % 200),
-walk(pid, i, j, sc) AS (
-  SELECT pid, 0, 0, 0 FROM pairs
-  UNION
-  SELECT w.pid,
-         w.i + dd.di, w.j + dd.dj,
-         w.sc + CASE WHEN dd.di = 1 AND dd.dj = 1 THEN 1 ELSE 0 END
-  FROM walk w
-  JOIN pairs p ON p.pid = w.pid
-  JOIN (VALUES (1, 0), (0, 1), (1, 1)) dd(di, dj) ON TRUE
-  WHERE w.i + dd.di <= len(p.w1) AND w.j + dd.dj <= len(p.w2)
-    AND (NOT (dd.di = 1 AND dd.dj = 1)
-         OR substr(p.w1, CAST(w.i + 1 AS INT), 1)
-            = substr(p.w2, CAST(w.j + 1 AS INT), 1)))
-SELECT CAST(p.pid AS BIGINT) AS pid, p.w1, p.w2,
-       CAST((SELECT max(w2.sc) FROM walk w2
-             WHERE w2.pid = p.pid AND w2.i = len(p.w1)
-               AND w2.j = len(p.w2)) AS BIGINT) AS lcs
-FROM pairs p ORDER BY pid
-"""
-
-
-def _q_primes_sieve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prime counts per 100-block up to 3000: the engine runs a real
-    SIEVE OF ERATOSTHENES (boolean array, multiples crossed off from
-    p²); the oracle counts by the definition — a NOT EXISTS divisor
-    probe per candidate. Block histogram keeps the output compact."""
-
-    blocks = (_docs(spark, sf_dir)
-              .select((F.col("doc_id") % 30).alias("b")).distinct()
-              .selectExpr("cast(b as long) as b"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        N = 3000
-        is_p = [True] * (N + 1)
-        is_p[0] = is_p[1] = False
-        p = 2
-        while p * p <= N:
-            if is_p[p]:
-                for q in range(p * p, N + 1, p):
-                    is_p[q] = False
-            p += 1
-        out = []
-        for b in pdf["b"]:
-            b = int(b)
-            lo, hi = b * 100, b * 100 + 99
-            out.append((b, sum(1 for v in range(lo, hi + 1)
-                               if v <= N and is_p[v])))
-        return pd.DataFrame(out, columns=["b", "n_primes"])
-
-    return (blocks.groupBy("b")
-            .applyInPandas(run, "b long, n_primes long")
-            .orderBy("b"))
-
-
-_PRIMES_SIEVE_SQL = """
-WITH blocks AS (SELECT DISTINCT doc_id % 30 AS b FROM documents),
-cand AS (
-  SELECT blocks.b, blocks.b * 100 + o.x AS v
-  FROM blocks CROSS JOIN generate_series(0, 99) o(x)),
-primes AS (
-  SELECT b, v FROM cand
-  WHERE v >= 2 AND NOT EXISTS (
-    SELECT 1 FROM generate_series(2, 55) d(x)
-    WHERE d.x * d.x <= cand.v AND cand.v % d.x = 0))
-SELECT CAST(c.b AS BIGINT) AS b,
-       CAST(count(p.v) AS BIGINT) AS n_primes
-FROM (SELECT DISTINCT b FROM cand) c
-LEFT JOIN primes p ON p.b = c.b
-GROUP BY c.b ORDER BY b
-"""
-
-
-def _q_matrix_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matrix-chain multiplication optimum (the classic interval DP
-    m[i,j] = min over splits) for 7-matrix chains; the oracle
-    enumerates EVERY parenthesization cost — interval-length rounds
-    unioning all split combinations (length-7 chains have Catalan(6)
-    = 132 trees) — and takes the min. DP vs exhaustive tree
-    enumeration."""
-
-    n = 7  # matrices -> 8 dimensions d0..d7
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 10).alias("g")).distinct())
-    dims = (gg.select("g", F.explode(F.sequence(F.lit(0), F.lit(n)))
-                      .alias("i"))
-            .selectExpr("cast(g as long) as g", "cast(i as long) as i",
-                        "cast(2 + (g * 11 + i * 7) % 9 as long) as d"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            d = [int(v) for v in grp.sort_values("i")["d"]]
-            m = [[0] * (n + 1) for _ in range(n + 1)]
-            for ln in range(2, n + 1):
-                for i in range(1, n - ln + 2):
-                    j = i + ln - 1
-                    m[i][j] = min(
-                        m[i][k] + m[k + 1][j]
-                        + d[i - 1] * d[k] * d[j]
-                        for k in range(i, j))
-            out.append((gv, m[1][n]))
-        return pd.DataFrame(out, columns=["g", "cost"])
-
-    return (dims.groupBy("g")
-            .applyInPandas(run, "g long, cost long")
-            .orderBy("g"))
-
-
-def _matrix_chain_sql(n: int = 7) -> str:
-    base = """
-WITH gg AS (SELECT DISTINCT doc_id % 10 AS g FROM documents),
-dims AS MATERIALIZED (
-  SELECT g, i.x AS i, 2 + (g * 11 + i.x * 7) % 9 AS d
-  FROM gg CROSS JOIN generate_series(0, 7) i(x)),
--- c{L}: ALL achievable costs of intervals [i, j] with j-i+1 = L
-c1 AS MATERIALIZED (
-  SELECT g, i.x AS i, i.x AS j, CAST(0 AS BIGINT) AS cost
-  FROM gg CROSS JOIN generate_series(1, 7) i(x))"""
-    parts = []
-    for L in range(2, n + 1):
-        unions = []
-        for l1 in range(1, L):
-            l2 = L - l1
-            unions.append(f"""
-    SELECT a.g, a.i, b.j,
-           a.cost + b.cost
-             + da.d * dk.d * dj.d AS cost
-    FROM c{l1} a
-    JOIN c{l2} b ON b.g = a.g AND b.i = a.j + 1
-    JOIN dims da ON da.g = a.g AND da.i = a.i - 1
-    JOIN dims dk ON dk.g = a.g AND dk.i = a.j
-    JOIN dims dj ON dj.g = a.g AND dj.i = b.j
-    WHERE b.j - a.i + 1 = {L}""")
-        parts.append(f""",
-c{L} AS MATERIALIZED (
-  SELECT DISTINCT g, i, j, cost FROM ({" UNION ALL ".join(unions)}) u)""")
-    tail = f"""
-SELECT CAST(g AS BIGINT) AS g, CAST(min(cost) AS BIGINT) AS cost
-FROM c{n} GROUP BY g ORDER BY g
-"""
-    return base + "".join(parts) + tail
-
-
-def _q_tsp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TSP optimum on 8 cities by HELD-KARP (the real O(2ⁿn²) bitmask
-    DP); the oracle enumerates all 7! = 5040 tours from the fixed
-    start with a 7-fold distinctness join and takes the min cost.
-    Symmetric integer distances d(i,j) = 1 + (i·j·7 + i + j + g) mod
-    30 on unordered pairs."""
-
-    n = 8
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 4).alias("g")).distinct()
-          .selectExpr("cast(g as long) as g"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for g in pdf["g"]:
-            g = int(g)
-
-            def dist(i, j):
-                a, b = min(i, j), max(i, j)
-                return 1 + (a * b * 7 + a + b + g) % 30
-            FULL = 1 << n
-            INF = 10 ** 9
-            dp = [[INF] * n for _ in range(FULL)]
-            dp[1][0] = 0
-            for mask in range(FULL):
-                if not mask & 1:
-                    continue
-                for last in range(n):
-                    if not (mask >> last) & 1:
-                        continue
-                    cur = dp[mask][last]
-                    if cur == INF:
-                        continue
-                    for nxt in range(n):
-                        if (mask >> nxt) & 1:
-                            continue
-                        nm = mask | (1 << nxt)
-                        cand = cur + dist(last, nxt)
-                        if cand < dp[nm][nxt]:
-                            dp[nm][nxt] = cand
-            best = min(dp[FULL - 1][k] + dist(k, 0)
-                       for k in range(1, n))
-            out.append((g, best))
-        return pd.DataFrame(out, columns=["g", "cost"])
-
-    return (gg.groupBy("g").applyInPandas(run, "g long, cost long")
-            .orderBy("g"))
-
-
-def _tsp_sql(n: int = 8) -> str:
-    def dist(i, j):
-        return (f"(1 + (least({i}, {j}) * greatest({i}, {j}) * 7 "
-                f"+ least({i}, {j}) + greatest({i}, {j}) + gg.g)"
-                " % 30)")
-    joins = "\n  ".join(
-        f"CROSS JOIN generate_series(1, {n - 1}) p{k}(x)"
-        for k in range(1, n))
-    distinct = " AND ".join(
-        f"p{a}.x != p{b}.x"
-        for a in range(1, n) for b in range(a + 1, n))
-    legs = [dist(0, "p1.x")]
-    for k in range(1, n - 1):
-        legs.append(dist(f"p{k}.x", f"p{k + 1}.x"))
-    legs.append(dist(f"p{n - 1}.x", 0))
-    cost = " + ".join(legs)
-    return f"""
-WITH gg AS (SELECT DISTINCT doc_id % 4 AS g FROM documents),
-tours AS (
-  SELECT gg.g, {cost} AS cost
-  FROM gg
-  {joins}
-  WHERE {distinct})
-SELECT CAST(g AS BIGINT) AS g, CAST(min(cost) AS BIGINT) AS cost
-FROM tours GROUP BY g ORDER BY g
-"""
-
-
-def _q_coin_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coin-change WAY counts (order-free combinations) for coins
-    {1, 2, 5, 10} by the real unbounded-knapsack DP; the oracle
-    enumerates multiplicity 4-tuples with a filtered cross join —
-    counting DP vs direct combination enumeration."""
-
-    ns = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 24).alias("m")).distinct()
-          .selectExpr("cast(5 + m * 2 as long) as amt"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        coins = (1, 2, 5, 10)
-        A = 60
-        ways = [1] + [0] * A
-        for c in coins:
-            for a in range(c, A + 1):
-                ways[a] += ways[a - c]
-        return pd.DataFrame(
-            [(int(a), ways[int(a)]) for a in pdf["amt"]],
-            columns=["amt", "ways"])
-
-    return (ns.groupBy("amt").applyInPandas(run, "amt long, ways long")
-            .orderBy("amt"))
-
-
-_COIN_CHANGE_SQL = """
-WITH ns AS (SELECT DISTINCT 5 + (doc_id % 24) * 2 AS amt
-            FROM documents)
-SELECT CAST(ns.amt AS BIGINT) AS amt,
-       CAST((SELECT count(*)
-             FROM generate_series(0, 60) c1(x)
-             CROSS JOIN generate_series(0, 30) c2(x)
-             CROSS JOIN generate_series(0, 12) c5(x)
-             CROSS JOIN generate_series(0, 6) c10(x)
-             WHERE c1.x + 2 * c2.x + 5 * c5.x + 10 * c10.x = ns.amt)
-            AS BIGINT) AS ways
-FROM ns ORDER BY amt
-"""
-
-
-def _q_max_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Max flow s=0 → t=9 by EDMONDS-KARP (real BFS augmenting paths
-    with residual capacities); the oracle computes the same number
-    through DUALITY — min over all 2⁸ s-t cuts of the crossing
-    capacity (bitmask subset enumeration). Max-flow = min-cut as a
-    cross-engine identity. 10-node dense digraphs with derived
-    integer capacities."""
-
-    n = 10
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 5).alias("g")).distinct())
-    edges = (gg.select("g",
-                       F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
-                       .alias("u"))
-             .select("g", "u",
-                     F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
-                     .alias("v"))
-             .where("u != v and (u * 3 + v * 7 + g) % 4 = 0")
-             .selectExpr("cast(g as long) as g",
-                         "cast(u as long) as u", "cast(v as long) as v",
-                         "cast(1 + (u * 5 + v * 11 + g * 13) % 9 "
-                         "as long) as cap"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from collections import deque
-
-        out = []
-        for gv, grp in pdf.groupby("g", sort=False):
-            cap = [[0] * n for _ in range(n)]
-            for u, v, c in zip(grp["u"], grp["v"], grp["cap"]):
-                cap[int(u)][int(v)] += int(c)
-            flow = 0
-            while True:
-                # BFS shortest augmenting path in the residual graph
-                par = [-1] * n
-                par[0] = 0
-                q = deque([0])
-                while q and par[n - 1] == -1:
-                    x = q.popleft()
-                    for y in range(n):
-                        if par[y] == -1 and cap[x][y] > 0:
-                            par[y] = x
-                            q.append(y)
-                if par[n - 1] == -1:
-                    break
-                # bottleneck
-                b, y = 10 ** 9, n - 1
-                while y != 0:
-                    b = min(b, cap[par[y]][y])
-                    y = par[y]
-                y = n - 1
-                while y != 0:
-                    cap[par[y]][y] -= b
-                    cap[y][par[y]] += b
-                    y = par[y]
-                flow += b
-            out.append((gv, flow))
-        return pd.DataFrame(out, columns=["g", "max_flow"])
-
-    return (edges.groupBy("g")
-            .applyInPandas(run, "g long, max_flow long")
-            .orderBy("g"))
-
-
-_MAX_FLOW_SQL = """
-WITH gg AS (SELECT DISTINCT doc_id % 5 AS g FROM documents),
-edges AS MATERIALIZED (
-  SELECT gg.g, u.x AS u, v.x AS v,
-         1 + (u.x * 5 + v.x * 11 + gg.g * 13) % 9 AS cap
-  FROM gg
-  CROSS JOIN generate_series(0, 9) u(x)
-  CROSS JOIN generate_series(0, 9) v(x)
-  WHERE u.x != v.x AND (u.x * 3 + v.x * 7 + gg.g) % 4 = 0),
--- s-t cuts: bit i of s-mask says node i+1 is on the SOURCE side
--- (node 0 always source side, node 9 always sink side)
-cuts AS (
-  SELECT gg.g, m.x AS mask FROM gg
-  CROSS JOIN generate_series(0, 255) m(x)),
-cutcap AS (
-  SELECT c.g, c.mask, coalesce(sum(e.cap), 0) AS capsum
-  FROM cuts c LEFT JOIN edges e
-    ON e.g = c.g
-   AND (e.u = 0 OR (e.u BETWEEN 1 AND 8
-                    AND ((c.mask >> (e.u - 1)) & 1) = 1))
-   AND (e.v = 9 OR (e.v BETWEEN 1 AND 8
-                    AND ((c.mask >> (e.v - 1)) & 1) = 0))
-  GROUP BY c.g, c.mask)
-SELECT CAST(g AS BIGINT) AS g,
-       CAST(min(capsum) AS BIGINT) AS max_flow
-FROM cutcap GROUP BY g ORDER BY g
-"""
-
-
-def _q_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Min-cost 6×6 assignment by the BITMASK SUBSET DP
-    (dp[mask] over assigned columns, row = popcount — the real
-    O(2ⁿn) algorithm); the oracle enumerates all 720 permutations
-    with a 6-fold distinctness join and takes the min. Integer cost
-    matrix c(i,j) = 1 + (i·7 + j·13 + g·3) mod 40."""
-
-    n = 6
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 8).alias("g")).distinct()
-          .selectExpr("cast(g as long) as g"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for g in pdf["g"]:
-            g = int(g)
-
-            def c(i, j):
-                return 1 + (i * 7 + j * 13 + g * 3) % 40
-            INF = 10 ** 9
-            dp = [INF] * (1 << n)
-            dp[0] = 0
-            for mask in range(1 << n):
-                if dp[mask] == INF:
-                    continue
-                i = bin(mask).count("1")
-                if i >= n:
-                    continue
-                for j in range(n):
-                    if not (mask >> j) & 1:
-                        nm = mask | (1 << j)
-                        cand = dp[mask] + c(i, j)
-                        if cand < dp[nm]:
-                            dp[nm] = cand
-            out.append((g, dp[(1 << n) - 1]))
-        return pd.DataFrame(out, columns=["g", "cost"])
-
-    return (gg.groupBy("g").applyInPandas(run, "g long, cost long")
-            .orderBy("g"))
-
-
-def _assignment_sql(n: int = 6) -> str:
-    joins = "\n  ".join(
-        f"CROSS JOIN generate_series(0, {n - 1}) a{i}(x)"
-        for i in range(n))
-    distinct = " AND ".join(
-        f"a{i}.x != a{j}.x" for i in range(n) for j in range(i + 1, n))
-    cost = " + ".join(
-        f"(1 + ({i} * 7 + a{i}.x * 13 + gg.g * 3) % 40)"
-        for i in range(n))
-    return f"""
-WITH gg AS (SELECT DISTINCT doc_id % 8 AS g FROM documents),
-perms AS (
-  SELECT gg.g, {cost} AS cost
-  FROM gg
-  {joins}
-  WHERE {distinct})
-SELECT CAST(g AS BIGINT) AS g, CAST(min(cost) AS BIGINT) AS cost
-FROM perms GROUP BY g ORDER BY g
-"""
-
-
-def _q_egg_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Egg-drop minimal trials (k eggs, N floors): engine runs the
-    real coverage DP f(t,k) = f(t−1,k−1) + f(t−1,k) + 1 and stops at
-    the first t covering N; the oracle uses the closed
-    characterization — answer = min t with Σ_{i≤k} C(t,i) ≥ N, the
-    binomials from a Pascal product recursion. k = 2 + g mod 3,
-    N = 10 + g·17."""
-
-    gg = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 20).alias("g")).distinct()
-          .selectExpr("cast(g as long) as g",
-                      "cast(2 + g % 3 as long) as k",
-                      "cast(10 + g * 17 as long) as floors"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for g, k, nfl in zip(pdf["g"], pdf["k"], pdf["floors"]):
-            g, k, nfl = int(g), int(k), int(nfl)
-            cover = [0] * (k + 1)
-            t = 0
-            while cover[k] < nfl:
-                t += 1
-                for e in range(k, 0, -1):
-                    cover[e] = cover[e - 1] + cover[e] + 1
-            out.append((g, t))
-        return pd.DataFrame(out, columns=["g", "trials"])
-
-    return (gg.groupBy("g").applyInPandas(run, "g long, trials long")
-            .orderBy("g"))
-
-
-_EGG_DROP_SQL = """
-WITH RECURSIVE gg AS (
-  SELECT DISTINCT doc_id % 20 AS g FROM documents),
-inst AS (SELECT g, 2 + g % 3 AS k, 10 + g * 17 AS floors FROM gg),
-binom(t, i, c) AS (
-  SELECT t.x, 0, CAST(1 AS BIGINT)
-  FROM generate_series(0, 400) t(x)
-  UNION ALL
-  SELECT t, i + 1, c * (t - i) // (i + 1) FROM binom
-  WHERE i < 4 AND i < t),
-cover AS (
-  SELECT b.t, i2.k, sum(b.c) AS cov
-  FROM binom b JOIN (SELECT DISTINCT k FROM inst) i2
-    ON b.i BETWEEN 1 AND i2.k
-  GROUP BY b.t, i2.k)
-SELECT CAST(inst.g AS BIGINT) AS g,
-       CAST((SELECT min(c.t) FROM cover c
-             WHERE c.k = inst.k AND c.cov >= inst.floors)
-            AS BIGINT) AS trials
-FROM inst ORDER BY g
-"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Ordering is part of the verification surface: the driver's correctness
     # gate records the FIRST 50 entries. Per VERDICT r4 'Next round' #1, the
@@ -19352,327 +13281,52 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # entries keep their historical order after the window and remain covered
     # by scripts/oracle_check.py, which checks ALL entries.
     base = {
-        # -- new in round 4: never driver-checked --------------------------
-        # batch 30: geohash cells, eTLD+1 longest-suffix, crosstab,
-        # Arrow scalar UDF, statestore reader, mergeSchema evolution.
-        # batch 31: crawl-native containers — member-gzipped WARC
-        # (Common Crawl's real layout) + ZIP central-directory listing.
-        # batch 33: MP3 frame-header walk (container metadata without
-        # audio decode) + grid-bucketed DBSCAN over planted clumps.
-        # batch 34: bit-exact experiment stats (Welch t, EWMA-1/2) and
-        # the remaining SQL function surfaces (luhn_check, bitwise
-        # aggs, regexp family, percent_rank/cume_dist/nth_value).
-        # batch 35: second columnar codec (ORC), binaryFile blob
-        # ingest, corrupt-file-tolerant scans, DataSketches HLL with
-        # a 2%-accuracy contract pinned as an exact boolean.
-        # batch 36: exact tree edge betweenness (closed form over two
-        # O(log) passes), corpus-level RAKE, suffix-rule stemming.
-        # batch 37: distributed Borůvka MST — closed-form oracle on
-        # edge-disjoint planted triangles (cycle property).
-        # batch 38: array set algebra, binary/encoding functions,
-        # approx_percentile accuracy contract.
-        # batch 39: redirect-loop detection — pointer-doubling
-        # functional-graph cycles vs a self-reachability walk oracle.
-        # batch 40: decision-stump training, exact integer Gini.
-        # batch 41: distributed SCC by coloring — directed
-        # reachability partition, mutual-reach walk oracle.
-        # batch 42: prefix-filtering τ-join (exact candidate scheme).
-        # batch 43: k-truss edge peel + clustering coefficient.
-        # batch 44: positional phrase search over the inverted index.
-        # batch 45: schema-drift union + to_json wire-format pin.
-        # batch 46: parallel greedy maximal matching.
-        # batch 47: Luby MIS + time-respecting reachability.
-        # batch 48: computational geometry — two-level convex hull,
-        # grid-certified closest pair, segment-crossing and rectangle
-        # overlap pair joins (responsibility-cell dedup, no DISTINCT).
-        # batch 49: integer-exact ML training — grouped OLS, batch
-        # perceptron rounds, naive Bayes with cross-multiplied argmax.
-        # batch 50: tree centralities — rerooted closeness sums and
-        # per-tree diameter, both closed-form (no all-pairs walks).
-        # batch 51: unigram-LM Viterbi segmentation (3rd tokenizer
-        # family) + exact weighted median.
-        # batch 52: REAL GIF87a decoder (full LZW) — decoder family #6.
-        # batch 53: Hilbert locality key (dialect-neutral rotation
-        # chain) + DAG longest-path levels.
-        # batch 54: crawl infra — RFC 9309 robots.txt parse, SURT/CDX
-        # canonical keys, DataFrameNaFunctions surface.
-        # batch 55: doubled-graph bipartiteness + APT 2-SAT over the
-        # distributed SCC.
-        # batch 56: batch LCA via binary lifting.
-        # batch 57: Pareto skyline, Haar DWT, Misra–Gries exact
-        # heavy hitters.
-        # batch 58: shoelace centroid + stream-stream LEFT SEMI join.
-        # batch 59: shard routing — HRW minimal-movement pin +
-        # consistent-hash ring with vnodes.
-        # batch 60: densest subgraph by BKV parallel peel.
-        # batch 61: aggregate surface #2 (max_by family), BWT,
-        # JSON path extraction.
-        # batch 62: storage codecs — front coding, Gorilla DoD.
-        # batch 63: greedy max-coverage selection.
-        # batch 64: FILTER aggs, lateral column aliases, top-N plan.
-        # batch 65: A-priori frequent triples + MOSS winnowing.
-        # batch 66: MERGE emulation (jar-free J10) + interval stabbing.
-        # batch 67: forward as-of join + exact join cardinality.
-        # batch 68: digest functions + thresholded levenshtein.
-        # batch 69: python DataSource filter pushdown (Spark 4.1).
-        # batch 70: polygon convexity + distinct substrings.
-        # batch 71: shortest-path counts (Brandes σ) + record linkage.
-        # batch 72: Euler tour via list ranking (pointer doubling).
-        # batch 73: ancestor queries as Euler-interval containment.
-        # batch 74: nucleus top-p selection + de Bruijn graph stats.
-        # batch 75: suffix arrays + polynomial convolution.
-        # batch 76: bridges by the Tarjan-Vishkin XOR certificate
-        # (spanning tree + Euler intervals + one two-level prefix-XOR
-        # scan) and 2-edge-connected components on top.
-        # batch 131: perceptual-hash banded near-dup image pairs.
         "phash_pairs": _q_phash_pairs,
-        # batch 130: Catalan DP vs closed form + fast-doubling
-        # Fibonacci vs linear recurrence.
-        "catalan": _q_catalan,
-        "fib_double": _q_fib_double,
-        # batch 129: CRT reconstruction + baby-step giant-step
-        # discrete logs (planted closed-form oracles).
-        "crt": _q_crt,
-        "dlog_bsgs": _q_dlog,
-        # batch 128: DFA state equivalence — Moore refinement vs
-        # distinguishable-pairs closure.
-        "dfa_min": _q_dfa_min,
-        # batch 127: Gale-Shapley stable matching vs full
-        # enumeration + stability filter.
-        "stable_match": _q_stable_match,
-        # batch 126: polynomial GCD over GF(p) (planted-factor
-        # closed-form oracle).
-        "poly_gcd": _q_poly_gcd,
-        # batch 125: Lehmer-code permutation ranking.
-        "perm_rank": _q_perm_rank,
-        # batch 124: Karatsuba digit multiplication vs convolution
-        # + carry-walk oracle.
-        "bigmul": _q_bigmul,
-        # batch 123: Fenwick-tree update/query timeline replay.
-        "fenwick_timeline": _q_fenwick,
-        # batch 122: NTT cyclic convolution mod 12289.
-        "ntt_conv": _q_ntt_conv,
-        # batch 121: exact-Fraction simplex vs vertex enumeration.
-        "lp2_simplex": _q_lp2,
-        # batch 120: CYK membership for a CNF grammar.
-        "cyk_parse": _q_cyk,
-        # batch 119: Tonelli-Shanks modular square roots + Pollard
-        # rho smallest prime factors.
-        "mod_sqrt": _q_mod_sqrt,
-        "spf": _q_spf,
-        # batch 118: GF(2) rank by bit elimination + Galois LFSR
-        # sequences.
-        "gf2_rank": _q_gf2_rank,
-        "lfsr": _q_lfsr,
-        # batch 117: Shamir secret reconstruction over GF(p).
-        "shamir": _q_shamir,
-        # batch 116: unrestricted Damerau-Levenshtein (Lowrance-
-        # Wagner DP vs DuckDB's builtin).
-        "damerau": _q_damerau,
-        # batch 115: move-to-front coding (list-state SQL recursion
-        # oracle) + Wald-Wolfowitz runs statistics.
-        "mtf_encode": _q_mtf_encode,
-        "runs_test": _q_runs_test,
-        # batch 114: Lempel-Ziv complexity factor counts.
-        "lz_complexity": _q_lz_complexity,
-        # batch 113: isotonic regression (PAVA vs minimax).
-        "isotonic": _q_isotonic,
-        # batch 112: continued-fraction convergents (three-term
-        # recurrence, last convergent == reduced rational pin).
-        "convergents": _q_convergents,
-        # batch 111: gcd folds (built from different primitives per
-        # dialect) + continued-fraction expansions.
-        "gcd_fold": _q_gcd_fold,
-        "contfrac": _q_contfrac,
-        # batch 110: temporal earliest-arrival journeys.
         "earliest_arrival": _q_earliest_arrival,
-        # batch 109: repeated-subtree census (per-node AHU codes) +
-        # multiclass confusion counts.
         "subtree_repeats": _q_subtree_repeats,
-        "confusion": _q_confusion,
-        # batch 108: dominance onion layers (peel vs Mirsky) +
-        # circular integer autocorrelation peaks.
         "pareto_layers": _q_pareto_layers,
-        "lag_autocorr": _q_lag_autocorr,
-        # batch 107: Manacher longest palindromic substring.
-        "manacher": _q_manacher,
-        # batch 106: spanning-tree counts by Kirchhoff Matrix-Tree
-        # (Bareiss determinant of the Laplacian minor vs closed forms).
-        "spanning_count": _q_spanning_count,
-        # batch 105: Huffman optimal-code cost (Kraft multiset
-        # characterization oracle) + Horn-clause forward chaining.
-        "huffman_cost": _q_huffman_cost,
         "horn_sat": _q_horn_sat,
-        # batch 104: BOM explosion over a layered DAG + prefix
-        # autocomplete top-k.
         "bom_rollup": _q_bom_rollup,
-        "autocomplete": _q_autocomplete,
-        # batch 103: merge-sort inversion counts + exact integer
-        # sign test (binomial tails, no floats).
-        "inversions": _q_inversions,
-        "sign_test": _q_sign_test,
-        # batch 102: exact Bareiss determinants (closed-form LU
-        # oracle) + anagram canonical classes.
-        "det_bareiss": _q_det_bareiss,
-        "anagrams": _q_anagrams,
-        # batch 101: streaming stateful token bucket (cross-batch
-        # state carry) + sorted-neighborhood ER blocking.
         "stream_bucket": _q_stream_bucket,
         "sorted_blocking": _q_sorted_blocking,
-        # batch 100: string-formatting surface (format_string ≡
-        # printf, pads, translate, repeat, reverse).
-        "format_funcs": _q_format_funcs,
-        # batch 99: coordinated hash sampling (join-of-samples ≡
-        # sample-of-join) + exact discrete MAD.
-        "coord_sample": _q_coord_sample,
-        "mad_groups": _q_mad_groups,
-        # batch 98: inter-arrival bot regularity (exact integer
-        # variance) + reciprocal-rank fusion (fixed-op-tree floats).
-        "bot_gaps": _q_bot_gaps,
-        "rrf_fuse": _q_rrf_fuse,
-        # batch 97: two classic DPs with exponential-definition
-        # oracles — 0/1 knapsack + weighted interval scheduling.
-        "knapsack": _q_knapsack,
-        "wis_max": _q_wis_max,
-        # batch 96: time-weighted average (single-division exact) +
-        # gap-constrained sequential pattern counts.
-        "twap": _q_twap,
-        "gap_patterns": _q_gap_patterns,
-        # batch 95: patience-sorting LIS + difference-array range
-        # updates through the two-level prefix-sum scan.
-        "lis_len": _q_lis,
         "range_updates": _q_range_updates,
-        # batch 94: per-host token-bucket rate limiting (genuinely
-        # non-associative stateful scan, bucketed applyInPandas).
         "token_bucket": _q_token_bucket,
-        # batch 93: APSP by min-plus matrix squaring (tropical
-        # semiring, O(log) rounds).
         "apsp_minplus": _q_apsp,
-        # batch 92: max-weight independent set tree DP (2^8 subset
-        # brute-force oracle) + KMP smallest period.
         "tree_mwis": _q_tree_mwis,
-        "min_period": _q_min_period,
-        # batch 91: O(log) transitive closure by path doubling +
-        # 4-cycle counting by the codegree identity.
         "closure_square": _q_closure_square,
         "c4_count": _q_c4_count,
-        # batch 90: per-tree radius/center by eccentricity rerooting.
         "tree_center": _q_tree_center,
-        # batch 89: exact rectangle-union area by slab sweep.
         "rect_area": _q_rect_area,
-        # batch 88: Tarjan-Vishkin biconnectivity — blocks + cut
-        # vertices (flower-chain closed-form oracle).
         "biconnected": _q_biconnected,
         "articulation": _q_articulation,
-        # batch 87: streaming order-free integrity fingerprints.
         "stream_fp": _q_stream_fp,
-        # batch 86: golden-record entity resolution (multi-key star
-        # links + CC closure + master-attribute consolidation).
         "golden_record": _q_golden_record,
-        # batch 85: longest repeated substring (max LCP) + Eulerian
-        # path/circuit classification per component.
-        "longest_repeat": _q_longest_repeat,
         "euler_path": _q_euler_path,
-        # batch 84: instant-runoff voting elimination rounds.
         "irv_rounds": _q_irv,
-        # batch 83: Kasai LCP arrays + calendar month-clamp parity.
-        "lcp_array": _q_lcp_array,
-        "month_arith": _q_month_arith,
-        # batch 82: broadcast Aho-Corasick multi-pattern counts +
-        # Merkle tree levels (integrity/sync primitive).
-        "aho_corasick": _q_aho_corasick,
         "merkle_tree": _q_merkle,
-        # batch 81: greedy interval scheduling as pointer doubling +
-        # sparse-table RMQ built in log shifted-join rounds.
         "interval_sched": _q_interval_sched,
         "rmq_sparse": _q_rmq_sparse,
-        # batch 80: Jones-Plassmann greedy coloring (deterministic
-        # priority rounds; oracle replays the rounds unrolled).
         "jp_color": _q_jp_color,
-        # batch 79: Spark built-in soundex vs a from-scratch window-SQL
-        # replication of its exact algorithm + GROUP BY ALL surface.
-        "soundex": _q_soundex,
-        "group_all": _q_group_all,
-        # batch 78: exact selection by value-domain bisection (zero
-        # shuffle) + kNN majority-vote classifier.
         "kth_select": _q_kth_select,
         "knn_classify": _q_knn_classify,
-        # batch 77: AHU tree-isomorphism classes + blocked matmul.
         "tree_iso": _q_tree_iso,
         "block_matmul": _q_matmul,
         "bridges": _q_bridges,
         "two_ecc": _q_two_ecc,
         "suffix_array": _q_suffix_array,
-        # batch 132 (inserted BELOW the driver window so the final
-        # first-50 rehearsal stays literal): Bron-Kerbosch maximal
-        # cliques.
-        "max_cliques": _q_max_cliques,
-        # batch 133 (below the window): totient/Möbius via real
-        # factorization vs definitional probes.
-        "totient": _q_totient,
-        # batch 134 (below the window): Hamming(7,4) ECC round trip.
-        "hamming_code": _q_hamming_code,
-        # batch 135 (below the window): two shortest distinct path
-        # lengths (k-shortest, k=2).
         "second_path": _q_second_path,
-        # batch 136 (below the window): Z-arrays + border arrays.
-        "z_array": _q_z_array,
-        "border_array": _q_border_array,
-        # batch 137 (below the window): insertion-order BST depths.
-        "bst_depths": _q_bst_depths,
-        # batch 138 (below the window): Cartesian trees via stack vs
-        # nearest-smaller characterization.
-        "cartesian_tree": _q_cartesian_tree,
-        # batch 139 (below the window): Farey sequences by the
-        # next-term recurrence.
-        "farey": _q_farey,
-        # batch 140 (below the window): LCS lengths via DP vs grid
-        # longest-path recursion.
-        "lcs_len": _q_lcs_len,
-        # batch 141 (below the window): sieve of Eratosthenes block
-        # prime counts.
-        "primes_sieve": _q_primes_sieve,
-        # batch 142 (below the window): matrix-chain optimum — DP vs
-        # exhaustive parenthesization enumeration.
-        "matrix_chain": _q_matrix_chain,
-        # batch 143 (below the window): Held-Karp TSP + coin-change
-        # way counts.
-        "tsp_held_karp": _q_tsp,
-        "coin_change": _q_coin_change,
-        # batch 144 (below the window): max-flow/min-cut duality.
-        "max_flow": _q_max_flow,
-        # batch 145 (below the window): min-cost assignment subset DP.
-        "assignment": _q_assignment,
-        # batch 146 (below the window): egg-drop DP vs binomial-sum
-        # characterization.
-        "egg_drop": _q_egg_drop,
-        "poly_mult": _q_poly_mult,
-        "nucleus_sel": _q_nucleus_sel,
-        "debruijn": _q_debruijn,
         "euler_anc": _q_euler_anc,
         "euler_tour": _q_euler_tour,
         "sp_counts": _q_sp_counts,
-        "record_linkage": _q_record_linkage,
         "poly_convex": _q_poly_convex,
-        "distinct_substr": _q_distinct_substr,
         "pushdown_source": _q_pushdown_source,
-        "hash_funcs": _q_hash_funcs,
-        "lev_threshold": _q_lev_threshold,
         "asof_fwd": _q_asof_fwd,
-        "join_card": _q_join_card,
         "merge_emul": _q_merge_emul,
         "interval_stab": _q_interval_stab,
         "apriori_l3": _q_apriori,
         "winnowing": _q_winnowing,
-        "filter_agg": _q_filter_agg,
-        "lateral_alias": _q_lateral_alias,
         "topn_limit": _q_topn_limit,
         "max_coverage": _q_max_coverage,
-        "front_coding": _q_front_coding,
-        "gorilla_dod": _q_gorilla_dod,
-        "agg_funcs2": _q_agg_funcs2,
-        "bwt_encode": _q_bwt_encode,
-        "json_path": _q_json_path,
         "densest_sub": _q_densest_sub,
         "hrw_shards": _q_hrw_shards,
         "ring_hash": _q_ring_hash,
@@ -19685,8 +13339,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bipartite": _q_bipartite,
         "two_sat": _q_two_sat,
         "robots_parse": _q_robots_parse,
-        "surt_keys": _q_surt_keys,
-        "na_funcs": _q_na_funcs,
         "hilbert_key": _q_hilbert_key,
         "topo_levels": _q_topo_levels,
         "image_gif": _q_image_gif,
@@ -19704,8 +13356,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mis_luby": _q_mis_luby,
         "temporal_reach": _q_temporal_reach,
         "max_matching": _q_max_matching,
-        "union_missing": _q_union_missing,
-        "to_json_rt": _q_to_json_rt,
         "phrase_query": _q_phrase_query,
         "ktruss": _q_ktruss,
         "clust_coef": _q_clust_coef,
@@ -19713,87 +13363,41 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scc_coloring": _q_scc_coloring,
         "stump_train": _q_stump_train,
         "redirect_loops": _q_redirect_loops,
-        "array_funcs": _q_array_funcs,
-        "bin_funcs": _q_bin_funcs,
-        "pctl_contract": _q_pctl_contract,
         "mst_boruvka": _q_mst_boruvka,
         "tree_bet": _q_tree_betweenness,
         "rake_keywords": _q_rake_keywords,
         "stem_s": _q_stem_s,
-        "orc_roundtrip": _q_orc_roundtrip,
-        "binary_files": _q_binary_files,
-        "ignore_corrupt": _q_ignore_corrupt,
-        "hll_distinct": _q_hll_distinct,
         "welch_t": _q_welch_t,
         "ewma_half": _q_ewma_half,
-        "luhn_ids": _q_luhn_ids,
-        "bit_ops": _q_bit_ops,
-        "regexp_funcs": _q_regexp_funcs,
-        "window_pct": _q_window_pct,
         "mp3_frames": _q_mp3_frames,
         "dbscan": _q_dbscan,
-        # batch 32: real TIFF decode (5th byte-level image format,
-        # both endians, multi-strip).
         "image_tiff": _q_image_tiff,
         "warc_gz": _q_warc_gz,
         "zip_scan": _q_zip_scan,
         "geohash": _q_geohash,
         "tld_split": _q_tld_split,
-        "crosstab": _q_crosstab,
-        "arrow_udf": _q_arrow_udf,
         "state_source": _q_state_source,
-        "schema_evolve": _q_schema_evolve,
-        # the three ex-rows-only fixpoints (VERDICT r3 #2) — re-pinned
-        # to the front so the r4 driver gate value-checks their new
-        # EXACT unrolled oracles (session batches had pushed them to
-        # positions 85-87):
         "strahler_order": _q_strahler,
         "fix_connectivity": _q_fix_connectivity,
         "width_network": _q_width_network,
-        # batch 21 (r4 continuation session 2): sweep-line interval
-        # merge, cohort retention, integer rolling anomaly, CIDR
-        # longest-prefix, mixture plan, threshold-levenshtein gate,
-        # INTERSECT/EXCEPT ALL, GROUPING SETS — all exact.
-        # batch 29: delta-coded postings, _metadata columns, analyze()
-        # UDTF, winsorized rollup.
         "posting_deltas": _q_posting_deltas,
-        "file_meta": _q_file_meta,
         "udtf_analyze": _q_udtf_analyze,
         "winsorize": _q_winsorize,
-        # batch 28: chained stateful streaming (dedup state + window
-        # state in one query).
         "stream_chain": _q_stream_chain,
-        # batch 27: GNN message passing, batch CDC apply, trained
-        # Cavnar-Trenkle language profiles.
         "graph_agg": _q_graph_agg,
         "cdc_apply": _q_cdc_apply,
         "lang_profile": _q_lang_profile,
-        # batch 26: WordPiece greedy longest-match tokenizer (unrolled
-        # greedy-step oracle).
         "wordpiece": _q_wordpiece,
-        # batch 25: codec-pair mojibake repair, stdlib HTML entity
-        # unescape (inverse-pair oracle), bitmap windowed distinct.
         "fix_mojibake": _q_fix_mojibake,
         "html_unescape": _q_html_unescape,
-        "window_distinct": _q_window_distinct,
-        # batch 24: deterministic DeepWalk corpus, per-frame audio
-        # energy over real PCM decode, word2vec negative sampling.
         "random_walks": _q_random_walks,
         "audio_frames": _q_audio_frames,
         "neg_samples": _q_neg_samples,
-        # batch 23: python streaming SINK (exactly-once batch log),
-        # pandas UDAF over a window frame, dynamic partition
-        # overwrite, integer histogram, dedup lineage audit — exact.
         "stream_pysink": _q_stream_pysink,
-        "pandas_window": _q_pandas_window,
-        "dyn_overwrite": _q_dyn_overwrite,
         "hist_bins": _q_hist_bins,
         "dedup_lineage": _q_dedup_lineage,
-        # batch 22: real-decode perceptual image hash, time-spine gap
-        # fill, posexplode_outer, calendar functions — all exact.
         "image_phash": _q_image_phash,
         "time_spine": _q_time_spine,
-        "explode_pos": _q_explode_pos,
         "date_funcs": _q_date_funcs,
         "interval_merge": _q_interval_merge,
         "cohort_ret": _q_cohort_ret,
@@ -19806,13 +13410,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "deg_assort": _q_deg_assort,
         "stopword_gate": _q_stopword_gate,
         "containment": _q_containment,
-        "csv_roundtrip": _q_csv_roundtrip,
         "arrow_group_agg": _q_arrow_group_agg,
-        "pandas_udaf": _q_pandas_udaf,
-        "sql_script": _q_sql_script,
-        "param_sql": _q_param_sql,
         "ignore_nulls": _q_ignore_nulls,
-        "recursive_cte": _q_recursive_cte,
         "sql_udf": _q_sql_udf,
         "nullsafe_join": _q_nullsafe_join,
         "lateral_topk": _q_lateral_topk,
@@ -19820,60 +13419,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sssp_rounds": _q_sssp_rounds,
         "simpson_div": _q_simpson_div,
         "itemset_pairs": _q_itemset_pairs,
-        "transpose_stats": _q_transpose_stats,
-        "listagg_langs": _q_listagg,
         "bitmap_distinct": _q_bitmap_distinct,
         "kn_counts": _q_kn_counts,
         "two_hop": _q_two_hop,
-        "url_parse": _q_url_parse,
-        "streaks": _q_streaks,
-        "pipe_sql": _q_pipe_sql,
-        "bm25_topk": _q_bm25_topk,
-        "chi_cells": _q_chi_cells,
-        "event_transitions": _q_event_transitions,
-        "user_paths": _q_user_paths,
-        "rank_ratios": _q_rank_ratios,
-        "map_funcs": _q_map_funcs,
         "stream_pyseq": _q_stream_pyseq,
-        "try_arith": _q_try_arith,
-        "xml_extract": _q_xml_extract,
-        "hof_funcs": _q_hof_funcs,
         "attribution": _q_attribution,
         "label_prop": _q_label_prop,
         "pearson_corr": _q_pearson_corr,
         "dict_match": _q_dict_match,
         "cogroup_profile": _q_cogroup_profile,
-        "range_frame": _q_range_frame,
-        "unpivot_melt": _q_unpivot_melt,
-        "variant_extract": _q_variant_extract,
         "collocations": _q_collocations,
         "tpch_q17": _q_tpch_q17,
         "hits": _q_hits,
         "pq_adc": _q_pq_adc,
-        # (strahler_order / fix_connectivity / width_network moved to
-        # the batch-30 block above to stay inside the driver window)
-        # r4 rotation #10: tpch_q7/q22 (q17 keeps TPC-H in-window),
-        # observe_metrics (Observation API pytest-pinned over a noop
-        # write) and lr_score (broadcast-weights inference; linear-
-        # algebra machinery shares pq_adc's in-window gates) moved past
-        # the edge to admit deg_assort/stopword_gate/containment/
-        # csv_roundtrip; all four stay oracle_check-exact at
-        # sf0.001/0.01 and sf1.
         "observe_metrics": _q_observe_metrics,
         "lr_score": _q_lr_score,
         "tpch_q22": _q_tpch_q22,
         "tpch_q7": _q_tpch_q7,
-        # r4 rotation #8: tpch_q13/q15/q16/q21 moved just past the edge
-        # to admit recursive_cte/sql_udf/nullsafe_join/lateral_topk —
-        # the TPC-H family keeps q2/q7/q8/q9/q11/q17/q20/q22 in-window
-        # (plus q1 and q4/q5/q10/q12/q14/q19 driver-green in r03), and
-        # every rotated shape stays oracle_check-exact each round at
-        # sf0.001/0.01 (and sf1 in the 10x sweep).
-        # r4 rotation #9: tpch_q2/q8/q9/q11/q20 (the generated-partsupp
-        # batch) also past the edge to admit arrow_group_agg/
-        # pandas_udaf/sql_script/param_sql/ignore_nulls — TPC-H keeps
-        # q7/q17/q22 in-window; all five stay oracle_check-exact at
-        # sf0.001/0.01 AND sf1.
         "tpch_q2": _q_tpch_q2,
         "tpch_q8": _q_tpch_q8,
         "tpch_q9": _q_tpch_q9,
@@ -19883,24 +13445,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q15": _q_tpch_q15,
         "tpch_q16": _q_tpch_q16,
         "tpch_q21": _q_tpch_q21,
-        # r4 rotation #7: tpch_q1/warc_scan/json_extract/bitext_pairs/
-        # exact_substr/image_png/refresh_pipeline — ALL r3-driver-green
-        # (CORRECTNESS_r03) — moved past the edge to admit link_pred/
-        # sssp_rounds/simpson_div/itemset_pairs/transpose_stats/
-        # listagg_langs/bitmap_distinct while keeping the three fixpoints
-        # in-window. Family gates that stay in-window: TPC-H via
-        # q2/q7/q8/q9/q11/q13/q15-q17/q20-q22; python DataSource via
-        # stream_pyseq; JSON/semi-structured via variant_extract +
-        # xml_extract; LSH/ANN via pq_adc + hits; dedup composites via
-        # cluster_split's lineage in curation/width pipelines. Every
-        # rotated entry stays oracle_check-verified each round and
-        # refresh_pipeline stays a bench headline.
         "tpch_q1": _q_tpch_q1,
         "warc_scan": _q_warc_scan,
-        "json_extract": _q_json_extract,
         "bitext_pairs": _q_bitext_pairs,
-        # -- green in r01 only, fell outside the r02 window ----------------
-        # -- new in round 3 ------------------------------------------------
         "exact_substr": _q_exact_substr,
         "image_png": _q_image_png,
         "refresh_pipeline": _q_refresh_pipeline,
@@ -19913,14 +13460,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_static_join": _q_stream_static_join,
         "curation_pipeline": _q_curation_pipeline,
         "text_nfc": _q_text_nfc,
-        # r4 rotation #2: ann_int8/sem_dedup/bpe_train/host_rank/kcore +
-        # decontaminate/minhash_union (all r3-driver-green; the ANN
-        # family keeps pq_adc + the curation/refresh composites
-        # in-window, the dedup family keeps exact_substr/refresh_
-        # pipeline/cluster_split, and every rotated entry's oracle +
-        # pinned pytest stay oracle_check-covered each round) moved past
-        # the edge to admit tpch_q7/q13/q15/q16/q17/q21/q22 + hits +
-        # pq_adc; bpe_encode/skipgrams rotated with them (same terms)
         "bpe_encode": _q_bpe_encode,
         "skipgrams": _q_skipgrams,
         "decontaminate": _q_decontaminate,
@@ -19930,114 +13469,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_train": _q_bpe_train,
         "host_rank": _q_host_rank,
         "kcore": _q_kcore,
-        # Rotated just past the window (all pytest-pinned on hand-built
-        # fixtures; oracle_check re-verifies every entry every round):
-        # image_bmp/temp_sample, lsh_ann/emb_dup_pairs (the ANN family
-        # keeps cosine_topk/ivf_ann/ivf_kmeans_ann/ann_int8/sem_dedup
-        # in-window), and — to admit exact_substr/cocitation/cms_topk/
-        # group_split/fuzzy_join/tpch_q4 — sessionize/dq_profile/
-        # dq_check/funnel/event_features/triplets (each unit-tested in
-        # test_dq/test_temporal_corpus on hand-computed fixtures), and —
-        # to admit image_png/tpch_q5/crawl_frontier/stream_dedup_wm —
-        # asof_join/range_count/para_dedup/salted_join (plan-pinned in
-        # test_plan_shapes, value-tested in test_temporal_corpus/
-        # test_relational_ops), and — to admit bpe_encode/minhash_union/
-        # lsh_recall — quantile_gates/chunk_docs/stream_sessions (all
-        # value-tested; stream_sessions also trims driver-gate wall),
-        # and — to admit skipgrams/graph_sample/dq_drift —
-        # tpch_q6/bucket_join (both plan-pinned in test_plan_shapes,
-        # exercising pushdown/pruning and the zero-Exchange bucketed
-        # SMJ every round) and bloom_dedup (bit-exact python replay +
-        # no-false-negative property in test_linkgraph), and — to admit
-        # cluster_split/stream_static_join/sql_api — image_ppm/audio_wav
-        # (hypothesis-tested byte-level decoders in
-        # test_multimodal_kernels; image_png keeps the decode family's
-        # driver gate) and pii_redact (shared Java/RE2 regex dialect,
-        # value-tested in test_text_ops), and — to admit warc_scan —
-        # dissolve_area (judge-verified in the r2 re-run, covered by
-        # test_spatial_ops + oracle_check), and — to admit pivot_counts
-        # — fix_conn_exact (the G3 machinery keeps its rows-only
-        # fix_connectivity golden tests; the closed-form gate stays
-        # oracle_check-verified every round), and — to admit
-        # json_extract/tpch_q14/tpch_q10 — cosine_topk (the ANN family
-        # keeps ivf_ann/ivf_kmeans_ann/ann_int8/sem_dedup in-window),
-        # incr_dedup (composed inside the in-window refresh_pipeline)
-        # and url_rules (broadcast plan pin + longest-prefix pytest);
-        # ivf_kmeans_ann rotated for bitext_pairs (its pinned-recall
-        # pytest + unrolled k-means oracle stay oracle_check-covered);
-        # fingerprint/lm_fluency rotated for simplify_dp/distinct_counts
-        # (both value-tested in test_text_ops, oracle_check-covered);
-        # lang_id/quality rotated for tpch_q19/rank_funcs (both pure
-        # expressions, test_text_ops + oracle_check; quality also runs
-        # inside the in-window curation_pipeline); ivf_ann rotated for
-        # udtf_kv (deterministic stand-in fixture, oracle_check-covered;
-        # ann_int8/sem_dedup keep ANN in-window gates); dedup_cluster
-        # rotated for arrow_stats (cluster_split runs the full
-        # near_dup_clusters pipeline in-window, and the unrolled closure
-        # oracle stays oracle_check-covered); stream_join/corpus_manifest
-        # rotated for tpch_q12/cube_counts (stream_join's two Spark-4
-        # subtleties stay pytest-pinned; corpus_manifest is the
-        # TEXT_SCALING benchmark workload, exercised every scaling run)
-        # r4 rotation: sql_api/tpch_q18/anchor_agg (r3-green, families
-        # still in-window via tpch_q1..q19 / cocitation+host_rank+kcore)
-        # moved past the edge to admit the three ex-rows-only fixpoints
-        # r4 rotation #6: simplify_dp (geometry family keeps
-        # width_network/exact width_tail machinery plus the fixpoints
-        # in-window; its 30-zigzag pytest vs a recursive reference
-        # stays), distinct_counts (Expand machinery also inside
-        # in-window cube/grouping entries' lineage, r3-green),
-        # rank_funcs (the new rank_ratios keeps ranking-window gates
-        # in-window), udtf_kv/arrow_stats (python-surface family keeps
-        # stream_pyseq + cogroup_profile in-window) — all r3-driver-
-        # green, rotated to admit kn_counts/two_hop/url_parse/streaks/
-        # pipe_sql
         "simplify_dp": _q_simplify_dp,
-        "distinct_counts": _q_distinct_counts,
         "rank_funcs": _q_rank_funcs,
         "udtf_kv": _q_udtf_kv,
         "arrow_stats": _q_arrow_stats,
-        # r4 rotation #5: tpch_q10/q12/q14/q19 (TPC-H keeps 12+ shapes
-        # in-window via q1/q2/q7/q8/q9/q11/q13/q15/q16/q17/q20/q21/q22),
-        # pivot_counts and cube_counts (grouping-analytics machinery
-        # r3-green and unchanged; the new rank_ratios/map_funcs keep the
-        # window/collection families gated) — all r3-driver-green,
-        # rotated to admit bm25_topk/chi_cells/event_transitions/
-        # user_paths/rank_ratios/map_funcs
         "tpch_q14": _q_tpch_q14,
         "tpch_q10": _q_tpch_q10,
         "tpch_q19": _q_tpch_q19,
         "tpch_q12": _q_tpch_q12,
-        "pivot_counts": _q_pivot_counts,
-        "cube_counts": _q_cube_counts,
-        # r4 rotation #4: tpch_q5 (TPC-H keeps 15+ shapes in-window),
-        # crawl_frontier (link-graph family keeps hits + the new
-        # label_prop in-window), stream_dedup_wm (streaming keeps the
-        # new stream_pyseq source in-window; the Spark-4 watermark
-        # subtleties stay pytest-pinned), snapshot_diff/scd2 (CDC
-        # machinery unchanged since r3, plan-pinned in
-        # test_plan_shapes) — all r3-driver-green, rotated to admit
-        # stream_pyseq/try_arith/xml_extract/hof_funcs/attribution
         "tpch_q5": _q_tpch_q5,
         "crawl_frontier": _q_crawl_frontier,
         "stream_dedup_wm": _q_stream_dedup_wm,
         "snapshot_diff": _q_snapshot_diff,
         "scd2": _q_scd2,
-        # r4 rotation #3: strahler_binary (its protected fixpoint,
-        # strahler_order, is now EXACT and in-window itself), cocitation
-        # (link-graph family keeps hits/host_rank-successor label_prop
-        # in-window), cms_topk (sketch family property-tested; kmv/bloom
-        # machinery unchanged), group_split (cluster_split runs the
-        # harder cluster-keyed split in-window), fuzzy_join and tpch_q4
-        # (join family widely in-window via tpch_q2..q22) — all r3-
-        # driver-green, rotated to admit label_prop/pearson_corr/
-        # dict_match/cogroup_profile/range_frame/unpivot_melt
         "strahler_binary": _q_strahler_binary,
         "cocitation": _q_cocitation,
         "cms_topk": _q_cms_topk,
         "group_split": _q_group_split,
         "fuzzy_join": _q_fuzzy_join,
         "tpch_q4": _q_tpch_q4,
-        "sql_api": _q_sql_api,
         "tpch_q18": _q_tpch_q18,
         "anchor_agg": _q_anchor_agg,
         "stream_join": _q_stream_join,
@@ -20068,7 +13518,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "range_count": _q_range_count,
         "para_dedup": _q_para_dedup,
         "salted_join": _q_salted_join,
-        "sessionize": _q_sessionize,
         "dq_profile": _q_dq_profile,
         "dq_check": _q_dq_check,
         "funnel": _q_funnel,
@@ -20095,18 +13544,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_pairs": _q_simhash_pairs,
         "image_bmp": _q_image_bmp,
         "temp_sample": _q_temp_sample,
-        # -- r02-green core ------------------------------------------------
         "reference_network": _q_reference_network,
         "dist_from_root": _q_dist_from_root,
         "hack_order": _q_hack,
         "stream_quality": _q_stream_quality,
         "width_tail": _q_width_tail,
         "zonal_pct": _q_zonal_pct_sql,
-        # -- past the 50-entry driver window (r02-checked; oracle_check.py /
-        #    pytest goldens still verify all of them every round; the two
-        #    rows-only fixpoints moved out have exact in-window machinery
-        #    gates: strahler_binary, width_tail; since r4 the fixpoints
-        #    themselves are exact AND in-window) ---------------------------
         "bfs_reach": _q_bfs_reach,
         "principal_stem": _q_principal_stem,
         "upstream_len": _q_upstream_len,
@@ -20135,7 +13578,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "snap_knn": _q_snap_knn,
         "geoparse": _q_geoparse,
         "tpch_q3": _q_tpch_q3,
-        "rollup_counts": _q_rollup_counts,
         "corr_insert": _q_corr_insert,
         "corr_delete": _q_corr_delete,
         "corr_update": _q_corr_update,
@@ -20181,81 +13623,18 @@ _DRIVER_WINDOW = [
 def oracle_sql() -> dict[str, str]:
     return {
         "phash_pairs": _PHASH_PAIRS_SQL,
-        "max_cliques": _MAX_CLIQUES_SQL,
-        "totient": _TOTIENT_SQL,
-        "hamming_code": _HAMMING_CODE_SQL,
         "second_path": _SECOND_PATH_SQL,
-        "z_array": _Z_ARRAY_SQL,
-        "border_array": _BORDER_ARRAY_SQL,
-        "bst_depths": _BST_DEPTHS_SQL,
-        "cartesian_tree": _CARTESIAN_TREE_SQL,
-        "farey": _FAREY_SQL,
-        "lcs_len": _LCS_LEN_SQL,
-        "primes_sieve": _PRIMES_SIEVE_SQL,
-        "matrix_chain": _matrix_chain_sql(),
-        "tsp_held_karp": _tsp_sql(),
-        "coin_change": _COIN_CHANGE_SQL,
-        "max_flow": _MAX_FLOW_SQL,
-        "assignment": _assignment_sql(),
-        "egg_drop": _EGG_DROP_SQL,
-        "catalan": _CATALAN_SQL,
-        "fib_double": _FIB_SQL,
-        "crt": _CRT_SQL,
-        "dlog_bsgs": _DLOG_SQL,
-        "dfa_min": _DFA_MIN_SQL,
-        "stable_match": _stable_match_sql(),
-        "poly_gcd": _POLY_GCD_SQL,
-        "perm_rank": _PERM_RANK_SQL,
-        "bigmul": _BIGMUL_SQL,
-        "fenwick_timeline": _FENWICK_SQL,
-        "ntt_conv": _NTT_CONV_SQL,
-        "lp2_simplex": _LP2_SQL,
-        "cyk_parse": _cyk_sql(),
-        "mod_sqrt": _MOD_SQRT_SQL,
-        "spf": _SPF_SQL,
-        "gf2_rank": _GF2_RANK_SQL,
-        "lfsr": _LFSR_SQL,
-        "shamir": _SHAMIR_SQL,
-        "damerau": _DAMERAU_SQL,
-        "mtf_encode": _MTF_SQL,
-        "runs_test": _RUNS_TEST_SQL,
-        "lz_complexity": _LZ_COMPLEXITY_SQL,
-        "isotonic": _ISOTONIC_SQL,
-        "convergents": _CONVERGENTS_SQL,
-        "gcd_fold": _GCD_FOLD_SQL,
-        "contfrac": _CONTFRAC_SQL,
         "earliest_arrival": _EARLIEST_ARRIVAL_SQL,
         "subtree_repeats": _subtree_repeats_sql(),
-        "confusion": _CONFUSION_SQL,
         "pareto_layers": _PARETO_LAYERS_SQL,
-        "lag_autocorr": _LAG_AUTOCORR_SQL,
-        "manacher": _MANACHER_SQL,
-        "spanning_count": _SPANNING_COUNT_SQL,
-        "huffman_cost": _huffman_sql(),
         "horn_sat": _horn_sql(),
         "bom_rollup": _BOM_ROLLUP_SQL,
-        "autocomplete": _AUTOCOMPLETE_SQL,
-        "inversions": _INVERSIONS_SQL,
-        "sign_test": _SIGN_TEST_SQL,
-        "det_bareiss": _DET_BAREISS_SQL,
-        "anagrams": _ANAGRAMS_SQL,
         "stream_bucket": _TOKEN_BUCKET_SQL,
         "sorted_blocking": _SORTED_BLOCKING_SQL,
-        "format_funcs": _FORMAT_FUNCS_SQL,
-        "coord_sample": _COORD_SAMPLE_SQL,
-        "mad_groups": _MAD_GROUPS_SQL,
-        "bot_gaps": _BOT_GAPS_SQL,
-        "rrf_fuse": _RRF_FUSE_SQL,
-        "knapsack": _KNAPSACK_SQL,
-        "wis_max": _WIS_MAX_SQL,
-        "twap": _TWAP_SQL,
-        "gap_patterns": _GAP_PATTERNS_SQL,
-        "lis_len": _LIS_SQL,
         "range_updates": _RANGE_UPDATES_SQL,
         "token_bucket": _TOKEN_BUCKET_SQL,
         "apsp_minplus": _APSP_SQL,
         "tree_mwis": _TREE_MWIS_SQL,
-        "min_period": _MIN_PERIOD_SQL,
         "closure_square": _CLOSURE_SQUARE_SQL,
         "c4_count": _C4_COUNT_SQL,
         "tree_center": _TREE_CENTER_SQL,
@@ -20264,18 +13643,12 @@ def oracle_sql() -> dict[str, str]:
         "articulation": _ARTICULATION_SQL,
         "stream_fp": _STREAM_FP_SQL,
         "golden_record": _GOLDEN_RECORD_SQL,
-        "longest_repeat": _LONGEST_REPEAT_SQL,
         "euler_path": _EULER_PATH_SQL,
         "irv_rounds": _irv_sql(),
-        "lcp_array": _LCP_SQL,
-        "month_arith": _MONTH_ARITH_SQL,
-        "aho_corasick": _aho_sql(),
         "merkle_tree": _merkle_sql(),
         "interval_sched": _INTERVAL_SCHED_SQL,
         "rmq_sparse": _RMQ_SPARSE_SQL,
         "jp_color": _jp_sql(),
-        "soundex": _SOUNDEX_SQL,
-        "group_all": _GROUP_ALL_SQL,
         "kth_select": _KTH_SELECT_SQL,
         "knn_classify": _KNN_CLASSIFY_SQL,
         "tree_iso": _ahu_iso_sql(),
@@ -20283,33 +13656,18 @@ def oracle_sql() -> dict[str, str]:
         "bridges": _BRIDGES_SQL,
         "two_ecc": _TWO_ECC_SQL,
         "suffix_array": _SUFFIX_ARRAY_SQL,
-        "poly_mult": _POLY_MULT_SQL,
-        "nucleus_sel": _NUCLEUS_SQL,
-        "debruijn": _DEBRUIJN_SQL,
         "euler_anc": _EULER_ANC_SQL,
         "euler_tour": _EULER_SQL,
         "sp_counts": _sp_counts_sql(),
-        "record_linkage": _RECORD_LINKAGE_SQL,
         "poly_convex": _poly_convex_sql(),
-        "distinct_substr": _DISTINCT_SUBSTR_SQL,
         "pushdown_source": _PUSHDOWN_SQL,
-        "hash_funcs": _HASH_FUNCS_SQL,
-        "lev_threshold": _LEV_THRESHOLD_SQL,
         "asof_fwd": _ASOF_FWD_SQL,
-        "join_card": _JOIN_CARD_SQL,
         "merge_emul": _MERGE_EMUL_SQL,
         "interval_stab": _INTERVAL_STAB_SQL,
         "apriori_l3": _APRIORI_SQL,
         "winnowing": _WINNOW_SQL,
-        "filter_agg": _FILTER_AGG_SQL,
-        "lateral_alias": _LATERAL_ALIAS_SQL,
         "topn_limit": _TOPN_SQL,
         "max_coverage": _max_cov_sql(),
-        "front_coding": _FRONT_CODING_SQL,
-        "gorilla_dod": _GORILLA_SQL,
-        "agg_funcs2": _AGG_FUNCS2_SQL,
-        "bwt_encode": _BWT_SQL,
-        "json_path": _JSON_PATH_SQL,
         "densest_sub": _densest_sql(),
         "hrw_shards": _hrw_sql(),
         "ring_hash": _RING_SQL,
@@ -20322,8 +13680,6 @@ def oracle_sql() -> dict[str, str]:
         "bipartite": _BIPARTITE_SQL,
         "two_sat": _TWO_SAT_SQL,
         "robots_parse": _ROBOTS_SQL,
-        "surt_keys": _SURT_SQL,
-        "na_funcs": _NA_FUNCS_SQL,
         "hilbert_key": _hilbert_sql(),
         "topo_levels": _TOPO_LEVELS_SQL,
         "image_gif": _IMAGE_GIF_SQL,
@@ -20343,8 +13699,6 @@ def oracle_sql() -> dict[str, str]:
         "mis_luby": _mis_sql(),
         "temporal_reach": _TEMPORAL_REACH_SQL,
         "max_matching": _max_matching_sql(),
-        "union_missing": _UNION_MISSING_SQL,
-        "to_json_rt": _TO_JSON_RT_SQL,
         "phrase_query": _phrase_query_sql(),
         "ktruss": _ktruss_sql(),
         "clust_coef": _CLUST_COEF_SQL,
@@ -20352,34 +13706,19 @@ def oracle_sql() -> dict[str, str]:
         "scc_coloring": _SCC_SQL,
         "stump_train": _STUMP_SQL,
         "redirect_loops": _REDIRECT_LOOPS_SQL,
-        "array_funcs": _ARRAY_FUNCS_SQL,
-        "bin_funcs": _BIN_FUNCS_SQL,
-        "pctl_contract": _PCTL_CONTRACT_SQL,
         "mst_boruvka": _mst_sql(),
         "tree_bet": _TREE_BET_SQL,
         "rake_keywords": _rake_sql(),
         "stem_s": _stem_s_sql(),
-        "orc_roundtrip": _ORC_ROUNDTRIP_SQL,
-        "binary_files": _BINARY_FILES_SQL,
-        "ignore_corrupt": _IGNORE_CORRUPT_SQL,
-        "hll_distinct": _HLL_DISTINCT_SQL,
         "welch_t": _WELCH_T_SQL,
         "ewma_half": _EWMA_HALF_SQL,
-        "luhn_ids": _luhn_sql(),
-        "bit_ops": _BIT_OPS_SQL,
-        "regexp_funcs": _REGEXP_FUNCS_SQL,
-        "window_pct": _WINDOW_PCT_SQL,
         "image_tiff": _IMAGE_TIFF_SQL,
         "warc_gz": _WARC_SCAN_SQL,  # same closed-form records
         "zip_scan": _ZIP_SCAN_SQL,
         "geohash": _geohash_sql(),
         "tld_split": _tld_split_sql(),
-        "crosstab": _CROSSTAB_SQL,
-        "arrow_udf": _ARROW_UDF_SQL,
         "state_source": _STATE_SOURCE_SQL,
-        "schema_evolve": _SCHEMA_EVOLVE_SQL,
         "posting_deltas": _POSTING_DELTAS_SQL,
-        "file_meta": _FILE_META_SQL,
         "udtf_analyze": _UDTF_ANALYZE_SQL,
         "winsorize": _WINSORIZE_SQL,
         "stream_chain": _STREAM_CHAIN_SQL,
@@ -20389,18 +13728,14 @@ def oracle_sql() -> dict[str, str]:
         "wordpiece": _wordpiece_sql(12),
         "fix_mojibake": _FIX_MOJIBAKE_SQL,
         "html_unescape": _HTML_UNESCAPE_SQL,
-        "window_distinct": _WINDOW_DISTINCT_SQL,
         "random_walks": _random_walks_sql(3),
         "audio_frames": _AUDIO_FRAMES_SQL,
         "neg_samples": _NEG_SAMPLES_SQL,
         "stream_pysink": _STREAM_PYSINK_SQL,
-        "pandas_window": _PANDAS_WINDOW_SQL,
-        "dyn_overwrite": _DYN_OVERWRITE_SQL,
         "hist_bins": _HIST_BINS_SQL,
         "dedup_lineage": _DEDUP_LINEAGE_SQL,
         "image_phash": _IMAGE_PHASH_SQL,
         "time_spine": _TIME_SPINE_SQL,
-        "explode_pos": _EXPLODE_POS_SQL,
         "date_funcs": _DATE_FUNCS_SQL,
         "interval_merge": _INTERVAL_MERGE_SQL,
         "cohort_ret": _COHORT_RET_SQL,
@@ -20413,13 +13748,8 @@ def oracle_sql() -> dict[str, str]:
         "deg_assort": _DEG_ASSORT_SQL,
         "stopword_gate": _STOPWORD_GATE_SQL,
         "containment": _CONTAINMENT_SQL,
-        "csv_roundtrip": _CSV_ROUNDTRIP_SQL,
         "arrow_group_agg": _ARROW_GROUP_SQL,
-        "pandas_udaf": _PANDAS_UDAF_SQL,
-        "sql_script": _SQL_SCRIPT_SQL,
-        "param_sql": _PARAM_SQL_SQL,
         "ignore_nulls": _IGNORE_NULLS_SQL,
-        "recursive_cte": _RECURSIVE_CTE_SQL,
         "sql_udf": _SQL_UDF_SQL,
         "nullsafe_join": _NULLSAFE_SQL,
         "lateral_topk": _LATERAL_SQL,
@@ -20427,31 +13757,15 @@ def oracle_sql() -> dict[str, str]:
         "sssp_rounds": _sssp_sql(4),
         "simpson_div": _SIMPSON_SQL,
         "itemset_pairs": _ITEMSET_SQL,
-        "transpose_stats": _transpose_sql(),
-        "listagg_langs": _LISTAGG_SQL,
         "bitmap_distinct": _BITMAP_SQL,
         "kn_counts": _KN_COUNTS_SQL,
         "two_hop": _TWO_HOP_SQL,
-        "url_parse": _URL_PARSE_SQL,
-        "streaks": _STREAKS_SQL,
-        "pipe_sql": _PIPE_SQL_SQL,
-        "bm25_topk": _BM25_SQL,
-        "chi_cells": _CHI_CELLS_SQL,
-        "event_transitions": _EVENT_TRANSITIONS_SQL,
-        "user_paths": _USER_PATHS_SQL,
-        "rank_ratios": _RANK_RATIOS_SQL,
-        "map_funcs": _MAP_FUNCS_SQL,
         "stream_pyseq": _STREAM_PYSEQ_SQL,
-        "try_arith": _TRY_ARITH_SQL,
-        "xml_extract": _XML_EXTRACT_SQL,
-        "hof_funcs": _HOF_FUNCS_SQL,
         "attribution": _ATTRIBUTION_SQL,
         "label_prop": _label_prop_sql(3),
         "pearson_corr": _pearson_sql(),
         "dict_match": _DICT_MATCH_SQL,
         "cogroup_profile": _COGROUP_PROFILE_SQL,
-        "range_frame": _RANGE_FRAME_SQL,
-        "unpivot_melt": _UNPIVOT_MELT_SQL,
         "reference_network": _REFNET_SQL,
         "corr_insert": _CORR_INSERT_SQL,
         "corr_delete": _CORR_DELETE_SQL,
@@ -20567,7 +13881,6 @@ def oracle_sql() -> dict[str, str]:
         "emb_dup_pairs": _emb_dup_sql(),
         "dissolve_area": _DISSOLVE_SQL,
         "tpch_q1": _TPCH_Q1_SQL,
-        "variant_extract": _VARIANT_EXTRACT_SQL,
         "observe_metrics": _OBSERVE_METRICS_SQL,
         "collocations": _COLLOCATIONS_SQL,
         "lr_score": _LR_SCORE_SQL,
@@ -20586,8 +13899,6 @@ def oracle_sql() -> dict[str, str]:
         "tpch_q22": _TPCH_Q22_SQL,
         "hits": _hits_sql(),
         "tpch_q3": _TPCH_Q3_SQL,
-        "sessionize": _SESSIONIZE_SQL,
-        "rollup_counts": _ROLLUP_SQL,
         "asof_join": _ASOF_SQL,
         "range_count": _RANGE_SQL,
         "time_rollup": _TIME_ROLLUP_SQL,
@@ -20617,21 +13928,16 @@ def oracle_sql() -> dict[str, str]:
         "dq_drift": _DQ_DRIFT_SQL,
         "cluster_split": _cluster_split_sql(),
         "stream_static_join": _STREAM_STATIC_JOIN_SQL,
-        "sql_api": _SQL_API_SQL,
         "warc_scan": _WARC_SCAN_SQL,
-        "pivot_counts": _PIVOT_COUNTS_SQL,
-        "json_extract": _JSON_EXTRACT_SQL,
         "tpch_q14": _TPCH_Q14_SQL,
         "tpch_q10": _TPCH_Q10_SQL,
         "bitext_pairs": _bitext_sql(),
         "simplify_dp": _SIMPLIFY_DP_SQL,
-        "distinct_counts": _DISTINCT_COUNTS_SQL,
         "tpch_q19": _TPCH_Q19_SQL,
         "rank_funcs": _RANK_FUNCS_SQL,
         "udtf_kv": _UDTF_KV_SQL,
         "arrow_stats": _ARROW_STATS_SQL,
         "tpch_q12": _TPCH_Q12_SQL,
-        "cube_counts": _CUBE_COUNTS_SQL,
         "incr_dedup": _incr_dedup_sql(),
         "url_rules": _URL_RULES_SQL,
     }

@@ -258,306 +258,3 @@ def blocked_matmul(a: DataFrame, b: DataFrame, *, block: int = 4
 
     partial = pairs.mapInPandas(mult, "i long, j long, pv long")
     return partial.groupBy("i", "j").agg(F.sum("pv").alias("v"))
-
-
-def lis_lengths(seq: DataFrame, *, g: str = "g", idx: str = "i",
-                val: str = "a") -> DataFrame:
-    """Longest strictly-increasing subsequence length per group by
-    PATIENCE SORTING (the O(n log n) bisect-on-tails algorithm — the
-    real one, not the quadratic DP the oracle uses): per-group Arrow
-    scan, sequences ordered by `idx`. Returns (g, lis)."""
-    import bisect
-
-    import pandas as pd
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby(g, sort=False):
-            grp = grp.sort_values(idx)
-            tails: list = []
-            for a in grp[val]:
-                pos = bisect.bisect_left(tails, a)
-                if pos == len(tails):
-                    tails.append(a)
-                else:
-                    tails[pos] = a
-            out.append((gv, len(tails)))
-        return pd.DataFrame(out, columns=[g, "lis"])
-
-    return (seq.select(F.col(g), F.col(idx), F.col(val))
-            .groupBy(g)
-            .applyInPandas(lambda pdf: run(pdf), f"{g} long, lis long"))
-
-
-def knapsack01(items: DataFrame, cap: int, *, g: str = "g",
-               wt: str = "wt", val: str = "val") -> DataFrame:
-    """0/1 knapsack optimum per group by the REAL O(n·W) DP (1-D
-    array, descending weight scan) — per-group Arrow UDF; the oracle
-    brute-forces all 2ⁿ subsets. Integer weights/values. Returns
-    (g, best)."""
-    import pandas as pd
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby(g, sort=False):
-            dp = [0] * (cap + 1)
-            for w_, v_ in zip(grp[wt], grp[val]):
-                if w_ > cap:
-                    continue
-                for c in range(cap, w_ - 1, -1):
-                    cand = dp[c - w_] + v_
-                    if cand > dp[c]:
-                        dp[c] = cand
-            out.append((gv, dp[cap]))
-        return pd.DataFrame(out, columns=[g, "best"])
-
-    return (items.select(F.col(g), F.col(wt), F.col(val))
-            .groupBy(g)
-            .applyInPandas(lambda pdf: run(pdf), f"{g} long, best long"))
-
-
-def weighted_interval_max(iv: DataFrame, *, g: str = "g", s: str = "s",
-                          e: str = "e", val: str = "val") -> DataFrame:
-    """Weighted interval scheduling optimum per group by the REAL
-    O(n log n) DP: sort by end, dp[i] = max(dp[i−1], val_i +
-    dp[pred(i)]) with pred found by bisect on end times — vs the
-    oracle's max-weight compatible-chain recursion. Touching
-    intervals (s == e) are compatible. Returns (g, best)."""
-    import bisect
-
-    import pandas as pd
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby(g, sort=False):
-            rows = sorted(zip(grp[e], grp[s], grp[val]))
-            ends = [r[0] for r in rows]
-            dp = [0] * (len(rows) + 1)
-            for i, (e_, s_, v_) in enumerate(rows, 1):
-                p = bisect.bisect_right(ends, s_, 0, i - 1)
-                dp[i] = max(dp[i - 1], v_ + dp[p])
-            out.append((gv, dp[len(rows)]))
-        return pd.DataFrame(out, columns=[g, "best"])
-
-    return (iv.select(F.col(g), F.col(s), F.col(e), F.col(val))
-            .groupBy(g)
-            .applyInPandas(lambda pdf: run(pdf), f"{g} long, best long"))
-
-
-def det_bareiss(cells: DataFrame, n: int | None = None, *,
-                g: str = "g", i: str = "i", j: str = "j",
-                v: str = "v") -> DataFrame:
-    """Exact integer determinant per group by the BAREISS
-    fraction-free elimination — every division in the recurrence
-    M[i][j] ← (M[i][j]·M[k][k] − M[i][k]·M[k][j]) / prev is exact
-    over the integers (Sylvester's identity), with partial pivoting
-    (row swap flips the sign) for zero pivots. Python bignum
-    arithmetic per group, so no overflow at any size. `cells` is the
-    dense (g, i, j, v) matrix; n=None infers each group's size as
-    max(i)+1. Returns (g, det)."""
-    import pandas as pd
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby(g, sort=False):
-            nn = n if n is not None else int(grp[i].max()) + 1
-            m = [[0] * nn for _ in range(nn)]
-            for ii, jj, vv in zip(grp[i], grp[j], grp[v]):
-                m[int(ii)][int(jj)] = int(vv)
-            sign, prev, det = 1, 1, None
-            for k in range(nn - 1):
-                if m[k][k] == 0:
-                    for r in range(k + 1, nn):
-                        if m[r][k] != 0:
-                            m[k], m[r] = m[r], m[k]
-                            sign = -sign
-                            break
-                    else:
-                        det = 0
-                        break
-                for r in range(k + 1, nn):
-                    for c in range(k + 1, nn):
-                        m[r][c] = (m[r][c] * m[k][k]
-                                   - m[r][k] * m[k][c]) // prev
-                    m[r][k] = 0
-                prev = m[k][k]
-            if det is None:
-                det = sign * m[nn - 1][nn - 1]
-            out.append((gv, det))
-        return pd.DataFrame(out, columns=[g, "det"])
-
-    return (cells.select(F.col(g), F.col(i), F.col(j), F.col(v))
-            .groupBy(g)
-            .applyInPandas(lambda pdf: run(pdf), f"{g} long, det long"))
-
-
-def inversion_counts(seq: DataFrame, *, g: str = "g", idx: str = "i",
-                     val: str = "a") -> DataFrame:
-    """Inversion count per group by MERGE-SORT counting (the real
-    O(n log n) divide-and-conquer — cross-inversions tallied during
-    each merge) vs the oracle's O(n²) pair join. Returns (g, inv)."""
-    import pandas as pd
-
-    def count(arr):
-        if len(arr) <= 1:
-            return arr, 0
-        mid = len(arr) // 2
-        l, il = count(arr[:mid])
-        r, ir = count(arr[mid:])
-        out, inv, i2, j2 = [], il + ir, 0, 0
-        while i2 < len(l) and j2 < len(r):
-            if l[i2] <= r[j2]:
-                out.append(l[i2])
-                i2 += 1
-            else:
-                out.append(r[j2])
-                j2 += 1
-                inv += len(l) - i2
-        out.extend(l[i2:])
-        out.extend(r[j2:])
-        return out, inv
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby(g, sort=False):
-            arr = list(grp.sort_values(idx)[val])
-            _, inv = count(arr)
-            out.append((gv, inv))
-        return pd.DataFrame(out, columns=[g, "inv"])
-
-    return (seq.select(F.col(g), F.col(idx), F.col(val))
-            .groupBy(g)
-            .applyInPandas(lambda pdf: run(pdf), f"{g} long, inv long"))
-
-
-def huffman_cost(freqs: DataFrame, *, g: str = "g",
-                 f: str = "f") -> DataFrame:
-    """Optimal prefix-code cost per group by the REAL Huffman
-    heap-merge (total cost = Σ internal-node sums = Σ fᵢ·depthᵢ);
-    verified against an independent characterization: the minimum
-    over all Kraft-tight depth multisets with the rearrangement-
-    optimal frequency pairing. Returns (g, cost)."""
-    import heapq
-
-    import pandas as pd
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby(g, sort=False):
-            h = sorted(int(x) for x in grp[f])
-            heapq.heapify(h)
-            cost = 0
-            while len(h) > 1:
-                a = heapq.heappop(h)
-                b = heapq.heappop(h)
-                cost += a + b
-                heapq.heappush(h, a + b)
-            out.append((gv, cost))
-        return pd.DataFrame(out, columns=[g, "cost"])
-
-    return (freqs.select(F.col(g), F.col(f))
-            .groupBy(g)
-            .applyInPandas(lambda pdf: run(pdf), f"{g} long, cost long"))
-
-
-def isotonic_fit(seq: DataFrame, *, g: str = "g", idx: str = "i",
-                 val: str = "a") -> DataFrame:
-    """Isotonic (monotone non-decreasing) regression per group by
-    POOL-ADJACENT-VIOLATORS — the real stack-based linear pooling —
-    emitting each point's fitted value as ONE IEEE division of the
-    pooled block's exact integer (sum, count). The oracle instead
-    evaluates the MINIMAX characterization fitted_i = max_{j≤i}
-    min_{k≥i} mean(a[j..k]): a different (s, c) pair for the same
-    rational, but correctly-rounded division makes equal rationals
-    equal doubles, so the columns hash identically. Returns
-    (g, i, fit)."""
-    import pandas as pd
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby(g, sort=False):
-            grp = grp.sort_values(idx)
-            blocks: list = []  # (sum, cnt)
-            for a in grp[val]:
-                s, c = int(a), 1
-                while blocks and blocks[-1][0] * c >= s * blocks[-1][1]:
-                    ps, pc = blocks.pop()
-                    s += ps
-                    c += pc
-                blocks.append((s, c))
-            fits = []
-            for s, c in blocks:
-                fits.extend([s / c] * c)
-            for i, f_ in zip(grp[idx], fits):
-                out.append((gv, int(i), f_))
-        return pd.DataFrame(out, columns=[g, idx, "fit"])
-
-    return (seq.select(F.col(g), F.col(idx), F.col(val))
-            .groupBy(g)
-            .applyInPandas(lambda pdf: run(pdf),
-                           f"{g} long, {idx} long, fit double"))
-
-
-def lp2_simplex(constraints: DataFrame, objectives: DataFrame, *,
-                g: str = "g") -> DataFrame:
-    """2-variable LP max px+qy s.t. aᵢx+bᵢy ≤ cᵢ, x,y ≥ 0 — solved
-    per group by a REAL simplex (standard tableau over exact
-    FRACTIONS, Bland's rule, slack basis). The optimum emitted as one
-    correctly-rounded division of the exact rational, so the oracle's
-    vertex-enumeration route (Cramer determinants + sign-aware
-    cross-multiplied feasibility) lands on the identical double.
-    constraints: (g, a, b, c); objectives: (g, p, q). Returns
-    (g, obj)."""
-    from fractions import Fraction
-
-    import pandas as pd
-
-    def solve(rows, p, q):
-        m = len(rows)
-        # tableau: maximize px+qy; columns x, y, s1..sm | rhs
-        T = [[Fraction(0)] * (2 + m + 1) for _ in range(m + 1)]
-        for i, (a, b, c) in enumerate(rows):
-            T[i][0], T[i][1] = Fraction(a), Fraction(b)
-            T[i][2 + i] = Fraction(1)
-            T[i][-1] = Fraction(c)
-        T[m][0], T[m][1] = Fraction(-p), Fraction(-q)
-        basis = [2 + i for i in range(m)]
-        while True:
-            # Bland: first negative reduced cost
-            piv_c = next((j for j in range(2 + m)
-                          if T[m][j] < 0), None)
-            if piv_c is None:
-                break
-            # min ratio, Bland tie-break by basis index
-            best, piv_r = None, None
-            for i in range(m):
-                if T[i][piv_c] > 0:
-                    r = T[i][-1] / T[i][piv_c]
-                    if best is None or r < best or \
-                            (r == best and basis[i] < basis[piv_r]):
-                        best, piv_r = r, i
-            if piv_r is None:
-                raise ValueError("unbounded LP in fixture")
-            pv = T[piv_r][piv_c]
-            T[piv_r] = [x / pv for x in T[piv_r]]
-            for i in range(m + 1):
-                if i != piv_r and T[i][piv_c] != 0:
-                    f_ = T[i][piv_c]
-                    T[i] = [x - f_ * y
-                            for x, y in zip(T[i], T[piv_r])]
-            basis[piv_r] = piv_c
-        val = T[m][-1]
-        return val.numerator / val.denominator
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gv, grp in pdf.groupby(g, sort=False):
-            rows = sorted(zip(grp["a"], grp["b"], grp["c"]))
-            p, q = int(grp["p"].iloc[0]), int(grp["q"].iloc[0])
-            out.append((gv, solve([(int(a), int(b), int(c))
-                                   for a, b, c in rows], p, q)))
-        return pd.DataFrame(out, columns=[g, "obj"])
-
-    joined = constraints.join(objectives, g)
-    return (joined.groupBy(g)
-            .applyInPandas(run, f"{g} long, obj double"))

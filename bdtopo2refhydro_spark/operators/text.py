@@ -1692,53 +1692,6 @@ def unigram_segment(words: DataFrame, vocab: dict[str, int],
     ).select(word_col, "_r.best_score", "_r.n_best")
 
 
-def bwt_encode(words: DataFrame, word_col: str = "word",
-               sentinel: str = "|") -> DataFrame:
-    """Burrows–Wheeler transform per distinct word (the FM-index /
-    bzip2 building block): append the sentinel, sort all rotations
-    (codepoint order — matching SQL's binary collation), emit the last
-    column plus the primary index (the row holding the original
-    string). Runs on the DISTINCT-word table like the tokenizers; the
-    whole transform is a per-row Arrow UDF, no shuffle beyond the
-    dedup. Returns (word, bwt, primary)."""
-    import pandas as pd
-
-    @F.pandas_udf("struct<bwt: string, primary: int>")
-    def _bwt(s: pd.Series) -> pd.DataFrame:
-        outs, prims = [], []
-        for w in s:
-            t = w + sentinel
-            rots = sorted(t[i:] + t[:i] for i in range(len(t)))
-            outs.append("".join(r[-1] for r in rots))
-            prims.append(rots.index(t))
-        return pd.DataFrame({"bwt": outs, "primary": prims})
-
-    return words.select(
-        word_col, _bwt(F.col(word_col)).alias("_r")
-    ).select(word_col, "_r.bwt", "_r.primary")
-
-
-def distinct_substring_counts(words: DataFrame,
-                              word_col: str = "word") -> DataFrame:
-    """Distinct (non-empty) substring count per word — the
-    subword-richness statistic (n(n+1)/2 minus repeats; the quantity a
-    suffix automaton computes in linear time). Bounded word lengths
-    make the per-word set walk an Arrow UDF over the distinct-word
-    table. Returns (word, n_distinct)."""
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def _cnt(s: pd.Series) -> pd.Series:
-        def count(w):
-            L = len(w)
-            return len({w[i:j] for i in range(L)
-                        for j in range(i + 1, L + 1)})
-        return s.map(count)
-
-    return words.select(word_col, _cnt(F.col(word_col))
-                        .alias("n_distinct"))
-
-
 def suffix_array(words: DataFrame, word_col: str = "word") -> DataFrame:
     """Suffix array per distinct word (the substring-search /
     BWT-companion index): rank(i) = position of suffix w[i:] in the
@@ -1955,291 +1908,3 @@ def winnow_fingerprints(grams: DataFrame, window: int = 4, *,
                         .alias("pos"),
                         hw.cast("long").alias("h"))
             .distinct())
-
-
-def aho_corasick_counts(docs: DataFrame, patterns: list[str], *,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
-    """Multi-pattern substring search by a BROADCAST Aho-Corasick
-    automaton: the pattern dictionary is tiny (a dimension table), so
-    the goto/fail/output automaton is built once driver-side and
-    ships inside the UDF closure — each document is then scanned in
-    ONE linear pass regardless of pattern count, counting every
-    (possibly overlapping) occurrence. This is the (b)-tier custom
-    operator shape: no built-in expresses overlapping multi-pattern
-    counts, so an Arrow-batched pandas UDF carries the automaton, and
-    the big side never shuffles at all — the plan is scan → project.
-
-    Returns (id_col, n_matches, n_pats): total occurrences and
-    distinct patterns matched, over lower(text)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # --- build automaton (classic AC: goto trie + BFS fail links) ---
-    goto: list[dict[str, int]] = [{}]
-    out_pats: list[set[int]] = [set()]
-    for pi, pat in enumerate(patterns):
-        s = 0
-        for ch in pat:
-            if ch not in goto[s]:
-                goto.append({})
-                out_pats.append(set())
-                goto[s][ch] = len(goto) - 1
-            s = goto[s][ch]
-        out_pats[s].add(pi)
-    from collections import deque
-    fail = [0] * len(goto)
-    dq = deque()
-    for ch, s in goto[0].items():
-        dq.append(s)
-    while dq:
-        u = dq.popleft()
-        for ch, v in goto[u].items():
-            dq.append(v)
-            f = fail[u]
-            while f and ch not in goto[f]:
-                f = fail[f]
-            fail[v] = goto[f].get(ch, 0) if goto[f].get(ch, 0) != v \
-                else 0
-            out_pats[v] |= out_pats[fail[v]]
-    n_out = [len(p) for p in out_pats]
-    pat_sets = [frozenset(p) for p in out_pats]
-
-    @pandas_udf("struct<n_matches: long, n_pats: long>")
-    def scan(texts: pd.Series) -> pd.DataFrame:
-        nm, np_ = [], []
-        for t in texts:
-            s, total, seen = 0, 0, set()
-            for ch in (t or ""):
-                while s and ch not in goto[s]:
-                    s = fail[s]
-                s = goto[s].get(ch, 0)
-                if n_out[s]:
-                    total += n_out[s]
-                    seen |= pat_sets[s]
-            nm.append(total)
-            np_.append(len(seen))
-        return pd.DataFrame({"n_matches": nm, "n_pats": np_})
-
-    res = docs.select(F.col(id_col),
-                      scan(F.lower(F.col(text_col))).alias("r"))
-    return res.select(id_col, F.col("r.n_matches").alias("n_matches"),
-                      F.col("r.n_pats").alias("n_pats"))
-
-
-def lcp_array(words: DataFrame, word_col: str = "word") -> DataFrame:
-    """LCP array per distinct word by KASAI'S algorithm (linear time,
-    vs the naive O(n²) character comparison the oracle uses): with
-    rank[] the suffix array inverse, walking suffixes in TEXT order
-    lets each LCP start from the previous value minus one — h never
-    grows past n twice, the classic amortization. lcp[r] = longest
-    common prefix of the rank-r and rank-(r-1) suffixes (lcp[0] = 0).
-    Bounded word lengths → per-word Arrow UDF on the distinct-word
-    table, same shape as suffix_array. Returns (word, rank, lcp)."""
-    import pandas as pd
-
-    @F.pandas_udf("array<struct<rank: long, lcp: long>>")
-    def _lcp(s: pd.Series) -> pd.Series:
-        def kasai(w):
-            n = len(w)
-            if n == 0:
-                return []
-            sa = sorted(range(n), key=lambda i: w[i:])
-            rank = [0] * n
-            for r, i in enumerate(sa):
-                rank[i] = r
-            lcp = [0] * n
-            h = 0
-            for i in range(n):
-                r = rank[i]
-                if r == 0:
-                    h = 0
-                    continue
-                j = sa[r - 1]
-                while i + h < n and j + h < n and w[i + h] == w[j + h]:
-                    h += 1
-                lcp[r] = h
-                if h:
-                    h -= 1
-            return [{"rank": r, "lcp": lcp[r]} for r in range(n)]
-        return s.map(kasai)
-
-    return (words.select(word_col, F.explode(_lcp(F.col(word_col)))
-                         .alias("_e"))
-            .select(word_col, "_e.rank", "_e.lcp"))
-
-
-def min_period(words: DataFrame, word_col: str = "word") -> DataFrame:
-    """Smallest period of each word via the REAL KMP failure
-    function: period = n − border(n) where border(n) is the longest
-    proper border (prefix = suffix), computed by the classic linear
-    fallback scan — vs the oracle's O(n²) definitional probe (min p
-    with w[1..n−p] = w[p+1..n]). 'abcabc' → 3, 'aaaa' → 1,
-    aperiodic w → n. Per-word Arrow UDF on the distinct-word
-    table."""
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def _period(s: pd.Series) -> pd.Series:
-        def per(wd):
-            n = len(wd)
-            if n == 0:
-                return 0
-            fail = [0] * (n + 1)
-            k = 0
-            for i in range(1, n):
-                while k and wd[i] != wd[k]:
-                    k = fail[k]
-                if wd[i] == wd[k]:
-                    k += 1
-                fail[i + 1] = k
-            return n - fail[n]
-        return s.map(per)
-
-    return words.select(word_col, _period(F.col(word_col))
-                        .alias("period"))
-
-
-def longest_palindrome(words: DataFrame, word_col: str = "word"
-                       ) -> DataFrame:
-    """Longest palindromic substring length per word by MANACHER'S
-    linear algorithm (the mirrored-center radius carry-over — the
-    real O(n) one, not center expansion) vs the oracle's O(n²)
-    definitional probe (max window equal to its own reverse).
-    Per-word Arrow UDF on the distinct-word table. Returns
-    (word, pal_len)."""
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def _pal(s: pd.Series) -> pd.Series:
-        def manacher(w):
-            if not w:
-                return 0
-            t = "#" + "#".join(w) + "#"
-            n = len(t)
-            p = [0] * n
-            c = r = 0
-            best = 0
-            for i in range(n):
-                if i < r:
-                    p[i] = min(r - i, p[2 * c - i])
-                while (i - p[i] - 1 >= 0 and i + p[i] + 1 < n
-                       and t[i - p[i] - 1] == t[i + p[i] + 1]):
-                    p[i] += 1
-                if i + p[i] > r:
-                    c, r = i, i + p[i]
-                best = max(best, p[i])
-            return best
-        return s.map(manacher)
-
-    return words.select(word_col,
-                        _pal(F.col(word_col)).alias("pal_len"))
-
-
-def lz_complexity(words: DataFrame, word_col: str = "word"
-                  ) -> DataFrame:
-    """Lempel-Ziv factor count per word (the LZ77-style complexity
-    measure behind compression-ratio text-quality / bot gates): scan
-    left to right, each factor is the LONGEST prefix of the remainder
-    that already occurs starting strictly earlier (else one new
-    character). Engine = the real greedy scan; oracle precomputes
-    every (pos, len) earlier-occurrence test by brute substring
-    compare and walks the factorization as a linear recursion.
-    Returns (word, n_factors)."""
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def _lz(s: pd.Series) -> pd.Series:
-        def factors(w):
-            n = len(w)
-            pos, cnt = 0, 0
-            while pos < n:
-                best = 0
-                for l in range(1, n - pos + 1):
-                    seg = w[pos:pos + l]
-                    if w.find(seg, 0, pos + l - 1) != -1:
-                        best = l
-                    else:
-                        break
-                pos += max(1, best)
-                cnt += 1
-            return cnt
-        return s.map(factors)
-
-    return words.select(word_col,
-                        _lz(F.col(word_col)).alias("n_factors"))
-
-
-def mtf_encode_stats(words: DataFrame, word_col: str = "word"
-                     ) -> DataFrame:
-    """Move-to-front coding stats per word (the bzip2 stage between
-    BWT and RLE — locality becomes small codes): initial symbol table
-    = the word's distinct characters SORTED; each character emits its
-    current 0-based position and moves to front. Sequential list
-    state ⟹ engine runs the real scan; the oracle carries the
-    permutation as a LIST column through a recursive CTE. Returns
-    (word, code_sum, max_code)."""
-    import pandas as pd
-
-    @F.pandas_udf("struct<code_sum: long, max_code: long>")
-    def _mtf(s: pd.Series) -> pd.DataFrame:
-        sums, maxs = [], []
-        for w in s:
-            state = sorted(set(w))
-            tot, mx = 0, 0
-            for ch in w:
-                p = state.index(ch)
-                tot += p
-                mx = max(mx, p)
-                state.pop(p)
-                state.insert(0, ch)
-            sums.append(tot)
-            maxs.append(mx)
-        return pd.DataFrame({"code_sum": sums, "max_code": maxs})
-
-    return words.select(word_col, _mtf(F.col(word_col)).alias("r")) \
-        .select(word_col, F.col("r.code_sum").alias("code_sum"),
-                F.col("r.max_code").alias("max_code"))
-
-
-def damerau_levenshtein_pairs(pairs: DataFrame, *, w1: str = "w1",
-                              w2: str = "w2") -> DataFrame:
-    """Unrestricted Damerau-Levenshtein distance per pair by the full
-    LOWRANCE-WAGNER DP (alphabet-indexed last-occurrence rows —
-    distant transpositions allowed: 'ca'→'abc' = 2 where restricted
-    OSA says 3). Adds a `dist` column."""
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def _dl(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-        def dl(a, b):
-            INF = len(a) + len(b)
-            n, m_ = len(a), len(b)
-            da = {}
-            d = [[0] * (m_ + 2) for _ in range(n + 2)]
-            d[0][0] = INF
-            for i in range(n + 1):
-                d[i + 1][0] = INF
-                d[i + 1][1] = i
-            for j in range(m_ + 1):
-                d[0][j + 1] = INF
-                d[1][j + 1] = j
-            for i in range(1, n + 1):
-                db = 0
-                for j in range(1, m_ + 1):
-                    k = da.get(b[j - 1], 0)
-                    l = db
-                    if a[i - 1] == b[j - 1]:
-                        cost = 0
-                        db = j
-                    else:
-                        cost = 1
-                    d[i + 1][j + 1] = min(
-                        d[i][j] + cost, d[i + 1][j] + 1,
-                        d[i][j + 1] + 1,
-                        d[k][l] + (i - k - 1) + 1 + (j - l - 1))
-                da[a[i - 1]] = i
-            return d[n + 1][m_ + 1]
-        return pd.Series([dl(a, b) for a, b in zip(a_s, b_s)])
-
-    return pairs.withColumn("dist", _dl(F.col(w1), F.col(w2)))

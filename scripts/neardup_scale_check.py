@@ -76,6 +76,14 @@ def band_tuples(shingles: list[str], A: list[int], B: list[int],
             for b in range(n_hashes // band)]
 
 
+def family_token_expr(pos: str) -> str:
+    """SQL for the token at position ``pos`` of family f's sequence —
+    the engine-side twin of family_shingles' tok()."""
+    return (f"CASE WHEN f % 2 = 0 THEN concat('t', f, '_', {pos}) "
+            f"WHEN {pos} = 0 THEN concat('x', f) "
+            f"ELSE concat('t', f - 1, '_', {pos}) END")
+
+
 def write_corpus(spark, n_fam: int, m: int, n_single: int,
                  path: str, parts: int) -> int:
     """Land the planted corpus as parquet: n_fam cyclic-rotation
@@ -85,11 +93,6 @@ def write_corpus(spark, n_fam: int, m: int, n_single: int,
     from pyspark.sql import functions as F  # noqa: F401
 
     n_docs = n_fam * m + n_single
-    fam_tok = (
-        "CASE WHEN f % 2 = 0 THEN concat('t', f, '_', p) "
-        "WHEN p = 0 THEN concat('x', f) "
-        "ELSE concat('t', f - 1, '_', p) END"
-    )
     docs = spark.range(0, n_docs, 1, parts).selectExpr(
         "id as doc_id",
         f"id div {m} as f",
@@ -100,7 +103,7 @@ def write_corpus(spark, n_fam: int, m: int, n_single: int,
               concat('s', doc_id, 'a s', doc_id, 'b s', doc_id,
                      'c s', doc_id, 'd s', doc_id, 'e')
             ELSE array_join(transform(sequence(0, {2 * N_TOK - 1}),
-              i -> {fam_tok.replace('p', f'pmod(j + i, {N_TOK})')}), ' ')
+              i -> {family_token_expr(f'pmod(j + i, {N_TOK})')}), ' ')
             END as text""",
     )
     docs.write.mode("overwrite").parquet(path)

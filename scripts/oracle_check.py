@@ -23,7 +23,7 @@ import pandas as pd
 sys.path.insert(0, ".")
 
 import __spark_entry__ as E  # noqa: E402
-from bdtopo2refhydro_spark.session import get_spark  # noqa: E402
+from bdtopo2refhydro_spark.session import get_spark, spark_conf  # noqa: E402
 
 
 def force_distributed_paths() -> None:
@@ -38,6 +38,18 @@ def force_distributed_paths() -> None:
     # fixture of scripts/natural_scale_check.py, contraction from its
     # chain fixture — this forced mode exists to gate contract cheaply.)
     O.MIN_CHAIN_FRACTION = -1.0
+
+
+def result_cap(driver_memory: str) -> str:
+    """``spark.driver.maxResultSize`` for a driver heap of
+    ``driver_memory`` (a JVM size string, MiB when it has no unit): half
+    the heap, so an oversized collect fails at Spark's result-size guard
+    instead of as a driver OutOfMemoryError."""
+    kib = {"k": 1, "m": 1 << 10, "g": 1 << 20, "t": 1 << 30}
+    s = driver_memory.strip().lower().removesuffix("b")
+    n, unit = (s[:-1], s[-1]) if s[-1] in kib else (s, "m")
+    return f"{int(n) * kib[unit] // 2}k"
+
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -98,9 +110,12 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     # big fixtures: quadratic-OUTPUT contracts (containment/lsh_pairs at
     # sf1) collect tens of millions of rows for the pandas compare —
-    # lift the 1g driver collect cap for this harness only
+    # lift the 1g driver collect cap for this harness only, to half the
+    # driver heap (A3's payload budget, _local.payload_budget, follows)
+    heap = spark_conf(cores=8)["spark.driver.memory"]
     spark = get_spark("oracle_check", cores=8, shuffle_partitions=16,
-                      extra_conf={"spark.driver.maxResultSize": "16g"})
+                      extra_conf={"spark.driver.maxResultSize":
+                                  result_cap(heap)})
     qs, os_ = E.queries(), E.oracle_sql()
     failures = 0
     for name, fn in qs.items():

@@ -1,34 +1,10 @@
-"""Broadcast Aho-Corasick + Merkle levels + dense_index (batch 87)."""
+"""Merkle levels + dense_index (batch 87)."""
 import hashlib
-import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from bdtopo2refhydro_spark.operators.aggregate import dense_index
 from bdtopo2refhydro_spark.operators.dq import merkle_levels
-from bdtopo2refhydro_spark.operators.text import aho_corasick_counts
-
-
-@pytest.mark.parametrize("seed", [3, 41])
-def test_aho_corasick_vs_bruteforce(spark, seed):
-    rng = random.Random(seed)
-    pats = ["ab", "aba", "ba", "aab", "b", "abab"]
-    texts = ["".join(rng.choice("ab") for _ in range(rng.randrange(0, 60)))
-             for _ in range(40)]
-    df = spark.createDataFrame(list(enumerate(texts)),
-                               "doc_id long, text string")
-    got = {r["doc_id"]: (r["n_matches"], r["n_pats"])
-           for r in aho_corasick_counts(df, pats).collect()}
-    for i, t in enumerate(texts):
-        total, seen = 0, set()
-        for p in pats:
-            c = sum(1 for j in range(len(t) - len(p) + 1)
-                    if t[j:j + len(p)] == p)
-            total += c
-            if c:
-                seen.add(p)
-        assert got[i] == (total, len(seen)), (i, t)
 
 
 def test_dense_index_non_contiguous_keys(spark):

@@ -86,222 +86,3 @@ def test_nb_train_predict_matches_fraction_argmax(spark):
         pred = 1 if n1 * p1 * (n0 + V) ** 4 > n0 * p0 * (n1 + V) ** 4 else 0
         assert s1 > s0 if pred == 1 else s1 <= s0
         assert got[pid] == (p1, p0, pred)
-
-
-def test_lis_lengths_patience_vs_dp(spark):
-    import random
-
-    from bdtopo2refhydro_spark.operators.ml import lis_lengths
-
-    rng = random.Random(57)
-    rows, want = [], {}
-    for g in range(5):
-        n = rng.randrange(1, 40)
-        seq = [rng.randrange(0, 30) for _ in range(n)]
-        rows += [(g, i, a) for i, a in enumerate(seq)]
-        dp = [1] * n
-        for j in range(n):
-            for i in range(j):
-                if seq[i] < seq[j]:
-                    dp[j] = max(dp[j], dp[i] + 1)
-        want[g] = max(dp)
-    df = spark.createDataFrame(rows, "g long, i long, a long")
-    got = {r["g"]: r["lis"] for r in lis_lengths(df).collect()}
-    assert got == want
-
-
-def test_knapsack_and_wis_vs_exhaustive(spark):
-    import random
-    from itertools import combinations
-
-    from bdtopo2refhydro_spark.operators.ml import (
-        knapsack01, weighted_interval_max)
-
-    rng = random.Random(83)
-    # knapsack
-    krows, kwant = [], {}
-    cap = 15
-    for g in range(4):
-        items = [(rng.randrange(1, 8), rng.randrange(1, 15))
-                 for _ in range(rng.randrange(1, 11))]
-        krows += [(g, w, v) for w, v in items]
-        best = 0
-        for k in range(len(items) + 1):
-            for sub in combinations(items, k):
-                if sum(w for w, _ in sub) <= cap:
-                    best = max(best, sum(v for _, v in sub))
-        kwant[g] = best
-    kdf = spark.createDataFrame(krows, "g long, wt long, val long")
-    got = {r["g"]: r["best"] for r in knapsack01(kdf, cap).collect()}
-    assert got == kwant
-
-    # weighted interval scheduling
-    irows, iwant = [], {}
-    for g in range(4):
-        ivs = [(s, s + rng.randrange(1, 20), rng.randrange(1, 10))
-               for s in (rng.randrange(0, 80)
-                         for _ in range(rng.randrange(1, 12)))]
-        irows += [(g, s, e, v) for s, e, v in ivs]
-        best = 0
-        for k in range(len(ivs) + 1):
-            for sub in combinations(ivs, k):
-                ss = sorted(sub)
-                if all(ss[i][1] <= ss[i + 1][0]
-                       for i in range(len(ss) - 1)):
-                    best = max(best, sum(v for _, _, v in ss))
-        iwant[g] = best
-    idf = spark.createDataFrame(irows, "g long, s long, e long, val long")
-    got2 = {r["g"]: r["best"]
-            for r in weighted_interval_max(idf).collect()}
-    assert got2 == iwant
-
-
-def test_det_bareiss_vs_numpy_and_singular(spark):
-    import random
-
-    import numpy as np
-
-    from bdtopo2refhydro_spark.operators.ml import det_bareiss
-
-    rng = random.Random(91)
-    rows, want = [], {}
-    n = 4
-    for g in range(8):
-        if g == 7:
-            # planted singular matrix: row 2 = row 0 + row 1
-            M = np.array([[1, 2, 3, 4], [5, 6, 7, 8],
-                          [6, 8, 10, 12], [1, 0, 0, 2]])
-        else:
-            M = np.array([[rng.randrange(-5, 6) for _ in range(n)]
-                          for _ in range(n)])
-        rows += [(g, i, j, int(M[i, j]))
-                 for i in range(n) for j in range(n)]
-        want[g] = int(round(np.linalg.det(M)))
-    df = spark.createDataFrame(rows, "g long, i long, j long, v long")
-    got = {r["g"]: r["det"] for r in det_bareiss(df, n).collect()}
-    assert got == want
-    assert want[7] == 0
-
-
-def test_inversion_counts_vs_pairs(spark):
-    import random
-
-    from bdtopo2refhydro_spark.operators.ml import inversion_counts
-
-    rng = random.Random(97)
-    rows, want = [], {}
-    for g in range(5):
-        seq = [rng.randrange(0, 50) for _ in range(rng.randrange(1, 60))]
-        rows += [(g, i, a) for i, a in enumerate(seq)]
-        want[g] = sum(1 for i in range(len(seq))
-                      for j in range(i + 1, len(seq))
-                      if seq[i] > seq[j])
-    df = spark.createDataFrame(rows, "g long, i long, a long")
-    got = {r["g"]: r["inv"] for r in inversion_counts(df).collect()}
-    assert got == want
-
-
-def test_huffman_cost_vs_dp_optimum(spark):
-    import itertools
-    import random
-
-    from bdtopo2refhydro_spark.operators.ml import huffman_cost
-
-    rng = random.Random(103)
-    rows, want = [], {}
-    for g in range(6):
-        k = rng.randrange(2, 8)
-        fs = [rng.randrange(1, 50) for _ in range(k)]
-        rows += [(g, f) for f in fs]
-        # independent optimum: DP over sorted merges = brute force
-        # over all merge orders for small k
-        best = [None]
-
-        def merge_all(pool, acc):
-            if len(pool) == 1:
-                if best[0] is None or acc < best[0]:
-                    best[0] = acc
-                return
-            if best[0] is not None and acc >= best[0]:
-                return
-            for i, j in itertools.combinations(range(len(pool)), 2):
-                s = pool[i] + pool[j]
-                nxt = [p for t, p in enumerate(pool)
-                       if t not in (i, j)] + [s]
-                merge_all(nxt, acc + s)
-
-        merge_all(fs, 0)
-        want[g] = best[0]
-    df = spark.createDataFrame(rows, "g long, f long")
-    got = {r["g"]: r["cost"] for r in huffman_cost(df).collect()}
-    assert got == want
-
-
-def test_isotonic_fit_properties(spark):
-    import random
-
-    from bdtopo2refhydro_spark.operators.ml import isotonic_fit
-
-    rng = random.Random(113)
-    rows = []
-    for g in range(4):
-        for i in range(rng.randrange(2, 40)):
-            rows.append((g, i, rng.randrange(0, 100)))
-    df = spark.createDataFrame(rows, "g long, i long, a long")
-    got = {}
-    for r in isotonic_fit(df).collect():
-        got.setdefault(r["g"], []).append((r["i"], r["fit"]))
-    raw = {}
-    for g, i, a in rows:
-        raw.setdefault(g, {})[i] = a
-    for g, pts in got.items():
-        pts.sort()
-        fits = [f for _, f in pts]
-        # monotone non-decreasing
-        assert all(fits[k] <= fits[k + 1] + 1e-12
-                   for k in range(len(fits) - 1))
-        # block-mean property: sum preserved
-        assert abs(sum(fits) - sum(raw[g].values())) < 1e-6
-        # minimax spot check on a few points
-        n = len(fits)
-        a = [raw[g][i] for i in range(n)]
-        for i in (0, n // 2, n - 1):
-            want = max(min(sum(a[j:k + 1]) / (k - j + 1)
-                           for k in range(i, n))
-                       for j in range(i + 1))
-            assert abs(fits[i] - want) < 1e-9
-
-
-def test_lp2_simplex_vs_scipy_free_enumeration(spark):
-    import random
-    from fractions import Fraction
-
-    from bdtopo2refhydro_spark.operators.ml import lp2_simplex
-
-    rng = random.Random(131)
-    crow, orow, want = [], [], {}
-    for g in range(5):
-        cons = [(rng.randrange(1, 6), rng.randrange(1, 6),
-                 rng.randrange(10, 40)) for _ in range(4)]
-        p, q = rng.randrange(1, 6), rng.randrange(1, 6)
-        crow += [(g, a, b, c) for a, b, c in cons]
-        orow.append((g, p, q))
-        # vertex enumeration with Fractions
-        lines = cons + [(-1, 0, 0), (0, -1, 0)]
-        best = Fraction(0)
-        for i in range(len(lines)):
-            for j in range(i + 1, len(lines)):
-                a1, b1, c1 = lines[i]
-                a2, b2, c2 = lines[j]
-                d = a1 * b2 - a2 * b1
-                if d == 0:
-                    continue
-                x = Fraction(c1 * b2 - c2 * b1, d)
-                y = Fraction(a1 * c2 - a2 * c1, d)
-                if all(a * x + b * y <= c for a, b, c in lines):
-                    best = max(best, p * x + q * y)
-        want[g] = best.numerator / best.denominator
-    c = spark.createDataFrame(crow, "g long, a long, b long, c long")
-    o = spark.createDataFrame(orow, "g long, p long, q long")
-    got = {r["g"]: r["obj"] for r in lp2_simplex(c, o).collect()}
-    assert got == want

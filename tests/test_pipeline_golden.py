@@ -331,8 +331,37 @@ def test_entry_contract_schema(spark):
     assert [f.name for f in df.schema.fields] == ["url", "nature"]
     assert df.count() > 0
     qs, osql = E.queries(), E.oracle_sql()
-    assert set(osql) <= set(qs)
-    assert len(qs) >= 59 and len(osql) >= 56
+    assert set(osql) == set(qs)
+    assert list(qs)[:50] == E._DRIVER_WINDOW
+
+    # every top-level def/constant is reachable from the public surface
+    # (or is a helper the scripts import) — catches helpers left behind
+    # when an entry is deleted
+    import ast
+    import pathlib
+
+    tree = ast.parse(pathlib.Path(E.__file__).read_text())
+    refs = {}
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            names = [node.name]
+        elif isinstance(node, ast.Assign):
+            names = [n.id for t in node.targets for n in ast.walk(t)
+                     if isinstance(n, ast.Name)]
+        else:
+            continue
+        used = {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+        for name in names:
+            refs[name] = used
+    seen = set()
+    todo = ["queries", "oracle_sql", "entry",
+            "_tree_geom_edges", "_outlet_band", "_forest_edges"]
+    while todo:
+        name = todo.pop()
+        if name in refs and name not in seen:
+            seen.add(name)
+            todo.extend(refs[name])
+    assert sorted(set(refs) - seen) == []
 
 
 def test_read_jsonl_permissive_and_csv(spark, tmp_path):

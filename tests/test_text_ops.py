@@ -1182,64 +1182,3 @@ def test_spark_soundex_matches_commons_variant_model(spark):
     got = {r["w"]: r["sx"]
            for r in df.select("w", F.soundex("w").alias("sx")).collect()}
     assert got == {w: model(w) for w in words}
-
-
-def test_lcp_array_kasai_vs_bruteforce(spark):
-    import random
-
-    from bdtopo2refhydro_spark.operators.text import lcp_array
-
-    rng = random.Random(9)
-    words = list({"".join(rng.choice("abcd") for _ in range(
-        rng.randrange(1, 24))) for _ in range(30)} | {"aaaaaa", "abab"})
-    df = spark.createDataFrame([(w,) for w in words], "word string")
-    got = {(r["word"], r["rank"]): r["lcp"]
-           for r in lcp_array(df).collect()}
-    for w in words:
-        sufs = sorted(w[i:] for i in range(len(w)))
-        for r, s in enumerate(sufs):
-            if r == 0:
-                want = 0
-            else:
-                p = sufs[r - 1]
-                want = 0
-                while (want < min(len(s), len(p))
-                       and s[want] == p[want]):
-                    want += 1
-            assert got[(w, r)] == want, (w, r)
-
-
-def test_manacher_vs_bruteforce(spark):
-    import random
-
-    from bdtopo2refhydro_spark.operators.text import longest_palindrome
-
-    rng = random.Random(19)
-    words = list({"".join(rng.choice("ab") for _ in range(
-        rng.randrange(1, 30))) for _ in range(40)}
-        | {"abacabadabacaba", "aaaa", "abc"})
-    df = spark.createDataFrame([(w,) for w in words], "word string")
-    got = {r["word"]: r["pal_len"]
-           for r in longest_palindrome(df).collect()}
-    for w in words:
-        best = max(len(w[i:j]) for i in range(len(w))
-                   for j in range(i + 1, len(w) + 1)
-                   if w[i:j] == w[i:j][::-1])
-        assert got[w] == best, w
-
-
-def test_lz_complexity_known_values(spark):
-    from bdtopo2refhydro_spark.operators.text import lz_complexity
-
-    cases = {
-        # a | b | aa(b->? ) trace manually below
-        "aaaa": 2,        # a | aaa (overlap allowed)
-        "ab": 2,          # a | b
-        "abab": 3,        # a | b | ab
-        "abcabcabc": 4,   # a | b | c | abcabc
-        "x": 1,
-    }
-    df = spark.createDataFrame([(w,) for w in cases], "word string")
-    got = {r["word"]: r["n_factors"]
-           for r in lz_complexity(df).collect()}
-    assert got == cases
