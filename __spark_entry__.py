@@ -3535,95 +3535,6 @@ def _hits_sql(rounds: int = 2, scale: int = 1_000_000) -> str:
         f" USING (node)")
 
 
-def _q_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic contrastive-triplet mining (corpus.py:
-    contrastive_triplets): positive = same-source successor (one window
-    over the source partitioning), negatives = reps of the next two
-    hash buckets (64-row broadcast) — zero self-joins, zero RNG."""
-    from bdtopo2refhydro_spark.operators.corpus import contrastive_triplets
-
-    return contrastive_triplets(
-        _docs(spark, sf_dir), k_neg=2, buckets=64,
-        bucket_expr=f"({_H}) % 64")
-
-
-_TRIPLETS_SQL = f"""
-WITH a AS (
-  SELECT doc_id, source,
-         lead(doc_id) OVER (PARTITION BY source ORDER BY doc_id)
-           AS pos_id,
-         ({_HD}) % 64 AS b
-  FROM documents
-),
-reps AS (
-  SELECT ({_HD}) % 64 AS rb, min(doc_id) AS neg_id
-  FROM documents GROUP BY 1
-)
-SELECT a.doc_id AS anchor_id, pos_id, neg_id, CAST(j.range AS BIGINT) AS j
-FROM a CROSS JOIN range(1, 3) j
-JOIN reps ON (a.b + j.range) % 64 = reps.rb
-WHERE pos_id IS NOT NULL
-"""
-
-
-def _q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel signup → click → purchase
-    (temporal.py:funnel_steps): step i joins a filtered min-aggregate
-    to the shrinking step-(i-1) frontier on the user key — strictly-
-    later semantics, integer-µs, -1 for unreached."""
-    from bdtopo2refhydro_spark.operators.temporal import funnel_steps
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return funnel_steps(ev, ["signup", "click", "purchase"])
-
-
-_FUNNEL_SQL = """
-WITH s1 AS (
-  SELECT user_id, min(epoch_us(ts)) AS t1_us FROM events
-  WHERE event_type = 'signup' GROUP BY user_id
-),
-s2 AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS t2_us
-  FROM events e JOIN s1 USING (user_id)
-  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1_us
-  GROUP BY e.user_id
-),
-s3 AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS t3_us
-  FROM events e JOIN s2 USING (user_id)
-  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t2_us
-  GROUP BY e.user_id
-)
-SELECT s1.user_id,
-       CAST(1 + (s2.user_id IS NOT NULL)::INT
-              + (s3.user_id IS NOT NULL)::INT AS BIGINT) AS n_reached,
-       t1_us, coalesce(t2_us, -1) AS t2_us, coalesce(t3_us, -1) AS t3_us
-FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-"""
-
-
-def _q_event_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event ML features from the user's own history
-    (temporal.py:event_features): sequence index, gap to previous
-    event, trailing-24h activity count — one hash shuffle on user_id
-    feeds the row, lag, and RANGE frames. All integer µs."""
-    from bdtopo2refhydro_spark.operators.temporal import event_features
-
-    return event_features(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-_EVENT_FEATURES_SQL = """
-SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-       CAST(row_number() OVER w AS BIGINT) AS seq_idx,
-       coalesce(epoch_us(ts) - lag(epoch_us(ts)) OVER w, -1) AS gap_us,
-       CAST(count(*) OVER wr - 1 AS BIGINT) AS n_prev_24h
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id),
-       wr AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-              RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)
-"""
-
-
 def _q_dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass column profiling (dq.py:profile_columns): documents is
     melted via stack to (column, value-string) and ONE hash aggregate
@@ -3812,89 +3723,6 @@ SELECT dst, CAST(SUM(cnt) AS BIGINT) AS n_links,
        array_to_string(list(anchor ORDER BY rn) FILTER (rn <= 3),
                        chr(31)) AS top_anchors
 FROM ranked GROUP BY dst
-"""
-
-
-def _q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host triangle participation over the sparsified undirected
-    host graph (doc_id % 3 linkers) — degree-oriented wedge join, the
-    Suri-Vassilvitskii distributed triangle count."""
-    from bdtopo2refhydro_spark.operators import linkgraph as LG
-
-    docs = _docs(spark, sf_dir)
-    pairs = (
-        docs.filter(F.expr("doc_id % 3 = 0"))
-        .select(
-            F.col("source").alias("h1"),
-            F.expr(f"concat('src', cast(({_H} div 17) % 20 as string))")
-            .alias("h2"),
-        )
-        .filter(F.expr("h1 <> h2"))
-        .select(F.least("h1", "h2").alias("a"),
-                F.greatest("h1", "h2").alias("b"))
-        .distinct()
-    )
-    return LG.triangle_counts(pairs)
-
-
-_TRIANGLES_SQL = f"""
-WITH raw AS (
-  SELECT source AS h1,
-         'src' || CAST(({_HD} // 17) % 20 AS VARCHAR) AS h2
-  FROM documents WHERE doc_id % 3 = 0
-),
-p AS (
-  SELECT DISTINCT least(h1, h2) AS a, greatest(h1, h2) AS b
-  FROM raw WHERE h1 <> h2
-),
-tri AS (
-  SELECT p1.a AS x, p1.b AS y, p2.b AS z
-  FROM p p1
-  JOIN p p2 ON p2.a = p1.b
-  JOIN p p3 ON p3.a = p1.a AND p3.b = p2.b
-),
-corners AS (
-  SELECT x AS node FROM tri
-  UNION ALL SELECT y FROM tri
-  UNION ALL SELECT z FROM tri
-)
-SELECT node, CAST(count(*) AS BIGINT) AS tri_cnt FROM corners GROUP BY node
-"""
-
-
-def _q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-3 TF-IDF terms, integer score
-    tf * ((N * 1e6) div df) — floor division, no float log, exact
-    oracle. The per-doc window runs on the post-aggregation table."""
-    from bdtopo2refhydro_spark.operators import corpus as C
-
-    return C.tfidf_topk(_docs(spark, sf_dir), k=3)
-
-
-_TFIDF_SQL = """
-WITH toks AS (
-  SELECT doc_id, t AS token
-  FROM documents, UNNEST(string_split(text, ' ')) AS u(t)
-  WHERE t <> ''
-),
-tf AS (
-  SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
-  FROM toks GROUP BY 1, 2
-),
-df AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY token),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.token, tf.tf, df.df,
-         CAST(tf.tf * ((n.n_docs * 1000000) // df.df) AS BIGINT) AS score
-  FROM tf JOIN df USING (token) CROSS JOIN n
-),
-ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id ORDER BY score DESC, token ASC) AS rank
-  FROM scored
-)
-SELECT doc_id, token, tf, df, score, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 3
 """
 
 
@@ -4599,48 +4427,6 @@ FROM f
 """
 
 
-# geometrically-skewed group key (sizes ~ 32:16:8:4:2:1 per 63 ids) — the
-# fixture's real sources are balanced, which would make temperature
-# sampling degenerate
-_SKEWGRP = ("case when doc_id % 63 < 32 then 0 when doc_id % 63 < 48 then 1 "
-            "when doc_id % 63 < 56 then 2 when doc_id % 63 < 60 then 3 "
-            "when doc_id % 63 < 62 then 4 else 5 end")
-
-
-def _q_temp_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based mixture sampling (α=0.5) over geometrically
-    skewed groups, budget 200 — small groups saturate (rate clamps at 1),
-    big groups flatten. Exact across engines: integer-ized sqrt weights
-    make the cross-group sum order-independent; the rest is fixed-shape
-    correctly-rounded float arithmetic (operators/corpus.py)."""
-    from bdtopo2refhydro_spark.operators.corpus import sample_temperature
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(_SKEWGRP).cast("long").alias("grp")
-    )
-    return sample_temperature(docs, 200, source_col="grp",
-                              id_col="doc_id").select("doc_id", "grp")
-
-
-_TEMP_SAMPLE_SQL = f"""
-WITH d AS (
-  SELECT doc_id, CAST({_SKEWGRP} AS BIGINT) AS grp FROM documents
-),
-n AS (SELECT grp, count(*) AS n FROM d GROUP BY grp),
-w AS (SELECT grp, n, CAST(floor(sqrt(n) * 1048576) AS BIGINT) AS w FROM n),
-tot AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM w),
-thr AS (
-  SELECT grp,
-         CAST(floor(least(1.0, (200 * w / tw) / n) * 65536) AS BIGINT)
-           AS thr
-  FROM w, tot
-)
-SELECT d.doc_id, d.grp
-FROM d JOIN thr USING (grp)
-WHERE ((d.doc_id % 65536) * 40503) % 65536 < thr.thr
-"""
-
-
 def _q_inv_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index build: token → (df, sorted posting list), min_df=3.
     One explode + one hash aggregate with map-side partial combine;
@@ -4660,33 +4446,6 @@ WITH tok AS (
 SELECT token, count(*) AS df, list_sort(array_agg(doc_id)) AS postings
 FROM tok WHERE token != ''
 GROUP BY token HAVING count(*) >= 3
-"""
-
-
-def _q_quantile_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language exact discrete percentiles of document length
-    (rank = ceil(q·n) under a deterministic (value, id) order — integer
-    arithmetic, no interpolation, so any engine replays it exactly).
-    The calibration stats behind length/quality gate thresholds."""
-    from bdtopo2refhydro_spark.operators import corpus as C
-
-    return C.group_quantiles(_docs(spark, sf_dir), "n_chars",
-                             group_col="lang", id_col="doc_id")
-
-
-_QUANTILE_SQL = """
-WITH ranked AS (
-  SELECT lang, n_chars,
-         row_number() OVER (PARTITION BY lang
-                            ORDER BY n_chars, doc_id) AS rn,
-         count(*) OVER (PARTITION BY lang) AS n
-  FROM documents
-)
-SELECT lang, max(n) AS n,
-       max(CASE WHEN rn = (n + 1) // 2 THEN n_chars END) AS p50,
-       max(CASE WHEN rn = (n * 9 + 9) // 10 THEN n_chars END) AS p90,
-       max(CASE WHEN rn = (n * 99 + 99) // 100 THEN n_chars END) AS p99
-FROM ranked GROUP BY lang
 """
 
 
@@ -6426,42 +6185,6 @@ GROUP BY 1, 2
 """.format(phrases=", ".join(f"'{p}'" for p in _DICT_PHRASES))
 
 
-def _q_cogroup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cogrouped applyInPandas (temporal.py:cogroup_user_profile):
-    full-outer per-user merge of event activity and order spend through
-    the groupBy().cogroup() API, bucketed 64 ways so the Arrow boundary
-    sees big groups. Integer counts/cents → exact oracle."""
-    from bdtopo2refhydro_spark.operators.temporal import (
-        cogroup_user_profile,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return cogroup_user_profile(ev, od, buckets=64)
-
-
-_COGROUP_PROFILE_SQL = """
-WITH ea AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_clicks
-  FROM events GROUP BY user_id
-),
-oa AS (
-  SELECT o_custkey AS user_id, CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS spend_cents
-  FROM orders GROUP BY 1
-)
-SELECT COALESCE(ea.user_id, oa.user_id) AS user_id,
-       COALESCE(n_events, 0) AS n_events,
-       COALESCE(n_clicks, 0) AS n_clicks,
-       COALESCE(n_orders, 0) AS n_orders,
-       COALESCE(spend_cents, 0) AS spend_cents
-FROM ea FULL OUTER JOIN oa ON ea.user_id = oa.user_id
-"""
-
-
 def _q_stream_pyseq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python DataSource STREAMING reader (sources/pyds_stream.py):
     a SimpleDataSourceStreamReader emitting a deterministic sequence in
@@ -6690,55 +6413,10 @@ JOIN deg dy ON dy.node = y
 """
 
 
-def _q_sssp_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round Bellman-Ford (linkgraph.py:sssp_bounded): integer-
-    weighted shortest paths from n0, relaxed exactly 4 times — exact
-    for every node within a 4-edge horizon, replayed by the unrolled
-    DuckDB CTE. Weights derive from the node index so both engines
-    build the identical graph."""
-    from bdtopo2refhydro_spark.operators import linkgraph as LG
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    i = (F.col("doc_id") % 64).cast("bigint")
-    ring = docs.select(
-        F.concat(F.lit("n"), i.cast("string")).alias("src"),
-        F.concat(F.lit("n"), ((i + 1) % 64).cast("string")).alias("dst"),
-        ((i % 7) + 1).cast("bigint").alias("weight"))
-    chord = docs.select(
-        F.concat(F.lit("n"), i.cast("string")).alias("src"),
-        F.concat(F.lit("n"), ((i + 5) % 64).cast("string")).alias("dst"),
-        ((i % 11) + 3).cast("bigint").alias("weight"))
-    edges = ring.unionByName(chord).distinct()
-    return LG.sssp_bounded(edges, ["n0"], rounds=4)
-
-
-def _sssp_sql(rounds: int = 4) -> str:
-    ctes = ["""WITH we AS (
-  SELECT DISTINCT 'n' || CAST(doc_id % 64 AS VARCHAR) AS u,
-         'n' || CAST((doc_id % 64 + 1) % 64 AS VARCHAR) AS v,
-         CAST(doc_id % 64 % 7 + 1 AS BIGINT) AS w
-  FROM documents
-  UNION
-  SELECT DISTINCT 'n' || CAST(doc_id % 64 AS VARCHAR),
-         'n' || CAST((doc_id % 64 + 5) % 64 AS VARCHAR),
-         CAST(doc_id % 64 % 11 + 3 AS BIGINT)
-  FROM documents
-)""",
-            "d0 AS (SELECT 'n0' AS node, CAST(0 AS BIGINT) AS dist)"]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"d{i} AS (SELECT node, CAST(min(dist) AS BIGINT) AS dist"
-            f" FROM (SELECT node, dist FROM d{i - 1}"
-            f" UNION ALL SELECT we.v, d.dist + we.w"
-            f" FROM d{i - 1} d JOIN we ON we.u = d.node) GROUP BY node)")
-    return ",\n".join(ctes) + f"\nSELECT node, dist FROM d{rounds}"
-
-
 def _q_simpson_div(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc lexical concentration (text.py:simpson_diversity): the
     Simpson/Hunter-Gaston index as integer num/den — the log-free
-    entropy stand-in for repetitiveness gating (same substitution
-    family as collocations' lift)."""
+    entropy stand-in for repetitiveness gating."""
     from bdtopo2refhydro_spark.operators import text as T
 
     return T.simpson_diversity(_docs(spark, sf_dir))
@@ -7111,44 +6789,6 @@ UNION ALL
 SELECT m1.doc, m2.doc, m1.sz, m1.sz
 FROM members m1 JOIN members m2
   ON m1.rep = m2.rep AND m1.doc != m2.doc
-"""
-
-
-def _q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation mining by lift (corpus.py:collocations): adjacent
-    bigram counts + unigram marginals, lift = n_xy·N/(n_x·n_y) — the
-    log-free monotone equivalent of PMI (one double division of two
-    exact BIGINT products). Pairs form map-side from the token array
-    (zero joins); marginals broadcast."""
-    from bdtopo2refhydro_spark.operators import corpus as C
-
-    return C.collocations(_docs(spark, sf_dir), min_count=2)
-
-
-_COLLOCATIONS_SQL = """
-WITH lists AS (
-  SELECT list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                     t -> t != '') AS l
-  FROM documents
-),
-big AS (
-  SELECT l[CAST(i - 1 AS INT)] AS w1, l[CAST(i AS INT)] AS w2
-  FROM lists, UNNEST(range(2, len(l) + 1)) t(i)
-),
-nxy AS (
-  SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_xy
-  FROM big GROUP BY 1, 2 HAVING count(*) >= 2
-),
-uni AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS n
-  FROM (SELECT unnest(l) AS tok FROM lists) GROUP BY 1
-),
-tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM uni)
-SELECT w1, w2, n_xy, u1.n AS n_x, u2.n AS n_y,
-       CAST(n_xy * n_total AS BIGINT) / CAST(u1.n * u2.n AS BIGINT) AS lift
-FROM nxy
-JOIN uni u1 ON w1 = u1.tok
-JOIN uni u2 ON w2 = u2.tok, tot
 """
 
 
@@ -7630,152 +7270,6 @@ SELECT user_id, event_id, x,
 FROM w
 WHERE n_w = 8
   AND (n_w*x - s) * (n_w*x - s) > 5 * (n_w*s2 - s*s)
-"""
-
-
-_CIDR_RULES = [
-    ("10.0.0.0", 8, "deny"), ("10.1.0.0", 16, "allow"),
-    ("192.168.0.0", 16, "deny"), ("172.16.0.0", 12, "allow"),
-    ("4.0.0.0", 6, "throttle"), ("0.0.0.0", 0, "default"),
-]
-
-
-def _q_cidr_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest-prefix CIDR policy match (corpus.py:cidr_match): IPs
-    synthesized from event_id (pure integer arithmetic), matched
-    against a broadcast rule table via per-prefix-length shifted-key
-    equi-joins — never a range join. Rolled up per policy; sum of the
-    matched uint32 IPs fingerprints the assignment exactly."""
-    from bdtopo2refhydro_spark.operators.corpus import cidr_match
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    logs = ev.select(
-        "event_id",
-        F.concat_ws(
-            ".",
-            (F.col("event_id") % 223 + 1).cast("string"),
-            (F.expr("event_id div 7") % 256).cast("string"),
-            (F.expr("event_id div 11") % 256).cast("string"),
-            (F.expr("event_id div 13") % 256).cast("string")).alias("ip"))
-    rules = spark.createDataFrame(
-        _CIDR_RULES, "cidr_ip string, prefix_len int, policy string")
-    matched = cidr_match(logs, rules)
-    return (matched.groupBy("policy")
-            .agg(F.count("*").cast("long").alias("n"),
-                 F.sum("ip_int").cast("long").alias("sum_ip")))
-
-
-_CIDR_MATCH_SQL = f"""
-WITH logs AS (
-  SELECT event_id,
-         CAST(event_id % 223 + 1 AS BIGINT) * 16777216
-         + CAST((event_id // 7) % 256 AS BIGINT) * 65536
-         + CAST((event_id // 11) % 256 AS BIGINT) * 256
-         + CAST((event_id // 13) % 256 AS BIGINT) AS ip_int
-  FROM events
-),
-rules(cidr_ip, prefix_len, policy) AS (VALUES
-  {", ".join(f"('{ip}', {ln}, '{pol}')" for ip, ln, pol in _CIDR_RULES)}),
-rk AS (
-  SELECT prefix_len,
-         CASE WHEN prefix_len > 0 THEN
-           (CAST(string_split(cidr_ip, '.')[1] AS BIGINT) * 16777216
-            + CAST(string_split(cidr_ip, '.')[2] AS BIGINT) * 65536
-            + CAST(string_split(cidr_ip, '.')[3] AS BIGINT) * 256
-            + CAST(string_split(cidr_ip, '.')[4] AS BIGINT))
-           >> (32 - prefix_len)
-         ELSE 0 END AS rule_key, policy
-  FROM rules
-),
-cand AS (
-  SELECT l.event_id, l.ip_int, r.prefix_len, r.policy
-  FROM logs l JOIN rk r
-    ON (CASE WHEN r.prefix_len > 0
-             THEN l.ip_int >> (32 - r.prefix_len)
-             ELSE 0 END) = r.rule_key
-),
-best AS (
-  SELECT event_id, ip_int,
-         arg_max(policy, prefix_len) AS policy
-  FROM cand GROUP BY 1, 2
-)
-SELECT policy, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(ip_int) AS BIGINT) AS sum_ip
-FROM best GROUP BY 1
-"""
-
-
-_MIX_WEIGHTS = [("en", 1), ("fr", 3), ("de", 5), ("es", 2), ("zh", 4)]
-
-
-def _q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-data mixture plan (corpus.py:mixture_plan): per-lang
-    available chars x target weights -> integer allocations and epoch
-    counts via SQL `div` (never float floor), so the mixing plan
-    replays bitwise on any engine."""
-    from bdtopo2refhydro_spark.operators.corpus import mixture_plan
-
-    docs = _docs(spark, sf_dir)
-    units = docs.groupBy("lang").agg(
-        F.sum("n_chars").cast("long").alias("units"))
-    w = spark.createDataFrame(_MIX_WEIGHTS, "lang string, weight int")
-    return mixture_plan(units, w, group_col="lang")
-
-
-_MIXTURE_PLAN_SQL = f"""
-WITH units AS (
-  SELECT lang, CAST(sum(n_chars) AS BIGINT) AS units
-  FROM documents GROUP BY 1
-),
-w(lang, weight) AS (VALUES
-  {", ".join(f"('{lg}', {wt})" for lg, wt in _MIX_WEIGHTS)}),
-t AS (SELECT CAST(sum(units) AS BIGINT) AS total_units FROM units),
-sw AS (SELECT CAST(sum(weight) AS BIGINT) AS sum_w FROM w)
-SELECT u.lang, units, CAST(weight AS BIGINT) AS weight,
-       CAST((CAST(weight AS BIGINT) * total_units * 2) // sum_w
-            AS BIGINT) AS alloc,
-       CAST((((CAST(weight AS BIGINT) * total_units * 2) // sum_w)
-             + units - 1) // units AS BIGINT) AS epochs
-FROM units u JOIN w ON u.lang = w.lang, t, sw
-"""
-
-
-_LEV_VOCAB = ["colum", "windoe", "ordre", "jion", "streem",
-              "filtre", "hashes", "quary"]
-
-
-def _q_lev_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded edit-distance gazetteer match on the JVM's built-in
-    threshold levenshtein (corpus.py:nearest_vocab_lev): distinct 4-7
-    char tokens x a broadcast misspelling vocab, dist <= 2. The
-    threshold variant short-circuits the DP — the scale path for tight
-    gates (FastSS/fuzzy_join covers big vocabularies)."""
-    from bdtopo2refhydro_spark.operators.corpus import nearest_vocab_lev
-
-    docs = _docs(spark, sf_dir)
-    toks = (docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
-        .alias("tok"))
-        .where((F.length("tok") >= 4) & (F.length("tok") <= 7))
-        .distinct())
-    vocab = spark.createDataFrame([(t,) for t in _LEV_VOCAB],
-                                  "term string")
-    return nearest_vocab_lev(toks, vocab, max_dist=2)
-
-
-_LEV_GATE_SQL = f"""
-WITH toks AS (
-  SELECT DISTINCT tok FROM (
-    SELECT unnest(list_filter(
-             regexp_split_to_array(trim(lower(text)), '\\s+'),
-             t -> t != '')) AS tok
-    FROM documents)
-  WHERE length(tok) BETWEEN 4 AND 7
-),
-v(term) AS (VALUES {", ".join(f"('{t}')" for t in _LEV_VOCAB)})
-SELECT tok, term, CAST(levenshtein(tok, term) AS INT) AS dist
-FROM toks, v
-WHERE levenshtein(tok, term) <= 2
 """
 
 
@@ -8549,42 +8043,6 @@ SELECT doc_id, a[1] AS tok_1, a[2] AS tok_2, a[3] AS tok_3 FROM arr
 """
 
 
-def _q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized per-source rollup (corpus.py:winsorize_sums): clip
-    n_chars to the exact discrete per-source [p10, p90] (the
-    group_quantiles ceil(q·n) rank rule) and report raw vs clipped
-    sums — the outlier-robust statistic, all BIGINT."""
-    from bdtopo2refhydro_spark.operators.corpus import winsorize_sums
-
-    return winsorize_sums(_docs(spark, sf_dir), "n_chars",
-                          group_col="source", id_col="doc_id")
-
-
-_WINSORIZE_SQL = """
-WITH ranked AS (
-  SELECT source, n_chars,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_chars, doc_id) AS rn,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM documents
-),
-bounds AS (
-  SELECT source, CAST(max(n) AS BIGINT) AS n,
-         CAST(max(CASE WHEN rn = (n * 10 + 99) // 100
-                       THEN n_chars END) AS BIGINT) AS lo,
-         CAST(max(CASE WHEN rn = (n * 90 + 99) // 100
-                       THEN n_chars END) AS BIGINT) AS hi
-  FROM ranked GROUP BY source
-)
-SELECT d.source, b.n, b.lo, b.hi,
-       CAST(sum(d.n_chars) AS BIGINT) AS sum_raw,
-       CAST(sum(least(greatest(d.n_chars, b.lo), b.hi)) AS BIGINT)
-         AS sum_clipped
-FROM documents d JOIN bounds b USING (source)
-GROUP BY 1, 2, 3, 4
-"""
-
-
 # -- batch 30: geohash encode, public-suffix eTLD+1, statestore reader --
 
 # exact-dyadic-free but IEEE-identical synthetic lon/lat: the SAME
@@ -8621,73 +8079,6 @@ SELECT doc_id,
        {geohash_expr("lon", "lat", 6, dialect="duckdb")} AS gh6,
        {geohash_expr("lon", "lat", 8, dialect="duckdb")} AS gh8
 FROM pts
-"""
-
-
-_PSL = ["com", "org", "net", "uk", "co.uk", "ac.uk", "io",
-        "github.io", "fr", "gouv.fr"]
-# host fixture: doc_id%11=0 rows are BARE suffixes (no registrable
-# label → NULL); tails rotate over two-level suffixes so the k=2 match
-# must beat the k=1 ('uk' ⊂ 'co.uk') one; 'xyz' is not on the list
-_HOST = ("CASE WHEN doc_id % 11 = 0 THEN 'co.uk' ELSE concat("
-         "CASE WHEN doc_id % 3 = 0 THEN 'www' "
-         "ELSE concat('m', CAST(doc_id % 7 AS STRING)) END, '.', "
-         "'s', CAST(doc_id % 5 AS STRING), '.', "
-         "element_at(array('com','co.uk','github.io','ac.uk','xyz'), "
-         "CAST(doc_id % 5 AS INT) + 1)) END")
-_HOSTD = ("CASE WHEN doc_id % 11 = 0 THEN 'co.uk' ELSE "
-          "CASE WHEN doc_id % 3 = 0 THEN 'www' "
-          "ELSE 'm' || CAST(doc_id % 7 AS VARCHAR) END || '.' || "
-          "'s' || CAST(doc_id % 5 AS VARCHAR) || '.' || "
-          "(['com','co.uk','github.io','ac.uk','xyz'])"
-          "[CAST(doc_id % 5 AS INT) + 1] END")
-
-
-def _q_tld_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered-domain (eTLD+1) extraction by longest public-suffix
-    match (operators/corpus.py:registered_domain): the key every
-    domain-cap / leakage-split / robots scope decision hangs on.
-    Suffix list compiled to JVM literal sets — zero shuffle, zero UDF;
-    unmatched hosts and bare suffixes yield NULL."""
-    from bdtopo2refhydro_spark.operators.corpus import registered_domain
-
-    hosts = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(_HOST).alias("host"))
-    sfx = spark.createDataFrame([(s,) for s in _PSL], "suffix string")
-    return registered_domain(hosts, sfx, "host").select(
-        "doc_id", "host", "registered", "suffix_len")
-
-
-def _tld_split_sql() -> str:
-    inlist = ", ".join(f"'{s}'" for s in _PSL)
-    return f"""
-WITH hosts AS (
-  SELECT doc_id, {_HOSTD} AS host FROM documents
-),
-labs AS (
-  SELECT doc_id, host, string_split(host, '.') AS l,
-         len(string_split(host, '.')) AS n
-  FROM hosts
-),
-cand AS (
-  SELECT doc_id, host, l, n,
-         array_to_string(l[n - 2:n], '.') AS c3,
-         array_to_string(l[n - 1:n], '.') AS c2,
-         l[n] AS c1
-  FROM labs
-),
-reg AS (
-  SELECT doc_id, host,
-         CASE WHEN host IN ({inlist}) THEN NULL
-              WHEN n > 3 AND c3 IN ({inlist}) THEN l[n - 3] || '.' || c3
-              WHEN n > 2 AND c2 IN ({inlist}) THEN l[n - 2] || '.' || c2
-              WHEN n > 1 AND c1 IN ({inlist}) THEN l[n - 1] || '.' || c1
-              END AS registered
-  FROM cand
-)
-SELECT doc_id, host, registered,
-       CAST(len(string_split(registered, '.')) - 1 AS INT) AS suffix_len
-FROM reg
 """
 
 
@@ -9060,88 +8451,6 @@ FROM num
 """
 
 
-# ---- batch 47: Luby MIS + time-respecting reachability -----------------
-
-
-def _q_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal independent set by Luby-style local-minimum rounds
-    (graph.py:luby_mis) on the 120-node host graph — the node-level
-    symmetry-breaking sibling of max_matching. Oracle unrolls the
-    exact 12-round schedule."""
-    from bdtopo2refhydro_spark.operators.graph import luby_mis
-
-    p = _kt_pairs(spark, sf_dir)
-    return luby_mis(p, src="a", dst="b", rounds=12)
-
-
-def _mis_sql(rounds: int = 12) -> str:
-    ctes = [f"p AS MATERIALIZED ({_KT_EDGES_D})",
-            """sym AS MATERIALIZED (
-  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p)""",
-            """alive0 AS MATERIALIZED (
-  SELECT DISTINCT u AS node FROM sym)"""]
-    for r in range(rounds):
-        ctes.append(f"""nbrmin{r} AS MATERIALIZED (
-  SELECT s.u, min(s.v) AS mn FROM sym s
-  JOIN alive{r} a1 ON a1.node = s.u
-  JOIN alive{r} a2 ON a2.node = s.v
-  GROUP BY s.u)""")
-        ctes.append(f"""win{r} AS MATERIALIZED (
-  SELECT a.node, CAST({r} AS INT) AS mis_round FROM alive{r} a
-  LEFT JOIN nbrmin{r} m ON m.u = a.node
-  WHERE m.mn IS NULL OR a.node < m.mn)""")
-        ctes.append(f"""blocked{r} AS MATERIALIZED (
-  SELECT DISTINCT s.v AS node FROM sym s
-  JOIN win{r} w ON w.node = s.u)""")
-        ctes.append(f"""alive{r + 1} AS MATERIALIZED (
-  SELECT node FROM alive{r}
-  WHERE node NOT IN (SELECT node FROM win{r})
-    AND node NOT IN (SELECT node FROM blocked{r}))""")
-    wins = " UNION ALL ".join(
-        f"SELECT node, mis_round FROM win{r}" for r in range(rounds))
-    return "WITH " + ",\n".join(ctes) + f"\n{wins}"
-
-
-def _q_temporal_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-respecting reachability (graph.py:temporal_reachability):
-    min arrival over paths with NON-DECREASING edge timestamps —
-    static reachability overcounts crawl revisit / cascade questions.
-    Keeping only the per-node min arrival is sound (earlier arrivals
-    dominate); the oracle's exhaustive (node, arrival) walk agrees."""
-    from bdtopo2refhydro_spark.operators.graph import (
-        temporal_reachability)
-
-    d = _docs(spark, sf_dir)
-    e = d.select(
-        (F.col("doc_id") % 97).cast("long").alias("u"),
-        F.expr("((doc_id div 97) * 5 + (doc_id div 3)) % 97")
-        .cast("long").alias("v"),
-        F.expr(f"{_H} % 1000").cast("long").alias("t")).where("u != v")
-    src = spark.createDataFrame([(i,) for i in range(5)], "node long")
-    return temporal_reachability(e, src)
-
-
-_TEMPORAL_REACH_SQL = f"""
-WITH RECURSIVE e AS (
-  SELECT CAST(doc_id % 97 AS BIGINT) AS u,
-         CAST(((doc_id // 97) * 5 + (doc_id // 3)) % 97 AS BIGINT)
-           AS v,
-         CAST({_HD} % 1000 AS BIGINT) AS t
-  FROM documents
-  WHERE doc_id % 97 <> ((doc_id // 97) * 5 + (doc_id // 3)) % 97
-),
-walk(node, arrival) AS (
-  SELECT CAST(s.node AS BIGINT), CAST(0 AS BIGINT)
-  FROM (VALUES (0), (1), (2), (3), (4)) s(node)
-  UNION
-  SELECT f.v, f.t FROM walk w
-  JOIN e f ON f.u = w.node AND f.t >= w.arrival
-)
-SELECT node, CAST(min(arrival) AS BIGINT) AS arrival
-FROM walk GROUP BY node
-"""
-
-
 # ---- batch 46: parallel greedy maximal matching ------------------------
 
 
@@ -9212,165 +8521,6 @@ def _max_matching_sql(rounds: int = 12) -> str:
     return "WITH " + ",\n".join(ctes) + f"\n{hits}"
 
 
-# ---- batch 44: positional phrase search --------------------------------
-
-_PHRASES = [("p_the_fast", 0, "the", 2), ("p_the_fast", 1, "fast", 2),
-            ("p_b3", 0, "batch", 3), ("p_b3", 1, "batch", 3),
-            ("p_b3", 2, "batch", 3),
-            ("p_md", 0, "merge", 2), ("p_md", 1, "data", 2)]
-
-
-def _q_phrase_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional phrase search (corpus.py:phrase_search): one
-    postings⋈phrase equi-join re-anchored to implied starts, matched
-    by count(DISTINCT k) = phrase length. 'batch batch batch' pins the
-    repeated-token alignment logic."""
-    from bdtopo2refhydro_spark.operators.corpus import phrase_search
-
-    phrases = spark.createDataFrame(
-        _PHRASES, "phrase_id string, k int, tok string, plen int")
-    return phrase_search(_docs(spark, sf_dir), phrases)
-
-
-def _phrase_query_sql() -> str:
-    vals = ", ".join(f"('{p}', {k}, '{t}', {n})"
-                     for p, k, t, n in _PHRASES)
-    return f"""
-WITH phr(phrase_id, k, tok, plen) AS (VALUES {vals}),
-lists AS (
-  SELECT doc_id AS d,
-         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                     t -> t != '') AS l
-  FROM documents
-),
-toks AS (
-  SELECT d, CAST(i - 1 AS INT) AS pos, l[CAST(i AS INT)] AS tok
-  FROM lists, UNNEST(range(1, len(l) + 1)) t(i)
-),
-m AS (
-  SELECT p.phrase_id, t.d, t.pos - p.k AS start, p.k, p.plen
-  FROM toks t JOIN phr p ON p.tok = t.tok
-  WHERE t.pos - p.k >= 0
-)
-SELECT phrase_id, d AS doc_id, CAST(start AS BIGINT) AS start
-FROM m
-GROUP BY phrase_id, d, start, plen
-HAVING count(DISTINCT k) = plen
-"""
-
-
-# ---- batch 43: k-truss peel + clustering coefficient ------------------
-
-
-def _kt_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle-rich 120-node host graph: endpoints mix LOW bits
-    (doc_id % 120) with HIGH bits (doc_id // …) so edges at a node
-    genuinely vary — a partner that is a pure function of h1 yields a
-    functional (triangle-free) graph, which defeated the first
-    fixture. 936 edges; the 4-truss peel runs 936→480→364→316."""
-    d = _docs(spark, sf_dir)
-    raw = (d.select(
-        (F.col("doc_id") % 120).alias("h1"),
-        F.expr("((doc_id div 120) * 13 + (doc_id div 7)) % 120")
-        .alias("h2"))
-        .unionByName(d.select(
-            (F.col("doc_id") % 120).alias("h1"),
-            F.expr("((doc_id div 3) + 17 * (doc_id div 90)) % 120")
-            .alias("h2")))
-        .where("h1 != h2"))
-    return (raw.select(F.least("h1", "h2").alias("a"),
-                       F.greatest("h1", "h2").alias("b"))
-            .distinct())
-
-
-_KT_EDGES_D = """
-  SELECT DISTINCT least(h1, h2) AS a, greatest(h1, h2) AS b
-  FROM (SELECT doc_id % 120 AS h1,
-               ((doc_id // 120) * 13 + (doc_id // 7)) % 120 AS h2
-        FROM documents
-        UNION ALL
-        SELECT doc_id % 120,
-               ((doc_id // 3) + 17 * (doc_id // 90)) % 120
-        FROM documents) r
-  WHERE h1 <> h2
-"""
-
-
-def _q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round 4-truss peel (linkgraph.py:ktruss): drop edges in
-    < 2 triangles of the surviving graph, 3 rounds, then recount —
-    the edge-level community core next to kcore. Oracle is the fully
-    unrolled round schedule."""
-    from bdtopo2refhydro_spark.operators.linkgraph import ktruss
-
-    return ktruss(_kt_pairs(spark, sf_dir), k=4, rounds=3)
-
-
-def _ktruss_sql(k: int = 4, rounds: int = 3) -> str:
-    # MATERIALIZED everywhere: DuckDB inlines CTEs by default, and the
-    # unrolled chain re-expands the parquet-view scan until the process
-    # runs out of file handles (CLAUDE.md lesson from the width oracle)
-    ctes = [f"e0 AS MATERIALIZED ({_KT_EDGES_D})"]
-    for r in range(rounds + 1):
-        tri = "trif" if r == rounds else f"tri{r}"
-        sup = "supf" if r == rounds else f"sup{r}"
-        ctes.append(f"""{tri} AS MATERIALIZED (
-  SELECT p1.a AS x, p1.b AS y, p2.b AS z
-  FROM e{r} p1 JOIN e{r} p2 ON p2.a = p1.b
-  JOIN e{r} p3 ON p3.a = p1.a AND p3.b = p2.b)""")
-        ctes.append(f"""{sup} AS MATERIALIZED (
-  SELECT a, b, CAST(count(*) AS BIGINT) AS s FROM (
-    SELECT x AS a, y AS b FROM {tri}
-    UNION ALL SELECT x, z FROM {tri}
-    UNION ALL SELECT y, z FROM {tri}) t GROUP BY a, b)""")
-        if r < rounds:
-            ctes.append(f"""e{r + 1} AS MATERIALIZED (
-  SELECT e.a, e.b FROM e{r} e
-  LEFT JOIN sup{r} s ON s.a = e.a AND s.b = e.b
-  WHERE coalesce(s.s, 0) >= {k - 2})""")
-    return ("WITH " + ",\n".join(ctes) + f"""
-SELECT e.a, e.b, CAST(coalesce(s.s, 0) AS BIGINT) AS support
-FROM e{rounds} e LEFT JOIN supf s ON s.a = e.a AND s.b = e.b""")
-
-
-def _q_clust_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local clustering coefficient (linkgraph.py:
-    clustering_coefficient): integer triangle counts over the
-    degree-oriented enumeration, C(deg,2) denominator, ONE IEEE
-    division — exact."""
-    from bdtopo2refhydro_spark.operators.linkgraph import (
-        clustering_coefficient)
-
-    return clustering_coefficient(_kt_pairs(spark, sf_dir))
-
-
-_CLUST_COEF_SQL = f"""
-WITH p AS ({_KT_EDGES_D}),
-tri AS (
-  SELECT p1.a AS x, p1.b AS y, p2.b AS z
-  FROM p p1 JOIN p p2 ON p2.a = p1.b
-  JOIN p p3 ON p3.a = p1.a AND p3.b = p2.b
-),
-corners AS (
-  SELECT x AS node FROM tri
-  UNION ALL SELECT y FROM tri
-  UNION ALL SELECT z FROM tri
-),
-tricnt AS (SELECT node, CAST(count(*) AS BIGINT) AS tri_cnt
-           FROM corners GROUP BY node),
-deg AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT a AS node FROM p UNION ALL SELECT b FROM p) t
-  GROUP BY node
-)
-SELECT d.node, d.deg, CAST(coalesce(t.tri_cnt, 0) AS BIGINT) AS tri_cnt,
-       CAST(coalesce(t.tri_cnt, 0) * 2 AS DOUBLE)
-         / CAST(d.deg * (d.deg - 1) AS DOUBLE) AS coef
-FROM deg d LEFT JOIN tricnt t ON t.node = d.node
-WHERE d.deg >= 2
-"""
-
-
 # ---- batch 42: prefix-filtering set-similarity join (PPJoin) ---------
 
 
@@ -9408,71 +8558,6 @@ FROM inter
 JOIN sizes na ON na.d = id_a
 JOIN sizes nb ON nb.d = id_b
 WHERE inter * 10 >= 7 * (na.n + nb.n - inter)
-"""
-
-
-# ---- batch 41: strongly connected components (coloring) --------------
-
-
-def _q_scc_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed SCC (graph.py:strongly_connected_components):
-    trim → forward max-color → backward intra-class flag, repeated —
-    the directed-reachability partition undirected CC can NOT answer.
-    The oracle derives scc_id independently as min over the
-    mutual-reachability set (pairwise walk closure)."""
-    from bdtopo2refhydro_spark.operators.graph import (
-        strongly_connected_components)
-
-    d = _docs(spark, sf_dir)
-    n = d.count()
-    a = d.select(F.col("doc_id").alias("src"),
-                 ((F.col("doc_id") * 7 + 3) % n).cast("long")
-                 .alias("dst"))
-    b = (d.where("doc_id % 3 = 0 AND doc_id >= 1")
-         .select(F.col("doc_id").alias("src"),
-                 F.expr("doc_id div 2").cast("long").alias("dst")))
-    c = (d.where("doc_id % 11 = 0 AND doc_id >= 1")
-         .select(F.expr("doc_id div 2").cast("long").alias("src"),
-                 F.col("doc_id").alias("dst")))
-    return strongly_connected_components(
-        a.unionByName(b).unionByName(c))
-
-
-# NB the DuckDB trap (CLAUDE.md): a non-recursive CTE with a top-level
-# UNION inside WITH RECURSIVE silently loses dedup — wrap in
-# SELECT DISTINCT over UNION ALL.
-_SCC_SQL = """
-WITH RECURSIVE g AS (
-  SELECT DISTINCT u, v FROM (
-    SELECT doc_id AS u,
-           CAST((doc_id * 7 + 3) % (SELECT count(*) FROM documents)
-                AS BIGINT) AS v
-    FROM documents
-    UNION ALL
-    SELECT doc_id, CAST(doc_id // 2 AS BIGINT) FROM documents
-    WHERE doc_id % 3 = 0 AND doc_id >= 1
-    UNION ALL
-    SELECT CAST(doc_id // 2 AS BIGINT), doc_id FROM documents
-    WHERE doc_id % 11 = 0 AND doc_id >= 1
-  ) raw
-),
-reach(a, b) AS (
-  SELECT u, v FROM g
-  UNION
-  SELECT r.a, g2.v FROM reach r JOIN g g2 ON g2.u = r.b
-),
-mutual AS (
-  SELECT r1.a AS node, min(r1.b) AS mn
-  FROM reach r1 JOIN reach r2 ON r2.a = r1.b AND r2.b = r1.a
-  GROUP BY r1.a
-),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT u AS node FROM g UNION ALL SELECT v FROM g) t
-)
-SELECT n.node,
-       CAST(coalesce(least(n.node, m.mn), n.node) AS BIGINT) AS scc_id
-FROM nodes n LEFT JOIN mutual m ON m.node = n.node
 """
 
 
@@ -9545,53 +8630,6 @@ SELECT feature, threshold, n_l, n_r, num, den,
                           / CAST(den AS DOUBLE) DESC,
                           feature, threshold) = 1 AS is_best
 FROM scored
-"""
-
-
-# ---- batch 39: redirect-loop detection (pointer doubling) ------------
-
-
-def _q_redirect_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cycle detection over a URL-redirect functional graph
-    (graph.py:functional_graph_cycles): ⌈log₂ n⌉ successor-map
-    squarings land every node's 2^K-ancestor ON its cycle; cycles are
-    then labeled by one CC pass. The oracle re-derives on_cycle as
-    self-reachability and cycle_id as the min on-cycle node reachable
-    — a completely different (walk-based) formulation."""
-    from bdtopo2refhydro_spark.operators.graph import (
-        functional_graph_cycles)
-
-    d = _docs(spark, sf_dir)
-    n = d.count()
-    f = d.select(F.col("doc_id").alias("node"),
-                 F.expr(f"{_H} % {n}").cast("long").alias("nxt"))
-    return functional_graph_cycles(f)
-
-
-_REDIRECT_LOOPS_SQL = f"""
-WITH RECURSIVE f AS (
-  SELECT doc_id AS node,
-         CAST({_HD} % (SELECT count(*) FROM documents) AS BIGINT)
-           AS nxt
-  FROM documents
-),
-reach(anchor, node) AS (
-  SELECT node, nxt FROM f
-  UNION
-  SELECT r.anchor, f2.nxt FROM reach r JOIN f f2 ON f2.node = r.node
-),
-oncyc AS (
-  SELECT DISTINCT r.anchor AS node FROM reach r WHERE r.node = r.anchor
-),
-cyc_min AS (
-  SELECT r.anchor AS node, CAST(min(r.node) AS BIGINT) AS cycle_id
-  FROM reach r JOIN oncyc o ON o.node = r.node
-  GROUP BY r.anchor
-)
-SELECT f.node, o.node IS NOT NULL AS on_cycle, c.cycle_id
-FROM f
-LEFT JOIN oncyc o ON o.node = f.node
-JOIN cyc_min c ON c.node = f.node
 """
 
 
@@ -10381,80 +9419,7 @@ WHERE s1.op IS NULL OR s1.op = 'upsert'
 """
 
 
-def _q_interval_stab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval stabbing counts (temporal.py:interval_stab_counts):
-    cell-bucketed equi-join, each candidate pair exactly once (points
-    have ONE home cell), zero-cover points kept. Oracle = brute
-    θ-join."""
-    from bdtopo2refhydro_spark.operators.temporal import (
-        interval_stab_counts)
-
-    d = _docs(spark, sf_dir)
-    iv = (d.select((F.col("doc_id") % 120).alias("i")).distinct()
-          .selectExpr("cast((i * 97) % 1000 as long) as s",
-                      "cast((i * 97) % 1000 + 1 + i % 50 as long) as e"))
-    pts = (d.select((F.col("doc_id") % 80).alias("q")).distinct()
-           .selectExpr("cast(q as long) as qid",
-                       "cast((q * 13) % 1000 as long) as p"))
-    return interval_stab_counts(iv, pts)
-
-
-_INTERVAL_STAB_SQL = """
-WITH ii AS (SELECT DISTINCT doc_id % 120 AS i FROM documents),
-iv AS (SELECT (i * 97) % 1000 AS s,
-              (i * 97) % 1000 + 1 + i % 50 AS e FROM ii),
-qq AS (SELECT DISTINCT doc_id % 80 AS q FROM documents),
-pts AS (SELECT q AS qid, (q * 13) % 1000 AS p FROM qq)
-SELECT CAST(qid AS BIGINT) AS qid, CAST(p AS BIGINT) AS p,
-  CAST((SELECT count(*) FROM iv
-        WHERE iv.s <= pts.p AND pts.p <= iv.e) AS BIGINT) AS n_cover
-FROM pts
-"""
-
-
 # ---- batch 65: A-priori triples + winnowing fingerprints -----------------
-
-
-def _q_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A-priori frequent triples (corpus.py:apriori_triples): L1 prunes
-    baskets, L2 prunes triple candidates three ways before counting —
-    the level-wise candidate discipline that keeps the 3-way self-join
-    from exploding. Oracle = the same level pipeline in SQL."""
-    from bdtopo2refhydro_spark.operators.corpus import apriori_triples
-
-    mm = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 150).alias("m")).distinct()
-    offs = [0, 3, 12, 27, 48]
-    baskets = None
-    for o in offs:
-        part = mm.selectExpr("cast(m as long) as bid",
-                             f"cast((m + {o}) % 10 as long) as item")
-        baskets = part if baskets is None else baskets.unionByName(part)
-    return apriori_triples(baskets, minsup=25)
-
-
-_APRIORI_SQL = """
-WITH mm AS (SELECT DISTINCT doc_id % 150 AS m FROM documents),
-b AS MATERIALIZED (
-  SELECT DISTINCT m AS bid, (m + o) % 10 AS item
-  FROM mm, UNNEST([0, 3, 12, 27, 48]) t(o)),
-l1 AS (SELECT item FROM b GROUP BY item HAVING count(*) >= 25),
-bf AS MATERIALIZED (SELECT b.* FROM b JOIN l1 ON l1.item = b.item),
-p AS MATERIALIZED (
-  SELECT x.bid, x.item AS a, y.item AS b2
-  FROM bf x JOIN bf y ON y.bid = x.bid AND x.item < y.item),
-l2 AS MATERIALIZED (
-  SELECT a, b2 FROM p GROUP BY a, b2 HAVING count(*) >= 25),
-t AS (
-  SELECT p.bid, p.a, p.b2, z.item AS c3
-  FROM p JOIN bf z ON z.bid = p.bid AND p.b2 < z.item
-  WHERE EXISTS (SELECT 1 FROM l2 WHERE l2.a = p.a AND l2.b2 = p.b2)
-    AND EXISTS (SELECT 1 FROM l2 WHERE l2.a = p.a AND l2.b2 = z.item)
-    AND EXISTS (SELECT 1 FROM l2 WHERE l2.a = p.b2 AND l2.b2 = z.item))
-SELECT CAST(a AS BIGINT) AS a, CAST(b2 AS BIGINT) AS b,
-       CAST(c3 AS BIGINT) AS c, CAST(count(*) AS BIGINT) AS cnt
-FROM t GROUP BY a, b2, c3 HAVING count(*) >= 25
-"""
 
 
 def _q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10560,68 +9525,6 @@ def _max_cov_sql(k: int = 5) -> str:
             + f"\nSELECT CAST(round AS BIGINT) AS round,"
               f" CAST(sid AS BIGINT) AS sid,"
               f" CAST(gain AS BIGINT) AS gain FROM ({finals})")
-
-
-# ---- batch 60: densest subgraph by parallel peel -------------------------
-
-
-def _q_densest_sub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Densest-subgraph 2(1+ε)-approx by the Bahmani–Kumar–
-    Vassilvitskii parallel peel (linkgraph.py:densest_subgraph_peel):
-    every round removes ALL nodes with deg·|V| ≤ 3·|E| at once
-    (integer test → O(log n) rounds guaranteed); best-density round
-    marked by argmax. Runs the kcore link-farm fixture — the planted
-    12-clique is what the peel should isolate."""
-    from bdtopo2refhydro_spark.operators.linkgraph import (
-        densest_subgraph_peel)
-
-    docs = _docs(spark, sf_dir)
-    random_part = docs.select(
-        (F.col("doc_id") % 120).alias("src"),
-        F.expr(f"({_H} div 7) % 120").alias("dst"))
-    clique = spark.range(12).alias("a").join(
-        spark.range(12).alias("b"), F.expr("a.id < b.id")).select(
-        F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-    return densest_subgraph_peel(
-        random_part.unionByName(clique), src="src", dst="dst",
-        max_rounds=20)
-
-
-def _densest_sql(rounds: int = 20) -> str:
-    ctes = [f"""raw AS (
-  SELECT doc_id % 120 AS src, ({_HD} // 7) % 120 AS dst FROM documents
-  UNION ALL
-  SELECT a.range, b.range FROM range(12) a JOIN range(12) b
-    ON a.range < b.range
-)""", """e0 AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src != dst
-)"""]
-    for r in range(rounds):
-        ctes.append(f"""deg{r} AS MATERIALIZED (
-  SELECT node, count(*) AS d FROM (
-    SELECT u AS node FROM e{r} UNION ALL SELECT v FROM e{r})
-  GROUP BY node)""")
-        ctes.append(f"""agg{r} AS MATERIALIZED (
-  SELECT count(*) AS V, CAST(sum(d) / 2 AS BIGINT) AS E FROM deg{r})""")
-        ctes.append(f"""keep{r} AS MATERIALIZED (
-  SELECT node FROM deg{r}, agg{r} WHERE d * V > 3 * E)""")
-        ctes.append(f"""e{r + 1} AS MATERIALIZED (
-  SELECT e.u, e.v FROM e{r} e
-  JOIN keep{r} ka ON ka.node = e.u
-  JOIN keep{r} kb ON kb.node = e.v)""")
-    unions = "\nUNION ALL\n".join(
-        f"SELECT {r} AS round, V AS n_nodes, E AS n_edges "
-        f"FROM agg{r} WHERE V > 0" for r in range(rounds))
-    return ("WITH " + ",\n".join(ctes) + f""",
-rounds AS ({unions})
-SELECT CAST(round AS BIGINT) AS round, CAST(n_nodes AS BIGINT)
-         AS n_nodes, CAST(n_edges AS BIGINT) AS n_edges,
-       CAST(n_edges AS DOUBLE) / n_nodes AS density,
-       row_number() OVER (
-         ORDER BY CAST(n_edges AS DOUBLE) / n_nodes DESC, round) = 1
-         AS is_best
-FROM rounds""")
 
 
 # ---- batch 59: shard routing — rendezvous + consistent-hash ring ---------
@@ -10826,292 +9729,6 @@ WHERE NOT EXISTS (
   SELECT 1 FROM per_x q
   WHERE q.g = p.g AND q.x <= p.x AND q.y <= p.y
     AND (q.x < p.x OR q.y < p.y))
-"""
-
-
-def _q_haar_dwt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unnormalized Haar wavelet transform (temporal.py:haar_dwt):
-    3 pairwise-aggregation rounds, each halving the series — the
-    transform's O(n) laid onto shrinking shuffles; all-integer."""
-    from bdtopo2refhydro_spark.operators.temporal import haar_dwt
-
-    mm = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 256).alias("m")).distinct()
-    series = mm.selectExpr(
-        "cast(m % 4 as long) as g", "cast(m div 4 as long) as t",
-        "cast((m * m * 7) % 101 as long) as v")
-    return haar_dwt(series, levels=3)
-
-
-_HAAR_SQL = """
-WITH mm AS (SELECT DISTINCT doc_id % 256 AS m FROM documents),
-s0 AS (
-  SELECT m % 4 AS g, m // 4 AS t, (m * m * 7) % 101 AS v FROM mm),
-l0 AS (
-  SELECT g, t // 2 AS idx,
-         sum(CASE WHEN t % 2 = 0 THEN v ELSE 0 END) AS a,
-         sum(CASE WHEN t % 2 = 1 THEN v ELSE 0 END) AS b
-  FROM s0 GROUP BY g, t // 2),
-s1 AS (SELECT g, idx AS t, a + b AS v FROM l0),
-l1 AS (
-  SELECT g, t // 2 AS idx,
-         sum(CASE WHEN t % 2 = 0 THEN v ELSE 0 END) AS a,
-         sum(CASE WHEN t % 2 = 1 THEN v ELSE 0 END) AS b
-  FROM s1 GROUP BY g, t // 2),
-s2 AS (SELECT g, idx AS t, a + b AS v FROM l1),
-l2 AS (
-  SELECT g, t // 2 AS idx,
-         sum(CASE WHEN t % 2 = 0 THEN v ELSE 0 END) AS a,
-         sum(CASE WHEN t % 2 = 1 THEN v ELSE 0 END) AS b
-  FROM s2 GROUP BY g, t // 2)
-SELECT CAST(g AS BIGINT) AS g, CAST(0 AS BIGINT) AS level,
-       CAST(idx AS BIGINT) AS idx, CAST(a - b AS BIGINT) AS coef FROM l0
-UNION ALL
-SELECT g, 1, idx, CAST(a - b AS BIGINT) FROM l1
-UNION ALL
-SELECT g, 2, idx, CAST(a - b AS BIGINT) FROM l2
-UNION ALL
-SELECT g, 3, idx, CAST(a + b AS BIGINT) FROM l2
-"""
-
-
-def _q_mg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT heavy hitters via two-pass Misra–Gries
-    (corpus.py:mg_heavy_hitters): per-partition k-counter summaries
-    (bounded shuffle) guarantee every true > n/k item survives as a
-    candidate; the exact recount makes the OUTPUT partition-order
-    independent. Oracle: plain GROUP BY with the same strict gate."""
-    from bdtopo2refhydro_spark.operators.corpus import mg_heavy_hitters
-
-    items = _docs(spark, sf_dir).selectExpr(
-        "concat('w', cast(case when doc_id % 2 = 0 then doc_id % 4 "
-        "else doc_id % 83 end as string)) as item")
-    return mg_heavy_hitters(items, "item", 10)
-
-
-_MG_SQL = """
-WITH items AS (
-  SELECT 'w' || CAST(CASE WHEN doc_id % 2 = 0 THEN doc_id % 4
-                          ELSE doc_id % 83 END AS VARCHAR) AS item
-  FROM documents)
-SELECT item, CAST(count(*) AS BIGINT) AS cnt
-FROM items GROUP BY item
-HAVING count(*) * 10 > (SELECT count(*) FROM items)
-"""
-
-
-# ---- batch 56: batch LCA via binary lifting ------------------------------
-
-
-def _q_lca_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch lowest-common-ancestor on the hydro forest
-    (orders.py:lca_queries): binary-lifting ancestor tables built in
-    O(log depth) pointer-doubling joins; ALL queries lift together in
-    the same 2·log rounds — no per-query walk. Cross-tree pairs and
-    absent endpoints drop on both sides. Oracle: root-path walks per
-    endpoint, LCA = common node minimizing the step sum."""
-    from bdtopo2refhydro_spark.operators.orders import lca_queries
-
-    qq = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 120).alias("q")).distinct()
-    qs = qq.selectExpr("cast(q as long) as qid",
-                       "cast((q * 7 + 1) % 500 as long) as u",
-                       "cast((q * 11 + 3) % 500 as long) as w")
-    return lca_queries(_forest_edges(spark, sf_dir), qs)
-
-
-_LCA_SQL = f"""
-WITH RECURSIVE e AS ({_FOREST_D}),
-nodes AS (
-  SELECT DISTINCT nodea AS node FROM e
-  UNION SELECT DISTINCT nodeb FROM e),
-qq AS (SELECT DISTINCT doc_id % 120 AS q FROM documents),
-qs AS (
-  SELECT q, (q * 7 + 1) % 500 AS u, (q * 11 + 3) % 500 AS w FROM qq),
-qv AS (
-  SELECT qs.* FROM qs
-  JOIN nodes nu ON nu.node = qs.u
-  JOIN nodes nw ON nw.node = qs.w),
-pu(q, node, s) AS (
-  SELECT q, u, 0 FROM qv
-  UNION ALL
-  SELECT p.q, f.nodeb, p.s + 1 FROM pu p JOIN e f ON f.nodea = p.node),
-pw(q, node, s) AS (
-  SELECT q, w, 0 FROM qv
-  UNION ALL
-  SELECT p.q, f.nodeb, p.s + 1 FROM pw p JOIN e f ON f.nodea = p.node),
-common AS (
-  SELECT pu.q, pu.node, pu.s + pw.s AS dist
-  FROM pu JOIN pw ON pw.q = pu.q AND pw.node = pu.node)
-SELECT CAST(q AS BIGINT) AS qid, CAST(node AS BIGINT) AS lca,
-       CAST(dist AS BIGINT) AS dist
-FROM common
-QUALIFY row_number() OVER (PARTITION BY q ORDER BY dist, node) = 1
-"""
-
-
-# ---- batch 55: bipartiteness + distributed 2-SAT -------------------------
-
-
-def _q_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-component bipartiteness via the DOUBLED-GRAPH CC trick
-    (graph.py:bipartite_check) — no BFS layering, no coloring-conflict
-    loop: one extra O(log n) CC pass; odd cycles are exactly what merge
-    a node's two sides. Fixture: 20 rings of length 3..7 (+ a chord
-    for c%7=0 that forces a triangle); closed-form truth:
-    bipartite ⟺ even length AND no chord."""
-    from bdtopo2refhydro_spark.operators.graph import bipartite_check
-
-    mm = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 140).alias("m")).distinct()
-    ring = (mm.selectExpr("m % 20 as c", "m div 20 as i")
-            .where("i < 3 + c % 5")
-            .selectExpr(
-        "cast(c * 100 + i as long) as u",
-        "cast(c * 100 + (i + 1) % (3 + c % 5) as long) as v"))
-    chord = (mm.selectExpr("m % 20 as c").distinct()
-             .where("c % 7 = 0")
-             .selectExpr("cast(c * 100 as long) as u",
-                         "cast(c * 100 + 2 as long) as v"))
-    return bipartite_check(ring.unionByName(chord))
-
-
-_BIPARTITE_SQL = """
-WITH cls AS (SELECT DISTINCT (doc_id % 140) % 20 AS c FROM documents)
-SELECT CAST(c * 100 AS BIGINT) AS l,
-       CAST(3 + c % 5 AS BIGINT) AS n_nodes,
-       (3 + c % 5) % 2 = 0 AND c % 7 != 0 AS is_bipartite
-FROM cls
-"""
-
-
-def _q_two_sat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed 2-SAT (graph.py:two_sat): clause (l1 ∨ l2) →
-    implications ¬l1→l2, ¬l2→l1; Aspvall–Plass–Tarjan — satisfiable
-    iff no variable shares an SCC with its negation — over the
-    engine's distributed coloring SCC, all 8 instances namespaced into
-    ONE graph pass. Oracle: brute-force all 2^10 assignments per
-    instance with bit tests."""
-    from bdtopo2refhydro_spark.operators.graph import two_sat
-
-    mm = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 240).alias("m")).distinct()
-    cl = mm.selectExpr(
-        "cast(m % 8 as long) as inst",
-        "cast(((m div 8) * 3 + m % 8) % 10 as long) as v1",
-        "cast((m div 8 + m % 8) % 2 as long) as s1",
-        "cast(((m div 8) * 7 + 1 + m % 8) % 10 as long) as v2",
-        "cast((m div 16 + m % 8) % 2 as long) as s2")
-    # plant a contradiction in instance 7: (x0)(¬x0) -> UNSAT
-    force = spark.createDataFrame(
-        [(7, 0, 0, 0, 0), (7, 0, 1, 0, 1)],
-        "inst long, v1 long, s1 long, v2 long, s2 long")
-    return two_sat(cl.unionByName(force))
-
-
-_TWO_SAT_SQL = """
-WITH mm AS (SELECT DISTINCT doc_id % 240 AS m FROM documents),
-cl AS MATERIALIZED (
-  SELECT m % 8 AS i,
-         ((m // 8) * 3 + m % 8) % 10 AS va,
-         (m // 8 + m % 8) % 2 AS sa,
-         ((m // 8) * 7 + 1 + m % 8) % 10 AS vb,
-         (m // 16 + m % 8) % 2 AS sb
-  FROM mm
-  UNION ALL SELECT 7, 0, 0, 0, 0
-  UNION ALL SELECT 7, 0, 1, 0, 1),
-insts AS (SELECT DISTINCT i FROM cl),
-assigns AS (
-  SELECT insts.i AS i, CAST(t.n AS BIGINT) AS asg
-  FROM insts, UNNEST(range(0, 1024)) t(n)),
-ok AS (
-  SELECT a.i, a.asg
-  FROM assigns a JOIN cl ON cl.i = a.i
-  GROUP BY a.i, a.asg
-  HAVING min(CASE WHEN ((a.asg >> va) & 1) != sa
-                    OR ((a.asg >> vb) & 1) != sb
-             THEN 1 ELSE 0 END) = 1),
-sat AS (SELECT i, TRUE AS s FROM ok GROUP BY i)
-SELECT CAST(insts.i AS BIGINT) AS inst,
-       coalesce(sat.s, FALSE) AS satisfiable
-FROM insts LEFT JOIN sat ON sat.i = insts.i
-"""
-
-
-# ---- batch 54: crawl infra — robots.txt, SURT keys, NA surface -----------
-
-
-def _q_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL robots.txt parsing (corpus.py:parse_robots): line split +
-    directive surgery + RFC 9309 grouping — consecutive User-agent
-    lines share ONE group (exercised when h%4=0 adds a second UA line),
-    rules bind to every agent of their group, unknown directives
-    (Crawl-delay) and blank lines drop. Oracle mirrors the windows and
-    the group-id running sum."""
-    from bdtopo2refhydro_spark.operators.corpus import parse_robots
-
-    hosts = (_docs(spark, sf_dir)
-             .select((F.col("doc_id") % 40).alias("h")).distinct())
-    robots = hosts.select(
-        F.expr("concat('h', cast(h as string), '.example.com')")
-        .alias("host"),
-        F.expr(
-            "concat("
-            "'User-agent: *', char(10), "
-            "'Disallow: /p', cast(h % 5 as string), '/', char(10), "
-            "case when h % 2 = 0 then concat('Allow: /p', "
-            "cast(h % 5 as string), '/pub/', char(10)) else '' end, "
-            "'User-agent: bot', cast(h % 3 as string), char(10), "
-            "case when h % 4 = 0 then concat('User-agent: bot9', "
-            "char(10)) else '' end, "
-            "'Disallow: ', case when h % 2 = 0 then '/' "
-            "else '/tmp/' end, char(10), "
-            "'Crawl-delay: 5')").alias("robots_txt"))
-    return parse_robots(robots)
-
-
-_ROBOTS_SQL = """
-WITH hosts AS (SELECT DISTINCT doc_id % 40 AS h FROM documents),
-r AS (
-  SELECT 'h' || CAST(h AS VARCHAR) || '.example.com' AS host,
-    'User-agent: *' || chr(10) ||
-    'Disallow: /p' || CAST(h % 5 AS VARCHAR) || '/' || chr(10) ||
-    CASE WHEN h % 2 = 0 THEN 'Allow: /p' || CAST(h % 5 AS VARCHAR)
-         || '/pub/' || chr(10) ELSE '' END ||
-    'User-agent: bot' || CAST(h % 3 AS VARCHAR) || chr(10) ||
-    CASE WHEN h % 4 = 0 THEN 'User-agent: bot9' || chr(10)
-         ELSE '' END ||
-    'Disallow: ' || CASE WHEN h % 2 = 0 THEN '/' ELSE '/tmp/' END
-    || chr(10) || 'Crawl-delay: 5' AS txt
-  FROM hosts),
-lines AS (
-  SELECT host, CAST(i - 1 AS INT) AS line_no, l[CAST(i AS INT)] AS line
-  FROM (SELECT host, string_split(txt, chr(10)) AS l FROM r),
-       UNNEST(range(1, len(l) + 1)) t(i)),
-parsed AS (
-  SELECT host, line_no,
-         lower(trim(split_part(line, ':', 1))) AS directive,
-         trim(substr(line, strpos(line, ':') + 1)) AS value
-  FROM lines WHERE strpos(line, ':') > 0),
-lagged AS (
-  SELECT host, line_no, directive, value,
-         (directive = 'user-agent') AS is_ua,
-         coalesce(lag(directive = 'user-agent')
-           OVER (PARTITION BY host ORDER BY line_no), FALSE) AS prev_ua
-  FROM parsed),
-grouped AS (
-  SELECT host, line_no, directive, value, is_ua,
-         sum(CASE WHEN is_ua AND NOT prev_ua THEN 1 ELSE 0 END)
-           OVER (PARTITION BY host ORDER BY line_no) AS grp
-  FROM lagged),
-agents AS (
-  SELECT host, grp, value AS agent FROM grouped WHERE is_ua),
-rules AS (
-  SELECT host, grp, directive AS rule, value AS path, line_no
-  FROM grouped WHERE directive IN ('allow', 'disallow'))
-SELECT a.host, a.agent, ru.rule, ru.path,
-       CAST(ru.line_no AS BIGINT) AS line_no
-FROM agents a JOIN rules ru ON ru.host = a.host AND ru.grp = a.grp
 """
 
 
@@ -11381,69 +9998,6 @@ walk(node, s, n) AS (
 )
 SELECT CAST(node AS BIGINT) AS node, CAST(s AS BIGINT) AS closeness_sum
 FROM walk
-"""
-
-
-def _q_tree_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-tree diameter (orders.py:tree_diameter): bottom-up
-    heights + tie-safe top-2 child contributions, max over nodes. The
-    oracle computes heights by an all-origins descend walk and the
-    same top-2 combine."""
-    from bdtopo2refhydro_spark.operators.orders import tree_diameter
-
-    return tree_diameter(_forest_edges(spark, sf_dir)).select(
-        F.col("root").cast("long").alias("root"), "diameter")
-
-
-_TREE_DIAM_SQL = f"""
-WITH RECURSIVE e AS ({_FOREST_D}),
-nodes AS (
-  SELECT DISTINCT nodea AS node FROM e
-  UNION SELECT DISTINCT nodeb FROM e
-),
-hwalk(origin, node, d) AS (
-  SELECT node, node, 0 FROM nodes
-  UNION ALL
-  SELECT w.origin, f.nodea, w.d + 1
-  FROM e f JOIN hwalk w ON f.nodeb = w.node
-),
-h AS (SELECT origin AS node, max(d) AS hh FROM hwalk GROUP BY origin),
-contrib AS (
-  SELECT f.nodeb AS node, 1 + h.hh AS c
-  FROM e f JOIN h ON h.node = f.nodea
-),
-t1 AS (SELECT node, max(c) AS t1 FROM contrib GROUP BY node),
-t2 AS (
-  SELECT c.node, t1.t1,
-         sum(CASE WHEN c.c = t1.t1 THEN 1 ELSE 0 END) AS nmax,
-         max(CASE WHEN c.c < t1.t1 THEN c.c END) AS below
-  FROM contrib c JOIN t1 ON t1.node = c.node
-  GROUP BY c.node, t1.t1
-),
-thr AS (
-  SELECT n.node,
-         coalesce(t2.t1 + CASE WHEN t2.nmax >= 2 THEN t2.t1
-                               ELSE coalesce(t2.below, 0) END, 0) AS thr
-  FROM nodes n LEFT JOIN t2 ON t2.node = n.node
-),
-up(url, node) AS (
-  SELECT url, nodeb FROM e
-  UNION ALL
-  SELECT u.url, f.nodeb FROM e f JOIN up u ON f.nodea = u.node
-),
-eroot AS (
-  SELECT url, node AS root FROM up u
-  WHERE NOT EXISTS (SELECT 1 FROM e f WHERE f.nodea = u.node)
-),
-nroot AS (
-  SELECT f.nodea AS node, r.root FROM e f JOIN eroot r ON r.url = f.url
-  UNION
-  SELECT DISTINCT root, root FROM eroot
-)
-SELECT CAST(nr.root AS BIGINT) AS root,
-       CAST(max(thr.thr) AS BIGINT) AS diameter
-FROM thr JOIN nroot nr ON nr.node = thr.node
-GROUP BY nr.root
 """
 
 
@@ -11729,98 +10283,6 @@ ORDER BY an.node
 """
 
 
-def _q_tree_iso(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AHU tree-isomorphism classes (graph.py:ahu_tree_classes):
-    bottom-up canonical codes — leaves '()', parents
-    '(' + sorted child codes + ')' — in height-many rounds of
-    groupBy + array_sort(collect_list) against a FIXED children
-    frame. The fixture plants six shapes per 8-node tree (path, star,
-    binary, PERMUTED path, PERMUTED binary, caterpillar): the two
-    permuted shapes relabel nodes with a bijection, so the engine
-    must prove path ≅ permuted-path and binary ≅ permuted-binary
-    purely structurally. Oracle = unrolled ready-parent rounds with
-    string_agg(ORDER BY) — binary string order on '('/')' is
-    dialect-identical."""
-    from bdtopo2refhydro_spark.operators.graph import ahu_tree_classes
-
-    tt = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 24).alias("t")).distinct())
-    ii = tt.select("t", F.explode(F.sequence(F.lit(1), F.lit(7)))
-                   .alias("i"))
-    ed = ii.selectExpr(
-        "t",
-        "case when t % 6 = 3 then (3 * i) % 8 "
-        "when t % 6 = 4 then (5 * i) % 8 else i end as ci",
-        "case t % 6 when 0 then i - 1 when 1 then 0 "
-        "when 2 then (i - 1) div 2 when 3 then (3 * (i - 1)) % 8 "
-        "when 4 then (5 * ((i - 1) div 2)) % 8 "
-        "else case when i < 4 then i - 1 else i - 4 end end as pi")
-    children = ed.selectExpr("cast(t as long) as tid",
-                             "cast(t * 100 + ci as long) as node",
-                             "cast(t * 100 + pi as long) as parent")
-    roots = tt.selectExpr("cast(t as long) as tid",
-                          "cast(t * 100 as long) as node",
-                          "cast(null as long) as parent")
-    nodes = roots.unionByName(children)
-    return ahu_tree_classes(nodes).orderBy("tid")
-
-
-def _ahu_iso_sql() -> str:
-    base = """
-WITH tt AS (SELECT DISTINCT doc_id % 24 AS t FROM documents),
-ii AS (SELECT t, g.i FROM tt CROSS JOIN generate_series(1, 7) g(i)),
-edges AS MATERIALIZED (
-  SELECT CAST(t AS BIGINT) AS tid,
-         CAST(t * 100 + (CASE WHEN t % 6 = 3 THEN (3 * i) % 8
-                              WHEN t % 6 = 4 THEN (5 * i) % 8
-                              ELSE i END) AS BIGINT) AS child,
-         CAST(t * 100 + (CASE t % 6 WHEN 0 THEN i - 1 WHEN 1 THEN 0
-                              WHEN 2 THEN (i - 1) // 2
-                              WHEN 3 THEN (3 * (i - 1)) % 8
-                              WHEN 4 THEN (5 * ((i - 1) // 2)) % 8
-                              ELSE CASE WHEN i < 4 THEN i - 1
-                                        ELSE i - 4 END END) AS BIGINT)
-           AS parent
-  FROM ii),
-kidn AS MATERIALIZED (
-  SELECT tid, parent AS node, count(*) AS n FROM edges
-  GROUP BY tid, parent),
-allnodes AS MATERIALIZED (
-  SELECT tid, node FROM (
-    SELECT CAST(t AS BIGINT) AS tid, CAST(t * 100 AS BIGINT) AS node
-    FROM tt
-    UNION ALL SELECT tid, child AS node FROM edges) s),
-l0 AS MATERIALIZED (
-  SELECT n.tid, n.node, '()' AS lab FROM allnodes n
-  WHERE NOT EXISTS (SELECT 1 FROM kidn k
-                    WHERE k.tid = n.tid AND k.node = n.node))"""
-    prev = "l0"
-    rounds = []
-    for r in range(1, 9):
-        rounds.append(f""",
-l{r} AS MATERIALIZED (
-  SELECT tid, node, lab FROM {prev}
-  UNION ALL
-  SELECT g.tid, g.node, g.lab FROM (
-    SELECT e.tid, e.parent AS node,
-           '(' || string_agg(l.lab, '' ORDER BY l.lab) || ')' AS lab,
-           count(*) AS ng
-    FROM edges e JOIN {prev} l
-      ON l.tid = e.tid AND l.node = e.child
-    GROUP BY e.tid, e.parent) g
-  JOIN kidn k ON k.tid = g.tid AND k.node = g.node AND k.n = g.ng
-  WHERE NOT EXISTS (SELECT 1 FROM {prev} p
-                    WHERE p.tid = g.tid AND p.node = g.node))""")
-        prev = f"l{r}"
-    tail = f"""
-SELECT CAST(tt.t AS BIGINT) AS tid, l.lab AS iso
-FROM tt JOIN {prev} l
-  ON l.tid = CAST(tt.t AS BIGINT) AND l.node = CAST(tt.t * 100 AS BIGINT)
-ORDER BY tid
-"""
-    return base + "".join(rounds) + tail
-
-
 def _q_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked sparse integer matmul (ml.py:blocked_matmul): cells →
     block tiles → ONE equi-join on the inner block index → dense
@@ -11853,40 +10315,6 @@ SELECT CAST(a.i AS BIGINT) AS i, CAST(b.j AS BIGINT) AS j,
 FROM a JOIN b ON a.k = b.k
 GROUP BY a.i, b.j
 ORDER BY i, j
-"""
-
-
-def _q_kth_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distributed selection WITHOUT a global sort
-    (aggregate.py:kth_smallest_bisect): value-domain bisection where
-    every still-active rank shares ONE map-side conditional-count
-    aggregation per round — zero shuffles, O(log range) cheap scans,
-    vs the oracle's full ORDER BY + row_number. Ranks are the exact
-    discrete p50/p90/p99 positions ceil(q·n/100) computed with the
-    same integer arithmetic on both sides."""
-    from bdtopo2refhydro_spark.operators.aggregate import \
-        kth_smallest_bisect
-
-    v = _docs(spark, sf_dir).selectExpr(
-        "cast((doc_id % 1000) * ((doc_id % 97) + 1) as long) as v")
-    n = v.count()
-    ranks = {q: (n * q + 99) // 100 for q in (50, 90, 99)}
-    got = kth_smallest_bisect(v, "v", list(ranks.values()))
-    rows = [(q, k, got[k]) for q, k in sorted(ranks.items())]
-    return spark.createDataFrame(rows, "q long, k long, val long")
-
-
-_KTH_SELECT_SQL = """
-WITH v AS (
-  SELECT (doc_id % 1000) * ((doc_id % 97) + 1) AS v FROM documents),
-n AS (SELECT count(*) AS n FROM v),
-ks AS (SELECT q, (n.n * q + 99) // 100 AS k
-       FROM n, (VALUES (50), (90), (99)) t(q)),
-sorted_v AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM v)
-SELECT CAST(ks.q AS BIGINT) AS q, CAST(ks.k AS BIGINT) AS k,
-       CAST(s.v AS BIGINT) AS val
-FROM ks JOIN sorted_v s ON s.rn = ks.k
-ORDER BY q
 """
 
 
@@ -12006,52 +10434,6 @@ FROM {prev} ORDER BY node
     return base + "".join(parts) + tail
 
 
-def _q_interval_sched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy max non-overlapping interval scheduling per group
-    (temporal.py:greedy_interval_count) with NO sequential scan: the
-    greedy chain is a functional graph — next(i) for every interval
-    at once via the union as-of trick under a GROUP-partitioned
-    running-min window, then chain length by pointer doubling. The
-    oracle walks the same next-pointer table recursively — linear
-    recursion, so no unrolling needed."""
-    from bdtopo2refhydro_spark.operators.temporal import \
-        greedy_interval_count
-
-    iv = _docs(spark, sf_dir).selectExpr(
-        "cast(doc_id % 20 as long) as g",
-        "cast((doc_id * 37) % 1000 as long) as s",
-        "cast((doc_id * 37) % 1000 + 1 + (doc_id * 11) % 50 as long) as e",
-        "cast(doc_id as long) as iid")
-    return greedy_interval_count(iv).orderBy("g")
-
-
-_INTERVAL_SCHED_SQL = """
-WITH RECURSIVE iv AS MATERIALIZED (
-  SELECT doc_id % 20 AS g, (doc_id * 37) % 1000 AS s,
-         (doc_id * 37) % 1000 + 1 + (doc_id * 11) % 50 AS e,
-         doc_id AS iid
-  FROM documents),
-nxt AS MATERIALIZED (
-  SELECT i.g, i.iid,
-         (SELECT min(j.e * 2147483648 + j.iid) FROM iv j
-          WHERE j.g = i.g AND j.s >= i.e) AS nb
-  FROM iv i),
-starts AS MATERIALIZED (
-  SELECT g, iid FROM (
-    SELECT g, iid,
-           row_number() OVER (PARTITION BY g ORDER BY e, s, iid) AS rn
-    FROM iv) t WHERE rn = 1),
-walk(g, iid, cnt) AS (
-  SELECT s.g, s.iid, 1 FROM starts s
-  UNION ALL
-  SELECT w.g, n.nb % 2147483648, w.cnt + 1
-  FROM walk w JOIN nxt n ON n.g = w.g AND n.iid = w.iid
-  WHERE n.nb IS NOT NULL)
-SELECT CAST(g AS BIGINT) AS g, CAST(max(cnt) AS BIGINT) AS n_selected
-FROM walk GROUP BY g ORDER BY g
-"""
-
-
 def _q_rmq_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch range-min queries through a sparse table built in
     O(log n) shifted self-join rounds (temporal.py:rmq_sparse_table);
@@ -12126,147 +10508,6 @@ l{r} AS MATERIALIZED (
             + "\nUNION ALL ".join(selects)
             + ") u ORDER BY level, idx\n")
     return base + "".join(parts) + tail
-
-
-def _q_irv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Instant-runoff voting (aggregate.py:irv_rounds): every doc is
-    a ballot ranking 8 candidates by a deterministic key; each round
-    counts top choices among survivors (groupBy struct-min — rnk
-    unique per ballot) and eliminates the lowest (ties to smaller
-    id). Output = the full per-round audit trail (round, cand,
-    votes), zero-vote survivors included. Oracle replays the 7
-    elimination rounds unrolled with arg_min + LIMIT 1 losers."""
-    from bdtopo2refhydro_spark.operators.aggregate import irv_rounds
-
-    p = (_docs(spark, sf_dir)
-         .select("doc_id", F.explode(F.sequence(F.lit(0), F.lit(7)))
-                 .alias("c"))
-         .withColumn("key", (F.col("doc_id") * 31 + F.col("c") * 17)
-                     % 101))
-    w = Window.partitionBy("doc_id").orderBy("key", "c")
-    prefs = p.select(F.col("doc_id").alias("ballot"),
-                     F.col("c").cast("long").alias("cand"),
-                     F.row_number().over(w).cast("long").alias("rnk"))
-    return irv_rounds(prefs).orderBy("round", "cand")
-
-
-def _irv_sql(n_cands: int = 8) -> str:
-    base = """
-WITH raw AS (
-  SELECT doc_id AS b, g.c, (doc_id * 31 + g.c * 17) % 101 AS key
-  FROM documents CROSS JOIN generate_series(0, 7) g(c)),
-prefs AS MATERIALIZED (
-  SELECT b, c, row_number() OVER (PARTITION BY b ORDER BY key, c) AS r
-  FROM raw),
-cands AS MATERIALIZED (SELECT DISTINCT c FROM prefs),
-e0 AS MATERIALIZED (SELECT c FROM cands WHERE FALSE)"""
-    parts, prev = [], "e0"
-    selects = []
-    for k in range(1, n_cands):
-        parts.append(f""",
-fc{k} AS (
-  SELECT b, arg_min(c, r) AS c FROM prefs p
-  WHERE NOT EXISTS (SELECT 1 FROM {prev} e WHERE e.c = p.c)
-  GROUP BY b),
-cnt{k} AS MATERIALIZED (
-  SELECT a.c, coalesce(x.n, 0) AS votes
-  FROM (SELECT ca.c FROM cands ca
-        WHERE NOT EXISTS (SELECT 1 FROM {prev} e
-                          WHERE e.c = ca.c)) a
-  LEFT JOIN (SELECT c, count(*) AS n FROM fc{k} GROUP BY c) x
-    ON x.c = a.c),
-lose{k} AS MATERIALIZED (
-  SELECT c FROM cnt{k} ORDER BY votes, c LIMIT 1),
-e{k} AS MATERIALIZED (
-  SELECT c FROM {prev} UNION ALL SELECT c FROM lose{k})""")
-        selects.append(f"SELECT CAST({k} AS BIGINT) AS round, "
-                       f"CAST(c AS BIGINT) AS cand, "
-                       f"CAST(votes AS BIGINT) AS votes FROM cnt{k}")
-        prev = f"e{k}"
-    tail = ("\nSELECT round, cand, votes FROM ("
-            + "\nUNION ALL ".join(selects)
-            + ") u ORDER BY round, cand\n")
-    return base + "".join(parts) + tail
-
-
-def _q_euler_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eulerian path/circuit classification per component
-    (graph.py:euler_path_check): O(log) min-label CC + one degree
-    groupBy; circuit ⟺ all degrees even, path ⟺ exactly two odd.
-    Fixture builds five 60-node blocks of distinct shapes — cycle
-    (circuit), path (path), binary tree (none), cycle+1 chord
-    (path), cycle+2 chords (none) — so every branch of the
-    classification fires."""
-    from bdtopo2refhydro_spark.operators.graph import euler_path_check
-
-    mm = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 300).alias("m")).distinct())
-    base = (mm.selectExpr("m div 60 as blk", "m % 60 as loc")
-            .selectExpr(
-        "blk", "loc",
-        "case when blk % 5 in (0, 3, 4) then (loc + 1) % 60 "
-        "when blk % 5 = 1 then case when loc < 59 then loc + 1 end "
-        "else case when loc >= 1 then loc div 2 end end as loc2")
-        .where("loc2 is not null")
-        .selectExpr("cast(blk * 60 + loc as long) as u",
-                    "cast(blk * 60 + loc2 as long) as v"))
-    chords = mm.where(
-        "(m % 60 = 0 and (m div 60) % 5 in (3, 4)) "
-        "or (m % 60 = 10 and (m div 60) % 5 = 4)").selectExpr(
-        "cast(m as long) as u", "cast(m + 30 as long) as v")
-    return (euler_path_check(base.unionByName(chords))
-            .orderBy("comp"))
-
-
-_EULER_PATH_SQL = """
-WITH RECURSIVE mm AS (SELECT DISTINCT doc_id % 300 AS m FROM documents),
-pre AS (SELECT m // 60 AS blk, m % 60 AS loc FROM mm),
-base AS (
-  SELECT blk, loc,
-         CASE WHEN blk % 5 IN (0, 3, 4) THEN (loc + 1) % 60
-              WHEN blk % 5 = 1 THEN
-                CASE WHEN loc < 59 THEN loc + 1 END
-              ELSE CASE WHEN loc >= 1 THEN loc // 2 END END AS loc2
-  FROM pre),
-base_e AS (
-  SELECT blk * 60 + loc AS u, blk * 60 + loc2 AS v FROM base
-  WHERE loc2 IS NOT NULL),
-chords AS (
-  SELECT m AS u, m + 30 AS v FROM mm
-  WHERE (m % 60 = 0 AND (m // 60) % 5 IN (3, 4))
-     OR (m % 60 = 10 AND (m // 60) % 5 = 4)),
-edges AS MATERIALIZED (
-  SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM (
-    SELECT u, v FROM base_e UNION ALL SELECT u, v FROM chords) s
-  WHERE u != v),
-sym AS MATERIALIZED (
-  SELECT n, x FROM (
-    SELECT a AS n, b AS x FROM edges
-    UNION ALL SELECT b AS n, a AS x FROM edges) s),
-reach(n, lab) AS (
-  SELECT n, n FROM (SELECT DISTINCT n FROM sym) s0
-  UNION
-  SELECT s.x, r.lab FROM reach r JOIN sym s ON s.n = r.n),
-comp AS MATERIALIZED (
-  SELECT n AS node, min(lab) AS comp FROM reach GROUP BY n),
-deg AS (SELECT n AS node, count(*) AS deg FROM sym GROUP BY n),
-pern AS (
-  SELECT c.comp, count(*) AS n_nodes,
-         sum(CASE WHEN d.deg % 2 = 1 THEN 1 ELSE 0 END) AS n_odd
-  FROM comp c JOIN deg d ON d.node = c.node GROUP BY c.comp),
-pere AS (
-  SELECT c.comp, count(*) AS n_edges
-  FROM edges e JOIN comp c ON c.node = e.a GROUP BY c.comp)
-SELECT CAST(p.comp AS BIGINT) AS comp,
-       CAST(p.n_nodes AS BIGINT) AS n_nodes,
-       CAST(q.n_edges AS BIGINT) AS n_edges,
-       CAST(p.n_odd AS BIGINT) AS n_odd,
-       CASE WHEN p.n_odd = 0 THEN 'circuit'
-            WHEN p.n_odd = 2 THEN 'path'
-            ELSE 'none' END AS kind
-FROM pern p JOIN pere q ON q.comp = p.comp
-ORDER BY comp
-"""
 
 
 def _q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12488,111 +10729,6 @@ FROM cells GROUP BY g ORDER BY g
 """
 
 
-def _q_tree_center(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-tree radius + center via all-node ECCENTRICITY rerooting
-    (orders.py:tree_eccentricity — the MAX analogue of
-    tree_closeness's sum rerooting: down = height fixpoint, up =
-    1 + max(parent's up, tie-safe best sibling), ecc = max(down,
-    up)); center = smallest node attaining the radius. Same 6-shape
-    permuted forest as tree_iso. Oracle: honest all-pairs BFS closure
-    (8-node trees) — max of min-distances, a completely independent
-    route."""
-    from bdtopo2refhydro_spark.operators.orders import tree_center
-
-    tt = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 24).alias("t")).distinct())
-    ii = tt.select("t", F.explode(F.sequence(F.lit(1), F.lit(7)))
-                   .alias("i"))
-    ed = ii.selectExpr(
-        "t",
-        "case when t % 6 = 3 then (3 * i) % 8 "
-        "when t % 6 = 4 then (5 * i) % 8 else i end as ci",
-        "case t % 6 when 0 then i - 1 when 1 then 0 "
-        "when 2 then (i - 1) div 2 when 3 then (3 * (i - 1)) % 8 "
-        "when 4 then (5 * ((i - 1) div 2)) % 8 "
-        "else case when i < 4 then i - 1 else i - 4 end end as pi")
-    edges = ed.selectExpr(
-        "concat('e', t, '_', ci) as url",
-        "cast(t * 100 + ci as long) as NODEA",
-        "cast(t * 100 + pi as long) as NODEB")
-    return tree_center(edges).orderBy("root")
-
-
-_TREE_CENTER_SQL = """
-WITH RECURSIVE tt AS (SELECT DISTINCT doc_id % 24 AS t FROM documents),
-ii AS (SELECT t, g.i FROM tt CROSS JOIN generate_series(1, 7) g(i)),
-edges AS MATERIALIZED (
-  SELECT t,
-         t * 100 + (CASE WHEN t % 6 = 3 THEN (3 * i) % 8
-                         WHEN t % 6 = 4 THEN (5 * i) % 8
-                         ELSE i END) AS child,
-         t * 100 + (CASE t % 6 WHEN 0 THEN i - 1 WHEN 1 THEN 0
-                         WHEN 2 THEN (i - 1) // 2
-                         WHEN 3 THEN (3 * (i - 1)) % 8
-                         WHEN 4 THEN (5 * ((i - 1) // 2)) % 8
-                         ELSE CASE WHEN i < 4 THEN i - 1
-                                   ELSE i - 4 END END) AS parent
-  FROM ii),
-sym AS MATERIALIZED (
-  SELECT t, a, b FROM (
-    SELECT t, child AS a, parent AS b FROM edges
-    UNION ALL SELECT t, parent AS a, child AS b FROM edges) s),
-allv AS MATERIALIZED (SELECT DISTINCT t, a AS n FROM sym),
-walk(t, src, node, d) AS (
-  SELECT t, n, n, 0 FROM allv
-  UNION
-  SELECT w.t, w.src, s.b, w.d + 1
-  FROM walk w JOIN sym s ON s.t = w.t AND s.a = w.node
-  WHERE w.d < 9),
-mind AS MATERIALIZED (
-  SELECT t, src, node, min(d) AS d FROM walk GROUP BY t, src, node),
-eccs AS MATERIALIZED (
-  SELECT t, src, max(d) AS ecc FROM mind GROUP BY t, src)
-SELECT CAST(t * 100 AS BIGINT) AS root,
-       CAST(min(ecc) AS BIGINT) AS radius,
-       CAST(min(CASE WHEN ecc = (SELECT min(e2.ecc) FROM eccs e2
-                                 WHERE e2.t = eccs.t)
-                THEN src END) AS BIGINT) AS center
-FROM eccs GROUP BY t ORDER BY root
-"""
-
-
-def _q_closure_square(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive closure by PATH DOUBLING
-    (graph.py:transitive_closure_counts): R ∪ R∘R squares reach per
-    round → O(log diameter) rounds under the two-layer
-    checkpoint+cache self-join discipline, vs the oracle's
-    step-by-step recursive closure. DAG fixture with skip edges so
-    reach sets overlap heavily."""
-    from bdtopo2refhydro_spark.operators.graph import \
-        transitive_closure_counts
-
-    mm = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 200).alias("m")).distinct())
-    base = mm.where("m < 196").selectExpr(
-        "cast(m as long) as u", "cast(m + 1 + m % 3 as long) as v")
-    skips = mm.where("m % 5 = 0 and m < 193").selectExpr(
-        "cast(m as long) as u", "cast(m + 7 as long) as v")
-    return (transitive_closure_counts(base.unionByName(skips))
-            .orderBy("u"))
-
-
-_CLOSURE_SQUARE_SQL = """
-WITH RECURSIVE mm AS (SELECT DISTINCT doc_id % 200 AS m FROM documents),
-e AS MATERIALIZED (
-  SELECT u, v FROM (
-    SELECT m AS u, m + 1 + m % 3 AS v FROM mm WHERE m < 196
-    UNION ALL
-    SELECT m AS u, m + 7 AS v FROM mm WHERE m % 5 = 0 AND m < 193) s),
-reach(u, v) AS (
-  SELECT u, v FROM e
-  UNION
-  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v)
-SELECT CAST(u AS BIGINT) AS u, CAST(count(*) AS BIGINT) AS n_reach
-FROM reach GROUP BY u ORDER BY u
-"""
-
-
 def _q_c4_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-cycle counting WITHOUT cycle enumeration
     (graph.py:count_four_cycles): #C4 = Σ C(codeg, 2)/2 over vertex
@@ -12616,116 +10752,6 @@ JOIN sym e2 ON e2.m = e1.x
 JOIN sym e3 ON e3.m = e2.x
 JOIN sym e4 ON e4.m = e3.x AND e4.x = e1.m
 WHERE e1.m != e2.x AND e1.x != e3.x
-"""
-
-
-def _q_tree_mwis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Max-weight independent set on the 6-shape forest
-    (orders.py:tree_mwis — take/skip DP in height-many ready
-    rounds). The oracle BRUTE-FORCES all 2⁸ subsets per 8-node tree:
-    a subset is independent iff no edge has both endpoint bits set —
-    a completely independent exponential check against the
-    linear-round DP."""
-    from bdtopo2refhydro_spark.operators.orders import tree_mwis
-
-    tt = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 24).alias("t")).distinct())
-    ii = tt.select("t", F.explode(F.sequence(F.lit(1), F.lit(7)))
-                   .alias("i"))
-    ed = ii.selectExpr(
-        "t",
-        "case when t % 6 = 3 then (3 * i) % 8 "
-        "when t % 6 = 4 then (5 * i) % 8 else i end as ci",
-        "case t % 6 when 0 then i - 1 when 1 then 0 "
-        "when 2 then (i - 1) div 2 when 3 then (3 * (i - 1)) % 8 "
-        "when 4 then (5 * ((i - 1) div 2)) % 8 "
-        "else case when i < 4 then i - 1 else i - 4 end end as pi")
-    edges = ed.selectExpr(
-        "concat('e', t, '_', ci) as url",
-        "cast(t * 100 + ci as long) as NODEA",
-        "cast(t * 100 + pi as long) as NODEB")
-    nodes = (tt.select("t", F.explode(F.sequence(F.lit(0), F.lit(7)))
-                       .alias("i"))
-             .selectExpr("cast(t * 100 + i as long) as node",
-                         "cast((t * 100 + i) * 7 % 19 + 1 as long)"
-                         " as w"))
-    return tree_mwis(edges, nodes).orderBy("root")
-
-
-_TREE_MWIS_SQL = """
-WITH tt AS (SELECT DISTINCT doc_id % 24 AS t FROM documents),
-ii AS (SELECT t, g.i FROM tt CROSS JOIN generate_series(1, 7) g(i)),
-ed AS MATERIALIZED (
-  SELECT t,
-         (CASE WHEN t % 6 = 3 THEN (3 * i) % 8
-               WHEN t % 6 = 4 THEN (5 * i) % 8 ELSE i END) AS ci,
-         (CASE t % 6 WHEN 0 THEN i - 1 WHEN 1 THEN 0
-               WHEN 2 THEN (i - 1) // 2 WHEN 3 THEN (3 * (i - 1)) % 8
-               WHEN 4 THEN (5 * ((i - 1) // 2)) % 8
-               ELSE CASE WHEN i < 4 THEN i - 1
-                         ELSE i - 4 END END) AS pi
-  FROM ii),
-nn AS MATERIALIZED (
-  SELECT t, g.i AS li, (t * 100 + g.i) * 7 % 19 + 1 AS w
-  FROM tt CROSS JOIN generate_series(0, 7) g(i)),
-subsets AS (
-  SELECT t, g.s FROM tt CROSS JOIN generate_series(0, 255) g(s)),
-indep AS MATERIALIZED (
-  SELECT sb.t, sb.s FROM subsets sb
-  WHERE NOT EXISTS (
-    SELECT 1 FROM ed e
-    WHERE e.t = sb.t
-      AND ((sb.s >> e.ci) & 1) = 1 AND ((sb.s >> e.pi) & 1) = 1)),
-scored AS (
-  SELECT i.t, i.s, coalesce(sum(n.w), 0) AS tot
-  FROM indep i LEFT JOIN nn n
-    ON n.t = i.t AND ((i.s >> n.li) & 1) = 1
-  GROUP BY i.t, i.s)
-SELECT CAST(t * 100 AS BIGINT) AS root,
-       CAST(max(tot) AS BIGINT) AS mwis
-FROM scored GROUP BY t ORDER BY root
-"""
-
-
-def _q_apsp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs shortest paths by min-plus matrix squaring
-    (graph.py:apsp_minplus): D ← min(D, D∘D) per round — an L-hop
-    shortest path settles in ⌈log₂ L⌉ rounds vs the oracle's
-    hop-by-hop Bellman-Ford recursion (bounded relax-walk + final
-    min). Weighted ring + chord digraph, 40 nodes, integer weights —
-    every ordered pair reachable."""
-    from bdtopo2refhydro_spark.operators.graph import apsp_minplus
-
-    mm = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 40).alias("m")).distinct())
-    ring = mm.selectExpr("cast(m as long) as u",
-                         "cast((m + 1) % 40 as long) as v",
-                         "cast(1 + m % 5 as long) as w")
-    chords = mm.where("m % 4 = 0").selectExpr(
-        "cast(m as long) as u", "cast((m + 13) % 40 as long) as v",
-        "cast(7 as long) as w")
-    return (apsp_minplus(ring.unionByName(chords))
-            .orderBy("u", "v"))
-
-
-_APSP_SQL = """
-WITH RECURSIVE mm AS (SELECT DISTINCT doc_id % 40 AS m FROM documents),
-e AS MATERIALIZED (
-  SELECT u, v, min(w) AS w FROM (
-    SELECT m AS u, (m + 1) % 40 AS v, 1 + m % 5 AS w FROM mm
-    UNION ALL
-    SELECT m AS u, (m + 13) % 40 AS v, 7 AS w FROM mm
-    WHERE m % 4 = 0) s
-  GROUP BY u, v),
-walk(u, v, d) AS (
-  SELECT u, v, w FROM e
-  UNION
-  SELECT w1.u, e.v, w1.d + e.w
-  FROM walk w1 JOIN e ON e.u = w1.v
-  WHERE w1.d + e.w <= 220 AND e.v != w1.u)
-SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v,
-       CAST(min(d) AS BIGINT) AS dist
-FROM walk GROUP BY u, v ORDER BY u, v
 """
 
 
@@ -12768,50 +10794,6 @@ SELECT CAST(e.host AS BIGINT) AS host,
        w.acc AS accepted
 FROM walk w JOIN ev e ON e.host = w.host AND e.rn = w.rn
 ORDER BY host, event_id
-"""
-
-
-def _q_range_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-array range updates: R inclusive [l, r] += v
-    updates collapse to 2R boundary deltas, and EVERY position's
-    final value is one inclusive prefix-SUM over the delta stream
-    with 0-weight probe rows at each position
-    (aggregate.py:prefix_scan_sum — the two-level scan, no global
-    window). Oracle: the direct per-position covering-update sum —
-    O(N·R) vs the scan's O(N + R)."""
-    from bdtopo2refhydro_spark.operators.aggregate import prefix_scan_sum
-
-    upd = _docs(spark, sf_dir).selectExpr(
-        "cast((doc_id * 3) % 300 as long) as l",
-        "cast(least((doc_id * 3) % 300 + (doc_id * 7) % 40, 299) as "
-        "long) as r",
-        "cast(doc_id % 13 - 6 as long) as v")
-    deltas = (upd.selectExpr("l as pos", "v")
-              .unionAll(upd.selectExpr("r + 1 as pos", "-v as v"))
-              .groupBy("pos").agg(F.sum("v").alias("d")))
-    probes = spark.range(0, 300).select(F.col("id").alias("pos"))
-    # one ordered stream: deltas at t = 2·pos, probes at t = 2·pos+1
-    ev = (deltas.selectExpr("pos * 2 as t", "d")
-          .unionByName(probes.selectExpr("pos * 2 + 1 as t",
-                                         "cast(0 as long) as d")))
-    scanned = prefix_scan_sum(ev, t="t", val="d", out="s")
-    return (scanned.where(F.col("t") % 2 == 1)
-            .selectExpr("cast(t div 2 as long) as pos",
-                        "cast(s as long) as val")
-            .orderBy("pos"))
-
-
-_RANGE_UPDATES_SQL = """
-WITH upd AS (
-  SELECT (doc_id * 3) % 300 AS l,
-         least((doc_id * 3) % 300 + (doc_id * 7) % 40, 299) AS r,
-         doc_id % 13 - 6 AS v
-  FROM documents)
-SELECT CAST(g.p AS BIGINT) AS pos,
-       CAST(coalesce(sum(u.v), 0) AS BIGINT) AS val
-FROM generate_series(0, 299) g(p)
-LEFT JOIN upd u ON g.p >= u.l AND g.p <= u.r
-GROUP BY g.p ORDER BY pos
 """
 
 
@@ -12924,193 +10906,6 @@ GROUP BY root, part ORDER BY root, part
 """
 
 
-def _q_horn_sat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Horn-clause forward chaining (graph.py:horn_closure): chain
-    rules i∧helper → i+1 with one helper FACT missing per instance,
-    so the closure runs a different number of frontier rounds (5-9 on
-    this fixture) per instance before stalling. Oracle = 12 unrolled
-    two-body join rounds (DuckDB's linear recursion can't reference
-    the recursive table twice, so bounded unrolling is the honest
-    encoding)."""
-    from bdtopo2refhydro_spark.operators.graph import horn_closure
-
-    ii = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 5).alias("inst")).distinct())
-    helpers = (ii.select("inst",
-                         F.explode(F.sequence(F.lit(0), F.lit(9)))
-                         .alias("j"))
-               .where("j != (inst * 3) % 10")
-               .selectExpr("cast(inst as long) as inst",
-                           "cast(50 + j as long) as atom"))
-    seeds = ii.selectExpr("cast(inst as long) as inst",
-                          "cast(0 as long) as atom") \
-        .unionByName(ii.selectExpr("cast(inst as long) as inst",
-                                   "cast(25 as long) as atom"))
-    facts = helpers.unionByName(seeds)
-    rules = (ii.select("inst",
-                       F.explode(F.sequence(F.lit(0), F.lit(48)))
-                       .alias("i"))
-             .selectExpr("cast(inst as long) as inst",
-                         "cast(i as long) as b1",
-                         "cast(50 + (i % 10) as long) as b2",
-                         "cast(i + 1 as long) as h"))
-    return horn_closure(facts, rules).orderBy("inst", "atom")
-
-
-def _horn_sql(rounds: int = 12) -> str:
-    base = """
-WITH ii AS (SELECT DISTINCT doc_id % 5 AS inst FROM documents),
-facts AS MATERIALIZED (
-  SELECT inst, atom FROM (
-    SELECT inst, 50 + j.x AS atom
-    FROM ii CROSS JOIN generate_series(0, 9) j(x)
-    WHERE j.x != (inst * 3) % 10
-    UNION ALL SELECT inst, 0 FROM ii
-    UNION ALL SELECT inst, 25 FROM ii) s),
-rules AS MATERIALIZED (
-  SELECT inst, i.x AS b1, 50 + (i.x % 10) AS b2, i.x + 1 AS h
-  FROM ii CROSS JOIN generate_series(0, 48) i(x)),
-d0 AS MATERIALIZED (SELECT DISTINCT inst, atom FROM facts)"""
-    parts, prev = [], "d0"
-    for r in range(1, rounds + 1):
-        parts.append(f""",
-d{r} AS MATERIALIZED (
-  SELECT DISTINCT inst, atom FROM (
-    SELECT inst, atom FROM {prev}
-    UNION ALL
-    SELECT r.inst, r.h AS atom
-    FROM rules r
-    JOIN {prev} a ON a.inst = r.inst AND a.atom = r.b1
-    JOIN {prev} b ON b.inst = r.inst AND b.atom = r.b2) s)""")
-        prev = f"d{r}"
-    tail = f"""
-SELECT CAST(inst AS BIGINT) AS inst, CAST(atom AS BIGINT) AS atom
-FROM {prev} ORDER BY inst, atom
-"""
-    return base + "".join(parts) + tail
-
-
-def _q_pareto_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dominance onion layers (corpus.py:pareto_layers): engine
-    literally PEELS skylines round by round; oracle applies MIRSKY'S
-    theorem — layer(p) = longest dominance chain ending at p, a
-    recursive walk — two independent characterizations of the same
-    decomposition."""
-    from bdtopo2refhydro_spark.operators.corpus import pareto_layers
-
-    pts = _docs(spark, sf_dir).selectExpr(
-        "cast(doc_id % 4 as long) as g",
-        "cast((doc_id * 17) % 200 as long) as x",
-        "cast((doc_id * 23) % 200 as long) as y")
-    return pareto_layers(pts, "x", "y").orderBy("g", "x", "y")
-
-
-_PARETO_LAYERS_SQL = """
-WITH RECURSIVE pts AS MATERIALIZED (
-  SELECT DISTINCT doc_id % 4 AS g, (doc_id * 17) % 200 AS x,
-         (doc_id * 23) % 200 AS y
-  FROM documents),
-dom AS MATERIALIZED (
-  SELECT a.g, a.x AS qx, a.y AS qy, b.x AS px, b.y AS py
-  FROM pts a JOIN pts b
-    ON a.g = b.g AND a.x <= b.x AND a.y <= b.y
-   AND (a.x < b.x OR a.y < b.y)),
-chain(g, x, y, len) AS (
-  SELECT g, x, y, 1 FROM pts
-  UNION
-  SELECT d.g, d.px, d.py, c.len + 1
-  FROM chain c JOIN dom d
-    ON d.g = c.g AND d.qx = c.x AND d.qy = c.y)
-SELECT CAST(g AS BIGINT) AS g, CAST(x AS BIGINT) AS x,
-       CAST(y AS BIGINT) AS y, CAST(max(len) AS BIGINT) AS layer
-FROM chain GROUP BY g, x, y ORDER BY g, x, y
-"""
-
-
-def _q_subtree_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeated-subtree census across the 6-shape forest: every
-    node's canonical AHU code (graph.py:ahu_tree_classes with
-    return_nodes=True) grouped by shape — the common-substructure /
-    expression-dedup primitive (a shape occurring in k places can be
-    compiled/stored once). Output: shapes occurring ≥ 4 times with
-    occurrence count and tree spread."""
-    from bdtopo2refhydro_spark.operators.graph import ahu_tree_classes
-
-    tt = (_docs(spark, sf_dir)
-          .select((F.col("doc_id") % 24).alias("t")).distinct())
-    ii = tt.select("t", F.explode(F.sequence(F.lit(1), F.lit(7)))
-                   .alias("i"))
-    ed = ii.selectExpr(
-        "t",
-        "case when t % 6 = 3 then (3 * i) % 8 "
-        "when t % 6 = 4 then (5 * i) % 8 else i end as ci",
-        "case t % 6 when 0 then i - 1 when 1 then 0 "
-        "when 2 then (i - 1) div 2 when 3 then (3 * (i - 1)) % 8 "
-        "when 4 then (5 * ((i - 1) div 2)) % 8 "
-        "else case when i < 4 then i - 1 else i - 4 end end as pi")
-    children = ed.selectExpr("cast(t as long) as tid",
-                             "cast(t * 100 + ci as long) as node",
-                             "cast(t * 100 + pi as long) as parent")
-    roots = tt.selectExpr("cast(t as long) as tid",
-                          "cast(t * 100 as long) as node",
-                          "cast(null as long) as parent")
-    codes = ahu_tree_classes(roots.unionByName(children),
-                             return_nodes=True)
-    return (codes.groupBy("code")
-            .agg(F.count(F.lit(1)).alias("n_occ"),
-                 F.countDistinct("tid").alias("n_trees"))
-            .where("n_occ >= 4")
-            .orderBy("code"))
-
-
-def _subtree_repeats_sql() -> str:
-    # reuse the AHU unrolled-rounds prologue, different tail: ALL
-    # node codes, shape census
-    base = _ahu_iso_sql()
-    head, _, _tail = base.rpartition("SELECT CAST(tt.t AS BIGINT)")
-    return head + """SELECT l.lab AS code,
-       CAST(count(*) AS BIGINT) AS n_occ,
-       CAST(count(DISTINCT l.tid) AS BIGINT) AS n_trees
-FROM l8 l GROUP BY l.lab HAVING count(*) >= 4
-ORDER BY code
-"""
-
-
-def _q_earliest_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal earliest-arrival journeys
-    (graph.py:earliest_arrival): an edge is usable only if dep ≥
-    your arrival at its tail — label-correcting rounds to an
-    order-free fixpoint, vs the oracle's recursive journey walk
-    (every causally-valid hop enumerated, min arrival per node)."""
-    from bdtopo2refhydro_spark.operators.graph import earliest_arrival
-
-    e = _docs(spark, sf_dir).selectExpr(
-        "cast((doc_id * 3) % 40 as long) as u",
-        "cast((doc_id * 7 + 1) % 40 as long) as v",
-        "cast((doc_id * 11) % 100 as long) as dep",
-        "cast((doc_id * 11) % 100 + 1 + doc_id % 5 as long) as arr") \
-        .where("u != v")
-    return earliest_arrival(e, 0).orderBy("node")
-
-
-_EARLIEST_ARRIVAL_SQL = """
-WITH RECURSIVE e AS MATERIALIZED (
-  SELECT (doc_id * 3) % 40 AS u, (doc_id * 7 + 1) % 40 AS v,
-         (doc_id * 11) % 100 AS dep,
-         (doc_id * 11) % 100 + 1 + doc_id % 5 AS arr
-  FROM documents
-  WHERE (doc_id * 3) % 40 != (doc_id * 7 + 1) % 40),
-walk(node, a) AS (
-  SELECT 0, 0
-  UNION
-  SELECT e.v, e.arr FROM walk w JOIN e ON e.u = w.node
-  WHERE e.dep >= w.a)
-SELECT CAST(node AS BIGINT) AS node,
-       CAST(min(a) AS BIGINT) AS earliest
-FROM walk GROUP BY node ORDER BY node
-"""
-
-
 def _q_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate IMAGE pairs by perceptual-hash BANDING: the
     64-bit average-hashes (REAL byte-decoded PPMs, as in image_phash)
@@ -13199,8 +10994,7 @@ def _q_second_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-correcting rounds keeping the two smallest distinct labels
     per node (array_sort + slice per round, order-free fixpoint);
     oracle ranks distinct walk lengths from a bounded relax
-    recursion. Same weighted ring+chords digraph as apsp_minplus,
-    single source."""
+    recursion. Weighted ring+chords digraph, single source."""
     from bdtopo2refhydro_spark.operators._ckpt import CheckpointSlots
 
     mm = (_docs(spark, sf_dir)
@@ -13282,34 +11076,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # by scripts/oracle_check.py, which checks ALL entries.
     base = {
         "phash_pairs": _q_phash_pairs,
-        "earliest_arrival": _q_earliest_arrival,
-        "subtree_repeats": _q_subtree_repeats,
-        "pareto_layers": _q_pareto_layers,
-        "horn_sat": _q_horn_sat,
         "bom_rollup": _q_bom_rollup,
         "stream_bucket": _q_stream_bucket,
         "sorted_blocking": _q_sorted_blocking,
-        "range_updates": _q_range_updates,
         "token_bucket": _q_token_bucket,
-        "apsp_minplus": _q_apsp,
-        "tree_mwis": _q_tree_mwis,
-        "closure_square": _q_closure_square,
         "c4_count": _q_c4_count,
-        "tree_center": _q_tree_center,
         "rect_area": _q_rect_area,
         "biconnected": _q_biconnected,
         "articulation": _q_articulation,
         "stream_fp": _q_stream_fp,
         "golden_record": _q_golden_record,
-        "euler_path": _q_euler_path,
-        "irv_rounds": _q_irv,
         "merkle_tree": _q_merkle,
-        "interval_sched": _q_interval_sched,
         "rmq_sparse": _q_rmq_sparse,
         "jp_color": _q_jp_color,
-        "kth_select": _q_kth_select,
         "knn_classify": _q_knn_classify,
-        "tree_iso": _q_tree_iso,
         "block_matmul": _q_matmul,
         "bridges": _q_bridges,
         "two_ecc": _q_two_ecc,
@@ -13322,30 +11102,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pushdown_source": _q_pushdown_source,
         "asof_fwd": _q_asof_fwd,
         "merge_emul": _q_merge_emul,
-        "interval_stab": _q_interval_stab,
-        "apriori_l3": _q_apriori,
         "winnowing": _q_winnowing,
         "topn_limit": _q_topn_limit,
         "max_coverage": _q_max_coverage,
-        "densest_sub": _q_densest_sub,
         "hrw_shards": _q_hrw_shards,
         "ring_hash": _q_ring_hash,
         "poly_centroid": _q_poly_centroid,
         "stream_semi": _q_stream_semi,
         "skyline": _q_skyline,
-        "haar_dwt": _q_haar_dwt,
-        "mg_topk": _q_mg_topk,
-        "lca_batch": _q_lca_batch,
-        "bipartite": _q_bipartite,
-        "two_sat": _q_two_sat,
-        "robots_parse": _q_robots_parse,
         "hilbert_key": _q_hilbert_key,
         "topo_levels": _q_topo_levels,
         "image_gif": _q_image_gif,
         "unigram_seg": _q_unigram_seg,
         "weighted_median": _q_weighted_median,
         "tree_close": _q_tree_closeness,
-        "tree_diam": _q_tree_diameter,
         "linreg_fit": _q_linreg_fit,
         "perceptron": _q_perceptron,
         "nb_classify": _q_nb_classify,
@@ -13353,16 +11123,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "closest_pair": _q_closest_pair,
         "seg_intersect": _q_seg_intersect,
         "rect_join": _q_rect_join,
-        "mis_luby": _q_mis_luby,
-        "temporal_reach": _q_temporal_reach,
         "max_matching": _q_max_matching,
-        "phrase_query": _q_phrase_query,
-        "ktruss": _q_ktruss,
-        "clust_coef": _q_clust_coef,
         "prefix_join": _q_prefix_join,
-        "scc_coloring": _q_scc_coloring,
         "stump_train": _q_stump_train,
-        "redirect_loops": _q_redirect_loops,
         "mst_boruvka": _q_mst_boruvka,
         "tree_bet": _q_tree_betweenness,
         "rake_keywords": _q_rake_keywords,
@@ -13375,14 +11138,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "warc_gz": _q_warc_gz,
         "zip_scan": _q_zip_scan,
         "geohash": _q_geohash,
-        "tld_split": _q_tld_split,
         "state_source": _q_state_source,
         "strahler_order": _q_strahler,
         "fix_connectivity": _q_fix_connectivity,
         "width_network": _q_width_network,
         "posting_deltas": _q_posting_deltas,
         "udtf_analyze": _q_udtf_analyze,
-        "winsorize": _q_winsorize,
         "stream_chain": _q_stream_chain,
         "graph_agg": _q_graph_agg,
         "cdc_apply": _q_cdc_apply,
@@ -13402,9 +11163,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interval_merge": _q_interval_merge,
         "cohort_ret": _q_cohort_ret,
         "roll_anomaly": _q_roll_anomaly,
-        "cidr_match": _q_cidr_match,
-        "mixture_plan": _q_mixture_plan,
-        "lev_gate": _q_lev_gate,
         "set_ops": _q_set_ops,
         "grouping_sets": _q_grouping_sets,
         "deg_assort": _q_deg_assort,
@@ -13416,7 +11174,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nullsafe_join": _q_nullsafe_join,
         "lateral_topk": _q_lateral_topk,
         "link_pred": _q_link_pred,
-        "sssp_rounds": _q_sssp_rounds,
         "simpson_div": _q_simpson_div,
         "itemset_pairs": _q_itemset_pairs,
         "bitmap_distinct": _q_bitmap_distinct,
@@ -13427,8 +11184,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "label_prop": _q_label_prop,
         "pearson_corr": _q_pearson_corr,
         "dict_match": _q_dict_match,
-        "cogroup_profile": _q_cogroup_profile,
-        "collocations": _q_collocations,
         "tpch_q17": _q_tpch_q17,
         "hits": _q_hits,
         "pq_adc": _q_pq_adc,
@@ -13511,7 +11266,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bloom_dedup": _q_bloom_dedup,
         "tpch_q6": _q_tpch_q6,
         "bucket_join": _q_bucket_join,
-        "quantile_gates": _q_quantile_gates,
         "chunk_docs": _q_chunk_docs,
         "stream_sessions": _q_stream_sessions,
         "asof_join": _q_asof_join,
@@ -13520,13 +11274,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "salted_join": _q_salted_join,
         "dq_profile": _q_dq_profile,
         "dq_check": _q_dq_check,
-        "funnel": _q_funnel,
-        "event_features": _q_event_features,
-        "triplets": _q_triplets,
         "lsh_ann": _q_lsh_ann,
         "emb_dup_pairs": _q_emb_dup_pairs,
         "image_resize": _q_image_resize,
-        "triangles": _q_triangles,
         "repetition": _q_repetition,
         "sample_strat": _q_sample_strat,
         "inv_index": _q_inv_index,
@@ -13534,7 +11284,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_shards": _q_pack_shards,
         "url_dedup": _q_url_dedup,
         "domain_cap": _q_domain_cap,
-        "tfidf_topk": _q_tfidf_topk,
         "time_rollup": _q_time_rollup,
         "top_tokens": _q_top_tokens,
         "kmv_distinct": _q_kmv_distinct,
@@ -13543,7 +11292,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash": _q_simhash,
         "simhash_pairs": _q_simhash_pairs,
         "image_bmp": _q_image_bmp,
-        "temp_sample": _q_temp_sample,
         "reference_network": _q_reference_network,
         "dist_from_root": _q_dist_from_root,
         "hack_order": _q_hack,
@@ -13624,34 +11372,20 @@ def oracle_sql() -> dict[str, str]:
     return {
         "phash_pairs": _PHASH_PAIRS_SQL,
         "second_path": _SECOND_PATH_SQL,
-        "earliest_arrival": _EARLIEST_ARRIVAL_SQL,
-        "subtree_repeats": _subtree_repeats_sql(),
-        "pareto_layers": _PARETO_LAYERS_SQL,
-        "horn_sat": _horn_sql(),
         "bom_rollup": _BOM_ROLLUP_SQL,
         "stream_bucket": _TOKEN_BUCKET_SQL,
         "sorted_blocking": _SORTED_BLOCKING_SQL,
-        "range_updates": _RANGE_UPDATES_SQL,
         "token_bucket": _TOKEN_BUCKET_SQL,
-        "apsp_minplus": _APSP_SQL,
-        "tree_mwis": _TREE_MWIS_SQL,
-        "closure_square": _CLOSURE_SQUARE_SQL,
         "c4_count": _C4_COUNT_SQL,
-        "tree_center": _TREE_CENTER_SQL,
         "rect_area": _RECT_AREA_SQL,
         "biconnected": _BICC_SQL,
         "articulation": _ARTICULATION_SQL,
         "stream_fp": _STREAM_FP_SQL,
         "golden_record": _GOLDEN_RECORD_SQL,
-        "euler_path": _EULER_PATH_SQL,
-        "irv_rounds": _irv_sql(),
         "merkle_tree": _merkle_sql(),
-        "interval_sched": _INTERVAL_SCHED_SQL,
         "rmq_sparse": _RMQ_SPARSE_SQL,
         "jp_color": _jp_sql(),
-        "kth_select": _KTH_SELECT_SQL,
         "knn_classify": _KNN_CLASSIFY_SQL,
-        "tree_iso": _ahu_iso_sql(),
         "block_matmul": _MATMUL_SQL,
         "bridges": _BRIDGES_SQL,
         "two_ecc": _TWO_ECC_SQL,
@@ -13663,30 +11397,20 @@ def oracle_sql() -> dict[str, str]:
         "pushdown_source": _PUSHDOWN_SQL,
         "asof_fwd": _ASOF_FWD_SQL,
         "merge_emul": _MERGE_EMUL_SQL,
-        "interval_stab": _INTERVAL_STAB_SQL,
-        "apriori_l3": _APRIORI_SQL,
         "winnowing": _WINNOW_SQL,
         "topn_limit": _TOPN_SQL,
         "max_coverage": _max_cov_sql(),
-        "densest_sub": _densest_sql(),
         "hrw_shards": _hrw_sql(),
         "ring_hash": _RING_SQL,
         "poly_centroid": _POLY_CENTROID_SQL,
         "stream_semi": _STREAM_SEMI_SQL,
         "skyline": _SKYLINE_SQL,
-        "haar_dwt": _HAAR_SQL,
-        "mg_topk": _MG_SQL,
-        "lca_batch": _LCA_SQL,
-        "bipartite": _BIPARTITE_SQL,
-        "two_sat": _TWO_SAT_SQL,
-        "robots_parse": _ROBOTS_SQL,
         "hilbert_key": _hilbert_sql(),
         "topo_levels": _TOPO_LEVELS_SQL,
         "image_gif": _IMAGE_GIF_SQL,
         "unigram_seg": _unigram_sql(),
         "weighted_median": _WMEDIAN_SQL,
         "tree_close": _TREE_CLOSE_SQL,
-        "tree_diam": _TREE_DIAM_SQL,
         "linreg_fit": _LINREG_SQL,
         "perceptron": _perceptron_sql(),
         "nb_classify": _NB_SQL,
@@ -13696,16 +11420,9 @@ def oracle_sql() -> dict[str, str]:
         "rect_join": _RECT_JOIN_SQL,
         "mp3_frames": _MP3_FRAMES_SQL,
         "dbscan": _dbscan_sql(),
-        "mis_luby": _mis_sql(),
-        "temporal_reach": _TEMPORAL_REACH_SQL,
         "max_matching": _max_matching_sql(),
-        "phrase_query": _phrase_query_sql(),
-        "ktruss": _ktruss_sql(),
-        "clust_coef": _CLUST_COEF_SQL,
         "prefix_join": _PREFIX_JOIN_SQL,
-        "scc_coloring": _SCC_SQL,
         "stump_train": _STUMP_SQL,
-        "redirect_loops": _REDIRECT_LOOPS_SQL,
         "mst_boruvka": _mst_sql(),
         "tree_bet": _TREE_BET_SQL,
         "rake_keywords": _rake_sql(),
@@ -13716,11 +11433,9 @@ def oracle_sql() -> dict[str, str]:
         "warc_gz": _WARC_SCAN_SQL,  # same closed-form records
         "zip_scan": _ZIP_SCAN_SQL,
         "geohash": _geohash_sql(),
-        "tld_split": _tld_split_sql(),
         "state_source": _STATE_SOURCE_SQL,
         "posting_deltas": _POSTING_DELTAS_SQL,
         "udtf_analyze": _UDTF_ANALYZE_SQL,
-        "winsorize": _WINSORIZE_SQL,
         "stream_chain": _STREAM_CHAIN_SQL,
         "graph_agg": _GRAPH_AGG_SQL,
         "cdc_apply": _CDC_APPLY_SQL,
@@ -13740,9 +11455,6 @@ def oracle_sql() -> dict[str, str]:
         "interval_merge": _INTERVAL_MERGE_SQL,
         "cohort_ret": _COHORT_RET_SQL,
         "roll_anomaly": _ROLL_ANOMALY_SQL,
-        "cidr_match": _CIDR_MATCH_SQL,
-        "mixture_plan": _MIXTURE_PLAN_SQL,
-        "lev_gate": _LEV_GATE_SQL,
         "set_ops": _SET_OPS_SQL,
         "grouping_sets": _GROUPING_SETS_SQL,
         "deg_assort": _DEG_ASSORT_SQL,
@@ -13754,7 +11466,6 @@ def oracle_sql() -> dict[str, str]:
         "nullsafe_join": _NULLSAFE_SQL,
         "lateral_topk": _LATERAL_SQL,
         "link_pred": _LINK_PRED_SQL,
-        "sssp_rounds": _sssp_sql(4),
         "simpson_div": _SIMPSON_SQL,
         "itemset_pairs": _ITEMSET_SQL,
         "bitmap_distinct": _BITMAP_SQL,
@@ -13765,7 +11476,6 @@ def oracle_sql() -> dict[str, str]:
         "label_prop": _label_prop_sql(3),
         "pearson_corr": _pearson_sql(),
         "dict_match": _DICT_MATCH_SQL,
-        "cogroup_profile": _COGROUP_PROFILE_SQL,
         "reference_network": _REFNET_SQL,
         "corr_insert": _CORR_INSERT_SQL,
         "corr_delete": _CORR_DELETE_SQL,
@@ -13807,11 +11517,9 @@ def oracle_sql() -> dict[str, str]:
         "pack_shards": _PACK_SHARDS_SQL,
         "decontaminate": _DECONTAM_SQL,
         "inv_index": _INV_INDEX_SQL,
-        "quantile_gates": _QUANTILE_SQL,
         "zorder_key": _ZORDER_SQL,
         "curation_pipeline": _CURATION_SQL,
         "image_bmp": _IMAGE_BMP_SQL,
-        "temp_sample": _TEMP_SAMPLE_SQL,
         "text_nfc": _TEXT_NFC_SQL,
         "ann_int8": _ANN_INT8_SQL,
         "lm_fluency": _LM_FLUENCY_SQL,
@@ -13827,9 +11535,6 @@ def oracle_sql() -> dict[str, str]:
         "kcore": _kcore_sql(),
         "dq_profile": _DQ_PROFILE_SQL,
         "dq_check": _DQ_CHECK_SQL,
-        "funnel": _FUNNEL_SQL,
-        "event_features": _EVENT_FEATURES_SQL,
-        "triplets": _TRIPLETS_SQL,
         "refresh_pipeline": _refresh_pipeline_sql(),
         "chunk_docs": _CHUNK_DOCS_SQL,
         "sem_dedup": _sem_dedup_sql(),
@@ -13882,7 +11587,6 @@ def oracle_sql() -> dict[str, str]:
         "dissolve_area": _DISSOLVE_SQL,
         "tpch_q1": _TPCH_Q1_SQL,
         "observe_metrics": _OBSERVE_METRICS_SQL,
-        "collocations": _COLLOCATIONS_SQL,
         "lr_score": _LR_SCORE_SQL,
         "tpch_q2": _TPCH_Q2_SQL,
         "tpch_q8": _TPCH_Q8_SQL,
@@ -13907,8 +11611,6 @@ def oracle_sql() -> dict[str, str]:
         "top_tokens": _TOP_TOKENS_SQL,
         "kmv_distinct": _KMV_SQL,
         "host_rank": _host_rank_sql(),
-        "triangles": _TRIANGLES_SQL,
-        "tfidf_topk": _TFIDF_SQL,
         "bloom_dedup": _BLOOM_DEDUP_SQL,
         "exact_substr": _EXACT_SUBSTR_SQL,
         "cocitation": _COCITATION_SQL,

@@ -338,45 +338,6 @@ def _stitch(e: DataFrame, sized: DataFrame, key: str,
     return single_out.unionByName(multi_out)
 
 
-def kth_smallest_bisect(df, col: str, ks: list[int],
-                        max_rounds: int = 70) -> dict[int, int]:
-    """Exact k-th smallest elements (1-indexed ranks, duplicates
-    counted) of an integer column WITHOUT a global sort: value-domain
-    bisection. Invariant per rank k: answer ∈ [lo, hi]; each round
-    probes mid = (lo+hi)//2 with a conditional count and keeps the
-    half where count(v <= mid) first reaches k. All still-active
-    ranks share ONE aggregation per round (one sum per distinct
-    midpoint), and a count aggregation is map-side only — zero
-    shuffle, so the whole selection is O(log range) cheap scans of a
-    cached input instead of one full-sort exchange. The classic
-    distributed selection trade: scans are embarrassingly parallel at
-    any scale, sorts are not.
-
-    Returns {k: value}. Ranks must satisfy 1 <= k <= count(df)."""
-    src = df.select(F.col(col).alias("v")).cache()
-    try:
-        b = src.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).first()
-        state = {k: [int(b["lo"]), int(b["hi"])] for k in ks}
-        for _ in range(max_rounds):
-            active = {k: (lo + hi) // 2
-                      for k, (lo, hi) in state.items() if lo < hi}
-            if not active:
-                break
-            mids = sorted(set(active.values()))
-            row = src.agg(*[
-                F.sum(F.when(F.col("v") <= F.lit(m), 1).otherwise(0))
-                .alias(f"c{i}") for i, m in enumerate(mids)]).first()
-            cnt = {m: int(row[f"c{i}"]) for i, m in enumerate(mids)}
-            for k, m in active.items():
-                if cnt[m] >= k:
-                    state[k][1] = m
-                else:
-                    state[k][0] = m + 1
-        return {k: lo for k, (lo, hi) in state.items()}
-    finally:
-        src.unpersist()
-
-
 def dense_index(df, order_col: str, *, out: str = "idx",
                 num_partitions: int | None = None):
     """0-based dense row index in `order_col` order (values must be
@@ -406,79 +367,3 @@ def dense_index(df, order_col: str, *, out: str = "idx",
                               + F.coalesce("_off", F.lit(0)))
                         .cast("long"))
             .drop("_pid", "_rn", "_off"))
-
-
-def irv_rounds(prefs: DataFrame, *, ballot: str = "ballot",
-               cand: str = "cand", rnk: str = "rnk") -> DataFrame:
-    """Instant-runoff (ranked-choice) voting, round by round: each
-    round counts every ballot's top choice among the surviving
-    candidates (one groupBy-min + one count — rnk is unique per
-    ballot so the top choice is deterministic), then eliminates the
-    lowest-voted survivor (ties to the smaller candidate id, a ≤8-row
-    driver decision). Candidates with zero first-choice votes still
-    appear with votes = 0. Runs until one candidate survives;
-    returns (round, cand, votes) for every round — the full
-    elimination audit trail, not just the winner."""
-    p = prefs.select(F.col(ballot).alias("b"), F.col(cand).alias("c"),
-                     F.col(rnk).alias("r")).localCheckpoint(eager=False)
-    cands = sorted(r["c"] for r in p.select("c").distinct().collect())
-    spark = p.sparkSession
-    if len(cands) <= 1:
-        # degenerate ballots: a single (or no) candidate wins round 1
-        # outright — emit the one-row audit trail instead of None
-        rows = [(1, c,
-                 p.where(F.col("c") == c).select("b").distinct().count())
-                for c in cands]
-        return spark.createDataFrame(rows,
-                                     "round long, cand long, votes long")
-    elim: list = []
-    out = None
-    rnd = 0
-    while len(cands) - len(elim) > 1:
-        rnd += 1
-        alive = [c for c in cands if c not in elim]
-        surv = p.where(F.col("c").isin(alive))
-        fc = (surv.groupBy("b")
-              .agg(F.min(F.struct("r", "c")).alias("m"))
-              .select(F.col("m.c").alias("c")))
-        counts = {r["c"]: r["n"] for r in
-                  fc.groupBy("c").agg(F.count(F.lit(1)).alias("n"))
-                  .collect()}
-        spark = p.sparkSession
-        round_rows = [(rnd, c, counts.get(c, 0)) for c in alive]
-        rdf = spark.createDataFrame(round_rows,
-                                    "round long, cand long, votes long")
-        out = rdf if out is None else out.unionByName(rdf)
-        loser = min(alive, key=lambda c: (counts.get(c, 0), c))
-        elim.append(loser)
-    return out
-
-
-def prefix_scan_sum(df, *, t: str = "t", val: str = "m",
-                    out: str = "p", num_partitions: int | None = None):
-    """Distributed inclusive prefix-SUM over rows ordered by `t` —
-    the additive sibling of graph.prefix_scan_xor, same two-level
-    shape: range-repartition, per-partition running window, one
-    ≤#partitions-row offset collect broadcast back. `t` values must
-    be unique."""
-    spark = df.sparkSession
-    k = num_partitions or spark.sparkContext.defaultParallelism
-    d = (df.repartitionByRange(k, F.col(t))
-         .withColumn("_pid", F.spark_partition_id())
-         .localCheckpoint(eager=False))
-    w = Window.partitionBy("_pid").orderBy(t) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tots = {r["_pid"]: r["_t"] for r in
-            d.groupBy("_pid").agg(F.sum(val).alias("_t")).collect()}
-    acc, offs = 0, []
-    for pid in sorted(tots):
-        offs.append((pid, acc))
-        acc += tots[pid] if tots[pid] is not None else 0
-    off_df = spark.createDataFrame(offs or [(0, 0)],
-                                   "_pid int, _off long")
-    return (d.withColumn("_run", F.sum(val).over(w))
-            .join(F.broadcast(off_df), "_pid", "left")
-            .withColumn(out, (F.col("_run")
-                              + F.coalesce("_off", F.lit(0)))
-                        .cast("long"))
-            .drop("_pid", "_run", "_off"))

@@ -309,83 +309,6 @@ def inverted_index(docs: DataFrame, *, text_col: str = "text",
     )
 
 
-def group_quantiles(df: DataFrame, value_col: str, *,
-                    group_col: str = "lang",
-                    id_col: str = "doc_id") -> DataFrame:
-    """Exact DISCRETE per-group percentiles (p50/p90/p99) of an integer
-    column: the value at rank ceil(q·n) under a deterministic
-    (value, id) order — integer index arithmetic, no interpolation, so
-    the result is a value that exists in the data and replays bit-for-bit
-    in any engine. One shuffle on the group key; the rank and count come
-    from two window functions over the same exchange. The corpus-stats
-    shape used for length/quality gate calibration."""
-    w = Window.partitionBy(group_col).orderBy(value_col, id_col)
-    wg = Window.partitionBy(group_col)
-    ranked = (
-        df.select(group_col, value_col, id_col)
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count("*").over(wg))
-    )
-
-    def at(q_num: int, q_den: int):
-        idx = F.expr(f"(n * {q_num} + {q_den} - 1) div {q_den}")
-        return F.max(F.when(F.col("rn") == idx, F.col(value_col)))
-
-    return ranked.groupBy(group_col).agg(
-        F.max("n").alias("n"),
-        at(1, 2).alias("p50"),
-        at(9, 10).alias("p90"),
-        at(99, 100).alias("p99"),
-    )
-
-
-def sample_temperature(docs: DataFrame, budget: int, *,
-                       source_col: str = "source",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Temperature-based mixture sampling (α = 0.5): re-weight sources by
-    sqrt(n_s) — the standard anti-head flattening between uniform (α=0)
-    and natural (α=1) — and keep each doc with per-source probability
-    rate_s = min(1, budget·w_s/Σw/n_s), decided by the deterministic
-    fib16 hash (no RNG; reruns, resumes, and the SQL oracle agree).
-
-    Exactness design: w_s = floor(sqrt(n_s)·2^20) is integer-exact
-    (hardware sqrt is IEEE correctly-rounded, floor pins the ulp), so
-    Σw is an ORDER-INDEPENDENT integer sum — the one place a float sum
-    would diverge between engines — and the remaining expression tree
-    (two divisions, least, ·65536, floor) is fixed-shape correctly-
-    rounded arithmetic both engines reproduce bit-for-bit.
-
-    Scale shape: per-source counts are one partial-aggregated groupBy
-    (|sources| rows); the threshold table broadcasts; the keep decision
-    is a map-side filter on the corpus. One corpus-wide shuffle total
-    (the count), zero on the data path."""
-    w = docs.groupBy(source_col).agg(F.count("*").alias("n")).withColumn(
-        "w", F.floor(F.sqrt(F.col("n")) * F.lit(1 << 20)).cast("long")
-    )
-    tot = w.agg(F.sum("w").alias("tw"))
-    thr = (
-        w.crossJoin(F.broadcast(tot))
-        .withColumn(
-            "thr",
-            F.floor(
-                F.least(
-                    F.lit(1.0),
-                    (F.lit(int(budget)) * F.col("w") / F.col("tw"))
-                    / F.col("n"),
-                )
-                * 65536
-            ).cast("long"),
-        )
-        .select(source_col, "thr")
-    )
-    return (
-        docs.join(F.broadcast(thr), source_col)
-        .withColumn("fib", fib16(id_col))
-        .filter(F.col("fib") < F.col("thr"))
-        .drop("fib", "thr")
-    )
-
-
 def chunk_documents(docs: DataFrame, *, chunk_tokens: int = 100,
                     stride: int = 80, text_col: str = "text",
                     id_col: str = "doc_id") -> DataFrame:
@@ -432,43 +355,6 @@ def chunk_documents(docs: DataFrame, *, chunk_tokens: int = 100,
                 " ",
             ).alias("chunk_text"),
         )
-    )
-
-
-def tfidf_topk(docs: DataFrame, *, k: int = 3, text_col: str = "text",
-               id_col: str = "doc_id", scale: int = 1_000_000) -> DataFrame:
-    """Per-document top-k TF-IDF terms with an integer score.
-
-    score = tf * ((N * scale) div df) — floor division keeps every value
-    a BIGINT, so the ranking is bit-reproducible in the DuckDB oracle
-    (no float log). Ties break (score desc, token asc). N is attached
-    via a broadcast 1-row aggregate instead of a driver-side count so
-    the whole computation stays one declarative plan.
-
-    Scale shape: explode -> partial-agg groupBy (doc, token) for tf ->
-    groupBy token for df (both map-side combinable) -> shuffle equi-join
-    tf x df on token -> per-doc window on the post-agg table. No stage
-    touches raw text after the first projection.
-    """
-    toks = (
-        docs.select(F.col(id_col), F.explode(
-            F.split(F.col(text_col), " ")).alias("token"))
-        .filter(F.col("token") != "")
-    )
-    tf = toks.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
-    df_ = tf.groupBy("token").agg(F.count("*").cast("bigint").alias("df"))
-    n = docs.agg(F.count("*").cast("bigint").alias("n_docs"))
-    scored = (
-        tf.join(df_, "token")
-        .join(F.broadcast(n))
-        .withColumn("score", F.expr(f"tf * ((n_docs * {int(scale)}) div df)"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("token"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "token", F.col("tf").cast("bigint").alias("tf"),
-                "df", F.col("score").cast("bigint").alias("score"), "rank")
     )
 
 
@@ -586,51 +472,6 @@ def apply_url_rules(pages: DataFrame, rules: DataFrame, *,
             F.coalesce("matched_len", F.lit(0)).cast("bigint")
             .alias("matched_len"),
         )
-    )
-
-
-def contrastive_triplets(docs: DataFrame, *, k_neg: int = 2,
-                         buckets: int = 64,
-                         bucket_expr: str | None = None,
-                         id_col: str = "doc_id",
-                         group_col: str = "source") -> DataFrame:
-    """Mine (anchor, positive, negative) triplets for contrastive
-    embedding training, fully deterministically — no RNG state to
-    coordinate across executors or resumes.
-
-    positive = the anchor's successor within its ``group_col`` (lead
-    over (group, id) — same-host pages are the standard weak-positive
-    signal); anchors with no successor produce no triplet. negatives =
-    the representative (min id) of the ``j``-th next hash bucket,
-    j = 1..k_neg — guaranteed outside the anchor's bucket, spread over
-    the corpus by the hash.
-
-    Scale shape: positives are one window over the group partitioning;
-    the bucket-representative table is ``buckets`` rows and BROADCASTS,
-    so negatives cost an explode(k_neg) plus a broadcast equi-join —
-    the corpus never self-joins.
-    """
-    b = bucket_expr if bucket_expr is not None else \
-        f"pmod(xxhash64({id_col}), {buckets})"
-    w = Window.partitionBy(group_col).orderBy(id_col)
-    anchors = (
-        docs.select(id_col, group_col)
-        .withColumn("pos_id", F.lead(id_col).over(w))
-        .filter(F.col("pos_id").isNotNull())
-        .withColumn("_b", F.expr(b).cast("bigint"))
-    )
-    reps = (
-        docs.select(F.expr(b).cast("bigint").alias("_rb"),
-                    F.col(id_col).alias("neg_id"))
-        .groupBy("_rb").agg(F.min("neg_id").alias("neg_id"))
-    )
-    return (
-        anchors.withColumn("j", F.explode(F.sequence(F.lit(1),
-                                                     F.lit(k_neg))))
-        .withColumn("_nb", (F.col("_b") + F.col("j")) % buckets)
-        .join(F.broadcast(reps), F.col("_nb") == F.col("_rb"))
-        .select(F.col(id_col).alias("anchor_id"), "pos_id",
-                "neg_id", F.col("j").cast("bigint").alias("j"))
     )
 
 
@@ -818,54 +659,6 @@ def skipgrams(docs: DataFrame, *, window: int = 2,
         F.count("*").alias("n_pairs"))
 
 
-def collocations(docs: DataFrame, *, min_count: int = 2,
-                 text_col: str = "text") -> DataFrame:
-    """Collocation (phrase) mining by lift: adjacent bigram counts with
-    per-word marginals and lift = P(xy)/(P(x)·P(y)) = n_xy·N/(n_x·n_y)
-    — the phrase-detection prep stage (word2vec phrases / tokenizer
-    merge seeding). Lift is the log-free monotone equivalent of PMI, so
-    every value is one double division of two exact BIGINT products and
-    the result is bit-replayable across engines.
-
-    Scale shape: bigrams come from the token ARRAY zipped with itself
-    shifted (a transform over each doc — ZERO joins to form pairs);
-    one map-side-combinable groupBy each for bigrams and unigrams; the
-    unigram table is vocab-sized so both marginal lookups broadcast,
-    and the corpus total rides a 1-row broadcast. Nothing but
-    (word, word, count) rows ever shuffles.
-
-    Docs with <2 tokens are guarded out of the bigram transform: Spark's
-    sequence(2, n) DESCENDS for n<2 and ANSI element_at throws on index
-    0, so the naive spelling crashes on single-token spam."""
-    toks = F.expr(
-        f"filter(split(trim(lower({text_col})), '\\\\s+'), t -> t != '')")
-    arr = docs.select(toks.alias("l"))
-    big = (
-        arr.filter(F.expr("size(l) >= 2"))
-        .select(F.explode(F.expr(
-            "transform(sequence(2, size(l)), i -> struct("
-            "element_at(l, i - 1) AS w1, element_at(l, i) AS w2))"))
-            .alias("p"))
-        .select("p.w1", "p.w2")
-        .groupBy("w1", "w2").agg(F.count("*").alias("n_xy"))
-        .filter(F.col("n_xy") >= min_count)
-    )
-    uni = (arr.select(F.explode("l").alias("tok"))
-               .groupBy("tok").agg(F.count("*").alias("n")))
-    tot = uni.agg(F.sum("n").alias("n_total"))
-    u1 = uni.select(F.col("tok").alias("w1"), F.col("n").alias("n_x"))
-    u2 = uni.select(F.col("tok").alias("w2"), F.col("n").alias("n_y"))
-    return (
-        big.join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "w1", "w2", "n_xy", "n_x", "n_y",
-            ((F.col("n_xy") * F.col("n_total"))
-             / (F.col("n_x") * F.col("n_y"))).alias("lift"))
-    )
-
-
 def cooccurrence_pairs(
     df: DataFrame,
     basket_col: str,
@@ -911,243 +704,6 @@ def cooccurrence_pairs(
     )
 
 
-def parse_ipv4(col) -> "F.Column":
-    """Dotted-quad IPv4 string -> uint32 as BIGINT, pure JVM codegen
-    (split + casts + shifts) — no UDF, so the parse stays inside
-    whole-stage codegen at crawl scale."""
-    o = F.split(col, r"\.")
-    return (
-        F.shiftleft(F.element_at(o, 1).cast("long"), 24)
-        + F.shiftleft(F.element_at(o, 2).cast("long"), 16)
-        + F.shiftleft(F.element_at(o, 3).cast("long"), 8)
-        + F.element_at(o, 4).cast("long")
-    ).alias("ip_int")
-
-
-def cidr_match(logs: DataFrame, rules: DataFrame, *,
-               ip_col: str = "ip", row_key: str = "event_id") -> DataFrame:
-    """Longest-prefix CIDR policy match — the IP-level analogue of the
-    robots-rules join (apply_url_rules): each log row gets the policy of
-    the most specific matching CIDR block.
-
-    Scale shape: prefix lengths present in the rule set (a handful) are
-    collected once; every log row emits one candidate key per distinct
-    length (ip >> (32-len)) and equi-joins the BROADCAST rule table on
-    (len, shifted-prefix) — never a range or cross join. The longest
-    match wins via max_by over the row key, so ties are impossible
-    (two distinct same-length prefixes cannot both match one IP).
-
-    ``rules``: (cidr_ip string, prefix_len int, policy string). Rows
-    with no matching rule are dropped (ship a 0-length catch-all for
-    default-policy semantics). Adds (policy, match_len) per log row.
-    """
-    # the shift amount varies per row, so the shifts go through SQL
-    # expr() — the python F.shiftright binding only takes int literals
-    rules_k = (rules.withColumn("_pfx_ip", parse_ipv4(F.col("cidr_ip")))
-               .select(
-                   F.col("prefix_len").cast("int").alias("prefix_len"),
-                   F.expr("CASE WHEN prefix_len > 0 THEN "
-                          "shiftright(_pfx_ip, 32 - prefix_len) "
-                          "ELSE 0 END").cast("long").alias("rule_key"),
-                   "policy"))
-    lens = [int(r[0]) for r in
-            rules.select("prefix_len").distinct().collect()]
-    with_ip = logs.withColumn("_ip_int", parse_ipv4(F.col(ip_col)))
-    cand = with_ip.select(
-        "*",
-        F.explode(F.array(*[F.lit(n) for n in sorted(lens)]))
-        .alias("prefix_len"))
-    cand = cand.withColumn(
-        "cand_key",
-        F.expr("CASE WHEN prefix_len > 0 THEN "
-               "shiftright(_ip_int, 32 - prefix_len) "
-               "ELSE 0 END").cast("long"))
-    joined = cand.join(
-        F.broadcast(rules_k),
-        on=[cand.prefix_len == rules_k.prefix_len,
-            cand.cand_key == rules_k.rule_key],
-        how="inner").select(with_ip["*"], rules_k.prefix_len, "policy")
-    return (joined.groupBy(row_key)
-            .agg(F.max_by(F.struct(F.col("prefix_len").alias("match_len"),
-                                   "policy"),
-                          "prefix_len").alias("_m"),
-                 F.first(F.col("_ip_int")).alias("ip_int"))
-            .select(row_key, "ip_int", "_m.match_len", "_m.policy"))
-
-
-def mixture_plan(units_per_group: DataFrame, weights: DataFrame, *,
-                 group_col: str = "source",
-                 oversample_num: int = 2) -> DataFrame:
-    """Training-data mixture plan in exact integer arithmetic: given
-    available units (tokens/chars) per group and target mixture
-    weights, compute each group's allocation and the epoch count
-    (ceil-divide) needed to fill it — the standard data-mixing step
-    (cf. The Pile / DoReMi-style fixed-weight mixtures) with zero
-    floats so the plan replays bitwise.
-
-    alloc_g = weight_g * total_units * oversample_num // sum_weights
-    epochs_g = ceil(alloc_g / units_g)  (integer (a + u - 1) // u)
-
-    Tiny inputs (one row per group): broadcast joins, one global sum.
-    """
-    totals = units_per_group.agg(
-        F.sum("units").cast("long").alias("total_units"))
-    wsum = weights.agg(F.sum("weight").cast("long").alias("sum_w"))
-    j = (units_per_group.join(F.broadcast(weights), group_col)
-         .crossJoin(F.broadcast(totals)).crossJoin(F.broadcast(wsum)))
-    # `div`, not `/` + floor: SQL integer division stays BIGINT end to
-    # end (float floor loses exactness past 2^53 at real corpus sizes).
-    j = j.withColumn(
-        "alloc",
-        F.expr(f"(weight * total_units * {int(oversample_num)}) "
-               "div sum_w").cast("long"))
-    return j.select(
-        group_col,
-        F.col("units").cast("long").alias("units"),
-        F.col("weight").cast("long").alias("weight"),
-        "alloc",
-        F.expr("(alloc + units - 1) div units")
-        .cast("long").alias("epochs"))
-
-
-def nearest_vocab_lev(tokens: DataFrame, vocab: DataFrame, *,
-                      max_dist: int = 2) -> DataFrame:
-    """Bounded edit-distance vocabulary match on the JVM's built-in
-    ``levenshtein(l, r, threshold)`` (Spark 4): the threshold variant
-    short-circuits the DP once the bound is exceeded (returns -1), so
-    the common no-match case costs O(max_dist * len) instead of
-    O(len^2) — the right primitive when the gate is tight.
-
-    ``tokens``(tok) x broadcast ``vocab``(term): candidate generation is
-    a broadcast nested loop over a SMALL vocab (gazetteer-scale; for
-    vocabularies beyond broadcast size use fuzzy_join_ed1's FastSS
-    deletion-variant index instead). Returns (tok, term, dist<=max_dist).
-    """
-    lev = F.levenshtein(F.col("tok"), F.col("term"), int(max_dist))
-    return (tokens.crossJoin(F.broadcast(vocab))
-            .withColumn("dist", lev.cast("int"))
-            .where((F.col("dist") >= 0) & (F.col("dist") <= max_dist)))
-
-
-def winsorize_sums(df: DataFrame, value_col: str, *,
-                   group_col: str = "source", id_col: str = "doc_id",
-                   lo_pct: int = 10, hi_pct: int = 90) -> DataFrame:
-    """Winsorized per-group rollup: clip an integer column to its
-    exact DISCRETE per-group [p_lo, p_hi] (the group_quantiles rank
-    rule — value at rank ceil(q·n) under (value, id) order, no
-    interpolation) and report the clipped sum next to the raw one —
-    the outlier-robust statistic gates calibrate against.
-
-    One shuffle on the group key for the rank pass; the tiny per-group
-    bounds broadcast back for the clip. All BIGINT."""
-    w = Window.partitionBy(group_col).orderBy(value_col, id_col)
-    wg = Window.partitionBy(group_col)
-    ranked = (df.select(group_col, value_col, id_col)
-              .withColumn("rn", F.row_number().over(w))
-              .withColumn("n", F.count("*").over(wg)))
-
-    def at(pct: int):
-        idx = F.expr(f"(n * {pct} + 99) div 100")
-        return F.max(F.when(F.col("rn") == idx, F.col(value_col)))
-
-    bounds = ranked.groupBy(group_col).agg(
-        F.max("n").cast("long").alias("n"),
-        at(lo_pct).cast("long").alias("lo"),
-        at(hi_pct).cast("long").alias("hi"))
-    v = F.col(value_col)
-    clipped = F.least(F.greatest(v, F.col("lo")), F.col("hi"))
-    return (df.select(group_col, value_col)
-            .join(F.broadcast(bounds), group_col)
-            .groupBy(group_col)
-            .agg(F.max("n").alias("n"), F.max("lo").alias("lo"),
-                 F.max("hi").alias("hi"),
-                 F.sum(v).cast("long").alias("sum_raw"),
-                 F.sum(clipped).cast("long").alias("sum_clipped")))
-
-
-def registered_domain(df: DataFrame, suffixes: DataFrame,
-                      host_col: str = "host",
-                      max_suffix_labels: int = 3) -> DataFrame:
-    """Registered-domain extraction by LONGEST public-suffix match —
-    the eTLD+1 rule every per-site crawl policy (domain caps, robots
-    scoping, leakage-safe splits) keys on. ``suffixes`` is the
-    public-suffix list as one ``suffix`` column ('com', 'co.uk', …).
-
-    For each host the last 1..``max_suffix_labels`` label-suffixes are
-    generated JVM-side (slice + array_join — no explode, no Python),
-    each candidate column is left-joined against the BROADCAST suffix
-    table, and the longest hit wins: ``registered = <label before the
-    suffix> + '.' + <suffix>``. Hosts matching no suffix (or equal to a
-    bare suffix) yield NULL — the caller's quarantine bucket.
-
-    Scale: the suffix list is ~10k rows in the wild (the real PSL) —
-    a classic broadcast dim; the corpus side never shuffles.
-    """
-    labels = F.split(F.col(host_col), r"\.")
-    n = F.size(labels)
-    out = df.withColumn("__labs", labels).withColumn("__n", n)
-    sfx = [r[0] for r in suffixes.select("suffix").collect()]
-    bset = set(sfx)
-    # candidate suffix of k labels, matched without a join: the suffix
-    # table is collected once on the driver (it IS broadcast-sized) and
-    # compiled into an isin() literal set per k — pure codegen.
-    reg = F.lit(None).cast("string")
-    for k in range(1, max_suffix_labels + 1):
-        cand = F.array_join(F.slice(F.col("__labs"), -k, k), ".")
-        lab = F.element_at(F.col("__labs"), -(k + 1))
-        hit = (F.col("__n") > k) & cand.isin(*bset)
-        # later (longer) k overrides earlier: evaluate ascending and
-        # let the longest match win via coalesce-in-reverse
-        reg = F.when(hit, F.concat_ws(".", lab, cand)).otherwise(reg)
-    # PSL rule: a host that IS a public suffix has no registrable part
-    reg = F.when(F.col(host_col).isin(*bset),
-                 F.lit(None).cast("string")).otherwise(reg)
-    return (out.withColumn("registered", reg)
-            .withColumn("suffix_len",
-                        F.when(reg.isNull(), F.lit(None).cast("int"))
-                        .otherwise(F.size(F.split(reg, r"\.")) - 1))
-            .drop("__labs", "__n"))
-
-
-def phrase_search(docs: DataFrame, phrases: DataFrame,
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """Positional phrase query over the inverted index — the search
-    primitive `inv_index`'s sorted postings exist for: find every
-    occurrence of each multi-token phrase. A phrase of length L
-    anchored at start s matches iff token k of the phrase sits at
-    position s+k for ALL k — so ONE equi-join of postings against the
-    (broadcast) phrase tokens, re-anchoring each hit to its implied
-    start (pos − k), then a groupBy counting DISTINCT k per
-    (phrase, doc, start) equal to L. count(DISTINCT k), not count(*):
-    a phrase with a repeated token ('batch batch batch') would
-    otherwise double-count one aligned position.
-
-    Postings shuffle once on token (the join key); phrase tables are
-    tiny. No self-join of the corpus, no per-row Python. Returns
-    (phrase_id, doc_id, start).
-
-    phrases: (phrase_id, k, tok, plen) with k 0-based.
-    """
-    from .text import tokens_expr
-
-    toks = (docs.select(
-        F.col(id_col).alias("_d"),
-        F.posexplode(F.expr(tokens_expr(text_col)))
-        .alias("_pos", "tok"))
-        .where(F.col("tok") != ""))
-    m = (toks.join(F.broadcast(phrases), "tok")
-         .select("phrase_id", "_d",
-                 (F.col("_pos") - F.col("k")).alias("start"),
-                 "k", "plen")
-         .where(F.col("start") >= 0))
-    return (m.groupBy("phrase_id", "_d", "start", "plen")
-            .agg(F.count_distinct(F.col("k")).alias("_nk"))
-            .where(F.col("_nk") == F.col("plen"))
-            .select("phrase_id", F.col("_d").alias("doc_id"),
-                    F.col("start").cast("long").alias("start")))
-
-
 def weighted_median(df: DataFrame, value_col: str, weight_col: str, *,
                     group_col: str = "g") -> DataFrame:
     """Exact lower weighted median per group: the smallest value v with
@@ -1156,7 +712,7 @@ def weighted_median(df: DataFrame, value_col: str, weight_col: str, *,
     because weights collapse per (group, value) BEFORE the cumulative
     window. One shuffle on the group key; the per-value pre-aggregation
     is map-side combined, so the window sees |distinct values| rows,
-    not |rows| — the same discipline as group_quantiles. Returns
+    not |rows|. Returns
     (group, wmedian, total_w)."""
     per_v = (df.groupBy(F.col(group_col).alias("g"),
                         F.col(value_col).cast("long").alias("v"))
@@ -1170,48 +726,6 @@ def weighted_median(df: DataFrame, value_col: str, weight_col: str, *,
             .groupBy("g")
             .agg(F.min("v").cast("long").alias("wmedian"),
                  F.min("tw").cast("long").alias("total_w")))
-
-
-def parse_robots(robots: DataFrame, host_col: str = "host",
-                 text_col: str = "robots_txt") -> DataFrame:
-    """REAL robots.txt parsing (RFC 9309 grouping rules): lines split
-    and position-tagged, ``directive: value`` surgery, then the spec's
-    group semantics — CONSECUTIVE User-agent lines open one shared
-    group (a UA line starts a new group only when the previous line is
-    not itself a UA line), and every Allow/Disallow rule applies to all
-    agents of its group. Pure JVM string ops + two windows over (host,
-    line) — no python; the agents × rules expansion joins within the
-    tiny per-group key. Returns (host, agent, rule, path, line_no) —
-    the rule table url_rules-style longest-prefix policies consume."""
-    lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(text_col), "\n"))
-        .alias("line_no", "line"))
-    parsed = lines.select(
-        "host", "line_no",
-        F.lower(F.trim(F.substring_index("line", ":", 1)))
-        .alias("directive"),
-        F.trim(F.expr(
-            "substr(line, instr(line, ':') + 1)")).alias("value"),
-    ).filter(F.expr("instr(line, ':') > 0"))
-    w = Window.partitionBy("host").orderBy("line_no")
-    grouped = parsed.withColumn(
-        "_is_ua", (F.col("directive") == "user-agent")
-    ).withColumn(
-        "_new_grp",
-        (F.col("_is_ua")
-         & ~F.coalesce(F.lag("_is_ua").over(w), F.lit(False)))
-        .cast("int")
-    ).withColumn("grp", F.sum("_new_grp").over(w))
-    agents = (grouped.filter("_is_ua")
-              .select("host", "grp", F.col("value").alias("agent")))
-    rules = (grouped
-             .filter(F.col("directive").isin("allow", "disallow"))
-             .select("host", "grp", F.col("directive").alias("rule"),
-                     F.col("value").alias("path"), "line_no"))
-    return (agents.join(rules, ["host", "grp"])
-            .select("host", "agent", "rule", "path",
-                    F.col("line_no").cast("long").alias("line_no")))
 
 
 def pareto_skyline(df: DataFrame, x_col: str, y_col: str, *,
@@ -1232,47 +746,6 @@ def pareto_skyline(df: DataFrame, x_col: str, y_col: str, *,
     return (per_x.withColumn("_pm", F.min("y").over(w))
             .where(F.col("_pm").isNull() | (F.col("y") < F.col("_pm")))
             .select("g", "x", "y"))
-
-
-def mg_heavy_hitters(df: DataFrame, col: str, k: int) -> DataFrame:
-    """EXACT heavy hitters (count > n/k) by the two-pass Misra–Gries
-    scheme: pass 1 runs the classic k-counter decrement summary PER
-    PARTITION (mapInPandas, bounded k entries out per partition — the
-    shuffle carries ≤ k·partitions rows, never the stream); merged MG
-    counts underestimate true counts by ≤ n/k TOTAL, so every true
-    heavy hitter survives as a candidate. Pass 2 recounts ONLY the
-    candidates exactly (broadcast semi-join) and applies the strict
-    n·threshold gate — so the OUTPUT is exact and partition-order
-    independent even though MG summaries themselves are not.
-    Returns (item, cnt) for items with cnt·k > n."""
-    import pandas as pd
-
-    def _mg(batches):
-        counters: dict = {}
-        for pdf in batches:
-            for v in pdf[col]:
-                if v in counters:
-                    counters[v] += 1
-                elif len(counters) < k:
-                    counters[v] = 1
-                else:
-                    for key in list(counters):
-                        counters[key] -= 1
-                        if counters[key] == 0:
-                            del counters[key]
-        yield pd.DataFrame({"item": list(counters),
-                            "c": list(counters.values())})
-
-    items = df.select(F.col(col).alias(col))
-    cand = (items.mapInPandas(_mg, f"item string, c long")
-            .groupBy("item").agg(F.sum("c").alias("_est"))
-            .select("item"))
-    n = items.count()
-    exact = (items.join(F.broadcast(cand),
-                        items[col] == cand["item"], "left_semi")
-             .groupBy(col).agg(F.count("*").cast("long").alias("cnt")))
-    return (exact.where(F.col("cnt") * k > F.lit(n))
-            .select(F.col(col).alias("item"), "cnt"))
 
 
 _LCG_M = 2147483648  # 2^31
@@ -1381,84 +854,3 @@ def greedy_max_coverage(sets_df: DataFrame, k: int, *,
             new_cov if covered is None
             else covered.unionByName(new_cov), "cov")
     return spark.createDataFrame(picks, "round long, sid long, gain long")
-
-
-def apriori_triples(baskets: DataFrame, minsup: int, *,
-                    basket_col: str = "bid",
-                    item_col: str = "item") -> DataFrame:
-    """A-priori frequent-triple mining, the classic level-wise
-    candidate pruning: L1 (frequent items) prunes the baskets, L2
-    (frequent pairs) prunes triple candidates THREE ways — a triple is
-    only counted when (a,b), (a,c) and (b,c) are all frequent — so the
-    expensive 3-way basket self-join runs over L1-filtered items and
-    its output dies early on the L2 semi-joins. Counting is one
-    groupBy per level (map-side combined). Returns frequent triples
-    (a, b, c, cnt) with a < b < c."""
-    b = baskets.select(F.col(basket_col).alias("bid"),
-                       F.col(item_col).alias("item")).distinct() \
-        .localCheckpoint(eager=False)
-    l1 = (b.groupBy("item").agg(F.count("*").alias("c"))
-          .where(F.col("c") >= minsup).select("item"))
-    bf = b.join(F.broadcast(l1), "item").localCheckpoint(eager=False)
-    p = bf.select("bid", F.col("item").alias("a")) \
-        .join(bf.select("bid", F.col("item").alias("b2")), "bid") \
-        .where(F.col("a") < F.col("b2"))
-    l2 = (p.groupBy("a", "b2").agg(F.count("*").alias("c"))
-          .where(F.col("c") >= minsup).select("a", "b2")
-          .localCheckpoint(eager=False))
-    t = (p.join(bf.select("bid", F.col("item").alias("c3")), "bid")
-         .where(F.col("b2") < F.col("c3")))
-    t = (t.join(F.broadcast(l2), ["a", "b2"], "left_semi")
-         .join(F.broadcast(l2.select(F.col("a"),
-                                     F.col("b2").alias("c3"))),
-               ["a", "c3"], "left_semi")
-         .join(F.broadcast(l2.select(F.col("a").alias("b2"),
-                                     F.col("b2").alias("c3"))),
-               ["b2", "c3"], "left_semi"))
-    return (t.groupBy("a", "b2", "c3").agg(F.count("*").alias("cnt"))
-            .where(F.col("cnt") >= minsup)
-            .select(F.col("a").cast("long").alias("a"),
-                    F.col("b2").cast("long").alias("b"),
-                    F.col("c3").cast("long").alias("c"),
-                    F.col("cnt").cast("long").alias("cnt")))
-
-
-def pareto_layers(df: DataFrame, x_col: str, y_col: str, *,
-                  group_col: str = "g", max_rounds: int = 400
-                  ) -> DataFrame:
-    """Onion peeling of the 2D dominance order (both axes minimized):
-    layer 1 = the Pareto skyline, layer k = the skyline after peeling
-    layers < k. Engine = the literal PEEL loop (per round one
-    group-partitioned running-min window, remove, repeat). The oracle
-    instead uses Mirsky's theorem — layer(p) = longest dominance
-    chain ending at p — a recursive longest-chain walk, so two
-    independent characterizations must agree point-for-point. Returns
-    (g, x, y, layer) over DISTINCT points."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    pts = (df.select(F.col(group_col).alias("g"),
-                     F.col(x_col).cast("long").alias("x"),
-                     F.col(y_col).cast("long").alias("y"))
-           .distinct().localCheckpoint(eager=False))
-    remaining = slots.checkpoint(pts, "pl")
-    out = None
-    for k in range(1, max_rounds + 1):
-        per_x = (remaining.groupBy("g", "x")
-                 .agg(F.min("y").alias("y")))
-        w = (Window.partitionBy("g").orderBy("x")
-             .rowsBetween(Window.unboundedPreceding, -1))
-        sky = (per_x.withColumn("_pm", F.min("y").over(w))
-               .where(F.col("_pm").isNull()
-                      | (F.col("y") < F.col("_pm")))
-               .select("g", "x", "y")
-               .withColumn("layer", F.lit(k).cast("long")))
-        sky = sky.localCheckpoint(eager=False)
-        if not sky.take(1):
-            break
-        out = sky if out is None else out.unionByName(sky)
-        remaining = slots.checkpoint(
-            remaining.join(sky.select("g", "x", "y"),
-                           ["g", "x", "y"], "left_anti"),
-            f"pl{k % 2}")
-    return out

@@ -605,220 +605,6 @@ def boruvka_mst(edges: DataFrame, *, eid: str = "eid", src: str = "u",
     return chosen
 
 
-def functional_graph_cycles(f: DataFrame, *, node: str = "node",
-                            nxt: str = "nxt",
-                            metrics: TraversalMetrics | None = None
-                            ) -> DataFrame:
-    """Cycle detection on a FUNCTIONAL graph (every node has exactly
-    one out-edge — URL redirect maps, symlink chains, parent pointers)
-    by pointer doubling: after K squarings of the successor map,
-    A(v) = f^(2^K)(v) with 2^K ≥ n is guaranteed to sit ON v's cycle
-    (every rho walk is absorbed within n steps, and cycles map onto
-    themselves). So:
-
-      on_cycle  = v ∈ image(A)   (A restricted to a cycle is a
-                                  rotation → surjective onto it)
-      cycle_id  = min node id of A(v)'s cycle, via
-                  connected_components over the on-cycle successor
-                  edges (disjoint cycles → the CC label IS the min)
-
-    K = ⌈log₂ n⌉ self-joins of an n-row map — O(log n) shuffles, no
-    driver-side iteration over data. The sequential alternatives
-    (Floyd/Brent per chain) don't distribute. Returns
-    (node, on_cycle, cycle_id).
-    """
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    m = f.select(F.col(node).alias("v"), F.col(nxt).alias("a"))
-    m = slots.checkpoint(m, "anc")
-    n = m.count()
-    k = max(1, (n - 1).bit_length())
-    # SELF-join rounds need BOTH layers (PLANS.md, measured twice):
-    # localCheckpoint alone preserves size estimates, which a self-join
-    # SQUARES until Catalyst's BigInteger stats overflow (~25 rounds);
-    # cache alone keeps full lineage, whose plan TREE doubles per round
-    # (each join holds two copies of its child) until the plan string
-    # hits 2 GB. So: slot-checkpoint (plan → leaf) + cache on top
-    # (measured stats reset), unpersisting the superseded cache once
-    # the next round is materialized.
-    prev_cache = None
-    for i in range(k):
-        hop = m.select(F.col("v").alias("a"), F.col("a").alias("a2"))
-        m = slots.checkpoint(
-            m.join(hop, "a").select("v", F.col("a2").alias("a")),
-            "anc").cache()
-        m.count()
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        prev_cache = m
-        if metrics is not None:
-            metrics.add(op="functional_cycles", doubling=i)
-    anchors = m  # (v, a) with a on v's cycle
-    cyc_nodes = anchors.select(F.col("a").alias("cn")).distinct()
-    cyc_edges = (f.select(F.col(node).alias("cn"), F.col(nxt).alias("cm"))
-                 .join(cyc_nodes, "cn", "left_semi"))
-    adj = (cyc_edges.select(F.col("cn").alias("node"),
-                            F.col("cm").alias("nbr"))
-           .union(cyc_edges.select(F.col("cm").alias("node"),
-                                   F.col("cn").alias("nbr"))))
-    cc = connected_components(adj, metrics=metrics)
-    lab = cc.select(F.col("node").alias("a"), F.col("l").alias("cycle_id"))
-    out = (anchors.join(lab, "a")
-           .join(cyc_nodes.withColumnRenamed("cn", "v")
-                 .withColumn("_onc", F.lit(True)), "v", "left")
-           .select(F.col("v").alias(node),
-                   F.coalesce("_onc", F.lit(False)).alias("on_cycle"),
-                   "cycle_id"))
-    return out
-
-
-def strongly_connected_components(edges: DataFrame, *,
-                                  src: str = "src", dst: str = "dst",
-                                  max_outer: int = 30,
-                                  max_rounds: int = 200,
-                                  metrics: TraversalMetrics | None = None
-                                  ) -> DataFrame:
-    """SCC on a directed graph by the distributed COLORING algorithm
-    (Orzan; Slota et al.) — undirected CC answers the wrong question
-    for directed reachability (CLAUDE.md pins this), and Tarjan/
-    Kosaraju are sequential DFS. Per outer iteration:
-
-      1. TRIM: peel nodes with no in- or no out-edges in the remaining
-         subgraph (each is a singleton SCC) until stable;
-      2. COLOR: propagate max node id FORWARD to fixpoint —
-         color(v) = max id that reaches v; color classes partition the
-         remaining nodes and every SCC lies inside one class;
-      3. BACKWARD FLAG: from each class root r (color(r) = r),
-         propagate a flag BACKWARD over intra-class edges; the flagged
-         members of class r are exactly SCC(r) — at minimum the
-         globally-max id's SCC resolves every iteration;
-      4. remove resolved nodes and repeat.
-
-    Every step is joins + aggregations with CheckpointSlots lineage
-    control; no DFS, no driver-side graph. scc_id = min node id of the
-    component (matching the mutual-reachability oracle). Returns
-    (node, scc_id).
-    """
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    e = slots.checkpoint(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct(), "e")
-    remaining = slots.checkpoint(
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node"))).distinct(), "rem")
-    assigned = None
-
-    def _acc(base, new):
-        out = new if base is None else base.union(new)
-        out = slots.checkpoint(out, "assigned")
-        out.count()
-        return out
-
-    for outer in range(max_outer):
-        n_rem = remaining.count()
-        if n_rem == 0:
-            break
-        # ---- 1. trim loop: no-in or no-out nodes are singleton SCCs
-        # Alternate core slots: checkpointing round k's core into the
-        # SAME slot would free round k-1's blocks while `remaining`
-        # still points at them and the anti-join below still reads them
-        # (a freed LogicalRDD cannot recompute — bit us on a fixture
-        # needing 2+ trim rounds). Release the superseded core only
-        # AFTER the trimmed batch is materialized.
-        trim_flip = 0
-        while True:
-            has_out = e.select(F.col("u").alias("node")).distinct()
-            has_in = e.select(F.col("v").alias("node")).distinct()
-            core = slots.checkpoint(
-                remaining.join(has_out, "node", "left_semi")
-                .join(has_in, "node", "left_semi"), f"core{trim_flip}")
-            n_core = core.count()
-            if n_core == n_rem:
-                break
-            trimmed = remaining.join(core, "node", "left_anti") \
-                .select("node", F.col("node").alias("scc_id"))
-            assigned = _acc(assigned, trimmed)
-            slots.release(f"core{1 - trim_flip}")
-            trim_flip = 1 - trim_flip
-            remaining = core
-            e = slots.checkpoint(
-                e.join(core.withColumnRenamed("node", "u"), "u",
-                       "left_semi")
-                .join(core.withColumnRenamed("node", "v"), "v",
-                      "left_semi"), "e")
-            n_rem = n_core
-            if metrics is not None:
-                metrics.add(op="scc", outer=outer, trimmed_to=n_core)
-        if n_rem == 0:
-            break
-        # ---- 2. forward max-color propagation to fixpoint
-        col = slots.checkpoint(
-            remaining.select("node", F.col("node").alias("c")), "col")
-
-        def _sig(df):
-            return df.select(
-                F.expr("bit_xor(xxhash64(node, c))").alias("h")).first()["h"]
-
-        sig = _sig(col)
-        with loop_profile(e, n_rem):
-            for i in range(max_rounds):
-                inc = (e.join(col.withColumnRenamed("node", "u"), "u")
-                       .select(F.col("v").alias("node"), "c"))
-                new_col = slots.checkpoint(
-                    col.select("node", "c").union(inc)
-                    .groupBy("node").agg(F.max("c").alias("c")), "col")
-                new_sig = _sig(new_col)
-                col = new_col
-                if metrics is not None:
-                    metrics.add(op="scc", outer=outer, color_round=i)
-                if new_sig == sig:
-                    break
-                sig = new_sig
-        # ---- 3. backward flag within color classes
-        cu = col.select(F.col("node").alias("u"), F.col("c").alias("_cu"))
-        cv = col.select(F.col("node").alias("v"), F.col("c").alias("_cv"))
-        e_c = slots.checkpoint(
-            e.join(cu, "u").join(cv, "v")
-            .where(F.col("_cu") == F.col("_cv"))
-            .select("u", "v", F.col("_cu").alias("c")), "ec")
-        e_c.count()
-        flags = slots.checkpoint(
-            col.where(F.col("c") == F.col("node")).select("node", "c"),
-            "flags")
-        n_f = flags.count()
-        with loop_profile(e_c, n_rem):
-            for i in range(max_rounds):
-                step = (e_c.join(flags.withColumnRenamed("node", "v")
-                                 .select("v"), "v", "left_semi")
-                        .select(F.col("u").alias("node"), "c"))
-                new_flags = slots.checkpoint(
-                    flags.union(step).distinct(), "flags")
-                n_new = new_flags.count()
-                flags = new_flags
-                if metrics is not None:
-                    metrics.add(op="scc", outer=outer, flag_round=i,
-                                flagged=n_new)
-                if n_new == n_f:
-                    break
-                n_f = n_new
-        scc_min = flags.groupBy("c").agg(F.min("node").alias("scc_id"))
-        members = (flags.join(scc_min, "c")
-                   .select("node", "scc_id"))
-        assigned = _acc(assigned, members)
-        remaining = slots.checkpoint(
-            remaining.join(flags.select("node"), "node", "left_anti"),
-            "rem")
-        e = slots.checkpoint(
-            e.join(remaining.withColumnRenamed("node", "u"), "u",
-                   "left_semi")
-            .join(remaining.withColumnRenamed("node", "v"), "v",
-                  "left_semi"), "e")
-    return assigned
-
-
 def greedy_matching(edges: DataFrame, *, eid: str = "eid",
                     src: str = "u", dst: str = "v", weight: str = "w",
                     rounds: int = 12,
@@ -882,106 +668,6 @@ def greedy_matching(edges: DataFrame, *, eid: str = "eid",
     return matched
 
 
-def luby_mis(edges: DataFrame, *, src: str = "u", dst: str = "v",
-             rounds: int = 12,
-             metrics: TraversalMetrics | None = None) -> DataFrame:
-    """Maximal independent set by Luby-style local minima — the node
-    sibling of greedy_matching: each round, an alive node joins the
-    MIS iff its id is smaller than every alive neighbor's; MIS nodes'
-    neighbors then drop out. With ids as the (total-order) priority
-    this equals the sequential greedy MIS in id order, computed in
-    parallel rounds. Fixed ``rounds`` (kcore convention) for oracle
-    replay; isolated nodes join in round 0. Returns (node, mis_round).
-    """
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .where(F.col("u") != F.col("v"))
-         .localCheckpoint(eager=False))
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    alive = (sym.select(F.col("u").alias("node")).distinct()
-             .localCheckpoint(eager=False))
-    adj = sym.localCheckpoint(eager=False)
-    out = None
-    for i in range(rounds):
-        nbr_min = (adj.join(alive.withColumnRenamed("node", "u"), "u",
-                            "left_semi")
-                   .join(alive.withColumnRenamed("node", "v"), "v",
-                         "left_semi")
-                   .groupBy("u").agg(F.min("v").alias("_mn")))
-        winners = (alive.join(nbr_min.withColumnRenamed("u", "node"),
-                              "node", "left")
-                   .where(F.col("_mn").isNull()
-                          | (F.col("node") < F.col("_mn")))
-                   .select("node",
-                           F.lit(i).cast("int").alias("mis_round"))
-                   .localCheckpoint(eager=False))
-        n_w = winners.count()
-        if metrics is not None:
-            metrics.add(op="luby_mis", round=i, winners=n_w)
-        if n_w == 0:
-            break
-        out = winners if out is None else out.union(winners)
-        out = out.localCheckpoint(eager=False)
-        blocked = (adj.join(winners.withColumnRenamed("node", "u")
-                            .select("u"), "u", "left_semi")
-                   .select(F.col("v").alias("node")).distinct())
-        alive = (alive
-                 .join(winners.select("node"), "node", "left_anti")
-                 .join(blocked, "node", "left_anti")
-                 .localCheckpoint(eager=False))
-    return out
-
-
-def temporal_reachability(edges: DataFrame, sources: DataFrame, *,
-                          src: str = "u", dst: str = "v",
-                          time_col: str = "t", max_rounds: int = 64,
-                          metrics: TraversalMetrics | None = None
-                          ) -> DataFrame:
-    """Time-respecting reachability: node v is reached at time
-    arrival(v) = the minimum over paths whose edge timestamps are
-    NON-DECREASING (a crawl revisit chain, an infection trace, a
-    citation cascade — static reachability overcounts because it
-    ignores that you cannot take yesterday's edge after today's).
-    Bounded-round label correction on (node, arrival): each round
-    relaxes edges usable from the current arrival (t ≥ arrival(u)),
-    keeps the min arrival per node. Joins against the FIXED edge
-    frame (linear stats growth — checkpoint-only rounds are safe
-    here). Returns (node, arrival); sources arrive at 0.
-    """
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"),
-                      F.col(time_col).cast("long").alias("t"))
-         .localCheckpoint(eager=False))
-    arr = slots.checkpoint(
-        sources.select(F.col("node"),
-                       F.lit(0).cast("long").alias("arrival")),
-        "arr")
-
-    def _sig(df):
-        return df.select(
-            F.expr("bit_xor(xxhash64(node, arrival))")
-            .alias("h")).first()["h"]
-
-    sig = _sig(arr)
-    for i in range(max_rounds):
-        relax = (e.join(arr.withColumnRenamed("node", "u"), "u")
-                 .where(F.col("t") >= F.col("arrival"))
-                 .select(F.col("v").alias("node"),
-                         F.col("t").alias("arrival")))
-        arr = slots.checkpoint(
-            arr.union(relax).groupBy("node")
-            .agg(F.min("arrival").alias("arrival")),
-            "arr")
-        new_sig = _sig(arr)
-        if metrics is not None:
-            metrics.add(op="temporal_reach", round=i)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    return arr
-
-
 def dag_levels(edges: DataFrame, *, src: str = "u", dst: str = "v",
                max_iter: int = 500) -> DataFrame:
     """Longest-path level per node of a DAG (topological depth):
@@ -1025,93 +711,6 @@ def dag_levels(edges: DataFrame, *, src: str = "u", dst: str = "v",
             break
         sig = new_sig
     return lv
-
-
-def bipartite_check(edges: DataFrame, *, src: str = "u",
-                    dst: str = "v") -> DataFrame:
-    """Per-component bipartiteness by the DOUBLED-GRAPH trick: in G'
-    with nodes (v, side) and edges (u,0)-(v,1) and (u,1)-(v,0), a
-    component of G is bipartite iff (v,0) and (v,1) land in DIFFERENT
-    G' components — odd cycles are exactly what merges them. One extra
-    CC run (O(log n) hash-to-min) instead of any BFS layering or
-    coloring conflict loop; encodes side in the id as 2v / 2v+1.
-    Returns (l, n_nodes, is_bipartite) with l = min node id of the
-    component."""
-    e = edges.select(F.col(src).cast("long").alias("u"),
-                     F.col(dst).cast("long").alias("v")) \
-        .localCheckpoint(eager=False)
-    adj = (e.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-           .union(e.select(F.col("v").alias("node"),
-                           F.col("u").alias("nbr"))))
-    comp = connected_components(adj)  # (node, l)
-    d_adj = (e.select((F.col("u") * 2).alias("node"),
-                      (F.col("v") * 2 + 1).alias("nbr"))
-             .union(e.select((F.col("u") * 2 + 1).alias("node"),
-                             (F.col("v") * 2).alias("nbr")))
-             .union(e.select((F.col("v") * 2 + 1).alias("node"),
-                             (F.col("u") * 2).alias("nbr")))
-             .union(e.select((F.col("v") * 2).alias("node"),
-                             (F.col("u") * 2 + 1).alias("nbr"))))
-    dcomp = connected_components(d_adj)  # (node, l) on doubled ids
-    merged = (dcomp.select((F.col("node") / 2).cast("long").alias("n0"),
-                           F.col("l").alias("dl"),
-                           (F.col("node") % 2).alias("side"))
-              .groupBy("n0")
-              .agg(F.count_distinct("dl").alias("_ndl")))
-    # a node whose two sides share one doubled-component sits on an
-    # odd closed walk -> its whole component is non-bipartite
-    flag = (comp.join(merged.withColumnRenamed("n0", "node"), "node")
-            .groupBy("l")
-            .agg(F.count("*").cast("long").alias("n_nodes"),
-                 (F.min(F.col("_ndl")) == 2).alias("is_bipartite")))
-    return flag
-
-
-def two_sat(clauses: DataFrame, *, inst: str = "inst",
-            cols=("v1", "s1", "v2", "s2")) -> DataFrame:
-    """Distributed 2-SAT over many instances at once: each clause
-    (l1 OR l2) contributes implications ¬l1→l2 and ¬l2→l1 on the
-    per-instance implication graph (literal node id = inst·2V + 2v +
-    sign); an instance is satisfiable iff NO variable shares an SCC
-    with its negation (Aspvall–Plass–Tarjan), and the SCC pass is the
-    engine's distributed coloring SCC — thousands of instances solve
-    in ONE graph pass because instance ids namespace the nodes.
-    cols = (var1, negated1, var2, negated2) with negated ∈ {0,1}
-    meaning the literal is ¬x. Returns (inst, satisfiable)."""
-    v1, s1, v2, s2 = cols
-    c = clauses.select(
-        F.col(inst).cast("long").alias("i"),
-        F.col(v1).cast("long").alias("a"),
-        F.col(s1).cast("long").alias("sa"),
-        F.col(v2).cast("long").alias("b"),
-        F.col(s2).cast("long").alias("sb"))
-    nvars = c.agg(F.max(F.greatest("a", "b"))).first()[0] + 1
-
-    def lit(var, sign):
-        return F.col("i") * (2 * nvars) + F.col(var) * 2 + sign
-
-    def neg(var, sign_col):
-        return (F.col("i") * (2 * nvars) + F.col(var) * 2
-                + (1 - F.col(sign_col)))
-
-    imp = (c.select(neg("a", "sa").alias("src"),
-                    lit("b", F.col("sb")).alias("dst"))
-           .union(c.select(neg("b", "sb").alias("src"),
-                           lit("a", F.col("sa")).alias("dst"))))
-    scc = strongly_connected_components(imp)  # (node, scc_id)
-    pos = scc.select((F.col("node") / 2).cast("long").alias("pv"),
-                     (F.col("node") % 2).alias("side"), "scc_id")
-    confl = (pos.groupBy("pv", "scc_id")
-             .agg(F.count_distinct("side").alias("_k"))
-             .filter(F.col("_k") == 2)
-             .select((F.col("pv") / nvars).cast("long").alias("i"))
-             .distinct()
-             .withColumn("_bad", F.lit(True)))
-    insts = c.select("i").distinct()
-    return (insts.join(confl, "i", "left")
-            .select(F.col("i").alias("inst"),
-                    F.coalesce(~F.col("_bad"), F.lit(True))
-                    .alias("satisfiable")))
 
 
 def shortest_path_counts(edges: DataFrame, source: int = 0, *,
@@ -1391,73 +990,6 @@ def two_edge_components(edges: DataFrame, *, src: str = "u",
             .select("node", F.coalesce("l", F.col("node")).alias("comp")))
 
 
-def ahu_tree_classes(nodes: DataFrame, *, tid: str = "tid",
-                     node: str = "node", parent: str = "parent",
-                     max_height: int = 64,
-                     return_nodes: bool = False) -> DataFrame:
-    """Tree isomorphism classes by the AHU canonical form, bottom-up:
-    leaves get the code '()', an inner node becomes ready once every
-    child is coded and gets '(' + concat(sorted child codes) + ')' —
-    two rooted trees are isomorphic iff their root codes are equal
-    (Aho-Hopcroft-Ullman). Rounds = tree height (join against the
-    FIXED children frame each round — linear plan growth, checkpoints
-    only); each round is one groupBy with array_sort(collect_list),
-    so child-order and node-id permutations cannot leak into the code.
-
-    `nodes` has one row per node: (tid, node, parent) with parent NULL
-    for the root. Node ids need only be unique within their tree.
-    Returns one row per tree: (tid, iso) where iso is the root's
-    canonical code string — or, with return_nodes=True, EVERY node's
-    canonical subtree code (tid, node, code), the repeated-subtree /
-    common-substructure census input. Sorting of sibling codes is plain binary
-    string order on '('/')' — identical in any engine.
-    """
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    nd = nodes.select(F.col(tid).alias("tid"), F.col(node).alias("node"),
-                      F.col(parent).alias("parent")) \
-        .localCheckpoint(eager=False)
-    kids = nd.where(F.col("parent").isNotNull()) \
-        .groupBy("tid", F.col("parent").alias("node")) \
-        .agg(F.count(F.lit(1)).alias("n_kids")) \
-        .localCheckpoint(eager=False)
-    # leaves: nodes that are nobody's parent
-    lab = slots.checkpoint(
-        nd.join(kids, ["tid", "node"], "left_anti")
-        .select("tid", "node", F.lit("()").alias("lab")), "lab")
-    n_lab = lab.count()
-    for _ in range(max_height):
-        # ready parents: every child already labeled
-        got = (nd.where(F.col("parent").isNotNull())
-               .join(lab.select("tid", "node", "lab"), ["tid", "node"])
-               .groupBy("tid", F.col("parent").alias("node"))
-               .agg(F.count(F.lit(1)).alias("n_got"),
-                    F.concat(F.lit("("),
-                             F.concat_ws("", F.array_sort(
-                                 F.collect_list("lab"))),
-                             F.lit(")")).alias("newlab")))
-        new = (got.join(kids, ["tid", "node"])
-               .where(F.col("n_got") == F.col("n_kids"))
-               .join(lab, ["tid", "node"], "left_anti")
-               .select("tid", "node", F.col("newlab").alias("lab")))
-        lab = slots.checkpoint(lab.unionByName(new), "lab2")
-        m = lab.count()
-        if m == n_lab:
-            break
-        n_lab = m
-        lab = slots.checkpoint(lab, "lab")
-    else:
-        raise RuntimeError(
-            f"ahu_tree_classes: labeling did not converge within "
-            f"max_height={max_height} rounds (a tree is deeper than the "
-            f"cap); raise max_height")
-    roots = nd.where(F.col("parent").isNull()).select("tid", "node")
-    if return_nodes:
-        return lab.select("tid", "node", F.col("lab").alias("code"))
-    return roots.join(lab, ["tid", "node"]).select("tid", "lab").withColumnRenamed("lab", "iso")
-
-
 def jp_coloring(edges: DataFrame, *, src: str = "u", dst: str = "v",
                 max_rounds: int = 128) -> DataFrame:
     """Greedy graph coloring by Jones-Plassmann — the distributed
@@ -1542,42 +1074,6 @@ def jp_coloring(edges: DataFrame, *, src: str = "u", dst: str = "v",
         if m == n_nodes:
             break
     return colored
-
-
-def euler_path_check(edges: DataFrame, *, src: str = "u",
-                     dst: str = "v") -> DataFrame:
-    """Eulerian path/circuit classification per connected component
-    (the de Bruijn / route-inspection precondition): component labels
-    from the O(log) min-label CC, degree parity from one groupBy —
-    a component admits an Eulerian CIRCUIT iff every degree is even,
-    a PATH iff exactly two are odd, else neither. Returns one row per
-    component: (comp, n_nodes, n_edges, n_odd, kind)."""
-    e = (edges.select(
-            F.least(F.col(src).cast("long"),
-                    F.col(dst).cast("long")).alias("a"),
-            F.greatest(F.col(src).cast("long"),
-                       F.col(dst).cast("long")).alias("b"))
-         .where(F.col("a") != F.col("b")).distinct()
-         .localCheckpoint(eager=False))
-    adj = (e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-           .union(e.select(F.col("b").alias("node"),
-                           F.col("a").alias("nbr"))))
-    cc = connected_components(adj)  # (node, l)
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = (cc.join(deg, "node")
-             .select("node", F.col("l").alias("comp"), "deg"))
-    ecomp = (e.join(cc.withColumnRenamed("node", "a"), "a")
-             .groupBy(F.col("l").alias("comp"))
-             .agg(F.count(F.lit(1)).alias("n_edges")))
-    per = (nodes.groupBy("comp")
-           .agg(F.count(F.lit(1)).alias("n_nodes"),
-                F.sum(F.when(F.col("deg") % 2 == 1, 1).otherwise(0))
-                .cast("long").alias("n_odd")))
-    return (per.join(ecomp, "comp")
-            .withColumn("kind",
-                        F.when(F.col("n_odd") == 0, F.lit("circuit"))
-                        .when(F.col("n_odd") == 2, F.lit("path"))
-                        .otherwise(F.lit("none"))))
 
 
 def biconnected_components(edges: DataFrame, *, src: str = "u",
@@ -1757,46 +1253,6 @@ def articulation_points(edges: DataFrame, *, src: str = "u",
             .select("node", (F.col("nb") >= 2).alias("is_art")))
 
 
-def transitive_closure_counts(edges: DataFrame, *, src: str = "u",
-                              dst: str = "v", max_doublings: int = 40
-                              ) -> DataFrame:
-    """Reachable-set sizes by PATH DOUBLING: R ← R ∪ R∘R squares the
-    reachability relation each round, so an L-long path closes in
-    ⌈log₂ L⌉ rounds instead of L BFS steps — the O(log) transitive
-    closure. The self-join-on-own-frame loop uses the two-layer
-    checkpoint+cache discipline (stats squaring AND plan-tree
-    doubling both bite otherwise — CLAUDE.md). Pair count is the
-    closure's size; use on DAGs / sparse reachability where |R*| is
-    bounded. Returns (u, n_reach) counting strictly-forward
-    reachable nodes."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    r = slots.checkpoint(
-        edges.select(F.col(src).cast("long").alias("u"),
-                     F.col(dst).cast("long").alias("v")).distinct(),
-        "tc0")
-    cached = r.cache()
-    n = cached.count()
-    for i in range(max_doublings):
-        squared = (cached.alias("a")
-                   .join(cached.select(F.col("u").alias("v"),
-                                       F.col("v").alias("w")).alias("b"),
-                         "v")
-                   .select("u", F.col("w").alias("v")))
-        nxt = slots.checkpoint(
-            cached.unionByName(squared).distinct(),
-            f"tc{(i % 2) + 1}")
-        nc = nxt.cache()
-        m = nc.count()
-        cached.unpersist()
-        cached = nc
-        if m == n:
-            break
-        n = m
-    return cached.groupBy("u").agg(F.count(F.lit(1)).alias("n_reach"))
-
-
 def count_four_cycles(edges: DataFrame, *, src: str = "u",
                       dst: str = "v") -> DataFrame:
     """Exact 4-cycle count via the CODEGREE identity: every
@@ -1824,58 +1280,6 @@ def count_four_cycles(edges: DataFrame, *, src: str = "u",
     # on overflow instead of silently rounding)
     return codeg.agg(
         F.expr("sum(c * (c - 1)) div 4").alias("n_c4"))
-
-
-def apsp_minplus(edges: DataFrame, *, src: str = "u", dst: str = "v",
-                 weight: str = "w", max_doublings: int = 40
-                 ) -> DataFrame:
-    """All-pairs shortest paths by MIN-PLUS MATRIX SQUARING — the
-    tropical-semiring sibling of transitive_closure_counts: each
-    round D ← min(D, D∘D) where (D∘D)[i,j] = min_k D[i,k] + D[k,j]
-    (one self-join + one groupBy-min), so an L-hop shortest path
-    settles in ⌈log₂ L⌉ rounds instead of L Bellman-Ford
-    relaxations. Non-negative integer weights ⟹ exact. Two-layer
-    checkpoint+cache on the self-join loop; convergence by an
-    order-free bit_xor state fingerprint (ANSI-safe, CLAUDE.md).
-    Returns (u, v, dist) for every reachable ordered pair with
-    u ≠ v (cycle-closing diagonal candidates are dropped each round —
-    with non-negative weights they can never shorten a path)."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    d = slots.checkpoint(
-        edges.select(F.col(src).cast("long").alias("u"),
-                     F.col(dst).cast("long").alias("v"),
-                     F.col(weight).cast("long").alias("w"))
-        .groupBy("u", "v").agg(F.min("w").alias("w")), "ap0")
-    cached = d.cache()
-
-    def _sig(df):
-        return df.select(
-            F.expr("bit_xor(xxhash64(u, v, w))").alias("h")).first()["h"]
-
-    sig = _sig(cached)
-    for i in range(max_doublings):
-        sq = (cached.alias("a")
-              .join(cached.select(F.col("u").alias("v"),
-                                  F.col("v").alias("t"),
-                                  F.col("w").alias("w2")).alias("b"),
-                    "v")
-              .where(F.col("u") != F.col("t"))
-              .select("u", F.col("t").alias("v"),
-                      (F.col("w") + F.col("w2")).alias("w")))
-        nxt = slots.checkpoint(
-            cached.unionByName(sq).groupBy("u", "v")
-            .agg(F.min("w").alias("w")),
-            f"ap{(i % 2) + 1}")
-        nc = nxt.cache()
-        new_sig = _sig(nc)
-        cached.unpersist()
-        cached = nc
-        if new_sig == sig:
-            break
-        sig = new_sig
-    return cached.select("u", "v", F.col("w").alias("dist"))
 
 
 def bom_rollup(edges: DataFrame, *, src: str = "u", dst: str = "v",
@@ -1931,93 +1335,3 @@ def bom_rollup(edges: DataFrame, *, src: str = "u", dst: str = "v",
     # sums: fold them
     return (total.groupBy("root", "part")
             .agg(F.sum("qty").alias("qty")))
-
-
-def horn_closure(facts: DataFrame, rules: DataFrame, *,
-                 inst: str = "inst", atom: str = "atom",
-                 b1: str = "b1", b2: str = "b2", head: str = "h",
-                 max_rounds: int = 200) -> DataFrame:
-    """Horn-clause forward chaining (unit propagation / Datalog
-    closure) per instance: a rule h ← b1 ∧ b2 fires once BOTH body
-    atoms are derived — frontier rounds joining the fixed rule frame
-    twice, to an order-free fixpoint. The monotone closure is
-    engine-order-independent, so the result is a pure function of
-    (facts, rules). Returns the derived-atom set (inst, atom)."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    r = rules.select(F.col(inst).alias("inst"), F.col(b1).alias("b1"),
-                     F.col(b2).alias("b2"), F.col(head).alias("h")) \
-        .localCheckpoint(eager=False)
-    derived = slots.checkpoint(
-        facts.select(F.col(inst).alias("inst"),
-                     F.col(atom).alias("atom")).distinct(), "hc")
-    n = derived.count()
-    for _ in range(max_rounds):
-        fired = (r.join(derived.withColumnRenamed("atom", "b1"),
-                        ["inst", "b1"])
-                 .join(derived.withColumnRenamed("atom", "b2"),
-                       ["inst", "b2"])
-                 .select("inst", F.col("h").alias("atom")))
-        derived = slots.checkpoint(
-            derived.unionByName(fired).distinct(), "hc2")
-        m = derived.count()
-        if m == n:
-            break
-        n = m
-        derived = slots.checkpoint(derived, "hc")
-    else:
-        raise RuntimeError(
-            f"horn_closure: fixpoint not reached within "
-            f"max_rounds={max_rounds} rounds; raise max_rounds")
-    return derived
-
-
-def earliest_arrival(edges: DataFrame, source: int, *, src: str = "u",
-                     dst: str = "v", dep: str = "dep",
-                     arr: str = "arr", max_rounds: int = 100
-                     ) -> DataFrame:
-    """Earliest-arrival journeys in a TEMPORAL graph (edges usable
-    only if their departure is no earlier than your arrival at the
-    tail — the transit/log-causality semantics plain shortest paths
-    get wrong): label-correcting rounds ea(v) ← min(ea(v), arr(e))
-    over edges with dep(e) ≥ ea(u), against the FIXED edge frame, to
-    an order-free fixpoint (≤ max-journey-hops rounds). Returns
-    (node, earliest) for reachable nodes; the source reports 0."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    e = edges.select(F.col(src).cast("long").alias("u"),
-                     F.col(dst).cast("long").alias("v"),
-                     F.col(dep).cast("long").alias("dep"),
-                     F.col(arr).cast("long").alias("arr")) \
-        .localCheckpoint(eager=False)
-    spark = edges.sparkSession
-    ea = slots.checkpoint(
-        spark.createDataFrame([(int(source), 0)],
-                              "node long, earliest long"), "ea")
-
-    def _sig(df):
-        return df.select(F.expr("bit_xor(xxhash64(node, earliest))")
-                         .alias("h")).first()["h"]
-
-    sig = _sig(ea)
-    for _ in range(max_rounds):
-        relax = (e.join(ea.withColumnRenamed("node", "u"), "u")
-                 .where(F.col("dep") >= F.col("earliest"))
-                 .groupBy(F.col("v").alias("node"))
-                 .agg(F.min("arr").alias("earliest")))
-        ea = slots.checkpoint(
-            ea.unionByName(relax).groupBy("node")
-            .agg(F.min("earliest").alias("earliest")), "ea2")
-        new_sig = _sig(ea)
-        if new_sig == sig:
-            break
-        sig = new_sig
-        ea = slots.checkpoint(ea, "ea")
-    else:
-        raise RuntimeError(
-            f"earliest_arrival: labels did not converge within "
-            f"max_rounds={max_rounds} rounds (journeys longer than the "
-            f"cap); raise max_rounds")
-    return ea

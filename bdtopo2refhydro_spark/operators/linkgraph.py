@@ -3,9 +3,10 @@
 The reference's network operators (SURVEY §2 G1-G8, reference
 ``identify_network_nodes.py`` / ``create_exutoire.py``) walk a river
 graph; a Common-Crawl-scale corpus has the same shape in its hyperlink
-graph. This module adds the two canonical link-graph analytics a crawl
-pipeline runs on that graph: a PageRank-style centrality and triangle
-counting (local clustering / spam-farm signal).
+graph. This module holds the link-graph analytics a crawl pipeline
+runs on that graph: PageRank/HITS-style centrality, k-core peeling,
+label propagation, neighbourhood sampling and wedge-based pair counts
+(co-citation, 2-hop, link prediction).
 
 Everything is integer arithmetic (scaled fixed point, floor division)
 so the DuckDB driver oracle reproduces bit-identical values — no float
@@ -20,12 +21,6 @@ Scale notes (the part that must survive 100 TB):
   not convergence-driven, so the plan is a bounded chain;
   ``localCheckpoint`` between rounds keeps Catalyst from inlining the
   whole unrolled loop into one exponential tree.
-- ``triangle_counts``: edges are oriented from the (degree, node)-
-  smaller endpoint to the larger one before the wedge self-join. With
-  that orientation every node's out-fan is O(sqrt(m)), which bounds the
-  wedge-join fan-out on power-law web graphs — the standard distributed
-  triangle-counting trick (Suri & Vassilvitskii). The closing-edge
-  check is an equi-join on the (v1, v2) pair, never a cartesian.
 """
 
 from __future__ import annotations
@@ -96,68 +91,6 @@ def page_rank_int(
             .alias("rank"),
         )
     return rank
-
-
-def triangle_counts(
-    pairs: DataFrame, *, a_col: str = "a", b_col: str = "b"
-) -> DataFrame:
-    """Per-node triangle participation counts over an undirected graph.
-
-    ``pairs`` must be the deduplicated undirected edge set with
-    ``a_col < b_col`` (no self loops). Edges are re-oriented from the
-    (degree, node)-smaller endpoint to the larger one; wedges are built
-    by self-joining the oriented edges on their low endpoint and closed
-    against the oriented edge set. Each triangle is found exactly once,
-    then exploded into its three corners. Returns (node, tri_cnt) for
-    nodes in at least one triangle.
-    """
-    a, b = F.col(a_col), F.col(b_col)
-    deg = (
-        pairs.select(a.alias("node"))
-        .unionByName(pairs.select(b.alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    fwd = F.struct(F.col("deg_a").alias("d"), a.alias("n")) < F.struct(
-        F.col("deg_b").alias("d"), b.alias("n")
-    )
-    e = (
-        pairs.join(deg.withColumnRenamed("node", a_col)
-                   .withColumnRenamed("deg", "deg_a"), a_col)
-        .join(deg.withColumnRenamed("node", b_col)
-              .withColumnRenamed("deg", "deg_b"), b_col)
-        .select(
-            F.when(fwd, a).otherwise(b).alias("u"),
-            F.when(fwd, b).otherwise(a).alias("v"),
-            F.when(
-                fwd, F.struct(F.col("deg_b").alias("d"), b.alias("n"))
-            ).otherwise(
-                F.struct(F.col("deg_a").alias("d"), a.alias("n"))
-            ).alias("vkey"),
-        )
-    )
-    e = e.localCheckpoint(eager=False)
-    e1 = e.select(F.col("u").alias("w1"), F.col("v").alias("v1"),
-                  F.col("vkey").alias("k1"))
-    e2 = e.select(F.col("u").alias("w2"), F.col("v").alias("v2"),
-                  F.col("vkey").alias("k2"))
-    wedges = (
-        e1.join(e2, (e1["w1"] == e2["w2"]) & (e1["k1"] < e2["k2"]))
-        .select(F.col("w1").alias("u"), "v1", "v2")
-    )
-    # k1 < k2 and degree-consistent orientation mean the closing edge,
-    # if present, is stored exactly as (u=v1, v=v2) — one semi-join.
-    closed = wedges.join(
-        e.select(F.col("u").alias("v1"), F.col("v").alias("v2")),
-        ["v1", "v2"],
-        "leftsemi",
-    )
-    corners = closed.select(
-        F.explode(F.array("u", "v1", "v2")).alias("node")
-    )
-    return corners.groupBy("node").agg(
-        F.count("*").cast("bigint").alias("tri_cnt")
-    )
 
 
 def anchor_aggregate(links: DataFrame, *, k: int = 3,
@@ -474,8 +407,7 @@ def two_hop_counts(
 
     The classic link-expansion primitive (crawl frontier growth,
     recommendation candidates). Shape: one wedge self-join on the
-    shared middle node (the triangle_counts fan-out bound applies on
-    power-law graphs), a distinct, and one anti-join against the
+    shared middle node, a distinct, and one anti-join against the
     direct-edge set — never a cartesian. Returns (node, n_two_hop)
     for nodes with at least one 2-hop neighbour.
     """
@@ -518,8 +450,7 @@ def link_prediction(
 
     The candidate-recommendation primitive of crawl/feed pipelines.
     Shape: ONE wedge self-join on the shared middle node (x < y halves
-    the pair space; on power-law graphs the triangle_counts fan-out
-    bound applies), a per-pair count, one broadcastable degree join per
+    the pair space), a per-pair count, one broadcastable degree join per
     side, and a left_anti against the direct-edge set. Never a
     cartesian; text/payloads never enter the shuffle.
     """
@@ -557,55 +488,6 @@ def link_prediction(
             .cast("bigint").alias("jac_den"),
         )
     )
-
-
-def sssp_bounded(
-    edges: DataFrame,
-    sources: list[str],
-    *,
-    rounds: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "weight",
-) -> DataFrame:
-    """Bounded-round Bellman-Ford: integer-weighted shortest-path
-    distances from a source set over the DIRECTED edge list, relaxed
-    exactly ``rounds`` times (= exact distances for every node whose
-    shortest path uses <= rounds edges — the bounded-horizon contract,
-    same semantics family as kcore_peel / page_rank_int).
-
-    Integer weights + min() make every round exactly replayable by an
-    unrolled DuckDB CTE. Each round is ONE equi-join of the frontier
-    table against the static edge table on ``src`` plus a min-groupBy
-    on the destination — the textbook distributed relaxation; the edge
-    table never re-shuffles (join key is stable), and the dist table is
-    |nodes|-sized, typically broadcastable. localCheckpoint between
-    rounds stops Catalyst inlining the unrolled loop exponentially.
-    Returns (node, dist) for reached nodes only.
-    """
-    nodes = (
-        edges.select(F.col(src_col).alias("node"))
-        .unionByName(edges.select(F.col(dst_col).alias("node")))
-        .distinct()
-    )
-    dist = nodes.filter(F.col("node").isin(sources)).select(
-        "node", F.lit(0).cast("bigint").alias("dist"))
-    e = edges.select(F.col(src_col).alias("u"),
-                     F.col(dst_col).alias("v"),
-                     F.col(weight_col).cast("bigint").alias("w"))
-    for _ in range(rounds):
-        relaxed = (
-            dist.join(e, dist["node"] == e["u"])
-            .select(F.col("v").alias("node"),
-                    (F.col("dist") + F.col("w")).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").cast("bigint").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return dist
 
 
 def degree_assortativity_moments(
@@ -720,133 +602,3 @@ def neighborhood_sum(nodes: DataFrame, edges: DataFrame, *,
                      (F.col("feat") + F.coalesce("msg", F.lit(0)))
                      .cast("long").alias("feat")))
     return h
-
-
-def _canonical_triangles(pairs: DataFrame, a_col: str = "a",
-                         b_col: str = "b") -> DataFrame:
-    """Each triangle x<y<z of the canonical (a<b) edge set exactly
-    once, via the 3-join p1(x,y) ⋈ p2(y,z) ⋈ p3(x,z). Wedge fan-out is
-    per-mid-node quadratic on hubs — triangle_counts' degree-oriented
-    enumeration is the hub-safe variant; this canonical form keeps the
-    EDGE identities the truss peel needs."""
-    p = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    p1 = p.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    p2 = p.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    p3 = p.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    return p1.join(p2, "y").join(p3, ["x", "z"]).select("x", "y", "z")
-
-
-def _edge_support(e: DataFrame) -> DataFrame:
-    """Per-canonical-edge triangle support (a, b, support ≥ 1)."""
-    tri = _canonical_triangles(e)
-    edges3 = tri.select(F.explode(F.array(
-        F.struct(F.col("x").alias("a"), F.col("y").alias("b")),
-        F.struct(F.col("x").alias("a"), F.col("z").alias("b")),
-        F.struct(F.col("y").alias("a"), F.col("z").alias("b"))))
-        .alias("e")).select("e.a", "e.b")
-    return edges3.groupBy("a", "b").agg(
-        F.count("*").cast("long").alias("support"))
-
-
-def ktruss(pairs: DataFrame, k: int = 4, rounds: int = 3,
-           a_col: str = "a", b_col: str = "b") -> DataFrame:
-    """Bounded-round k-TRUSS peel — the edge-level sibling of
-    kcore_peel and the standard community/link-farm core extractor:
-    each round drops every edge in fewer than k−2 triangles of the
-    surviving graph, then recounts. Rounds are a fixed constant (the
-    kcore_peel / page_rank_int convention) so a non-recursive oracle
-    can replay the exact schedule. Returns the surviving edges with
-    their FINAL recomputed support (a, b, support).
-    """
-    e = (pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-         .distinct().localCheckpoint(eager=False))
-    for _ in range(rounds):
-        sup = _edge_support(e)
-        e = (e.join(sup, ["a", "b"], "left")
-             .where(F.coalesce("support", F.lit(0)) >= k - 2)
-             .select("a", "b")
-             .localCheckpoint(eager=False))
-    sup = _edge_support(e)
-    return (e.join(sup, ["a", "b"], "left")
-            .select("a", "b",
-                    F.coalesce("support", F.lit(0).cast("long"))
-                    .alias("support")))
-
-
-def clustering_coefficient(pairs: DataFrame, a_col: str = "a",
-                           b_col: str = "b") -> DataFrame:
-    """Local clustering coefficient per node: triangles_at(v) /
-    C(deg v, 2) — the link-graph 'how cliquish is this neighborhood'
-    signal. Integer triangle counts (triangle_counts' degree-oriented
-    enumeration) and ONE final IEEE division → bit-replayable.
-    Nodes with deg < 2 are excluded (undefined coefficient)."""
-    tri = triangle_counts(pairs, a_col=a_col, b_col=b_col)
-    deg = (pairs.select(F.col(a_col).alias("node"))
-           .unionByName(pairs.select(F.col(b_col).alias("node")))
-           .groupBy("node").agg(F.count("*").cast("long").alias("deg")))
-    return (deg.where(F.col("deg") >= 2)
-            .join(tri, "node", "left")
-            .select("node", "deg",
-                    F.coalesce("tri_cnt", F.lit(0).cast("long"))
-                    .alias("tri_cnt"))
-            .withColumn("coef",
-                        (F.col("tri_cnt") * 2).cast("double")
-                        / (F.col("deg") * (F.col("deg") - 1))
-                        .cast("double")))
-
-
-def densest_subgraph_peel(edges: DataFrame, *, src: str = "u",
-                          dst: str = "v",
-                          max_rounds: int = 25) -> DataFrame:
-    """Charikar-density 2(1+ε)-approximation by the PARALLEL peel of
-    Bahmani–Kumar–Vassilvitskii (VLDB'12), ε = 1/2: each round removes
-    EVERY node with deg ≤ 3·|E|/|V| at once (integer cross-multiplied
-    test deg·|V| ≤ 3·|E| — no float thresholds), which guarantees
-    O(log n) rounds; the answer is the round prefix with the best
-    density |E|/|S|. Returns one row per round
-    (round, n_nodes, n_edges, density, is_best) — density is a single
-    IEEE division and is_best marks the argmax (earliest round on
-    ties), so the caller reads off the certified subgraph size.
-    """
-    from ._ckpt import CheckpointSlots
-    from pyspark.sql import Window
-
-    slots = CheckpointSlots()
-    spark = edges.sparkSession
-    e = slots.checkpoint(
-        edges.select(
-            F.least(F.col(src).cast("long"), F.col(dst).cast("long"))
-            .alias("u"),
-            F.greatest(F.col(src).cast("long"), F.col(dst).cast("long"))
-            .alias("v"))
-        .where(F.col("u") < F.col("v")).distinct(), "e")
-    stats = []
-    for r in range(max_rounds):
-        deg = (e.select(F.col("u").alias("node"))
-               .union(e.select(F.col("v").alias("node")))
-               .groupBy("node").agg(F.count("*").alias("d")))
-        deg = slots.checkpoint(deg, "deg")
-        agg = deg.agg(F.count("*").alias("V"),
-                      (F.sum("d") / 2).cast("long").alias("E")).first()
-        n_v, n_e = agg["V"], agg["E"]
-        if not n_v:
-            break
-        stats.append((r, int(n_v), int(n_e)))
-        rm = deg.where(F.col("d") * n_v <= 3 * n_e).select("node")
-        keep = deg.join(rm, "node", "left_anti").select("node")
-        e = slots.checkpoint(
-            e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi"),
-            "e")
-        if not e.take(1):
-            break
-    rounds = spark.createDataFrame(
-        stats, "round long, n_nodes long, n_edges long")
-    w = Window.orderBy(
-        F.desc(F.col("n_edges").cast("double") / F.col("n_nodes")),
-        F.col("round"))
-    return (rounds
-            .withColumn("density", F.col("n_edges").cast("double")
-                        / F.col("n_nodes"))
-            .withColumn("is_best", F.row_number().over(w) == 1)
-            .select("round", "n_nodes", "n_edges", "density", "is_best"))

@@ -12,7 +12,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import udfs as U
 from . import _local
 from .graph import TraversalMetrics, loop_profile
 
@@ -906,404 +905,3 @@ def tree_closeness(edges_nodes: DataFrame, key: str = "url",
         s = slots.checkpoint(s.unionByName(frontier), "cl")
     return s.select("node", F.col("S").cast("long")
                     .alias("closeness_sum"))
-
-
-def tree_diameter(edges_nodes: DataFrame, key: str = "url",
-                  max_iter: int = 500,
-                  metrics: TraversalMetrics | None = None) -> DataFrame:
-    """EXACT per-tree diameter (longest path, edge count) of a forest:
-    bottom-up heights H(v) = max(1 + H(child)) (bounded-round fixpoint,
-    same discipline as subtree_counts), then the through-path at v is
-    the sum of the TOP-2 child contributions (1 + H(c)) — so diameter
-    = max over v, no path enumeration. Tie-safe top-2: if the max
-    contribution occurs twice, second = first. Returns
-    (root, diameter) with the tree's root as its id."""
-    from ._ckpt import CheckpointSlots
-
-    e = (edges_nodes.select(key, "NODEA", "NODEB")
-         .localCheckpoint(eager=False))
-    nodes = (e.select(F.col("NODEA").alias("node"))
-             .union(e.select(F.col("NODEB").alias("node"))).distinct()
-             .localCheckpoint(eager=False))
-    slots = CheckpointSlots()
-    h = slots.checkpoint(
-        nodes.select("node", F.lit(0).cast("long").alias("H")), "h")
-
-    def _sig(df: DataFrame):
-        return df.select(
-            F.expr("bit_xor(xxhash64(node, H))").alias("x")).first()["x"]
-
-    sig = _sig(h)
-    for i in range(max_iter):
-        up = (e.join(h.withColumnRenamed("node", "NODEA"), "NODEA")
-              .groupBy("NODEB").agg((F.max("H") + 1).alias("_hc"))
-              .withColumnRenamed("NODEB", "node"))
-        new_h = slots.checkpoint(
-            nodes.join(up, "node", "left")
-            .select("node", F.coalesce("_hc", F.lit(0)).cast("long")
-                    .alias("H")), "h")
-        new_sig = _sig(new_h)
-        if metrics is not None:
-            metrics.add(op="tree_diameter", round=i)
-        h = new_h
-        if new_sig == sig:
-            break
-        sig = new_sig
-    contrib = (e.join(h.withColumnRenamed("node", "NODEA"), "NODEA")
-               .select(F.col("NODEB").alias("node"),
-                       (F.col("H") + 1).alias("c")))
-    # top-2 without a window: max, count at max, max strictly below max
-    agg = contrib.groupBy("node").agg(F.max("c").alias("t1"))
-    t2 = (contrib.join(agg, "node")
-          .groupBy("node", "t1")
-          .agg(F.sum(F.when(F.col("c") == F.col("t1"), 1).otherwise(0))
-               .alias("_nmax"),
-               F.max(F.when(F.col("c") < F.col("t1"), F.col("c")))
-               .alias("_below")))
-    through = t2.select(
-        "node",
-        (F.col("t1") + F.when(F.col("_nmax") >= 2, F.col("t1"))
-         .otherwise(F.coalesce("_below", F.lit(0)))).alias("thr"))
-    # root id per node: propagate like tree_closeness but we only need
-    # per-tree max, and every node's root is found by joining the
-    # (child-edge → parent chain); reuse connected_components + the
-    # root table to map components to roots.
-    from .graph import connected_components
-
-    adj = (e.select(F.col("NODEA").alias("node"),
-                    F.col("NODEB").alias("nbr"))
-           .union(e.select(F.col("NODEB").alias("node"),
-                           F.col("NODEA").alias("nbr"))))
-    comp = connected_components(adj, metrics=metrics)
-    roots = (e.select(F.col("NODEB").alias("node")).distinct()
-             .join(e.select(F.col("NODEA").alias("node")).distinct(),
-                   "node", "left_anti"))
-    root_of = (roots.join(comp, "node")
-               .select(F.col("l"), F.col("node").alias("root")))
-    per_node = (nodes.join(through, "node", "left")
-                .select("node", F.coalesce("thr", F.lit(0)).alias("thr")))
-    return (per_node.join(comp, "node").join(root_of, "l")
-            .groupBy("root")
-            .agg(F.max("thr").cast("long").alias("diameter")))
-
-
-def lca_queries(edges_nodes: DataFrame, queries: DataFrame,
-                key: str = "url", qid: str = "qid",
-                u_col: str = "u", w_col: str = "w",
-                max_log: int = 12) -> DataFrame:
-    """Batch lowest-common-ancestor on a forest by BINARY LIFTING —
-    the classic O(log depth) construction, Spark-shaped: ancestor
-    table A_k(v) = 2^k-th ancestor built by k self-joins of the
-    previous level (pointer doubling), then every query resolves with
-    2·max_log rounds of small broadcast-scale joins (lift the deeper
-    endpoint by the depth difference's bits, then descend both
-    endpoints on the highest differing levels; LCA = parent after the
-    descent). No per-query walks — a million queries lift together in
-    the same joins. Cross-tree pairs drop (no LCA). Returns
-    (qid, lca, dist) with dist the path length u→w through the LCA.
-
-    Edges are child→parent (NODEA flows to NODEB), one parent per
-    child. All-integer → bit-exact."""
-    from ._ckpt import CheckpointSlots
-    from pyspark.sql import functions as F
-
-    slots = CheckpointSlots()
-    par = slots.checkpoint(
-        edges_nodes.select(F.col("NODEA").cast("long").alias("v"),
-                           F.col("NODEB").cast("long").alias("a")), "a0")
-    nodes = (par.select(F.col("v").alias("node"))
-             .union(par.select(F.col("a").alias("node"))).distinct()
-             .localCheckpoint(eager=False))
-
-    # depth via bounded top-down rounds (roots depth 0)
-    roots = nodes.join(par.select(F.col("v").alias("node")),
-                       "node", "left_anti")
-    depth = slots.checkpoint(
-        roots.select("node", F.lit(0).cast("long").alias("d")), "dep")
-    for _ in range(1 << max_log):
-        frontier = (par.join(depth.select(F.col("node").alias("a"),
-                                          F.col("d").alias("_pd")), "a")
-                    .select(F.col("v").alias("node"),
-                            (F.col("_pd") + 1).alias("d"))
-                    .join(depth.select("node"), "node", "left_anti"))
-        frontier = slots.checkpoint(frontier, "fr")
-        if not frontier.take(1):
-            break
-        depth = slots.checkpoint(depth.unionByName(frontier), "dep")
-
-    # binary-lifting tables A_k, k = 0..max_log-1
-    anc = [par]
-    for k in range(1, max_log):
-        prev = anc[-1]
-        nxt = slots.checkpoint(
-            prev.join(prev.select(F.col("v").alias("a"),
-                                  F.col("a").alias("_a2")), "a")
-            .select("v", F.col("_a2").alias("a")), f"anc{k}")
-        if not nxt.take(1):
-            anc.append(nxt)
-            break
-        anc.append(nxt)
-
-    q = (queries.select(F.col(qid).cast("long").alias("q"),
-                        F.col(u_col).cast("long").alias("u"),
-                        F.col(w_col).cast("long").alias("w"))
-         .join(depth.select(F.col("node").alias("u"),
-                            F.col("d").alias("du")), "u")
-         .join(depth.select(F.col("node").alias("w"),
-                            F.col("d").alias("dw")), "w"))
-    # normalize: x = deeper endpoint, y = shallower
-    st = q.select(
-        "q",
-        F.when(F.col("du") >= F.col("dw"), F.col("u"))
-        .otherwise(F.col("w")).alias("x"),
-        F.when(F.col("du") >= F.col("dw"), F.col("w"))
-        .otherwise(F.col("u")).alias("y"),
-        F.greatest("du", "dw").alias("dx"), F.least("du", "dw").alias("dy"),
-        (F.col("du") + F.col("dw")).alias("dsum"))
-    st = slots.checkpoint(st, "st")
-    # lift x by (dx - dy), bit by bit
-    for k in range(len(anc) - 1, -1, -1):
-        bit = 1 << k
-        lifted = (st.join(anc[k].select(F.col("v").alias("x"),
-                                        F.col("a").alias("_ax")),
-                          "x", "left")
-                  .select("q",
-                          F.when((F.col("dx") - F.col("dy"))
-                                 .bitwiseAND(bit) != 0, F.col("_ax"))
-                          .otherwise(F.col("x")).alias("x"),
-                          "y",
-                          F.when((F.col("dx") - F.col("dy"))
-                                 .bitwiseAND(bit) != 0,
-                                 F.col("dx") - bit)
-                          .otherwise(F.col("dx")).alias("dx"),
-                          "dy", "dsum"))
-        st = slots.checkpoint(lifted, "st")
-    # equal depths now; same node -> LCA found
-    done = st.filter(F.col("x") == F.col("y")).select(
-        "q", F.col("x").alias("lca"),
-        (F.col("dsum") - 2 * F.col("dy")).alias("dist"))
-    done = slots.checkpoint(done, "done0")
-    rest = st.filter(F.col("x") != F.col("y"))
-    # descend: on levels where ancestors differ, jump both
-    for k in range(len(anc) - 1, -1, -1):
-        stepped = (rest.join(anc[k].select(F.col("v").alias("x"),
-                                           F.col("a").alias("_ax")),
-                             "x", "left")
-                   .join(anc[k].select(F.col("v").alias("y"),
-                                       F.col("a").alias("_ay")),
-                         "y", "left"))
-        jump = (F.col("_ax").isNotNull() & F.col("_ay").isNotNull()
-                & (F.col("_ax") != F.col("_ay")))
-        rest = slots.checkpoint(
-            stepped.select(
-                "q",
-                F.when(jump, F.col("_ax")).otherwise(F.col("x"))
-                .alias("x"),
-                F.when(jump, F.col("_ay")).otherwise(F.col("y"))
-                .alias("y"),
-                (F.col("dy") - F.when(jump, F.lit(1 << k))
-                 .otherwise(0)).alias("dy"), "dsum"),
-            f"rest{k % 2}")
-    # LCA = shared parent of x and y (cross-tree pairs have none)
-    fin = (rest.join(par.select(F.col("v").alias("x"),
-                                F.col("a").alias("_px")), "x")
-           .join(par.select(F.col("v").alias("y"),
-                            F.col("a").alias("_py")), "y")
-           .filter(F.col("_px") == F.col("_py"))
-           .select("q", F.col("_px").alias("lca"),
-                   (F.col("dsum") - 2 * (F.col("dy") - 1)).alias("dist")))
-    return (done.unionByName(fin)
-            .select(F.col("q").alias("qid"),
-                    F.col("lca").cast("long").alias("lca"),
-                    F.col("dist").cast("long").alias("dist")))
-
-
-def tree_eccentricity(edges_nodes: DataFrame, key: str = "url",
-                      max_iter: int = 500,
-                      metrics: TraversalMetrics | None = None
-                      ) -> DataFrame:
-    """EXACT per-node eccentricity on a forest without any all-pairs
-    walk — the down/up rerooting for MAX (the max-analogue of
-    tree_closeness's sum rerooting):
-
-        down(v) = height below v            (bottom-up fixpoint)
-        up(c)   = 1 + max(up(p), best sibling contribution at p
-                          EXCLUDING c)       (top-down frontier)
-        ecc(v)  = max(down(v), up(v))
-
-    The sibling exclusion reuses tree_diameter's tie-safe top-2 trick
-    (max, count-at-max, max-strictly-below), so no per-sibling
-    enumeration. All-integer. Returns (node, ecc)."""
-    from ._ckpt import CheckpointSlots
-
-    e = (edges_nodes.select(key, "NODEA", "NODEB")
-         .localCheckpoint(eager=False))
-    nodes = (e.select(F.col("NODEA").alias("node"))
-             .union(e.select(F.col("NODEB").alias("node"))).distinct()
-             .localCheckpoint(eager=False))
-    slots = CheckpointSlots()
-    h = slots.checkpoint(
-        nodes.select("node", F.lit(0).cast("long").alias("H")), "h")
-
-    def _sig(df: DataFrame):
-        return df.select(
-            F.expr("bit_xor(xxhash64(node, H))").alias("x")).first()["x"]
-
-    sig = _sig(h)
-    for i in range(max_iter):
-        up_ = (e.join(h.withColumnRenamed("node", "NODEA"), "NODEA")
-               .groupBy("NODEB").agg((F.max("H") + 1).alias("_hc"))
-               .withColumnRenamed("NODEB", "node"))
-        new_h = slots.checkpoint(
-            nodes.join(up_, "node", "left")
-            .select("node", F.coalesce("_hc", F.lit(0)).cast("long")
-                    .alias("H")), "h")
-        new_sig = _sig(new_h)
-        if metrics is not None:
-            metrics.add(op="tree_eccentricity", round=i)
-        h = new_h
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"tree_eccentricity: height pass did not converge within "
-            f"max_iter={max_iter} rounds (input deeper than the cap); "
-            f"raise max_iter")
-    # per-parent tie-safe top-2 of child contributions c = H(child)+1
-    contrib = (e.join(h.withColumnRenamed("node", "NODEA"), "NODEA")
-               .select("NODEA", F.col("NODEB").alias("node"),
-                       (F.col("H") + 1).alias("c")))
-    agg1 = contrib.groupBy("node").agg(F.max("c").alias("t1"))
-    t2 = (contrib.join(agg1, "node")
-          .groupBy("node", "t1")
-          .agg(F.sum(F.when(F.col("c") == F.col("t1"), 1).otherwise(0))
-               .alias("_nmax"),
-               F.max(F.when(F.col("c") < F.col("t1"), F.col("c")))
-               .alias("_below"))
-          .localCheckpoint(eager=False))
-    roots = (e.select(F.col("NODEB").alias("node")).distinct()
-             .join(e.select(F.col("NODEA").alias("node")).distinct(),
-                   "node", "left_anti"))
-    up = slots.checkpoint(
-        roots.select("node", F.lit(0).cast("long").alias("up")), "up")
-    child_c = contrib.select("NODEA", "node", "c")
-    for i in range(max_iter):
-        frontier = (child_c
-                    .join(up.select(F.col("node"),
-                                    F.col("up").alias("_pup")), "node")
-                    .join(t2, "node")
-                    .select(
-            F.col("NODEA").alias("node"),
-            (F.lit(1) + F.greatest(
-                F.col("_pup"),
-                F.coalesce(
-                    F.when((F.col("c") < F.col("t1"))
-                           | (F.col("_nmax") >= 2), F.col("t1"))
-                    .otherwise(F.col("_below")),
-                    F.lit(0)))).cast("long").alias("up"))
-            .join(up.select("node"), "node", "left_anti"))
-        frontier = slots.checkpoint(frontier, "upf")
-        if not frontier.take(1):
-            break
-        up = slots.checkpoint(up.unionByName(frontier), "up")
-    else:
-        raise RuntimeError(
-            f"tree_eccentricity: top-down pass did not drain within "
-            f"max_iter={max_iter} rounds (input deeper than the cap); "
-            f"raise max_iter")
-    return (nodes.join(h, "node").join(up, "node")
-            .select("node",
-                    F.greatest("H", "up").cast("long").alias("ecc")))
-
-
-def tree_center(edges_nodes: DataFrame, key: str = "url",
-                metrics: TraversalMetrics | None = None) -> DataFrame:
-    """Per-tree radius + center: min eccentricity over the tree
-    (tree_eccentricity) and the smallest node id attaining it; tree
-    id = its root (the no-outgoing-edge node). Returns
-    (root, radius, center)."""
-    from .graph import connected_components
-
-    e = (edges_nodes.select(key, "NODEA", "NODEB")
-         .localCheckpoint(eager=False))
-    ecc = tree_eccentricity(e, key, metrics=metrics)
-    adj = (e.select(F.col("NODEA").alias("node"),
-                    F.col("NODEB").alias("nbr"))
-           .union(e.select(F.col("NODEB").alias("node"),
-                           F.col("NODEA").alias("nbr"))))
-    comp = connected_components(adj, metrics=metrics)
-    roots = (e.select(F.col("NODEB").alias("node")).distinct()
-             .join(e.select(F.col("NODEA").alias("node")).distinct(),
-                   "node", "left_anti"))
-    root_of = (roots.join(comp, "node")
-               .select("l", F.col("node").alias("root")))
-    per = ecc.join(comp, "node").join(root_of, "l")
-    return (per.groupBy("root")
-            .agg(F.min("ecc").cast("long").alias("radius"),
-                 F.min(F.struct(F.col("ecc"), F.col("node"))).alias("_m"))
-            .select("root", "radius", F.col("_m.node").alias("center")))
-
-
-def tree_mwis(edges_nodes: DataFrame, weights: DataFrame,
-              key: str = "url", max_iter: int = 500,
-              metrics: TraversalMetrics | None = None) -> DataFrame:
-    """Maximum-weight independent set on a forest — the classic
-    take/skip tree DP, bottom-up in height-many READY rounds (a node
-    fires once every child is done, same shape as the AHU rounds):
-
-        take(v) = w(v) + Σ skip(child)
-        skip(v) = Σ max(take(child), skip(child))
-
-    All-integer. `weights` is (node, w). Returns one row per tree:
-    (root, mwis) = max(take(root), skip(root))."""
-    from ._ckpt import CheckpointSlots
-
-    e = (edges_nodes.select(key, "NODEA", "NODEB")
-         .localCheckpoint(eager=False))
-    w = weights.select(F.col("node"), F.col("w").cast("long")) \
-        .localCheckpoint(eager=False)
-    kids = (e.groupBy(F.col("NODEB").alias("node"))
-            .agg(F.count(F.lit(1)).alias("n_kids"))
-            .localCheckpoint(eager=False))
-    nodes = (e.select(F.col("NODEA").alias("node"))
-             .union(e.select(F.col("NODEB").alias("node"))).distinct())
-    slots = CheckpointSlots()
-    done = slots.checkpoint(
-        nodes.join(kids, "node", "left_anti").join(w, "node")
-        .select("node", F.col("w").alias("take"),
-                F.lit(0).cast("long").alias("skip")), "dp")
-    n_done = done.count()
-    for i in range(max_iter):
-        got = (e.join(done.withColumnRenamed("node", "NODEA"), "NODEA")
-               .groupBy(F.col("NODEB").alias("node"))
-               .agg(F.count(F.lit(1)).alias("n_got"),
-                    F.sum("skip").alias("_sskip"),
-                    F.sum(F.greatest("take", "skip")).alias("_sbest")))
-        new = (got.join(kids, "node")
-               .where(F.col("n_got") == F.col("n_kids"))
-               .join(done.select("node"), "node", "left_anti")
-               .join(w, "node")
-               .select("node",
-                       (F.col("w") + F.col("_sskip")).alias("take"),
-                       F.col("_sbest").alias("skip")))
-        done = slots.checkpoint(done.unionByName(new), "dp2")
-        m = done.count()
-        if metrics is not None:
-            metrics.add(op="tree_mwis", round=i)
-        if m == n_done:
-            break
-        n_done = m
-        done = slots.checkpoint(done, "dp")
-    else:
-        raise RuntimeError(
-            f"tree_mwis: DP did not reach every node within "
-            f"max_iter={max_iter} rounds (input deeper than the cap); "
-            f"raise max_iter")
-    roots = (e.select(F.col("NODEB").alias("node")).distinct()
-             .join(e.select(F.col("NODEA").alias("node")).distinct(),
-                   "node", "left_anti"))
-    return (roots.join(done, "node")
-            .select(F.col("node").alias("root"),
-                    F.greatest("take", "skip").cast("long")
-                    .alias("mwis")))

@@ -149,128 +149,6 @@ def time_rollup(events: DataFrame, ts: str, *group_cols: str,
     )
 
 
-def funnel_steps(events: DataFrame, steps: list[str], *,
-                 user_col: str = "user_id", ts_col: str = "ts",
-                 type_col: str = "event_type") -> DataFrame:
-    """Ordered funnel analysis: for each user, the earliest time each
-    step was reached AFTER the previous step (strictly later — the
-    standard conversion-funnel semantics). Returns one row per user who
-    reached step 1: (user, n_reached, t1_us..tk_us) with -1 for
-    unreached steps, all integer microseconds.
-
-    Scale shape: step i is one filtered aggregate joined to the
-    step-(i-1) frontier on the user key — k-1 equi-joins on
-    progressively SHRINKING frontiers (every funnel stage loses users),
-    never a window over whole user histories. All joins share the user
-    hash partitioning."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    frontier = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col).agg(F.min(us).alias("t1_us"))
-    )
-    for i, step in enumerate(steps[1:], start=2):
-        nxt = (
-            events.filter(F.col(type_col) == step)
-            .select(user_col, us.alias("_ts"))
-            .join(frontier.select(user_col, F.col(f"t{i - 1}_us")
-                                  .alias("_prev")), user_col)
-            .filter(F.col("_ts") > F.col("_prev"))
-            .groupBy(user_col).agg(F.min("_ts").alias(f"t{i}_us"))
-        )
-        frontier = frontier.join(nxt, user_col, "left")
-    reached = sum(
-        F.when(F.col(f"t{i}_us").isNotNull(), 1).otherwise(0)
-        for i in range(1, len(steps) + 1)
-    )
-    return frontier.select(
-        user_col,
-        reached.cast("bigint").alias("n_reached"),
-        *[F.coalesce(F.col(f"t{i}_us"), F.lit(-1)).cast("bigint")
-          .alias(f"t{i}_us") for i in range(1, len(steps) + 1)],
-    )
-
-
-def event_features(events: DataFrame, *, user_col: str = "user_id",
-                   ts_col: str = "ts", id_col: str = "event_id",
-                   lookback_us: int = 86_400_000_000) -> DataFrame:
-    """Per-event ML features from the user's own history: sequence
-    index, gap to the previous event, and activity count inside the
-    trailing lookback window — the standard session/engagement features
-    a ranking model trains on. All integer µs, fully deterministic
-    ((ts, id) ordering).
-
-    Scale shape: ONE hash shuffle on the user key feeds all three
-    window frames (row lag, row number, RANGE frame over integer
-    event-time); nothing is recomputed per feature and no self-join
-    materializes the history."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = Window.partitionBy(user_col).orderBy("ts_us", id_col)
-    wr = (
-        Window.partitionBy(user_col).orderBy("ts_us")
-        .rangeBetween(-lookback_us, 0)
-    )
-    return (
-        events.select(id_col, user_col, us.alias("ts_us"))
-        .withColumn("seq_idx",
-                    F.row_number().over(w).cast("bigint"))
-        .withColumn(
-            "gap_us",
-            F.coalesce(F.col("ts_us") - F.lag("ts_us").over(w),
-                       F.lit(-1)).cast("bigint"))
-        .withColumn("n_prev_24h",
-                    (F.count("*").over(wr) - 1).cast("bigint"))
-    )
-
-
-def cogroup_user_profile(events: DataFrame, orders: DataFrame, *,
-                         buckets: int = 64) -> DataFrame:
-    """Cogrouped applyInPandas: merge two fact tables into one per-user
-    profile (events activity × order spend) with full-outer semantics.
-
-    Exercises the third grouped-pandas API (groupBy().cogroup() — the
-    other two, applyInPandas and applyInPandasWithState, are covered by
-    agg_segments / stream_dedup_state). Both sides are bucketed by
-    ``user mod buckets`` so the Arrow boundary sees ``buckets`` big
-    groups instead of one tiny group per user (~5 ms/group overhead —
-    CLAUDE.md applyInPandas note); the per-user merge loops INSIDE the
-    pandas function. Spend is integer cents so the result is exact.
-    Returns (user_id, n_events, n_clicks, n_orders, spend_cents) for
-    every user appearing on either side.
-    """
-    import pandas as pd
-
-    ev = events.select(
-        (F.col("user_id") % buckets).alias("bucket"),
-        "user_id",
-        F.col("event_type").eqNullSafe("click").cast("long")
-        .alias("is_click"))
-    od = orders.select(
-        (F.col("o_custkey") % buckets).alias("bucket"),
-        F.col("o_custkey").alias("user_id"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        .alias("cents"))
-
-    def merge(ev_pdf: pd.DataFrame, od_pdf: pd.DataFrame) -> pd.DataFrame:
-        ea = (ev_pdf.groupby("user_id", as_index=False)
-              .agg(n_events=("user_id", "size"),
-                   n_clicks=("is_click", "sum")))
-        oa = (od_pdf.groupby("user_id", as_index=False)
-              .agg(n_orders=("user_id", "size"),
-                   spend_cents=("cents", "sum")))
-        m = ea.merge(oa, on="user_id", how="outer")
-        for c in ("n_events", "n_clicks", "n_orders", "spend_cents"):
-            m[c] = m[c].fillna(0).astype("int64")
-        return m[["user_id", "n_events", "n_clicks", "n_orders",
-                  "spend_cents"]]
-
-    return (
-        ev.groupBy("bucket").cogroup(od.groupBy("bucket"))
-        .applyInPandas(merge, "user_id bigint, n_events bigint, "
-                              "n_clicks bigint, n_orders bigint, "
-                              "spend_cents bigint")
-    )
-
-
 def forward_fill(df: DataFrame, value_col: str, *,
                  key_col: str, order_col: str) -> DataFrame:
     """Forward-fill (last-observation-carried-forward): replace NULLs in
@@ -297,10 +175,9 @@ def arrow_group_rollup(events: DataFrame, *, buckets: int = 64) -> DataFrame:
     cogroup / applyInPandasWithState, with zero pandas materialization
     (columnar end-to-end).
 
-    Same bucketing discipline as cogroup_user_profile: groups are
-    ``user mod buckets`` so the Arrow boundary sees ``buckets`` big
-    batches, and the per-user group_by runs inside pyarrow. All
-    integers. Returns (user_id, n_events, sum_id).
+    Groups are ``user mod buckets`` so the Arrow boundary sees
+    ``buckets`` big batches, and the per-user group_by runs inside
+    pyarrow. All integers. Returns (user_id, n_events, sum_id).
     """
     import pyarrow as pa
 
@@ -414,75 +291,6 @@ def gap_fill_counts(df: DataFrame, *, key_col: str,
                     F.coalesce("n", F.lit(0)).cast("long").alias("n")))
 
 
-def haar_dwt(df: DataFrame, *, group_col: str = "g", t_col: str = "t",
-             v_col: str = "v", levels: int = 3) -> DataFrame:
-    """Unnormalized Haar wavelet transform per series: level ℓ detail
-    coefficients a−b and the final scaling (approximation) row a+b,
-    computed as ``levels`` rounds of pairwise groupBy aggregations —
-    each round HALVES the series (map-side combined; no window, no
-    sort), which is the transform's own O(n) work laid onto shuffles
-    of shrinking size. All-integer (unnormalized), so bit-exact.
-    Requires t dense 0..2^m−1 per group. Returns
-    (group, level, idx, coef) with level=ℓ for details and
-    level=``levels`` for the surviving approximations."""
-    cur = df.select(F.col(group_col).alias("g"),
-                    F.col(t_col).cast("long").alias("t"),
-                    F.col(v_col).cast("long").alias("v"))
-    outs = []
-    for lvl in range(levels):
-        agg = (cur.groupBy("g", F.expr("t div 2").alias("idx"))
-               .agg(F.sum(F.when(F.col("t") % 2 == 0, F.col("v"))
-                          .otherwise(0)).alias("a"),
-                    F.sum(F.when(F.col("t") % 2 == 1, F.col("v"))
-                          .otherwise(0)).alias("b")))
-        outs.append(agg.select(
-            "g", F.lit(lvl).cast("long").alias("level"),
-            F.col("idx").cast("long").alias("idx"),
-            (F.col("a") - F.col("b")).cast("long").alias("coef")))
-        cur = agg.select("g", F.col("idx").alias("t"),
-                         (F.col("a") + F.col("b")).alias("v"))
-    outs.append(cur.select(
-        "g", F.lit(levels).cast("long").alias("level"),
-        F.col("t").cast("long").alias("idx"),
-        F.col("v").cast("long").alias("coef")))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def interval_stab_counts(intervals: DataFrame, points: DataFrame, *,
-                         s_col: str = "s", e_col: str = "e",
-                         qid_col: str = "qid", p_col: str = "p",
-                         cell: int = 64) -> DataFrame:
-    """Interval stabbing: for each query point, how many intervals
-    cover it. Cell-bucketed like range_count: intervals explode onto
-    the cells they span (JVM sequence explode), points key by their
-    single home cell, so the join is an equi-join on cells and each
-    (interval, point) candidate appears exactly once — no dedup, no
-    sweep-line sort. Zero-cover points survive via the left join.
-    Returns (qid, p, n_cover)."""
-    c = F.lit(int(cell))
-    ic = intervals.select(
-        F.col(s_col).cast("long").alias("s"),
-        F.col(e_col).cast("long").alias("e"),
-        F.explode(F.sequence(
-            F.floor(F.col(s_col) / c).cast("long"),
-            F.floor(F.col(e_col) / c).cast("long"))).alias("cell"))
-    pc = points.select(
-        F.col(qid_col).alias("qid"), F.col(p_col).cast("long").alias("p"),
-        F.floor(F.col(p_col) / c).cast("long").alias("cell"))
-    hits = (pc.join(ic, "cell")
-            .where((F.col("s") <= F.col("p")) & (F.col("p") <= F.col("e")))
-            .groupBy("qid", "p").agg(F.count("*").alias("n")))
-    return (points.select(F.col(qid_col).alias("qid"),
-                          F.col(p_col).cast("long").alias("p"))
-            .join(hits, ["qid", "p"], "left")
-            .select("qid", "p",
-                    F.coalesce("n", F.lit(0)).cast("long")
-                    .alias("n_cover")))
-
-
 def asof_join_forward(left: DataFrame, right: DataFrame, key: str,
                       ts: str, value_col: str, *,
                       tolerance: int | None = None, default: int = -1,
@@ -524,85 +332,6 @@ def asof_join_forward(left: DataFrame, right: DataFrame, key: str,
         "row.*",
         F.when(ok, F.col("_pv")).otherwise(F.lit(default))
         .cast("long").alias(out_col))
-
-
-def greedy_interval_count(iv: DataFrame, *, g: str = "g", s: str = "s",
-                          e: str = "e", iid: str = "iid",
-                          max_doublings: int = 40) -> DataFrame:
-    """Greedy maximum non-overlapping interval selection per group —
-    the classic earliest-deadline-first schedule, WITHOUT a sequential
-    scan: the greedy chain is a functional graph, so
-
-    1. next(i) = the interval minimizing (e, iid) among those with
-       s >= e_i — computed for EVERY interval at once by the union
-       as-of trick: intervals enter a per-group stream twice (an
-       EVENT at t = s carrying pack(e, iid), a PROBE at t = e_i),
-       sorted by t DESC with events before probes at equal t, and a
-       running min window (partitioned by group — fully distributed,
-       no global window) hands each probe the best compatible
-       successor;
-    2. chain length to the end via POINTER DOUBLING over next()
-       (O(log chain) self-join rounds, two-layer checkpoint+cache);
-    3. the answer per group is the chain length at the greedy start,
-       argmin (e, s, iid).
-
-    Touching intervals (s_j == e_i) are compatible. e and iid must be
-    non-negative with e < 2^31, iid < 2^31 (packed into one BIGINT
-    for a single-column min). Returns (g, n_selected)."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    base = iv.select(F.col(g).alias("g"),
-                     F.col(s).cast("long").alias("s"),
-                     F.col(e).cast("long").alias("e"),
-                     F.col(iid).cast("long").alias("iid")) \
-        .localCheckpoint(eager=False)
-    pack = (F.col("e") * F.lit(1 << 31) + F.col("iid"))
-    ev = base.select("g", F.col("s").alias("t"),
-                     F.lit(0).alias("pr"), pack.alias("val"),
-                     F.lit(None).cast("long").alias("iid"))
-    probe = base.select("g", F.col("e").alias("t"),
-                        F.lit(1).alias("pr"),
-                        F.lit(None).cast("long").alias("val"),
-                        "iid")
-    w = Window.partitionBy("g").orderBy(F.desc("t"), F.asc("pr")) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    nxt = (ev.unionByName(probe)
-           .withColumn("best", F.min("val").over(w))
-           .where(F.col("pr") == 1)
-           .select("g", "iid",
-                   (F.col("best") % F.lit(1 << 31)).alias("nxt")))
-    # pointer doubling: acc = #selected from this interval onward
-    frame = slots.checkpoint(
-        base.select("g", "iid").join(nxt, ["g", "iid"], "left")
-        .select("g", "iid", F.col("nxt").alias("ptr"),
-                F.lit(1).cast("long").alias("acc")), "iv0")
-    cached = frame.cache()
-    cached.count()
-    for i in range(max_doublings):
-        nx = (cached.alias("a")
-              .join(cached.select(F.col("g").alias("g2"),
-                                  F.col("iid").alias("ptr"),
-                                  F.col("ptr").alias("p2"),
-                                  F.col("acc").alias("a2")).alias("b"),
-                    (F.col("a.g") == F.col("b.g2"))
-                    & (F.col("a.ptr") == F.col("b.ptr")), "left")
-              .select("a.g", "a.iid",
-                      F.col("b.p2").alias("ptr"),
-                      (F.col("a.acc") + F.coalesce("b.a2", F.lit(0)))
-                      .alias("acc")))
-        nx = slots.checkpoint(nx, f"iv{(i % 2) + 1}")
-        nc = nx.cache()
-        live = nc.where(F.col("ptr").isNotNull()).count()
-        cached.unpersist()
-        cached = nc
-        if live == 0:
-            break
-    start = base.groupBy("g").agg(
-        F.min(F.struct("e", "s", "iid")).alias("m")) \
-        .select("g", F.col("m.iid").alias("iid"))
-    return (start.join(cached, ["g", "iid"])
-            .select("g", F.col("acc").alias("n_selected")))
 
 
 def rmq_sparse_table(seq: DataFrame, queries: DataFrame, *,

@@ -1329,9 +1329,9 @@ def dictionary_match(docs, phrases, text_col="text", id_col="doc_id"):
     lists, domain lexicons, benchmark-contamination phrases): the
     dictionary is tiny next to the corpus, so it BROADCASTS and the
     corpus never shuffles text — grams are formed map-side from the
-    token array (unigrams + a shifted self-zip for bigrams, the
-    collocations trick), the equi-join against the broadcast phrase
-    table drops every non-dictionary gram immediately, and only
+    token array (unigrams + a shifted self-zip for bigrams), the
+    equi-join against the broadcast phrase table drops every
+    non-dictionary gram immediately, and only
     (doc_id, phrase) pairs reach the one aggregation shuffle.
     Returns (doc_id, phrase, n_hits), absent pairs omitted.
     """
@@ -1363,7 +1363,7 @@ def kn_continuation_counts(docs, text_col="text"):
     right contexts follow it, and its raw unigram count.
 
     All integers from one pass: adjacent bigrams form map-side from the
-    token array (the collocations shifted self-zip — zero joins), then
+    token array (a shifted self-zip — zero joins), then
     one (w1, w2)-distinct aggregation feeds both context counts.
     Returns (tok, n_uni, n_left_ctx, n_right_ctx); tokens never seen in
     any bigram (single-token docs) report 0 contexts via the left join.

@@ -136,9 +136,6 @@ def main() -> int:
 
             release_all_persistent(spark)
             spark.catalog.clearCache()
-        if name not in os_:
-            print(f"{name:24s} rows-only: {len(sp)}")
-            continue
         try:
             du = con.execute(os_[name]).fetchdf()
         except Exception as ex:  # noqa: BLE001

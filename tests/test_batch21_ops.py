@@ -1,6 +1,5 @@
 """Semantics tests for the batch-21 operators: sweep-line interval
-merging, cohort retention, integer rolling anomalies, CIDR
-longest-prefix match, mixture planning, threshold-levenshtein gate.
+merging, cohort retention, integer rolling anomalies.
 
 Each operator also has an exact DuckDB oracle entry in
 __spark_entry__.py; these tests pin the hand-checkable corner cases the
@@ -83,59 +82,6 @@ def test_rolling_outliers_flat_baseline_spike_ratio_is_seven(spark):
     flag9 = rolling_outliers(df, key_col="k", order_col="t",
                              value_col="v", window=8, t_sq=9).collect()
     assert flag9 == []
-
-
-# --------------------------------------------------------------------- CIDR
-
-def test_cidr_match_longest_prefix_wins(spark):
-    from bdtopo2refhydro_spark.operators.corpus import cidr_match
-
-    logs = spark.createDataFrame(
-        [(1, "10.1.2.3"), (2, "10.9.9.9"), (3, "8.8.8.8")],
-        "event_id bigint, ip string")
-    rules = spark.createDataFrame(
-        [("10.0.0.0", 8, "deny"), ("10.1.0.0", 16, "allow"),
-         ("0.0.0.0", 0, "default")],
-        "cidr_ip string, prefix_len int, policy string")
-    out = {r.event_id: (r.policy, r.match_len)
-           for r in cidr_match(logs, rules).collect()}
-    assert out == {1: ("allow", 16),   # /16 beats /8
-                   2: ("deny", 8),
-                   3: ("default", 0)}  # catch-all
-    # ip_int round-trips the dotted quad
-    ips = {r.event_id: r.ip_int for r in cidr_match(logs, rules).collect()}
-    assert ips[3] == (8 << 24) + (8 << 16) + (8 << 8) + 8
-
-
-# ------------------------------------------------------------------ mixture
-
-def test_mixture_plan_integer_alloc_and_ceil_epochs(spark):
-    from bdtopo2refhydro_spark.operators.corpus import mixture_plan
-
-    units = spark.createDataFrame([("a", 100), ("b", 1000)],
-                                  "g string, units bigint")
-    w = spark.createDataFrame([("a", 3), ("b", 1)], "g string, weight int")
-    out = {r.g: r for r in
-           mixture_plan(units, w, group_col="g",
-                        oversample_num=1).collect()}
-    # total=1100, sum_w=4: alloc_a = 3*1100//4 = 825, epochs = ceil(825/100)=9
-    assert (out["a"].alloc, out["a"].epochs) == (825, 9)
-    # alloc_b = 1100//4 = 275, epochs = ceil(275/1000) = 1
-    assert (out["b"].alloc, out["b"].epochs) == (275, 1)
-
-
-# -------------------------------------------------------------- levenshtein
-
-def test_nearest_vocab_lev_threshold_excludes_far_pairs(spark):
-    from bdtopo2refhydro_spark.operators.corpus import nearest_vocab_lev
-
-    toks = spark.createDataFrame(
-        [("window",), ("widow",), ("doors",)], "tok string")
-    vocab = spark.createDataFrame([("windoe",)], "term string")
-    out = {(r.tok, r.dist)
-           for r in nearest_vocab_lev(toks, vocab, max_dist=2).collect()}
-    # windoe->window: 1 edit; windoe->widow: 2; doors is 5 edits -> gated
-    assert out == {("window", 1), ("widow", 2)}
 
 
 # ------------------------------------------------------------------- gapfill
@@ -365,21 +311,6 @@ def test_neighborhood_sum_two_rounds_hand_graph(spark):
     out = {r.node: r.feat
            for r in neighborhood_sum(nodes, edges, rounds=2).collect()}
     assert out == {"a": 1, "b": 4, "c": 9}
-
-
-# --------------------------------------------------------------- winsorize
-
-def test_winsorize_sums_clips_at_discrete_ranks(spark):
-    """10 values 1..10 in one group: p10 = value at rank ceil(10*10/100)
-    = rank 1 -> 1; p90 = rank 9 -> 9; clipped sum replaces the 10 with
-    a 9."""
-    from bdtopo2refhydro_spark.operators.corpus import winsorize_sums
-
-    df = spark.createDataFrame([("g", i, i) for i in range(1, 11)],
-                               "source string, n_chars bigint, doc_id bigint")
-    r = winsorize_sums(df, "n_chars").collect()[0]
-    assert (r.n, r.lo, r.hi) == (10, 1, 9)
-    assert r.sum_raw == 55 and r.sum_clipped == 54
 
 
 # ---------------------------------------------------------- posting deltas

@@ -1,13 +1,8 @@
-"""pareto_skyline vs brute dominance; haar_dwt vs numpy reference;
-mg_heavy_hitters exactness across partitionings."""
+"""pareto_skyline vs brute dominance."""
 
 import random
 
-import numpy as np
-
-from bdtopo2refhydro_spark.operators.corpus import (
-    mg_heavy_hitters, pareto_skyline)
-from bdtopo2refhydro_spark.operators.temporal import haar_dwt
+from bdtopo2refhydro_spark.operators.corpus import pareto_skyline
 
 
 def test_skyline_vs_brute(spark):
@@ -34,84 +29,3 @@ def test_skyline_vs_brute(spark):
         if y == ymin:
             collapsed.add((g, x, y))
     assert got == collapsed
-
-
-def test_haar_dwt_vs_numpy(spark):
-    rng = random.Random(5)
-    v = [rng.randrange(-50, 50) for _ in range(16)]
-    df = spark.createDataFrame([(0, t, x) for t, x in enumerate(v)],
-                               "g long, t long, v long")
-    got = {(r["level"], r["idx"]): r["coef"]
-           for r in haar_dwt(df, levels=4).collect()}
-    cur = np.array(v, dtype=np.int64)
-    for lvl in range(4):
-        a, b = cur[0::2], cur[1::2]
-        for i, c in enumerate(a - b):
-            assert got[(lvl, i)] == c
-        cur = a + b
-    assert got[(4, 0)] == cur[0] == sum(v)
-
-
-def test_mg_heavy_hitters_exact_any_partitioning(spark):
-    rng = random.Random(7)
-    items = (["hot_a"] * 300 + ["hot_b"] * 200
-             + [f"cold{rng.randrange(0, 400)}" for _ in range(500)])
-    rng.shuffle(items)
-    expected = {}
-    n = len(items)
-    from collections import Counter
-    for it, c in Counter(items).items():
-        if c * 8 > n:
-            expected[it] = c
-    for parts in (1, 7, 32):
-        df = spark.createDataFrame([(i,) for i in items],
-                                   "item string").repartition(parts)
-        got = {r["item"]: r["cnt"]
-               for r in mg_heavy_hitters(df, "item", 8).collect()}
-        assert got == expected, parts
-    assert expected  # fixture actually has heavy hitters
-
-
-def test_kth_smallest_bisect_vs_sorted(spark):
-    import random
-
-    from bdtopo2refhydro_spark.operators.aggregate import \
-        kth_smallest_bisect
-
-    rng = random.Random(13)
-    vals = [rng.randrange(-500, 500) for _ in range(1000)] + [7] * 25
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    s = sorted(vals)
-    ks = [1, 2, 500, 777, len(vals)]
-    got = kth_smallest_bisect(df, "v", ks)
-    assert got == {k: s[k - 1] for k in ks}
-
-
-def test_irv_rounds_vs_python_simulation(spark):
-    import random
-
-    from bdtopo2refhydro_spark.operators.aggregate import irv_rounds
-
-    rng = random.Random(77)
-    n_ballots, cands = 60, list(range(5))
-    ballots = []
-    for b in range(n_ballots):
-        perm = cands[:]
-        rng.shuffle(perm)
-        ballots.append(perm)
-    rows = [(b, c, r + 1) for b, perm in enumerate(ballots)
-            for r, c in enumerate(perm)]
-    df = spark.createDataFrame(rows, "ballot long, cand long, rnk long")
-    got = {(r["round"], r["cand"]): r["votes"]
-           for r in irv_rounds(df).collect()}
-
-    elim, want = [], {}
-    for rnd in range(1, len(cands)):
-        alive = [c for c in cands if c not in elim]
-        counts = {c: 0 for c in alive}
-        for perm in ballots:
-            counts[next(c for c in perm if c in alive)] += 1
-        for c in alive:
-            want[(rnd, c)] = counts[c]
-        elim.append(min(alive, key=lambda c: (counts[c], c)))
-    assert got == want

@@ -13,8 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bdtopo2refhydro_spark.operators.graph import (
-    bridges, prefix_scan_xor, transitive_closure_counts,
-    two_edge_components)
+    bridges, prefix_scan_xor, two_edge_components)
 
 
 def _bfs_reachable(n, adj, start, skip_edge=None):
@@ -166,25 +165,6 @@ def test_jp_coloring_proper_and_matches_sequential_greedy(spark, seed):
         assert got[a] != got[b]
 
 
-def test_euler_path_check_hand_graphs(spark):
-    from bdtopo2refhydro_spark.operators.graph import euler_path_check
-
-    edges = (
-        # comp 0: triangle (circuit)
-        [(0, 1), (1, 2), (2, 0)]
-        # comp 10: path of 4 (path)
-        + [(10, 11), (11, 12), (12, 13)]
-        # comp 20: star with 3 leaves (none: 3 odd + center odd)
-        + [(20, 21), (20, 22), (20, 23)]
-    )
-    df = spark.createDataFrame(edges, "u long, v long")
-    got = {r["comp"]: (r["n_nodes"], r["n_edges"], r["n_odd"], r["kind"])
-           for r in euler_path_check(df).collect()}
-    assert got == {0: (3, 3, 0, "circuit"),
-                   10: (4, 3, 2, "path"),
-                   20: (4, 3, 4, "none")}
-
-
 @pytest.mark.parametrize("seed", [13, 47])
 def test_count_four_cycles_vs_bruteforce(spark, seed):
     from itertools import combinations
@@ -209,65 +189,6 @@ def test_count_four_cycles_vs_bruteforce(spark, seed):
                 want += 1
     df = spark.createDataFrame(edges, "u long, v long")
     got = count_four_cycles(df).first()["n_c4"]
-    assert got == want
-
-
-def test_transitive_closure_counts_vs_python(spark):
-    edges = [(0, 1), (1, 2), (2, 3), (0, 3), (3, 4), (5, 6)]
-    df = spark.createDataFrame(edges, "u long, v long")
-    got = {r["u"]: r["n_reach"]
-           for r in transitive_closure_counts(df).collect()}
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-    def reach(s):
-        out, todo = set(), [s]
-        while todo:
-            u = todo.pop()
-            for v in adj.get(u, ()):
-                if v not in out:
-                    out.add(v)
-                    todo.append(v)
-        return out
-    assert got == {s: len(reach(s)) for s in adj}
-
-
-def test_apsp_minplus_vs_dijkstra(spark):
-    import heapq
-
-    from bdtopo2refhydro_spark.operators.graph import apsp_minplus
-
-    rng = random.Random(71)
-    n = 18
-    edges = {}
-    for _ in range(45):
-        a, b = rng.sample(range(n), 2)
-        w = rng.randrange(1, 10)
-        edges[(a, b)] = min(edges.get((a, b), 10 ** 9), w)
-    rows = [(a, b, w) for (a, b), w in edges.items()]
-    df = spark.createDataFrame(rows, "u long, v long, w long")
-    got = {(r["u"], r["v"]): r["dist"]
-           for r in apsp_minplus(df).collect()}
-
-    adj = {}
-    for (a, b), w in edges.items():
-        adj.setdefault(a, []).append((b, w))
-    want = {}
-    for s in range(n):
-        dist = {s: 0}
-        pq = [(0, s)]
-        while pq:
-            d, u = heapq.heappop(pq)
-            if d > dist.get(u, 10 ** 9):
-                continue
-            for v, w in adj.get(u, ()):
-                nd = d + w
-                if nd < dist.get(v, 10 ** 9):
-                    dist[v] = nd
-                    heapq.heappush(pq, (nd, v))
-        for v, d in dist.items():
-            if v != s:
-                want[(s, v)] = d
     assert got == want
 
 

@@ -459,24 +459,6 @@ def test_cms_sketches_merge_cellwise(spark):
     assert merged == cu
 
 
-def test_collocations_lift_and_single_token_guard(spark):
-    """Known tiny corpus: lift = n_xy*N/(n_x*n_y) exactly; a single-token
-    document must not crash the bigram transform (Spark's sequence(2, n)
-    descends for n < 2 and ANSI element_at throws on index 0)."""
-    from bdtopo2refhydro_spark.operators.corpus import collocations
-
-    docs = spark.createDataFrame(
-        [(1, "new york new york"), (2, "spam"), (3, "new york city")],
-        "doc_id long, text string")
-    out = {(r["w1"], r["w2"]): r for r in
-           collocations(docs, min_count=2).collect()}
-    assert set(out) == {("new", "york")}
-    r = out[("new", "york")]
-    # N=8 tokens, n_xy=3, n_x=n_y=3 -> lift = 24/9
-    assert (r["n_xy"], r["n_x"], r["n_y"]) == (3, 3, 3)
-    assert r["lift"] == 24 / 9
-
-
 # ---------------------------------------------------------------------------
 # cooccurrence_pairs
 # ---------------------------------------------------------------------------
@@ -498,46 +480,3 @@ def test_cooccurrence_pairs_support_and_marginals(spark):
     r = rows[0]
     assert (r["a"], r["b"], r["support"], r["n_a"], r["n_b"]) == \
         ("x", "y", 3, 3, 3)
-
-
-def test_registered_domain_longest_suffix_wins(spark):
-    """eTLD+1: 'co.uk' must beat 'uk'; bare suffixes and unlisted TLDs
-    yield NULL; the registrable label is the one just before the
-    matched suffix."""
-    from bdtopo2refhydro_spark.operators.corpus import registered_domain
-
-    hosts = spark.createDataFrame(
-        [(1, "a.b.co.uk"), (2, "x.com"), (3, "co.uk"), (4, "a.b.xyz"),
-         (5, "deep.sub.site.github.io"), (6, "uk")],
-        "id long, host string")
-    sfx = spark.createDataFrame(
-        [("com",), ("uk",), ("co.uk",), ("github.io",), ("io",)],
-        "suffix string")
-    got = {r["id"]: (r["registered"], r["suffix_len"])
-           for r in registered_domain(hosts, sfx).collect()}
-    assert got[1] == ("b.co.uk", 2)          # co.uk beats uk
-    assert got[2] == ("x.com", 1)
-    assert got[3] == (None, None)            # bare suffix
-    assert got[4] == (None, None)            # unlisted TLD
-    assert got[5] == ("site.github.io", 2)   # github.io beats io
-    assert got[6] == (None, None)
-
-
-def test_phrase_search_repeated_token_alignment(spark):
-    """'b b b' must match only true 3-runs (count DISTINCT k, not
-    count(*)); overlapping occurrences all reported."""
-    docs = spark.createDataFrame(
-        [(1, "a b b b b c"),   # 'b b b' at starts 1 and 2
-         (2, "b c b c b"),     # no 3-run
-         (3, "x y b b b")],    # one at start 2
-        "doc_id long, text string")
-    phrases = spark.createDataFrame(
-        [("p3", 0, "b", 3), ("p3", 1, "b", 3), ("p3", 2, "b", 3),
-         ("bc", 0, "b", 2), ("bc", 1, "c", 2)],
-        "phrase_id string, k int, tok string, plen int")
-    from bdtopo2refhydro_spark.operators.corpus import phrase_search
-
-    got = {(r["phrase_id"], r["doc_id"], r["start"])
-           for r in phrase_search(docs, phrases).collect()}
-    assert got == {("p3", 1, 1), ("p3", 1, 2), ("p3", 3, 2),
-                   ("bc", 1, 4), ("bc", 2, 0), ("bc", 2, 2)}

@@ -855,98 +855,6 @@ def test_boruvka_equals_kruskal_on_pseudorandom_graph(spark):
     assert got == want
 
 
-def test_functional_cycles_rho_golden(spark):
-    """Hand-built rho: tail 10->11->12 into 3-cycle {12,13,14}; plus a
-    self-loop {5} with tail 4->5; plus a 2-cycle {20,21}."""
-    f = [(10, 11), (11, 12), (12, 13), (13, 14), (14, 12),
-         (4, 5), (5, 5), (20, 21), (21, 20)]
-    df = spark.createDataFrame(f, "node long, nxt long")
-    from bdtopo2refhydro_spark.operators.graph import (
-        functional_graph_cycles)
-
-    got = {r["node"]: (r["on_cycle"], r["cycle_id"])
-           for r in functional_graph_cycles(df).collect()}
-    assert got == {
-        10: (False, 12), 11: (False, 12), 12: (True, 12),
-        13: (True, 12), 14: (True, 12),
-        4: (False, 5), 5: (True, 5),
-        20: (True, 20), 21: (True, 20)}
-
-
-def test_scc_coloring_hand_graph(spark):
-    """Two cycles bridged by a DAG path + self-loop + pure sink."""
-    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (5, 6),
-             (6, 7), (7, 7), (9, 9), (9, 1)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    from bdtopo2refhydro_spark.operators.graph import (
-        strongly_connected_components)
-
-    got = {r["node"]: r["scc_id"]
-           for r in strongly_connected_components(df).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 7, 9: 9}
-
-
-def test_scc_matches_python_reference_on_lcg_digraph(spark):
-    """SCC == a sequential Tarjan on a pseudo-random functional-ish
-    digraph (every node one out-edge + extra back edges)."""
-    import sys
-
-    n = 60
-    edges = set()
-    for d in range(n):
-        edges.add((d, (d * 7 + 3) % n))
-        if d % 3 == 0 and d >= 1:
-            edges.add((d, d // 2))
-        if d % 11 == 0 and d >= 1:
-            edges.add((d // 2, d))
-    adj = {}
-    for u, v in edges:
-        adj.setdefault(u, []).append(v)
-
-    sys.setrecursionlimit(10000)
-    index = {}
-    low = {}
-    stack, onstk = [], set()
-    counter = [0]
-    comp = {}
-
-    def strong(v):
-        index[v] = low[v] = counter[0]
-        counter[0] += 1
-        stack.append(v)
-        onstk.add(v)
-        for w in adj.get(v, ()):
-            if w not in index:
-                strong(w)
-                low[v] = min(low[v], low[w])
-            elif w in onstk:
-                low[v] = min(low[v], index[w])
-        if low[v] == index[v]:
-            members = []
-            while True:
-                w = stack.pop()
-                onstk.discard(w)
-                members.append(w)
-                if w == v:
-                    break
-            m = min(members)
-            for w in members:
-                comp[w] = m
-
-    nodes = {u for u, _ in edges} | {v for _, v in edges}
-    for v in sorted(nodes):
-        if v not in index:
-            strong(v)
-
-    from bdtopo2refhydro_spark.operators.graph import (
-        strongly_connected_components)
-
-    df = spark.createDataFrame(sorted(edges), "src long, dst long")
-    got = {r["node"]: r["scc_id"]
-           for r in strongly_connected_components(df).collect()}
-    assert got == comp
-
-
 def test_greedy_matching_equals_sequential_greedy(spark):
     """Parallel local-minima rounds == sequential greedy by weight
     (unique weights) on an LCG multigraph, and the result is maximal."""
@@ -981,49 +889,3 @@ def test_greedy_matching_equals_sequential_greedy(spark):
         matched_nodes |= {u, v}
     for eid, u, v, w in edges:
         assert u in matched_nodes or v in matched_nodes
-
-
-def test_luby_mis_equals_sequential_greedy(spark):
-    """Local-minimum rounds == sequential greedy MIS in id order, and
-    the set is independent + maximal."""
-    edges = []
-    x = 11
-    for i in range(70):
-        x = (x * 1103515245 + 12345) % 2147483648
-        u, v = x % 25, (x // 25) % 25
-        if u != v:
-            edges.append((u, v))
-    adj = {}
-    nodes = set()
-    for u, v in edges:
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-        nodes |= {u, v}
-    mis = set()
-    for v in sorted(nodes):
-        if not (adj[v] & mis):
-            mis.add(v)
-
-    from bdtopo2refhydro_spark.operators.graph import luby_mis
-
-    df = spark.createDataFrame(edges, "u long, v long")
-    got = {r["node"] for r in luby_mis(df, rounds=20).collect()}
-    assert got == mis
-    for v in got:
-        assert not (adj[v] & got)          # independent
-    for v in nodes - got:
-        assert adj[v] & got                # maximal
-
-
-def test_temporal_reachability_respects_time(spark):
-    """1 -t3-> 2 -t1-> 3: node 3 is NOT time-reachable through 2
-    (t1 < t3), but 1 -t5-> 3 direct works; arrival keeps the min."""
-    edges = [(1, 2, 3), (2, 3, 1), (1, 3, 5), (3, 4, 6), (9, 1, 0)]
-    df = spark.createDataFrame(edges, "u long, v long, t long")
-    src = spark.createDataFrame([(1,)], "node long")
-    from bdtopo2refhydro_spark.operators.graph import (
-        temporal_reachability)
-
-    got = {r["node"]: r["arrival"]
-           for r in temporal_reachability(df, src).collect()}
-    assert got == {1: 0, 2: 3, 3: 5, 4: 6}

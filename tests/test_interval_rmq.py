@@ -1,36 +1,9 @@
-"""Greedy interval scheduling (pointer doubling) + sparse-table RMQ
-(batch 86) vs python references."""
+"""Sparse-table RMQ (batch 86) vs python references."""
 import random
 
 import pytest
 
-from bdtopo2refhydro_spark.operators.temporal import (
-    greedy_interval_count, rmq_sparse_table)
-
-
-@pytest.mark.parametrize("seed", [2, 19])
-def test_greedy_interval_count_vs_sequential(spark, seed):
-    rng = random.Random(seed)
-    rows = []
-    want = {}
-    for g in range(6):
-        ivs = []
-        for i in range(rng.randrange(1, 30)):
-            s = rng.randrange(0, 200)
-            e = s + rng.randrange(1, 40)
-            ivs.append((s, e, g * 1000 + i))
-        rows += [(g, s, e, iid) for s, e, iid in ivs]
-        # sequential greedy: earliest end first, touching compatible
-        taken, last = 0, -1
-        for s, e, iid in sorted(ivs, key=lambda t: (t[1], t[0], t[2])):
-            if s >= last:
-                taken += 1
-                last = e
-        want[g] = taken
-    df = spark.createDataFrame(rows, "g long, s long, e long, iid long")
-    got = {r["g"]: r["n_selected"]
-           for r in greedy_interval_count(df).collect()}
-    assert got == want
+from bdtopo2refhydro_spark.operators.temporal import rmq_sparse_table
 
 
 @pytest.mark.parametrize("seed", [7, 23])

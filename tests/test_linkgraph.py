@@ -1,10 +1,9 @@
-"""Link-graph analytics (operators/linkgraph.py) and the Bloom/TF-IDF
-corpus additions, on hand-checked graphs and documents.
+"""Link-graph analytics (operators/linkgraph.py) and the Bloom corpus
+addition, on hand-checked graphs and documents.
 
 page_rank_int is verified against a by-hand replay of the integer
-fixed-point recurrence; triangle_counts against known graphs (K4, a
-path, and a wheel). Bloom is property-tested for the no-false-negative
-guarantee and replayed bit-for-bit in python.
+fixed-point recurrence. Bloom is property-tested for the
+no-false-negative guarantee and replayed bit-for-bit in python.
 """
 
 import pytest
@@ -99,61 +98,6 @@ def test_hits_partitioning_invariant(spark):
     b = sorted(map(tuple, LG.hits_int(df.repartition(7), rounds=2).collect()))
     exp = sorted((n, h, au) for n, (h, au) in _py_hits(edges).items())
     assert a == b == exp
-
-
-# ---------------------------------------------------------------------------
-# triangle_counts
-# ---------------------------------------------------------------------------
-
-def _tri(spark, pairs):
-    df = spark.createDataFrame(pairs, "a string, b string")
-    return {r["node"]: r["tri_cnt"]
-            for r in LG.triangle_counts(df).collect()}
-
-
-def test_triangles_k4(spark):
-    # K4: every node is in C(3,2)=3 triangles, 4 triangles total
-    nodes = ["a", "b", "c", "d"]
-    pairs = [(x, y) for i, x in enumerate(nodes)
-             for y in nodes[i + 1:]]
-    assert _tri(spark, pairs) == {"a": 3, "b": 3, "c": 3, "d": 3}
-
-
-def test_triangles_path_has_none(spark):
-    assert _tri(spark, [("a", "b"), ("b", "c"), ("c", "d")]) == {}
-
-
-def test_triangles_wheel(spark):
-    # hub + 5-cycle rim: 5 triangles; hub in all 5, each rim node in 2
-    rim = [("r0", "r1"), ("r1", "r2"), ("r2", "r3"), ("r3", "r4"),
-           ("r0", "r4")]
-    spokes = [("hub", f"r{i}") for i in range(5)]
-    pairs = [(min(x, y), max(x, y)) for x, y in rim + spokes]
-    got = _tri(spark, pairs)
-    assert got["hub"] == 5
-    assert all(got[f"r{i}"] == 2 for i in range(5))
-
-
-# ---------------------------------------------------------------------------
-# tfidf_topk
-# ---------------------------------------------------------------------------
-
-def test_tfidf_ranks_rare_terms_above_stopwords(spark):
-    docs = spark.createDataFrame(
-        [(1, "the the the zebra"), (2, "the cat"), (3, "the dog dog")],
-        "doc_id long, text string")
-    out = C.tfidf_topk(docs, k=2).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # doc 1: 'the' tf=3 df=3 -> 3*(3e6//3)=3e6; 'zebra' tf=1 df=1 -> 3e6;
-    # tie broken token asc -> 'the' first
-    assert [r["token"] for r in by_doc[1]] == ["the", "zebra"]
-    assert [r["rank"] for r in by_doc[1]] == [1, 2]
-    # doc 3: 'dog' tf=2 df=1 -> 6e6 beats 'the' tf=1 df=3 -> 1e6
-    assert [r["token"] for r in by_doc[3]] == ["dog", "the"]
-    assert by_doc[3][0]["score"] == 6_000_000
-    assert by_doc[3][1]["score"] == 1_000_000
 
 
 # ---------------------------------------------------------------------------
@@ -360,24 +304,6 @@ def test_link_prediction_path(spark):
 
 
 # ---------------------------------------------------------------------------
-# sssp_bounded
-# ---------------------------------------------------------------------------
-
-def test_sssp_bounded_relaxes_and_respects_horizon(spark):
-    # a->b (1), b->c (2), a->c (10), c->d (1): the 2-edge path to c
-    # beats the direct edge, but only once rounds >= 2.
-    df = spark.createDataFrame(
-        [("a", "b", 1), ("b", "c", 2), ("a", "c", 10), ("c", "d", 1)],
-        "src string, dst string, weight long")
-    d3 = {r["node"]: r["dist"]
-          for r in LG.sssp_bounded(df, ["a"], rounds=3).collect()}
-    assert d3 == {"a": 0, "b": 1, "c": 3, "d": 4}
-    d1 = {r["node"]: r["dist"]
-          for r in LG.sssp_bounded(df, ["a"], rounds=1).collect()}
-    assert d1 == {"a": 0, "b": 1, "c": 10}
-
-
-# ---------------------------------------------------------------------------
 # degree_assortativity_moments
 # ---------------------------------------------------------------------------
 
@@ -390,37 +316,3 @@ def test_degree_assortativity_moments_star_vs_path(spark):
     assert (r["m"], r["s_j"], r["s_jk"], r["s_j2"]) == (6, 12, 18, 30)
     # Newman r for a star is -1: (m*s_jk - s_j^2)/(m*s_j2 - s_j^2)
     assert (6 * 18 - 144) == -(6 * 30 - 144)
-
-
-def test_ktruss_hand_graph(spark):
-    """K4 {1,2,3,4} + a pendant triangle {4,5,6} + a tail 6-7: in a
-    4-truss (support >= 2), the K4 survives, the pendant triangle
-    (support 1 per edge) and the tail peel away."""
-    import itertools
-
-    k4 = list(itertools.combinations([1, 2, 3, 4], 2))
-    extra = [(4, 5), (4, 6), (5, 6), (6, 7)]
-    df = spark.createDataFrame(k4 + extra, "a long, b long")
-    from bdtopo2refhydro_spark.operators.linkgraph import ktruss
-
-    out = {(r["a"], r["b"]): r["support"]
-           for r in ktruss(df, k=4, rounds=3).collect()}
-    assert set(out) == set(k4)
-    assert all(s == 2 for s in out.values())
-
-
-def test_clustering_coefficient_hand_graph(spark):
-    """Triangle {1,2,3} + star edges 1-4, 1-5: node 1 has deg 4 and
-    1 triangle -> coef 2/12; nodes 2,3 have deg 2, 1 triangle -> 1.0;
-    nodes 4,5 deg 1 excluded."""
-    edges = [(1, 2), (1, 3), (2, 3), (1, 4), (1, 5)]
-    df = spark.createDataFrame(edges, "a long, b long")
-    from bdtopo2refhydro_spark.operators.linkgraph import (
-        clustering_coefficient)
-
-    got = {r["node"]: (r["deg"], r["tri_cnt"], r["coef"])
-           for r in clustering_coefficient(df).collect()}
-    assert got[1] == (4, 1, 2 / 12)
-    assert got[2] == (2, 1, 1.0)
-    assert got[3] == (2, 1, 1.0)
-    assert 4 not in got and 5 not in got

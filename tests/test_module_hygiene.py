@@ -27,3 +27,71 @@ def test_no_duplicate_top_level_defs(path):
                     f"{node.name} (lines {seen[node.name]} and {node.lineno})")
             seen[node.name] = node.lineno
     assert not dupes, f"duplicate top-level defs in {path.name}: {dupes}"
+
+
+# Operator modules whose extras were deleted down to what plans, the
+# registry, the benchmark and the scripts call. A top-level name nothing
+# else refers to is dead code left behind by a deletion.
+REPO = PKG.parent
+ORPHAN_CHECKED = ["graph", "orders", "linkgraph", "aggregate", "temporal",
+                  "corpus", "_local"]
+
+
+def _top_level_names(node):
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                         ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, (ast.Assign, ast.AnnAssign)):
+        targets = (node.targets if isinstance(node, ast.Assign)
+                   else [node.target])
+        return [n.id for t in targets for n in ast.walk(t)
+                if isinstance(n, ast.Name)]
+    return []
+
+
+def _referenced_names(tree, skip=()):
+    """Names a module refers to (loads, attribute reads, imports),
+    ignoring the subtrees in ``skip``."""
+    out, todo = set(), [tree]
+    while todo:
+        node = todo.pop()
+        if node in skip:
+            continue
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name.rsplit(".", 1)[-1])
+        todo.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def _non_test_modules():
+    for path in sorted(REPO.rglob("*.py")):
+        parts = path.relative_to(REPO).parts
+        if "tests" in parts or any(p.startswith(".") for p in parts):
+            continue
+        yield path
+
+
+@pytest.mark.parametrize("mod", ORPHAN_CHECKED)
+def test_operator_module_has_no_orphans(mod):
+    path = PKG / "operators" / f"{mod}.py"
+    tree = ast.parse(path.read_text(), filename=str(path))
+    defs = {name: node for node in tree.body
+            for name in _top_level_names(node) if not name.startswith("__")}
+    used = set()
+    for other in _non_test_modules():
+        if other == path:
+            continue
+        used |= _referenced_names(ast.parse(other.read_text()))
+    orphans = []
+    for name, node in defs.items():
+        # references from elsewhere in the module count, its own body
+        # (recursion, a docstring example) does not
+        if name not in used and \
+                name not in _referenced_names(tree, skip={node}):
+            orphans.append(name)
+    assert orphans == [], f"unreferenced top-level names in {mod}.py: " \
+                          f"{sorted(orphans)}"

@@ -562,16 +562,6 @@ def test_rolling_outliers_one_exchange_one_window(spark, entry):
     assert plan.count("Window") == 1, plan
 
 
-def test_cidr_match_broadcasts_rules_no_range_join(spark, entry):
-    """cidr_match: per-prefix-length shifted keys make the CIDR match a
-    broadcast EQUI-join — a range/cartesian join over rules would die
-    at crawl scale."""
-    plan = _plan(entry.queries()["cidr_match"](spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_set_ops_lower_to_aggregates_not_joins(spark, entry):
     """INTERSECT ALL / EXCEPT ALL lower to replicate-and-count hash
     aggregates (plus Generate for the replay) — no join of the two

@@ -241,20 +241,6 @@ def test_inverted_index(spark):
     assert got2 == {"b"}
 
 
-def test_group_quantiles_discrete(spark):
-    from bdtopo2refhydro_spark.operators.corpus import group_quantiles
-
-    rows = [(i, "en", v) for i, v in enumerate([10, 20, 30, 40])]
-    rows += [(100, "fr", 7)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, n_chars long")
-    got = {r.lang: (r.n, r.p50, r.p90, r.p99)
-           for r in group_quantiles(df, "n_chars").collect()}
-    # n=4: p50 at rank ceil(2)=2 -> 20; p90 at ceil(3.6)=4 -> 40; p99 -> 40
-    assert got["en"] == (4, 20, 40, 40)
-    # n=1: every percentile is the single value
-    assert got["fr"] == (1, 7, 7, 7)
-
-
 def test_curation_pipeline_stages(spark):
     """Each gate demonstrably removes its target: duplicate, short doc,
     repetitive doc, contaminated doc; survivors pack deterministically."""
@@ -340,20 +326,6 @@ def test_compact_cover_preserves_coverage(spark):
     assert expanded == set(map(tuple, rows))
 
 
-def test_sample_temperature_hand_checked(spark):
-    """4-vs-1 sources, budget 3: big source rate is exactly 0.5
-    (thr 32768 keeps fib16 < 32768: ids 0 and 2), small source
-    saturates at rate 1 (kept regardless of hash)."""
-    from bdtopo2refhydro_spark.operators.corpus import sample_temperature
-
-    df = spark.createDataFrame(
-        [(0, "a"), (1, "a"), (2, "a"), (3, "a"), (10, "b")],
-        "doc_id long, source string",
-    )
-    got = sorted(r.doc_id for r in sample_temperature(df, 3).collect())
-    assert got == [0, 2, 10]
-
-
 # ---------------------------------------------------------------------------
 # longest-prefix URL rules
 # ---------------------------------------------------------------------------
@@ -396,126 +368,8 @@ def test_url_rules_duplicate_prefix_tiebreak_and_default_deny(spark):
 
 
 # ---------------------------------------------------------------------------
-# funnel + per-event features
-# ---------------------------------------------------------------------------
-
-def _us(s):
-    import datetime
-    return int(datetime.datetime.fromisoformat(s + "+00:00")
-               .timestamp() * 1_000_000)
-
-
-def test_funnel_requires_strict_step_order(spark):
-    from bdtopo2refhydro_spark.operators.temporal import funnel_steps
-
-    rows = [
-        # u1 completes in order
-        (1, "2024-01-01 10:00:00", "signup"),
-        (1, "2024-01-01 11:00:00", "click"),
-        (1, "2024-01-01 12:00:00", "purchase"),
-        # u2: purchase BEFORE click → step 3 not reached after step 2
-        (2, "2024-01-01 10:00:00", "signup"),
-        (2, "2024-01-01 10:30:00", "purchase"),
-        (2, "2024-01-01 11:00:00", "click"),
-        # u3 never signs up → absent from the funnel
-        (3, "2024-01-01 09:00:00", "click"),
-        # u4: click at the same instant as signup does NOT count
-        (4, "2024-01-01 10:00:00", "signup"),
-        (4, "2024-01-01 10:00:00", "click"),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, ts_s string, "
-                               "event_type string") \
-        .selectExpr("user_id", "cast(ts_s as timestamp) as ts",
-                    "event_type")
-    got = {r.user_id: (r.n_reached, r.t1_us, r.t2_us, r.t3_us)
-           for r in funnel_steps(ev, ["signup", "click", "purchase"])
-           .collect()}
-    assert set(got) == {1, 2, 4}
-    assert got[1] == (3, _us("2024-01-01 10:00:00"),
-                      _us("2024-01-01 11:00:00"),
-                      _us("2024-01-01 12:00:00"))
-    assert got[2] == (2, _us("2024-01-01 10:00:00"),
-                      _us("2024-01-01 11:00:00"), -1)
-    assert got[4] == (1, _us("2024-01-01 10:00:00"), -1, -1)
-
-
-def test_event_features_gaps_and_trailing_window(spark):
-    from bdtopo2refhydro_spark.operators.temporal import event_features
-
-    rows = [(10, 1, "2024-01-01 00:00:00"),
-            (11, 1, "2024-01-01 06:00:00"),
-            (12, 1, "2024-01-02 05:00:00"),   # 23h after #11 → both in 24h
-            (13, 1, "2024-01-03 12:00:00"),   # nothing in trailing 24h
-            (20, 2, "2024-01-01 00:00:00")]
-    ev = spark.createDataFrame(rows, "event_id long, user_id long, "
-                               "ts_s string") \
-        .selectExpr("event_id", "user_id", "cast(ts_s as timestamp) as ts")
-    got = {r.event_id: (r.seq_idx, r.gap_us, r.n_prev_24h)
-           for r in event_features(ev).collect()}
-    h = 3_600_000_000
-    assert got[10] == (1, -1, 0)
-    assert got[11] == (2, 6 * h, 1)
-    assert got[12] == (3, 23 * h, 1)
-    assert got[13] == (4, 31 * h, 0)
-    assert got[20] == (1, -1, 0)
-
-
-# ---------------------------------------------------------------------------
-# contrastive triplet mining
-# ---------------------------------------------------------------------------
-
-def test_contrastive_triplets_deterministic_shape(spark):
-    from bdtopo2refhydro_spark.operators.corpus import contrastive_triplets
-
-    docs = spark.createDataFrame(
-        [(0, "h1"), (4, "h1"), (9, "h1"), (2, "h2"), (7, "h2"), (5, "h3")],
-        "doc_id long, source string")
-    got = contrastive_triplets(
-        docs, k_neg=2, buckets=4,
-        bucket_expr="doc_id % 4").collect()
-    trip = {(r.anchor_id, r.j): (r.pos_id, r.neg_id) for r in got}
-    # positives: successor within source → (0→4), (4→9), (2→7);
-    # 9, 7, 5 have no successor → no triplets
-    assert {t[0] for t in trip} == {0, 4, 2}
-    # bucket reps by doc_id%4: b0→0, b1→5, b2→2, b3→7
-    assert trip[(0, 1)] == (4, 5)    # anchor b0 → bucket 1 rep 5
-    assert trip[(0, 2)] == (4, 2)    # bucket 2 rep 2
-    assert trip[(4, 1)] == (9, 5)    # anchor 4 is b0 too
-    assert trip[(2, 1)] == (7, 7)    # anchor b2 → bucket 3 rep 7
-    # negatives never come from the anchor's own bucket
-    for (a, j), (_, n) in trip.items():
-        assert n % 4 != a % 4
-    # determinism: re-run is identical
-    again = {(r.anchor_id, r.j): (r.pos_id, r.neg_id)
-             for r in contrastive_triplets(
-                 docs, k_neg=2, buckets=4,
-                 bucket_expr="doc_id % 4").collect()}
-    assert again == trip
-
-
-# ---------------------------------------------------------------------------
 # cogroup_user_profile
 # ---------------------------------------------------------------------------
-
-def test_cogroup_user_profile_full_outer_merge(spark):
-    from bdtopo2refhydro_spark.operators.temporal import cogroup_user_profile
-
-    events = spark.createDataFrame(
-        [(1, "click"), (1, "view"), (1, "click"), (2, "view"),
-         (70, "click")],   # 70: events only; same bucket class as 6
-        "user_id long, event_type string")
-    orders = spark.createDataFrame(
-        [(1, 10.00), (1, 2.505), (3, 99.99)],  # 3: orders only
-        "o_custkey long, o_totalprice double")
-    got = {r["user_id"]: r for r in
-           cogroup_user_profile(events, orders, buckets=64).collect()}
-    assert set(got) == {1, 2, 3, 70}
-    assert (got[1]["n_events"], got[1]["n_clicks"]) == (3, 2)
-    # cents are floor(x*100 + 0.5): 1000 + 251
-    assert (got[1]["n_orders"], got[1]["spend_cents"]) == (2, 1251)
-    assert (got[2]["n_orders"], got[2]["spend_cents"]) == (0, 0)
-    assert (got[3]["n_events"], got[3]["n_orders"]) == (0, 1)
-    assert (got[70]["n_events"], got[70]["n_orders"]) == (1, 0)
 
 
 def test_forward_fill_carries_last_observation(spark):

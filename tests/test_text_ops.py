@@ -1149,36 +1149,3 @@ def test_prefix_filter_pairs_complete_and_exact(spark):
                     want[(a, b)] = (i, u)
     assert got == want
     assert (1, 2) in got and (1, 3) in got and (4, 5) not in got
-
-
-def test_spark_soundex_matches_commons_variant_model(spark):
-    """Pins the algorithm the soundex oracle replicates: h/w are fully
-    transparent (duplicate suppression ACROSS them), vowels reset the
-    duplicate guard, 3 digits then truncate/pad."""
-    from pyspark.sql import functions as F
-
-    MAP = "01230127022455012623017202"
-
-    def model(w):
-        b = w[0].upper()
-        out, last = [b], MAP[ord(b) - 65]
-        for ch in w[1:]:
-            code = MAP[ord(ch.upper()) - 65]
-            if code == "7":
-                continue
-            if code != "0" and code != last:
-                out.append(code)
-                if len(out) > 3:
-                    break
-            last = code
-        return ("".join(out) + "000")[:4]
-
-    words = ["robert", "rupert", "ashcraft", "ashcroft", "tymczak",
-             "pfister", "honeyman", "wh", "hw", "aa", "bfpv", "hello",
-             "world", "czech", "llama", "mississippi", "ashhhcraft",
-             "phph", "gnocchi", "knuth", "lloyd", "ladd", "whisky",
-             "schwarz", "sasha", "ahab", "awa"]
-    df = spark.createDataFrame([(w,) for w in words], "w string")
-    got = {r["w"]: r["sx"]
-           for r in df.select("w", F.soundex("w").alias("sx")).collect()}
-    assert got == {w: model(w) for w in words}

@@ -1,11 +1,9 @@
-"""tree_closeness / tree_diameter vs brute-force BFS references on
-random forests."""
+"""tree_closeness vs brute-force BFS references on random forests."""
 
 import random
 from collections import deque
 
-from bdtopo2refhydro_spark.operators.orders import (
-    tree_closeness, tree_diameter)
+from bdtopo2refhydro_spark.operators.orders import tree_closeness
 
 
 def _random_forest(rng, n):
@@ -49,97 +47,8 @@ def test_tree_closeness_matches_bfs(spark):
     assert got == expected
 
 
-def test_tree_diameter_matches_double_bfs(spark):
-    rng = random.Random(17)
-    edges = _random_forest(rng, 150)
-    g = _adj(edges)
-    # expected: per tree (keyed by its root = node with no parent edge),
-    # diameter = max over all pairs of BFS distance
-    children = {a for _, a, _ in edges}
-    df = spark.createDataFrame(edges, "url string, NODEA long, NODEB long")
-    got = {r["root"]: r["diameter"] for r in tree_diameter(df).collect()}
-    seen = set()
-    expected = {}
-    for v in g:
-        if v in seen:
-            continue
-        comp = list(_bfs_dists(g, v))
-        seen.update(comp)
-        root = [u for u in comp if u not in children]
-        assert len(root) == 1
-        expected[root[0]] = max(
-            max(_bfs_dists(g, u).values()) for u in comp)
-    assert got == expected
-
-
 def test_single_edge_and_star(spark):
     edges = [("a", 1, 0), ("b", 2, 0), ("c", 3, 0)]  # star at 0
     df = spark.createDataFrame(edges, "url string, NODEA long, NODEB long")
     cl = {r["node"]: r["closeness_sum"] for r in tree_closeness(df).collect()}
     assert cl == {0: 3, 1: 5, 2: 5, 3: 5}
-    di = {r["root"]: r["diameter"] for r in tree_diameter(df).collect()}
-    assert di == {0: 2}
-
-
-def test_tree_eccentricity_vs_bfs(spark):
-    import random
-    from collections import deque
-
-    from bdtopo2refhydro_spark.operators.orders import tree_eccentricity
-
-    rng = random.Random(23)
-    rows, adj = [], {}
-    for tid in range(6):
-        n = rng.randrange(2, 12)
-        for v in range(1, n):
-            p = rng.randrange(v)
-            c, pa = tid * 100 + v, tid * 100 + p
-            rows.append((f"e{c}", c, pa))
-            adj.setdefault(c, []).append(pa)
-            adj.setdefault(pa, []).append(c)
-    df = spark.createDataFrame(rows, "url string, NODEA long, NODEB long")
-    got = {r["node"]: r["ecc"]
-           for r in tree_eccentricity(df, "url").collect()}
-
-    def bfs_ecc(s):
-        dist = {s: 0}
-        q = deque([s])
-        while q:
-            u = q.popleft()
-            for v in adj[u]:
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    q.append(v)
-        return max(dist.values())
-
-    assert got == {v: bfs_ecc(v) for v in adj}
-
-
-def test_tree_mwis_vs_exhaustive(spark):
-    import random
-    from itertools import combinations
-
-    from bdtopo2refhydro_spark.operators.orders import tree_mwis
-
-    rng = random.Random(31)
-    erows, nrows, want = [], [], {}
-    for tid in range(5):
-        n = rng.randrange(2, 11)
-        edges = []
-        w = {v: rng.randrange(1, 20) for v in range(n)}
-        for v in range(1, n):
-            p = rng.randrange(v)
-            edges.append((v, p))
-            erows.append((f"e{tid}_{v}", tid * 100 + v, tid * 100 + p))
-        nrows += [(tid * 100 + v, w[v]) for v in range(n)]
-        best = 0
-        for k in range(n + 1):
-            for sub in combinations(range(n), k):
-                ss = set(sub)
-                if all(not (a in ss and b in ss) for a, b in edges):
-                    best = max(best, sum(w[v] for v in ss))
-        want[tid * 100] = best
-    e = spark.createDataFrame(erows, "url string, NODEA long, NODEB long")
-    nd = spark.createDataFrame(nrows, "node long, w long")
-    got = {r["root"]: r["mwis"] for r in tree_mwis(e, nd).collect()}
-    assert got == want
